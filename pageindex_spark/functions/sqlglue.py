@@ -25,8 +25,8 @@ from .tokenizer import ASCII_SEP_PATTERN, TOKEN_SPLIT_PATTERN
 # where every engine agrees.
 #
 # The Spark side EXTRACTS the positive token class instead of replace+
-# lower+split on the negated class (r5 flatline hunt, jobs/diag_regex.py +
-# BENCH.md §scaling): JDK 17's java.util.regex evaluates a NEGATED char
+# lower+split on the negated class (r5 flatline hunt, BENCH.md
+# §scaling): JDK 17's java.util.regex evaluates a NEGATED char
 # class through a CharPredicate.negate() lambda whose per-char indirect
 # dispatch is both ~6x slower per byte AND collapses under thread
 # concurrency on the bench VM (2->8 threads measured 0.87x — slower walls

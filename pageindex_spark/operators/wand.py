@@ -49,8 +49,8 @@ from .runfmt import Run, concat_runs, decode_block, decode_run
 EPS = 1e-10
 
 # Block-decode instrumentation: one integer add per lazy block decode (the
-# decode itself is O(block) numpy work, so the counter is noise). Read /
-# reset by jobs/threshold_payoff.py to measure BMW pruning effectiveness.
+# decode itself is O(block) numpy work, so the counter is noise). Read by
+# perfbench/kernels.py to measure BMW pruning effectiveness.
 DECODE_STATS = {"blocks": 0}
 
 

@@ -86,9 +86,7 @@ def explain_score(
     from ..functions.murmur3 import term_bucket
 
     buckets = sorted({term_bucket(t, se.n_buckets) for t in present})
-    ts = spark.read.parquet(se.paths.term_stats)
-    if se.committed_deltas is not None:
-        ts = ts.filter(F.col("delta") == max(se.committed_deltas))
+    ts = se.term_dictionary()
     df_of = {
         r["term"]: int(r["df"])
         for r in ts.filter(

@@ -793,9 +793,7 @@ def frequent_term_pairs(
     from ..functions.murmur3 import term_bucket
 
     se = get_searcher(spark, index_dir, cell_parts)
-    ts = spark.read.parquet(se.paths.term_stats)
-    if se.committed_deltas is not None:
-        ts = ts.filter(F.col("delta") == max(se.committed_deltas))
+    ts = se.term_dictionary()
     cand = sorted(
         r["term"]
         for r in ts.filter(
@@ -1173,9 +1171,7 @@ def index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
         F.count("*").alias("n_docs"),
         F.sum("doc_len").alias("total_tokens"),
     )
-    ts = spark.read.parquet(se.paths.term_stats)
-    if se.committed_deltas is not None:
-        ts = ts.filter(F.col("delta") == max(se.committed_deltas))
+    ts = se.term_dictionary()
     terms = ts.agg(F.count("*").alias("n_terms"))
     n_del = int(len(se.deleted_ids)) if se.deleted_ids is not None else 0
     return (
@@ -1244,9 +1240,7 @@ def term_vectors(
         .groupBy("url", "term")
         .agg(F.count("*").cast("long").alias("tf"))
     )
-    ts = spark.read.parquet(se.paths.term_stats)
-    if se.committed_deltas is not None:
-        ts = ts.filter(F.col("delta") == max(se.committed_deltas))
+    ts = se.term_dictionary()
     return (
         ts.select("term", F.col("df").cast("long").alias("df"))
         .join(F.broadcast(tf), "term")
@@ -2108,9 +2102,7 @@ def significant_terms(
         n_matched = matched.groupBy("query_id").agg(
             F.count("*").alias("n_matched")
         )
-    ts = spark.read.parquet(se.paths.term_stats)
-    if se.committed_deltas is not None:
-        ts = ts.filter(F.col("delta") == max(se.committed_deltas))
+    ts = se.term_dictionary()
     bg = ts.select("term", F.col("df").cast("long").alias("bg"))
     lift6 = F.floor(
         F.lit(1_000_000.0)
@@ -2715,9 +2707,7 @@ def index_vocab_hll(spark: SparkSession, index_dir: str) -> DataFrame:
     a string column sketches identically. Column-pruned term scan; the
     register reduction shuffles <= m rows."""
     se = get_searcher(spark, index_dir, cell_parts=4)
-    ts = spark.read.parquet(se.paths.term_stats)
-    if se.committed_deltas is not None:
-        ts = ts.filter(F.col("delta") == max(se.committed_deltas))
+    ts = se.term_dictionary()
     vals = ts.select(F.col("term").alias("v")).withColumn("g", F.lit(1))
     counts = vals.groupBy("g").agg(F.count("*").alias("n_exact"))
     fin = _hll_agg(vals, ["g"])

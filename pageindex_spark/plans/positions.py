@@ -198,13 +198,10 @@ def phrase_search_positions(
     window (``searchsorted``, vectorized over all anchors at once);
     distinct terms occupy distinct slots automatically."""
     from ..functions.murmur3 import term_bucket
-    from .query import _ensure_idf, _rank_and_lookup
+    from .query import _empty_hits, _ensure_idf, _rank_and_lookup
 
     spark = se.spark
-    out_schema = "query_id int, rank int, url string, score double" + (
-        ", text string" if with_text else ""
-    )
-    empty = spark.createDataFrame([], out_schema)
+    empty = _empty_hits(se, with_text)
 
     qterms = {qid: tokenize(text) for qid, text in phrases}
     allterms = sorted({t for ts in qterms.values() for t in ts})

@@ -21,15 +21,17 @@ state beyond (n_docs, avgdl).
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 import os
 import re
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.tokenizer import (
@@ -207,6 +209,16 @@ class Searcher:
         if schema not in self._empty_cache:
             self._empty_cache[schema] = self.spark.createDataFrame([], schema)
         return self._empty_cache[schema]
+
+    def term_dictionary(self) -> DataFrame:
+        """The committed term dictionary (term, df, bucket) as a Spark scan.
+        Streamed indexes version term_stats per refresh; the committed max
+        delta holds the full recompute (a crashed refresh's delta would
+        carry uncommitted docs' df)."""
+        ts = self.spark.read.parquet(self.paths.term_stats)
+        if self.committed_deltas is not None:
+            ts = ts.filter(F.col("delta") == max(self.committed_deltas))
+        return ts
 
     def _local_norms_pdf(self):
         """norms as pandas with the cell column — the driver-side mirror of
@@ -486,7 +498,6 @@ def search_phrase(
     candidate cap and no text fetch, identical results where both paths
     are exact.
     """
-    from ..functions.sqlglue import spark_terms
     from .positions import phrase_search_positions, sidecar_ready
 
     if slop < 0:
@@ -508,25 +519,49 @@ def search_phrase(
             slop=slop, in_order=in_order,
         )
 
-    cand = get_searcher(spark, index_dir, cell_parts).search(
-        phrases,
+    qterms = {qid: tokenize(text) for qid, text in phrases}
+    preds = {
+        qid: _adjacency_expr("tk", terms, slop, in_order)
+        for qid, terms in qterms.items()
+        if terms
+    }
+    return _verified_topk(
+        se, phrases, preds, k, cand_cap, fixed_point,
+        with_text=with_text, prune_norms=prune_norms,
+    )
+
+
+def _verified_topk(
+    se: Searcher,
+    cand_queries: list[tuple[int, str]],
+    preds: dict[int, Column],
+    k: int,
+    cand_cap: int,
+    fixed_point: bool,
+    with_text: bool = False,
+    prune_norms: bool | None = None,
+) -> DataFrame:
+    """Shared plan of the text-verified positional variants (phrase,
+    phrase prefix, span_first, span_not, intervals): conjunctive
+    candidates through the standard pruned-postings search (``cand_cap``
+    exactness bound, the ``search_phrase`` contract), each query's
+    codegen'd verification predicate over the candidates' token array
+    ``tk``, then a per-query (score desc, url asc) window rank."""
+    from ..functions.sqlglue import spark_terms
+
+    cand = se.search(
+        cand_queries,
         k=cand_cap,
         mode="conjunctive",
         fixed_point=fixed_point,
         with_text=True,
         prune_norms=prune_norms,
     )
-    qterms = {qid: tokenize(text) for qid, text in phrases}
-    toks = F.expr(spark_terms("text"))
     cond = F.lit(False)
-    for qid, terms in qterms.items():
-        if terms:
-            cond = F.when(
-                F.col("query_id") == qid,
-                _adjacency_expr("tk", terms, slop, in_order),
-            ).otherwise(cond)
+    for qid, pred in preds.items():
+        cond = F.when(F.col("query_id") == qid, pred).otherwise(cond)
     matched = (
-        cand.withColumn("tk", toks)
+        cand.withColumn("tk", F.expr(spark_terms("text")))
         .filter(cond)
         .drop("tk", "rank")
     )
@@ -544,6 +579,22 @@ def search_phrase(
         .filter(F.col("rank") <= k)
         .select(*out_cols)
     )
+
+
+def _empty_hits(se: Searcher, with_text: bool) -> DataFrame:
+    """The empty (query_id, rank, url, score[, text]) result frame."""
+    return se._empty_df(
+        "query_id int, rank int, url string, score double"
+        + (", text string" if with_text else "")
+    )
+
+
+def _validate_qids(queries: list[tuple]) -> None:
+    """Reject a batch that repeats a query_id: per-qid state is keyed by
+    qid, so a repeat would silently replace the earlier query."""
+    qids = [q[0] for q in queries]
+    if len(set(qids)) != len(qids):
+        raise ValueError("duplicate query_id in batch")
 
 
 def search_phrase_prefix(
@@ -577,8 +628,7 @@ def search_phrase_prefix(
     stage 1's conjunctive-candidates exactness bound (cand_cap, same as
     ``search_phrase``'s documented contract); the positions sidecar is
     the same scale-up. Exclusion contract applies pre-heap in stage 1."""
-    from ..functions.sqlglue import spark_terms
-
+    _validate_qids(phrases)
     se = get_searcher(spark, index_dir, cell_parts)
     qinfo: dict[int, tuple[list[str], str]] = {}
     for qid, text, prefix in phrases:
@@ -592,38 +642,22 @@ def search_phrase_prefix(
         if not pfx:
             raise ValueError(f"query {qid}: empty prefix")
         qinfo[qid] = (terms, pfx)
-    cand = se.search(
-        [(qid, " ".join(ts)) for qid, (ts, _p) in qinfo.items()],
-        k=cand_cap,
-        mode="conjunctive",
-        fixed_point=fixed_point,
-        with_text=True,
-    )
-    toks = F.expr(spark_terms("text"))
-    cond = F.lit(False)
+    preds = {}
     for qid, (terms, pfx) in qinfo.items():
         n = len(terms) + 1
         run = " and ".join(
             f"tk[i + {j}] = '{t}'" for j, t in enumerate(terms)
         )
-        pred = (
+        preds[qid] = F.expr(
             f"case when size(tk) >= {n} then "
             f"exists(sequence(0, size(tk) - {n}), i -> {run} and "
             f"substr(tk[i + {n - 1}], 1, {len(pfx)}) = '{pfx}') "
             f"else false end"
         )
-        cond = F.when(F.col("query_id") == qid, F.expr(pred)).otherwise(cond)
-    matched = cand.withColumn("tk", toks).filter(cond).drop("tk", "rank")
-    order_key = (
-        F.floor(F.col("score") * 1_000_000).cast("long")
-        if fixed_point
-        else F.col("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc(order_key), F.asc("url"))
-    return (
-        matched.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "url", "score")
+    return _verified_topk(
+        se,
+        [(qid, " ".join(ts)) for qid, (ts, _p) in qinfo.items()],
+        preds, k, cand_cap, fixed_point,
     )
 
 
@@ -658,8 +692,7 @@ def search_span_first(
     positions sidecar (plans/positions.py) is the committed-artifact
     scale-up when lede queries dominate a workload. Exclusion contract
     (tombstones, deletes) applies pre-heap in stage 1."""
-    from ..functions.sqlglue import spark_terms
-
+    _validate_qids(spans)
     se = get_searcher(spark, index_dir, cell_parts)
     qinfo: dict[int, tuple[str, int]] = {}
     for qid, text, end in spans:
@@ -672,29 +705,13 @@ def search_span_first(
         if end < 1:
             raise ValueError(f"query {qid}: end must be >= 1, got {end}")
         qinfo[qid] = (terms[0], end)
-    cand = se.search(
-        [(qid, t) for qid, (t, _e) in qinfo.items()],
-        k=cand_cap,
-        mode="conjunctive",
-        fixed_point=fixed_point,
-        with_text=True,
-    )
-    toks = F.expr(spark_terms("text"))
-    cond = F.lit(False)
-    for qid, (term, end) in qinfo.items():
-        pred = f"array_contains(slice(tk, 1, {end}), '{term}')"
-        cond = F.when(F.col("query_id") == qid, F.expr(pred)).otherwise(cond)
-    matched = cand.withColumn("tk", toks).filter(cond).drop("tk", "rank")
-    order_key = (
-        F.floor(F.col("score") * 1_000_000).cast("long")
-        if fixed_point
-        else F.col("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc(order_key), F.asc("url"))
-    return (
-        matched.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "url", "score")
+    preds = {
+        qid: F.expr(f"array_contains(slice(tk, 1, {end}), '{term}')")
+        for qid, (term, end) in qinfo.items()
+    }
+    return _verified_topk(
+        se, [(qid, t) for qid, (t, _e) in qinfo.items()],
+        preds, k, cand_cap, fixed_point,
     )
 
 
@@ -729,8 +746,7 @@ def search_span_not(
     sidecar (plans/positions.py) is the committed-artifact scale-up.
     Exclusion contract (tombstones, deletes, '-term') applies pre-heap in
     stage 1 as always."""
-    from ..functions.sqlglue import spark_terms
-
+    _validate_qids(spans)
     se = get_searcher(spark, index_dir, cell_parts)
     qinfo: dict[int, tuple[str, str, int]] = {}
     for qid, inc_text, exc_text, w in spans:
@@ -747,35 +763,17 @@ def search_span_not(
                 f"query {qid}: include and exclude terms must differ"
             )
         qinfo[qid] = (inc[0], exc[0], w)
-    cand = se.search(
-        [(qid, a) for qid, (a, _b, _w) in qinfo.items()],
-        k=cand_cap,
-        mode="conjunctive",
-        fixed_point=fixed_point,
-        with_text=True,
-    )
-    toks = F.expr(spark_terms("text"))
-    cond = F.lit(False)
-    for qid, (a, b, w) in qinfo.items():
-        pred = (
+    preds = {
+        qid: F.expr(
             f"exists(sequence(0, size(tk) - 1), i -> tk[i] = '{a}' and not "
             f"exists(sequence(greatest(0, i - {w}), "
             f"least(i + {w}, size(tk) - 1)), j -> tk[j] = '{b}'))"
         )
-        cond = F.when(F.col("query_id") == qid, F.expr(pred)).otherwise(cond)
-    matched = cand.withColumn("tk", toks).filter(cond).drop("tk", "rank")
-    order_key = (
-        F.floor(F.col("score") * 1_000_000).cast("long")
-        if fixed_point
-        else F.col("score")
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc(order_key), F.asc("url")
-    )
-    return (
-        matched.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "url", "score")
+        for qid, (a, b, w) in qinfo.items()
+    }
+    return _verified_topk(
+        se, [(qid, a) for qid, (a, _b, _w) in qinfo.items()],
+        preds, k, cand_cap, fixed_point,
     )
 
 
@@ -809,8 +807,7 @@ def search_intervals(
     stores no positions, so verification reads candidate text — the
     positions sidecar (plans/positions.py) is the committed-artifact
     scale-up. Exclusion contract applies pre-heap in stage 1 as always."""
-    from ..functions.sqlglue import spark_terms
-
+    _validate_qids(chains)
     se = get_searcher(spark, index_dir, cell_parts)
     qinfo: dict[int, tuple[list[str], int]] = {}
     for qid, text, g in chains:
@@ -826,13 +823,6 @@ def search_intervals(
         if g < 0:
             raise ValueError(f"query {qid}: max_gaps must be >= 0, got {g}")
         qinfo[qid] = (terms, g)
-    cand = se.search(
-        [(qid, " ".join(ts)) for qid, (ts, _g) in qinfo.items()],
-        k=cand_cap,
-        mode="conjunctive",
-        fixed_point=fixed_point,
-        with_text=True,
-    )
 
     def _nest(terms: list[str], g: int, r: int) -> str:
         # window for term r (0-based): lo = i{r-1}+1, hi = i0 + r + g
@@ -846,29 +836,18 @@ def search_intervals(
             f"i{r} -> tk[i{r}] = '{terms[r]}'{inner}) else false end)"
         )
 
-    toks = F.expr(spark_terms("text"))
-    cond = F.lit(False)
-    for qid, (terms, g) in qinfo.items():
-        pred = (
+    preds = {
+        qid: F.expr(
             f"case when size(tk) >= {len(terms)} then "
             f"exists(sequence(0, size(tk) - 1), "
             f"i0 -> tk[i0] = '{terms[0]}' and {_nest(terms, g, 1)}) "
             "else false end"
         )
-        cond = F.when(F.col("query_id") == qid, F.expr(pred)).otherwise(cond)
-    matched = cand.withColumn("tk", toks).filter(cond).drop("tk", "rank")
-    order_key = (
-        F.floor(F.col("score") * 1_000_000).cast("long")
-        if fixed_point
-        else F.col("score")
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc(order_key), F.asc("url")
-    )
-    return (
-        matched.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "url", "score")
+        for qid, (terms, g) in qinfo.items()
+    }
+    return _verified_topk(
+        se, [(qid, " ".join(ts)) for qid, (ts, _g) in qinfo.items()],
+        preds, k, cand_cap, fixed_point,
     )
 
 
@@ -965,36 +944,99 @@ def search_multi_field(
     )
 
 
+def _any(conds) -> Column:
+    """OR of a non-empty iterable of boolean Columns."""
+    return functools.reduce(operator.or_, conds)
+
+
+def _expansion_scan(
+    se: Searcher, patterns: list[str], spark_pred: Callable[[list[str]], Column]
+) -> DataFrame:
+    """The term-dictionary scan behind every expansion: column-pruned to
+    ``term`` with ``spark_pred(patterns)`` evaluated JVM-side (pushed to
+    parquet where it can be — StartsWith prunes row groups, terms sort
+    within files). A metadata-class read, never postings blobs."""
+    return (
+        se.term_dictionary().filter(spark_pred(patterns)).select("term").distinct()
+    )
+
+
+def _expand_terms(
+    se: Searcher,
+    patterns: list[str],
+    spark_pred: Callable[[list[str]], Column],
+    py_match: Callable[[str, str], bool],
+    kind: str,
+    max_expansions: int,
+) -> dict[str, list[str]]:
+    """ONE dictionary scan expanding every pattern of a batch to its sorted
+    index terms -> {pattern: terms}. ``spark_pred`` narrows the scan;
+    ``py_match(pattern, term)`` assigns the collected terms to patterns
+    exactly. Raises when a pattern matches more than ``max_expansions``
+    terms: silent truncation would make results depend on scan order."""
+    if not patterns:
+        return {}
+    vocab = [r["term"] for r in _expansion_scan(se, patterns, spark_pred).collect()]
+    out: dict[str, list[str]] = {}
+    for p in patterns:
+        terms = sorted(t for t in vocab if py_match(p, t))
+        if len(terms) > max_expansions:
+            label = f"prefix '{p}*'" if kind == "prefix" else f"{kind} {p!r}"
+            raise ValueError(
+                f"{label} expands to {len(terms)} terms "
+                f"(> max_expansions={max_expansions})"
+            )
+        out[p] = terms
+    return out
+
+
 def _expand_prefixes(
     se: Searcher, stems: list[str], max_expansions: int
 ) -> dict[str, list[str]]:
-    """One term-dictionary scan expanding every prefix stem to its concrete
-    index terms. The scan cannot bucket-prune (buckets hash whole terms) but
-    it is column-pruned to ``term`` and ships a pushed StringStartsWith per
-    stem to parquet (row-group pruning via min/max; terms sort within files)
-    — a metadata-class read, never postings blobs. Raises when a stem
-    matches more than ``max_expansions`` terms: silent truncation would make
-    results depend on scan order."""
-    ts = se.spark.read.parquet(se.paths.term_stats)
-    if se.committed_deltas is not None:
-        # streamed: the latest committed delta holds the full recompute.
-        ts = ts.filter(F.col("delta") == max(se.committed_deltas))
-    cond = F.col("term").startswith(stems[0])
-    for s in stems[1:]:
-        cond = cond | F.col("term").startswith(s)
-    terms = [
-        r["term"] for r in ts.filter(cond).select("term").distinct().collect()
-    ]
-    out: dict[str, list[str]] = {}
-    for s in stems:
-        exp = sorted(t for t in terms if t.startswith(s))
-        if len(exp) > max_expansions:
-            raise ValueError(
-                f"prefix '{s}*' expands to {len(exp)} terms "
-                f"(> max_expansions={max_expansions})"
-            )
-        out[s] = exp
-    return out
+    """Prefix expansion: the scan ships a pushed StringStartsWith per stem
+    (buckets hash whole terms, so it cannot bucket-prune)."""
+    return _expand_terms(
+        se,
+        stems,
+        lambda ss: _any(F.col("term").startswith(s) for s in ss),
+        lambda s, t: t.startswith(s),
+        "prefix",
+        max_expansions,
+    )
+
+
+def _search_words(
+    se: Searcher, words: dict[int, list[str]], with_text: bool, **search_kw
+) -> DataFrame:
+    """Tail of every expansion variant: each query with words left runs as
+    one OR query through ``se.search``; a batch with none returns the
+    empty hits frame."""
+    expanded = [(qid, " ".join(ws)) for qid, ws in words.items() if ws]
+    if not expanded:
+        return _empty_hits(se, with_text)
+    return se.search(expanded, with_text=with_text, **search_kw)
+
+
+def _expansion_search(
+    se: Searcher,
+    queries: list[tuple[int, str]],
+    parse: Callable[[str], tuple[list[str], list[str]]],
+    expand: Callable[[list[str]], dict[str, list[str]]],
+    with_text: bool,
+    **search_kw,
+) -> DataFrame:
+    """Front-end of the prefix, fuzzy and wildcard variants: ``parse``
+    splits each query into (literal words, patterns), ``expand`` maps the
+    batch's patterns to their terms with one dictionary scan, and each
+    query runs as its literals plus its patterns' expansions."""
+    _validate_qids(queries)
+    parsed = {qid: parse(text) for qid, text in queries}
+    exp = expand(sorted({p for _lits, ps in parsed.values() for p in ps}))
+    words = {
+        qid: lits + [t for p in ps for t in exp[p]]
+        for qid, (lits, ps) in parsed.items()
+    }
+    return _search_words(se, words, with_text, **search_kw)
 
 
 def search_prefix(
@@ -1022,24 +1064,11 @@ def search_prefix(
     from ..functions.tokenizer import parse_prefix_query
 
     se = get_searcher(spark, index_dir, cell_parts)
-    parsed = {qid: parse_prefix_query(text) for qid, text in queries}
-    stems = sorted({s for _, ss in parsed.values() for s in ss})
-    exp = _expand_prefixes(se, stems, max_expansions) if stems else {}
-    expanded = []
-    for qid, (lits, ss) in parsed.items():
-        words = list(lits)
-        for s in ss:
-            words.extend(exp.get(s, []))
-        if words:
-            expanded.append((qid, " ".join(words)))
-    if not expanded:
-        out_schema = "query_id int, rank int, url string, score double" + (
-            ", text string" if with_text else ""
-        )
-        return spark.createDataFrame([], out_schema)
-    return se.search(
-        expanded, k=k, mode=mode, fixed_point=fixed_point,
-        with_text=with_text, prune_norms=prune_norms,
+    return _expansion_search(
+        se, queries, parse_prefix_query,
+        lambda stems: _expand_prefixes(se, stems, max_expansions),
+        with_text, k=k, mode=mode, fixed_point=fixed_point,
+        prune_norms=prune_norms,
     )
 
 
@@ -1065,27 +1094,34 @@ def suggest_terms(
     to the committed max delta (the full recompute). A prefix matching
     nothing yields no rows for its query_id."""
     se = get_searcher(spark, index_dir, cell_parts)
-    ts = spark.read.parquet(se.paths.term_stats)
-    if se.committed_deltas is not None:
-        ts = ts.filter(F.col("delta") == max(se.committed_deltas))
     stems = sorted({p for _, p in prefixes})
     if not stems:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, term string, df long"
-        )
-    cond = F.col("term").startswith(stems[0])
-    for s in stems[1:]:
-        cond = cond | F.col("term").startswith(s)
+        return se._empty_df("query_id int, rank int, term string, df long")
     pfx = spark.createDataFrame(prefixes, "query_id int, prefix string")
     w = Window.partitionBy("query_id").orderBy(F.desc("df"), F.asc("term"))
     return (
-        ts.filter(cond)
+        se.term_dictionary()
+        .filter(_any(F.col("term").startswith(s) for s in stems))
         .select("term", F.col("df").cast("long").alias("df"))
         .join(F.broadcast(pfx), F.col("term").startswith(F.col("prefix")))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "term", "df")
     )
+
+
+def _within_edits(a: str, b: str, max_edits: int) -> bool:
+    """Levenshtein(a, b) <= max_edits — classic DP; tokens are short and
+    the vocabulary is pre-filtered by the JVM-side scan."""
+    if abs(len(a) - len(b)) > max_edits:
+        return False
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1] <= max_edits
 
 
 def search_fuzzy(
@@ -1116,61 +1152,28 @@ def search_fuzzy(
     is unchanged either way. A token expanding to more than
     ``max_expansions`` terms raises (never silent truncation)."""
     se = get_searcher(spark, index_dir, cell_parts)
-    # '-term' negations pass through UNexpanded (Lucene doesn't fuzz
-    # exclusions either; silently dropping the '-' would flip an exclusion
-    # into a positive fuzzy match). Only positive tokens expand.
-    split = {qid: parse_query(text) for qid, text in queries}
-    toks = {qid: tokenize(pos) for qid, (pos, _negs) in split.items()}
-    negs = {qid: ns for qid, (_pos, ns) in split.items() if ns}
-    uniq = sorted({t for ts in toks.values() for t in ts})
-    if not uniq:
-        out_schema = "query_id int, rank int, url string, score double" + (
-            ", text string" if with_text else ""
-        )
-        return spark.createDataFrame([], out_schema)
-    ts = spark.read.parquet(se.paths.term_stats)
-    if se.committed_deltas is not None:
-        ts = ts.filter(F.col("delta") == max(se.committed_deltas))
-    cond = F.levenshtein(F.col("term"), F.lit(uniq[0])) <= max_edits
-    for t in uniq[1:]:
-        cond = cond | (F.levenshtein(F.col("term"), F.lit(t)) <= max_edits)
-    vocab = [r["term"] for r in ts.filter(cond).select("term").distinct().collect()]
 
-    def _ed(a: str, b: str) -> int:
-        # classic DP; tokens are short and vocab is pre-filtered by the scan
-        if abs(len(a) - len(b)) > max_edits:
-            return max_edits + 1
-        prev = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            cur = [i]
-            for j, cb in enumerate(b, 1):
-                cur.append(
-                    min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
-                )
-            prev = cur
-        return prev[-1]
+    def parse(text: str) -> tuple[list[str], list[str]]:
+        # '-term' negations pass through UNexpanded (Lucene doesn't fuzz
+        # exclusions either; silently dropping the '-' would flip an
+        # exclusion into a positive fuzzy match). Only positive tokens
+        # expand.
+        pos, negs = parse_query(text)
+        return [f"-{n}" for n in negs], tokenize(pos)
 
-    expanded = []
-    for qid, qts in toks.items():
-        words: list[str] = []
-        for t in qts:
-            exp = sorted(v for v in vocab if _ed(v, t) <= max_edits)
-            if len(exp) > max_expansions:
-                raise ValueError(
-                    f"fuzzy term {t!r} expands to {len(exp)} terms "
-                    f"(> max_expansions={max_expansions})"
-                )
-            words.extend(exp)
-        if words:
-            words.extend(f"-{n}" for n in negs.get(qid, ()))
-            expanded.append((qid, " ".join(words)))
-    if not expanded:
-        out_schema = "query_id int, rank int, url string, score double" + (
-            ", text string" if with_text else ""
-        )
-        return spark.createDataFrame([], out_schema)
-    return se.search(
-        expanded, k=k, mode=mode, fixed_point=fixed_point, with_text=with_text
+    return _expansion_search(
+        se, queries, parse,
+        lambda toks: _expand_terms(
+            se,
+            toks,
+            lambda ts: _any(
+                F.levenshtein(F.col("term"), F.lit(t)) <= max_edits for t in ts
+            ),
+            lambda t, v: _within_edits(v, t, max_edits),
+            "fuzzy term",
+            max_expansions,
+        ),
+        with_text, k=k, mode=mode, fixed_point=fixed_point,
     )
 
 
@@ -1204,18 +1207,15 @@ def suggest_spelling(
     trillion-term swap, plan unchanged). Candidates join the tiny
     (query, token) relation BROADCAST; ranking is one window over
     O(tokens x candidates) rows — never postings, never norms."""
-    from ..functions.tokenizer import parse_query, tokenize
-
     se = get_searcher(spark, index_dir, cell_parts)
     tok_rows: list[tuple[int, str]] = []
     for qid, text in queries:
         pos, _negs = parse_query(text)
         for t in sorted(set(tokenize(pos))):
             tok_rows.append((qid, t))
-    empty = spark.createDataFrame(
-        [],
+    empty = se._empty_df(
         "query_id int, token string, rank int, suggestion string, "
-        "dist int, df long",
+        "dist int, df long"
     )
     if not tok_rows:
         return empty
@@ -1229,15 +1229,9 @@ def suggest_spelling(
     if not missing:
         return empty
     muniq = sorted({t for _qid, t in missing})
-    ts = spark.read.parquet(se.paths.term_stats)
-    if se.committed_deltas is not None:
-        ts = ts.filter(F.col("delta") == max(se.committed_deltas))
-    cond = F.levenshtein(F.col("term"), F.lit(muniq[0])) <= max_edits
-    for t in muniq[1:]:
-        cond = cond | (F.levenshtein(F.col("term"), F.lit(t)) <= max_edits)
-    cand = ts.filter(cond).select(
-        "term", F.col("df").cast("long").alias("df")
-    )
+    cand = se.term_dictionary().filter(
+        _any(F.levenshtein(F.col("term"), F.lit(t)) <= max_edits for t in muniq)
+    ).select("term", F.col("df").cast("long").alias("df"))
     toks = spark.createDataFrame(missing, "query_id int, token string")
     dist = F.levenshtein(F.col("term"), F.col("token"))
     w = Window.partitionBy("query_id", "token").orderBy(
@@ -1289,63 +1283,34 @@ def search_wildcard(
     and only leading-wildcard patterns pay the full dictionary pass. A
     pattern matching more than ``max_expansions`` terms raises (silent
     truncation would make results scan-order-dependent); a pattern
-    matching nothing contributes no terms. Reference parity: the
-    reference has no query language at all (retrieval is an LLM prompt,
-    /root/reference/README.md:179-188); this is the standard IR surface
-    over the same corpus."""
-    import re as _re
-
+    matching nothing contributes no terms."""
     from ..functions.tokenizer import (
         parse_wildcard_query,
         wildcard_prefix,
         wildcard_regex,
     )
 
-    se = get_searcher(spark, index_dir, cell_parts)
-    parsed = {qid: parse_wildcard_query(text) for qid, text in queries}
-    pats = sorted({p for _, ps in parsed.values() for p in ps})
-    exp: dict[str, list[str]] = {}
-    if pats:
-        ts = spark.read.parquet(se.paths.term_stats)
-        if se.committed_deltas is not None:
-            ts = ts.filter(F.col("delta") == max(se.committed_deltas))
-        cond = F.col("term").rlike(wildcard_regex(pats[0]))
-        for p in pats[1:]:
-            cond = cond | F.col("term").rlike(wildcard_regex(p))
+    def spark_pred(pats: list[str]) -> Column:
+        cond = _any(F.col("term").rlike(wildcard_regex(p)) for p in pats)
         heads = [wildcard_prefix(p) for p in pats]
         if all(heads):
             # every pattern has a literal head -> the scan is prefix-pushed
             # exactly like search_prefix (the rlike then verifies).
-            pcond = F.col("term").startswith(heads[0])
-            for h in heads[1:]:
-                pcond = pcond | F.col("term").startswith(h)
-            cond = pcond & cond
-        vocab = [
-            r["term"] for r in ts.filter(cond).select("term").distinct().collect()
-        ]
-        for p in pats:
-            rx = _re.compile(wildcard_regex(p))
-            m = sorted(t for t in vocab if rx.match(t))
-            if len(m) > max_expansions:
-                raise ValueError(
-                    f"wildcard {p!r} expands to {len(m)} terms "
-                    f"(> max_expansions={max_expansions})"
-                )
-            exp[p] = m
-    expanded = []
-    for qid, (lits, ps) in parsed.items():
-        words = list(lits)
-        for p in ps:
-            words.extend(exp.get(p, []))
-        if words:
-            expanded.append((qid, " ".join(words)))
-    if not expanded:
-        out_schema = "query_id int, rank int, url string, score double" + (
-            ", text string" if with_text else ""
-        )
-        return spark.createDataFrame([], out_schema)
-    return se.search(
-        expanded, k=k, mode=mode, fixed_point=fixed_point, with_text=with_text
+            cond = _any(F.col("term").startswith(h) for h in heads) & cond
+        return cond
+
+    se = get_searcher(spark, index_dir, cell_parts)
+    return _expansion_search(
+        se, queries, parse_wildcard_query,
+        lambda pats: _expand_terms(
+            se,
+            pats,
+            spark_pred,
+            lambda p, t: re.match(wildcard_regex(p), t) is not None,
+            "wildcard",
+            max_expansions,
+        ),
+        with_text, k=k, mode=mode, fixed_point=fixed_point,
     )
 
 
@@ -1383,48 +1348,24 @@ def search_regexp(
     vocabularies the dictionary pass swaps to an n-gram sidecar that
     prefilters candidate terms by the pattern's literal n-grams (Lucene's
     own RegexpQuery acceleration), plan downstream unchanged."""
-    import re as _re
-
     se = get_searcher(spark, index_dir, cell_parts)
-    pats = sorted({p for _qid, p in patterns})
-    exp: dict[str, list[str]] = {}
-    if pats:
-        ts = spark.read.parquet(se.paths.term_stats)
-        if se.committed_deltas is not None:
-            ts = ts.filter(F.col("delta") == max(se.committed_deltas))
-        cond = F.col("term").rlike(f"^(?:{pats[0]})$")
-        for p in pats[1:]:
-            cond = cond | F.col("term").rlike(f"^(?:{p})$")
-        vocab = [
-            r["term"] for r in ts.filter(cond).select("term").distinct().collect()
-        ]
-        for p in pats:
-            rx = _re.compile(f"(?:{p})")
-            m = sorted(t for t in vocab if rx.fullmatch(t))
-            if len(m) > max_expansions:
-                raise ValueError(
-                    f"regexp {p!r} expands to {len(m)} terms "
-                    f"(> max_expansions={max_expansions})"
-                )
-            exp[p] = m
+    exp = _expand_terms(
+        se,
+        sorted({p for _qid, p in patterns}),
+        lambda ps: _any(F.col("term").rlike(f"^(?:{p})$") for p in ps),
+        lambda p, t: re.fullmatch(f"(?:{p})", t) is not None,
+        "regexp",
+        max_expansions,
+    )
     # Multiple patterns under one query_id OR together (ES bool-should of
     # regexp queries) — expansions union per qid, deduped, so a repeated
     # qid never produces duplicate result rows.
-    by_qid: dict[int, list[str]] = {}
+    by_qid: dict[int, set[str]] = {}
     for qid, p in patterns:
-        by_qid.setdefault(qid, []).append(p)
-    expanded = []
-    for qid, ps in sorted(by_qid.items()):
-        words = sorted({t for p in ps for t in exp.get(p, [])})
-        if words:
-            expanded.append((qid, " ".join(words)))
-    if not expanded:
-        out_schema = "query_id int, rank int, url string, score double" + (
-            ", text string" if with_text else ""
-        )
-        return spark.createDataFrame([], out_schema)
-    return se.search(
-        expanded, k=k, mode=mode, fixed_point=fixed_point, with_text=with_text
+        by_qid.setdefault(qid, set()).update(exp[p])
+    return _search_words(
+        se, {qid: sorted(ws) for qid, ws in sorted(by_qid.items())},
+        with_text, k=k, mode=mode, fixed_point=fixed_point,
     )
 
 
@@ -2179,9 +2120,8 @@ def more_like_this(
         sel = [t for _, t in keyed[:max_terms]]
         if sel:
             queries.append((qid, " ".join(sel)))
-    out_schema = "query_id int, rank int, url string, score double"
     if not queries:
-        return spark.createDataFrame([], out_schema)
+        return _empty_hits(se, False)
     res = se.search(queries, k=k + 1, mode=mode, fixed_point=fixed_point)
     seed_df = spark.createDataFrame(seeds, "sq int, seed_url string")
     survivors = res.join(
@@ -2550,12 +2490,14 @@ def _pruned_parquet_rows(
     columns: list[str],
     filters=None,
 ) -> list[dict]:
-    """Driver-side pruned parquet read: ``root/<part_dir>/*.parquet`` files,
-    the named columns only, optional row-group/page-level ``filters``
-    (pyarrow predicate pushdown). Raises FileNotFoundError into the caller's
-    Spark fallback when a partition dir is absent."""
+    """Driver-side pruned parquet read of ``root/<part_dir>/*.parquet``: the
+    named columns only, with optional pyarrow ``filters`` pushed to row
+    groups. A missing ``root`` raises FileNotFoundError; a missing part dir
+    under an existing root is an empty partition and yields no rows."""
     import pyarrow.parquet as pq
 
+    if not os.path.isdir(root):
+        raise FileNotFoundError(f"index relation missing: {root}")
     out: list[dict] = []
     for d in part_dirs:
         sub = os.path.join(root, d)
@@ -2576,52 +2518,31 @@ def _ensure_idf(se: Searcher, terms: list[str]) -> None:
     term-pruned term_stats read covering the misses (None caches an absent
     term). Shared by the BM25 paths and the positional phrase path.
 
-    r6: the read happens DRIVER-SIDE with pyarrow (same directory pruning
-    to the misses' buckets, same term predicate pushed to parquet row
-    groups) instead of a sequential Spark job — the result was always
-    collected to the driver to build the query payload anyway, and the
-    pruned slice is O(queried buckets' vocabulary), metadata-class at any
-    corpus size. Saves one full job launch per cold-term query batch
-    (~0.3-0.5 s of fixed overhead in this sandbox; guide §1.2 per-task vs
-    structural costs). Iceberg-backed indexes (no local parquet layout)
-    and any unexpected layout fall back to the original Spark read."""
+    The read happens DRIVER-SIDE with pyarrow (directory pruning to the
+    misses' buckets, the term predicate pushed to parquet row groups), not
+    as a Spark job: the pruned slice is O(queried buckets' vocabulary) and
+    was always collected to the driver to build the query payload anyway.
+    term_stats is parquet in every layout (Iceberg builds move only the
+    postings to the table), and a missing relation raises rather than
+    caching real terms as absent."""
     from ..functions.murmur3 import term_bucket
 
     misses = [t for t in terms if t not in se._idf_cache]
     if not misses:
         return
+    root = se.paths.term_stats
+    if se.committed_deltas is not None:
+        # streamed: term_stats is VERSIONED per refresh; pin to the
+        # committed max delta (a crashed refresh's recompute includes
+        # uncommitted docs' df — idf drift on the committed index).
+        root = os.path.join(root, f"delta={max(se.committed_deltas)}")
     miss_buckets = sorted({term_bucket(t, se.n_buckets) for t in misses})
-    rows: list[dict] | None = None
-    if se.iceberg_table is None:
-        try:
-            prefix = (
-                f"delta={max(se.committed_deltas)}/"
-                if se.committed_deltas is not None
-                else ""
-            )
-            rows = _pruned_parquet_rows(
-                se.paths.term_stats,
-                [f"{prefix}bucket={b}" for b in miss_buckets],
-                ["term", "df"],
-                filters=[("term", "in", misses)],
-            )
-        except Exception:
-            rows = None  # fall back to the Spark read below
-    if rows is None:
-        ts = se.spark.read.parquet(se.paths.term_stats)
-        if se.committed_deltas is not None:
-            # streamed: term_stats is VERSIONED per refresh; pin to the
-            # committed max delta (a crashed refresh's recompute includes
-            # uncommitted docs' df — idf drift on the committed index).
-            ts = ts.filter(F.col("delta") == max(se.committed_deltas))
-        rows = [
-            r.asDict()
-            for r in ts.filter(
-                F.col("bucket").isin(miss_buckets) & F.col("term").isin(misses)
-            )
-            .select("term", "df")
-            .collect()
-        ]
+    rows = _pruned_parquet_rows(
+        root,
+        [f"bucket={b}" for b in miss_buckets],
+        ["term", "df"],
+        filters=[("term", "in", misses)],
+    )
     found = {r["term"]: idf_value(se.n_docs, int(r["df"])) for r in rows}
     for t in misses:
         se._idf_cache[t] = found.get(t)
@@ -2690,14 +2611,11 @@ def _search_impl(
     # Paging: ranks (offset, offset+k] of the GLOBAL order — every per-cell
     # heap must hold offset+k candidates for the page to be exact.
     cell_k = k + offset + (tie_margin if fixed_point else 0)
-    out_schema = "query_id int, rank int, url string, score double" + (
-        ", text string" if with_text else ""
-    )
     _RAW_DDL = "query_id int, doc_id long, part_id int, local_pos long, score double"
     if raw_scored:
         empty = (se._empty_df(_RAW_DDL), None)
     else:
-        empty = se._empty_df(out_schema)
+        empty = _empty_hits(se, with_text)
 
     # Filtered search (Lucene filter context): the allowed docID set masks
     # candidates pre-heap as an INCLUSION — the mirror of the tombstone /
@@ -3115,39 +3033,26 @@ def _rank_and_lookup(
         want[did] = (pid, did - int(grid[pid]))
     parts = sorted({p for p, _ in want.values()})
     poss = sorted({lp for _, lp in want.values()})
-    # r6: the winners' url/text fetch is a DRIVER-SIDE pyarrow read of just
-    # the winners' part_id partition dirs with the local_pos predicate
-    # pushed to parquet row groups — the rows were always collected to the
-    # driver to assemble the result anyway, and the read touches <= queries
-    # x k partitions at any corpus size. One fewer sequential Spark job per
-    # query (~0.3-0.5 s fixed overhead here); any layout surprise falls
-    # back to the original Spark scan (identical pruning, identical rows).
-    lookup_cols = ["part_id", "local_pos", "url"] + (["text"] if with_text else [])
-    url_rows: list[dict] | None = None
-    try:
-        url_rows = []
-        for p in parts:
-            for r in _pruned_parquet_rows(
-                paths.docs_extracted,
-                [f"part_id={p}"],
-                lookup_cols[1:],
-                filters=[("local_pos", "in", poss)],
-            ):
-                r["part_id"] = p
-                url_rows.append(r)
-    except Exception:
-        url_rows = None
-    if url_rows is None:
-        url_rows = [
-            r.asDict()
-            for r in spark.read.parquet(paths.docs_extracted)
-            .filter(F.col("part_id").isin(parts) & F.col("local_pos").isin(poss))
-            .select(*lookup_cols)
-            .collect()
-        ]
-    winners = {
-        (int(r["part_id"]), int(r["local_pos"])): r for r in url_rows
-    }
+    # The winners' url/text fetch is a DRIVER-SIDE pyarrow read of just the
+    # winners' part_id partition dirs with the local_pos predicate pushed to
+    # parquet row groups — the rows were always collected to the driver to
+    # assemble the result, and the read touches <= queries x k partitions at
+    # any corpus size (docs_extracted is parquet in every layout).
+    lookup_cols = ["local_pos", "url"] + (["text"] if with_text else [])
+    winners: dict[tuple[int, int], dict] = {}
+    for p in parts:
+        for r in _pruned_parquet_rows(
+            paths.docs_extracted,
+            [f"part_id={p}"],
+            lookup_cols,
+            filters=[("local_pos", "in", poss)],
+        ):
+            winners[(p, int(r["local_pos"]))] = r
+    lost = sorted(set(want.values()) - set(winners))
+    if lost:
+        raise ValueError(
+            f"docs_extracted has no row for winning (part_id, local_pos) {lost}"
+        )
     out = []
     for r in top_rows:
         wrow = winners[want[int(r["doc_id"])]]
@@ -3220,14 +3125,13 @@ def search_query_string(
     from ..functions.sqlglue import spark_terms
     from ..functions.tokenizer import parse_query_string
 
+    _validate_qids(queries)
     se = get_searcher(spark, index_dir, cell_parts)
     parsed = {qid: parse_query_string(text) for qid, text in queries}
-    if len(parsed) != len(queries):
-        raise ValueError("duplicate query_id in batch")
 
     # prefix expansion: one term-dictionary scan for every stem in the batch
     stems = sorted({s for p in parsed.values() for s in p["prefixes"]})
-    exp = _expand_prefixes(se, stems, max_expansions) if stems else {}
+    exp = _expand_prefixes(se, stems, max_expansions)
     full_w: dict[int, dict[str, float]] = {}
     for qid, p in parsed.items():
         w = dict(p["weights"])
@@ -3236,10 +3140,7 @@ def search_query_string(
                 w.setdefault(t, 1.0)  # explicit clause keeps its weight
         full_w[qid] = w
 
-    out_schema = "query_id int, rank int, url string, score double" + (
-        ", text string" if with_text else ""
-    )
-    empty = spark.createDataFrame([], out_schema)
+    empty = _empty_hits(se, with_text)
 
     def _boost_word(t: str, w: float) -> str:
         if w == 1.0:

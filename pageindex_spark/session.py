@@ -153,8 +153,9 @@ def warm_up(spark: SparkSession) -> None:
         .collect()
     )
 
-    # Arrow-Python worker pool + the three Python runner flavors the engine
-    # uses (mapInArrow, applyInPandas, cogrouped applyInPandas).
+    # Arrow-Python worker pool + two of the engine's Python runner flavors:
+    # mapInArrow and cogrouped applyInPandas (plain grouped applyInPandas
+    # is not warmed here).
     def _ident(batches):
         yield from batches
 

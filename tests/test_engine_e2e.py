@@ -2513,6 +2513,28 @@ def test_intervals_matches_python(spark, built_index, sf_unit_dir):
         search_intervals(spark, built_index, [(1, f"{a} {b}", -1)])
 
 
+@pytest.mark.parametrize(
+    "fn, rows",
+    [
+        ("search_prefix", [(1, "ba*"), (1, "qu*")]),
+        ("search_fuzzy", [(1, "ba"), (1, "qu")]),
+        ("search_wildcard", [(1, "b?"), (1, "q*")]),
+        ("search_phrase_prefix", [(1, "ba", "q"), (1, "qu", "b")]),
+        ("search_span_first", [(1, "ba", 5), (1, "qu", 5)]),
+        ("search_span_not", [(1, "ba", "qu", 2), (1, "qu", "ba", 2)]),
+        ("search_intervals", [(1, "ba qu", 2), (1, "qu ba", 2)]),
+    ],
+)
+def test_duplicate_query_ids_rejected(spark, built_index, fn, rows):
+    """A batch repeating a query_id raises (like search_query_string) —
+    per-qid state is a dict, so the earlier query would silently vanish.
+    search_regexp is the documented exception: its rows OR per qid."""
+    import pageindex_spark.plans.query as Q
+
+    with pytest.raises(ValueError, match="duplicate query_id"):
+        getattr(Q, fn)(spark, built_index, rows).collect()
+
+
 def test_multi_terms_matches_python(spark, built_index, sf_unit_dir):
     """multi_terms vs brute force: compound (len%3, len%2) buckets over the
     OR match set, plus the top_n collapse (tail rewritten to the sentinel

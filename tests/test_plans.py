@@ -177,14 +177,35 @@ def test_positions_scan_pruned_and_pushed(spark, index_dir):
     assert "term" in plan.split("PushedFilters")[1].split("\n")[0]
 
 
-def test_prefix_expansion_scan_pushed_and_pruned(spark, index_dir):
-    """The term-dictionary scan behind 'term*' expansion (plans/query.py
-    _expand_prefixes) must push StartsWith to parquet and column-prune to
-    the term column (df never loads; no postings blobs anywhere near)."""
-    ts = (
-        spark.read.parquet(os.path.join(index_dir, "term_stats"))
-        .filter(F.col("term").startswith("ba") | F.col("term").startswith("qu"))
-        .select("term")
+def _engine_expansion_scan(monkeypatch, call):
+    """Run ``call`` and return the term-dictionary scan DataFrame the
+    engine's expansion front-end built for it (plans/query.py
+    ``_expansion_scan``, the scan ``_expand_terms`` collects)."""
+    import pageindex_spark.plans.query as Q
+
+    real, seen = Q._expansion_scan, []
+
+    def spy(*a, **kw):
+        seen.append(real(*a, **kw))
+        return seen[-1]
+
+    monkeypatch.setattr(Q, "_expansion_scan", spy)
+    call()
+    assert len(seen) == 1
+    return seen[0]
+
+
+def test_prefix_expansion_scan_pushed_and_pruned(spark, index_dir, monkeypatch):
+    """The term-dictionary scan behind 'term*' expansion must push
+    StartsWith to parquet and column-prune to the term column (df never
+    loads; no postings blobs anywhere near)."""
+    from pageindex_spark import search_prefix
+
+    ts = _engine_expansion_scan(
+        monkeypatch,
+        lambda: search_prefix(
+            spark, index_dir, [(1, "ba* qu*")], max_expansions=100_000
+        ),
     )
     plan = _explain(ts)
     assert "PushedFilters" in plan
@@ -234,24 +255,24 @@ def test_parse_wildcard_query_contract():
     assert wildcard_prefix("?uery") == ""
 
 
-def test_wildcard_literal_head_scan_pushed(spark, index_dir):
+def test_wildcard_literal_head_scan_pushed(spark, index_dir, monkeypatch):
     """When every wildcard pattern has a literal head, the expansion scan
     (plans/query.py search_wildcard) must push StartsWith to parquet just
     like the prefix path — the rlike merely verifies (leading-wildcard
     patterns are the only ones that pay a full dictionary pass)."""
-    from pageindex_spark.functions.tokenizer import wildcard_regex
+    from pageindex_spark import search_wildcard
 
-    ts = (
-        spark.read.parquet(os.path.join(index_dir, "term_stats"))
-        .filter(
-            F.col("term").startswith("ba")
-            & F.col("term").rlike(wildcard_regex("ba*a"))
-        )
-        .select("term")
+    ts = _engine_expansion_scan(
+        monkeypatch,
+        lambda: search_wildcard(
+            spark, index_dir, [(1, "ba*a")], max_expansions=100_000
+        ),
     )
     plan = _explain(ts)
     assert "PushedFilters" in plan
     assert "StartsWith" in plan.split("PushedFilters")[1].split("\n")[0]
+    read_schema = plan.split("ReadSchema:")[1].split("\n")[0]
+    assert "term" in read_schema and "df" not in read_schema
 
 
 def test_hits_count_plan_reads_no_norms(spark, index_dir):

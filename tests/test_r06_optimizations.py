@@ -117,42 +117,81 @@ def test_local_fast_path_equals_cogroup(spark, r06_index):
         assert fast == slow, f"fast path diverged for {kw}"
 
 
-def test_driver_rank_equals_window_rank(spark, r06_index):
-    """Force the Spark-window path (DRIVER_RANK_MAX_ROWS=0) and compare to
-    the default driver-side rank — byte-identical result rows."""
+def test_driver_rank_equals_window_rank(spark, r06_index, monkeypatch):
+    """Force the Spark-window rank and compare to the default driver-side
+    rank — byte-identical result rows. The slow arms also force the
+    distributed cogroup (LOCAL_QUERY_MAX_BYTES=-1): the local fast path
+    hands ``_rank_and_lookup`` plain rows, which always rank on the driver
+    whatever DRIVER_RANK_MAX_ROWS says."""
     import pageindex_spark.plans.query as Q
     from pageindex_spark.sources.corpus import make_queries
 
     queries = make_queries()
-    fast = sorted(
-        tuple(r)
-        for r in Q.search(spark, r06_index, queries, k=10, mode="bmw").collect()
-    )
-    orig = Q.DRIVER_RANK_MAX_ROWS
-    try:
-        Q.DRIVER_RANK_MAX_ROWS = 0  # every call takes the window path
-        slow = sorted(
-            tuple(r)
-            for r in Q.search(spark, r06_index, queries, k=10, mode="bmw").collect()
+    real = Q._rank_and_lookup
+    window_calls = []
+
+    def spy(se, scored, k, fixed_point, with_text, empty, **kw):
+        bound = kw.get("max_candidate_rows")
+        window_calls.append(
+            not isinstance(scored, list)
+            and (bound is None or bound > Q.DRIVER_RANK_MAX_ROWS)
         )
-    finally:
-        Q.DRIVER_RANK_MAX_ROWS = orig
-    assert fast == slow
-    # and the fixed-point flavor (the floored rank key branch)
-    fast_fp = sorted(
-        tuple(r)
-        for r in Q.search(
-            spark, r06_index, queries, k=10, mode="bmw", fixed_point=True
-        ).collect()
-    )
-    try:
-        Q.DRIVER_RANK_MAX_ROWS = 0
-        slow_fp = sorted(
+        return real(se, scored, k, fixed_point, with_text, empty, **kw)
+
+    monkeypatch.setattr(Q, "_rank_and_lookup", spy)
+    for fixed_point in (False, True):  # True: the floored rank key branch
+        window_calls.clear()
+        fast = sorted(
             tuple(r)
             for r in Q.search(
-                spark, r06_index, queries, k=10, mode="bmw", fixed_point=True
+                spark, r06_index, queries, k=10, mode="bmw",
+                fixed_point=fixed_point,
             ).collect()
         )
-    finally:
-        Q.DRIVER_RANK_MAX_ROWS = orig
-    assert fast_fp == slow_fp
+        assert window_calls == [False]
+        with monkeypatch.context() as m:
+            m.setattr(Q, "LOCAL_QUERY_MAX_BYTES", -1)  # distributed cogroup
+            m.setattr(Q, "DRIVER_RANK_MAX_ROWS", 0)  # window rank
+            window_calls.clear()
+            slow = sorted(
+                tuple(r)
+                for r in Q.search(
+                    spark, r06_index, queries, k=10, mode="bmw",
+                    fixed_point=fixed_point,
+                ).collect()
+            )
+            assert window_calls == [True]
+        assert fast and fast == slow
+
+
+def test_driver_lookups_raise_on_broken_layout(spark, r06_index, tmp_path):
+    """The driver-side idf and url lookups have no silent second path: an
+    index copy without term_stats/ raises instead of caching every term as
+    absent and returning no rows, and a winner whose docs_extracted
+    partition is gone raises naming its (part_id, local_pos)."""
+    import pageindex_spark.plans.query as Q
+    from pageindex_spark.sources.corpus import make_queries
+
+    queries = make_queries()
+    no_stats = str(tmp_path / "no_term_stats")
+    shutil.copytree(r06_index, no_stats)
+    shutil.rmtree(os.path.join(no_stats, "term_stats"))
+    with pytest.raises(FileNotFoundError, match="term_stats"):
+        Q.search(spark, no_stats, queries, k=10).collect()
+
+    rows = Q.search(spark, r06_index, queries, k=10).collect()
+    assert rows
+    first = Q.get_searcher(spark, r06_index)
+    no_part = str(tmp_path / "no_extract_part")
+    shutil.copytree(r06_index, no_part)
+    # drop the build partition holding the top winner of the first query
+    url_part = {
+        r["url"]: r["part_id"]
+        for r in spark.read.parquet(first.paths.docs_extracted)
+        .select("url", "part_id")
+        .collect()
+    }
+    part = url_part[rows[0]["url"]]
+    shutil.rmtree(os.path.join(no_part, "docs_extracted", f"part_id={part}"))
+    with pytest.raises(ValueError, match=r"\(part_id, local_pos\)"):
+        Q.search(spark, no_part, queries, k=10).collect()
