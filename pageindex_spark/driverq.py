@@ -22,6 +22,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import EXCLUDED_RULES, INFER_FILTERS_FROM_GENERATE, with_excluded_rule
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -5424,13 +5426,13 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     # may build its own session): without it, the filter inferred from
     # explode(tokenize(text)) is pushed below the fan-out exchange and the
     # corpus is tokenized twice on the serial scan tasks (see get_spark).
-    try:
-        spark.conf.set(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-    except Exception:
-        pass
+    # Merged into the session's existing exclusions, never replacing them.
+    spark.conf.set(
+        EXCLUDED_RULES,
+        with_excluded_rule(
+            spark.conf.get(EXCLUDED_RULES, None), INFER_FILTERS_FROM_GENERATE
+        ),
+    )
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):

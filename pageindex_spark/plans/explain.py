@@ -13,8 +13,8 @@ Plan shape (everything here is metadata-sized — winners are <= queries x k):
 3. run METADATA for the query terms is already collected by the pruned
    postings scan; only the few runs whose [first_doc, last_doc] span a
    winner fetch their blobs (run_id-pushed second read) and decode;
-4. doc lengths come from the winners' norms partitions, df from the pruned
-   term_stats read, n_docs/avgdl from meta — contributions recompute
+4. doc lengths come from the winners' norms partitions, df from the query
+   head's pruned term_stats read, n_docs/avgdl from meta — contributions recompute
    exactly the scoring kernels' formula, in the driver, over <= q x k x
    |terms| rows.
 
@@ -28,12 +28,10 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.tokenizer import BM25_B, BM25_K1, parse_boost_query, parse_query, tokenize
+from ..functions.tokenizer import BM25_B, BM25_K1
 from ..operators.codec import vb_decode
 from ..operators.runfmt import decode_run
-from ..operators.wand import idf_value
-from ..sources.tables import read_index_runs
-from .query import _ensure_idf, get_searcher
+from .query import _query_head, _url_doc_ids, get_searcher
 
 
 def explain_score(
@@ -59,49 +57,16 @@ def explain_score(
     urls = sorted({r["url"] for r in winners})
 
     # url -> docID (inverse winner lookup: one url-pushed, column-pruned scan)
-    ext = (
-        spark.read.parquet(se.paths.docs_extracted)
-        .filter(F.col("url").isin(urls))
-        .select("part_id", "local_pos", "url")
-        .collect()
-    )
-    grid = se.grid_parts
-    did_of_url = {
-        r["url"]: int(grid[int(r["part_id"])]) + int(r["local_pos"]) for r in ext
-    }
+    did_of_url = dict(_url_doc_ids(se, urls))
 
-    # per-query positive terms + boosts (identical parsing to search)
-    qinfo: dict[int, tuple[list[str], dict[str, float]]] = {}
-    for qid, text in queries:
-        txt, boosts = parse_boost_query(text)
-        pos, _negs = parse_query(txt)
-        qinfo[qid] = (sorted(set(tokenize(pos))), boosts)
-    terms = sorted({t for ts, _ in qinfo.values() for t in ts})
-    _ensure_idf(se, terms)
-    present = [t for t in terms if se._idf_cache[t] is not None]
+    # per-query positive terms, boosts and df (identical parsing to search)
+    head = _query_head(se, queries)
+    present = sorted({t for ts in head.terms.values() for t in ts if t in head.df})
     if not present:
         return empty
 
-    # df per term (the idf cache stores idf; explain surfaces the raw df)
-    from ..functions.murmur3 import term_bucket
-
-    buckets = sorted({term_bucket(t, se.n_buckets) for t in present})
-    ts = se.term_dictionary()
-    df_of = {
-        r["term"]: int(r["df"])
-        for r in ts.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(present)
-        )
-        .select("term", "df")
-        .collect()
-    }
-
     # runs metadata (column-pruned) -> only runs spanning a winner fetch blobs
-    runs_meta = read_index_runs(
-        spark, se.paths.postings, se.n_buckets, se.iceberg_table
-    ).filter(F.col("bucket").isin(buckets) & F.col("term").isin(present))
-    if se.committed_deltas is not None:
-        runs_meta = runs_meta.filter(F.col("delta").isin(se.committed_deltas))
+    runs_meta = se.postings_runs(present)
     meta_rows = runs_meta.select("term", "run_id", "first_doc", "last_doc").collect()
     dids = sorted(did_of_url.values())
     want_runs: dict[str, set[int]] = {}
@@ -123,6 +88,7 @@ def explain_score(
                     tf_of[(row["term"], d)] = int(tfs[j])
 
     # doc lengths from the winners' norms partitions
+    grid = se.grid_parts
     parts = sorted(
         {int(np.searchsorted(grid, d, side="right") - 1) for d in dids}
     )
@@ -138,20 +104,20 @@ def explain_score(
             if lo <= d < lo + len(dls):
                 dl_of[d] = int(dls[d - lo])
 
-    n_docs, avgdl = se.n_docs, se.avgdl
+    avgdl = se.avgdl
     out = []
     for w in winners:
         qid, url = int(w["query_id"]), w["url"]
         did = did_of_url[url]
-        qts, boosts = qinfo[qid]
-        for t in qts:
+        boosts = head.boosts.get(qid, {})
+        for t in head.terms[qid]:
             tf = tf_of.get((t, did))
             if tf is None:
                 continue
-            df = df_of[t]
+            df = head.df[t]
             # the scoring kernels' exact idf (operators/wand.idf_value),
             # boost folded in the same place search folds it
-            idf = idf_value(n_docs, df) * boosts.get(t, 1.0)
+            idf = head.idf[t] * boosts.get(t, 1.0)
             dl = dl_of[did]
             contrib = idf * (BM25_K1 + 1.0) * (
                 tf / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))

@@ -7,11 +7,14 @@ aggregations a search UI shows NEXT to the top-k — the total hit count
 aggregations / Lucene faceting). These aggregate the ENTIRE match set, so
 they get their own plan instead of riding the top-k heap:
 
-1. **Pruned scan + cell slicing** — identical to the search plan
-   (bucket-pruned postings, map-side byte slicing; `query._slice_mapper`).
+1. **Query head + pruned scan + cell slicing** — identical to the search
+   plan (`query._query_head`, `Searcher.postings_runs`,
+   `query._cell_slices`).
 2. **Per-cell match kernel** — decode each query term's cell postings once,
-   union (OR semantics), subtract tombstones and '-term' negations (the
-   same pre-heap exclusion contract as search). Counting emits per-cell
+   union (OR semantics), subtract the cell's exclusion mask
+   (`query._CellMask`: tombstones and '-term' negations, the same pre-heap
+   contract as search). Kernels capture the payload, negations and
+   tombstones as plain closure values, like search's. Counting emits per-cell
    PARTIAL counts — O(cells) rows shuffle, never O(matches); faceting must
    materialize matched doc coordinates, so it emits (query_id, part_id,
    local_pos) rows — inherently O(matches), the price of the statistic.
@@ -31,6 +34,7 @@ scoring); a dedicated doc-only slice schema would halve count shuffle bytes
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -39,93 +43,76 @@ from pyspark.sql import functions as F
 
 from ..operators.runfmt import decode_run
 from ..operators.wand import assemble_cell_runs
-from ..sources.tables import read_index_runs
-from .query import _ensure_idf, _slice_mapper, _SLICE_DDL, get_searcher
+from .query import (
+    QueryHead,
+    _cell_slices,
+    _CellMask,
+    _query_head,
+    _run_parts,
+    get_searcher,
+)
 
 
-def _match_state(se, queries: list[tuple[int, str]]):
-    """Shared head for the full-match plans: parse queries ('term^w' boosts
-    tolerated and ignored — weights don't change the match set; '-term'
-    negations honored), resolve term presence via the Searcher's idf cache,
-    and build the pruned slices DataFrame. Returns None when no query can
-    match anything."""
-    from ..functions.murmur3 import term_bucket
-    from ..functions.tokenizer import parse_boost_query, parse_query, tokenize
+class _MatchState(NamedTuple):
+    """A parsed batch plus its pruned slices (``_match_state``)."""
 
-    parsed = {}
-    for qid, text in queries:
-        txt, _w = parse_boost_query(text)
-        parsed[qid] = parse_query(txt)
-    qterms = {qid: sorted(set(tokenize(pos))) for qid, (pos, _) in parsed.items()}
-    qneg = {qid: negs for qid, (_, negs) in parsed.items() if negs}
-    terms = sorted(
-        {t for ts in qterms.values() for t in ts}
-        | {t for ns in qneg.values() for t in ns}
-    )
-    if not terms:
-        return None
-    _ensure_idf(se, terms)
-    present = {t for t in terms if se._idf_cache[t] is not None}
+    head: QueryHead
+    payload: list[tuple[int, list[str]]]  # per query: its terms in the index
+    deleted: np.ndarray | None  # the Searcher's tombstones (sorted)
+    slices: DataFrame
+    runs: DataFrame
+
+
+def _match_state(se, queries: list[tuple[int, str]]) -> _MatchState | None:
+    """Shared head for the full-match plans: the shared query head
+    (``_query_head``: 'term^w' boosts tolerated and ignored — weights don't
+    change the match set; '-term' negations honored) and the pruned slices
+    of every present term. Returns None when no query can match anything."""
+    head = _query_head(se, queries)
     payload = [
-        (qid, [t for t in qts if t in present]) for qid, qts in qterms.items()
+        (qid, ts) for qid, qts in head.terms.items()
+        if (ts := [t for t in qts if t in head.df])
     ]
-    payload = [(qid, ts) for qid, ts in payload if ts]
     if not payload:
         return None
-    neg_payload = {
-        qid: [t for t in ns if t in present] for qid, ns in qneg.items()
-    }
-    neg_payload = {qid: ns for qid, ns in neg_payload.items() if ns}
-
-    spark = se.spark
-    bc_payload = spark.sparkContext.broadcast(payload)
-    bc_neg = spark.sparkContext.broadcast(neg_payload) if neg_payload else None
-    bc_deleted = (
-        spark.sparkContext.broadcast(se.deleted_ids)
-        if se.deleted_ids is not None and len(se.deleted_ids)
-        else None
+    runs = se.postings_runs(
+        sorted(
+            {t for _, ts in payload for t in ts}
+            | {t for ns in head.negs.values() for t in ns}
+        )
     )
-    scan_terms = sorted(
-        {t for _, ts in payload for t in ts}
-        | {t for ns in neg_payload.values() for t in ns}
-    )
-    buckets = sorted({term_bucket(t, se.n_buckets) for t in scan_terms})
-    runs = read_index_runs(
-        spark, se.paths.postings, se.n_buckets, se.iceberg_table
-    ).filter(F.col("bucket").isin(buckets) & F.col("term").isin(scan_terms))
-    if se.committed_deltas is not None:
-        runs = runs.filter(F.col("delta").isin(se.committed_deltas))
-    bc_grid = spark.sparkContext.broadcast(se.cell_grid)
-    slices = runs.drop("bucket", "run_id", "n_bytes", "delta").mapInArrow(
-        _slice_mapper(bc_grid), schema=_SLICE_DDL
-    )
-    return bc_payload, bc_neg, bc_deleted, slices, runs
+    return _MatchState(head, payload, se.deleted_ids, _cell_slices(se, runs), runs)
 
 
-def _cell_matches(pdf: pd.DataFrame, bc_payload, bc_neg, bc_deleted):
+def _cell_matches(pdf: pd.DataFrame, payload, negs, deleted, counts=False):
     """(query_id -> matched docIDs) within one cell: decode each term's cell
-    postings once, union per query, subtract tombstones + negations. Exact
-    per cell because cells partition docID space."""
+    postings once, union per query, subtract the cell's exclusion mask
+    (``_CellMask``: tombstones + negations). With ``counts`` each value is
+    (docIDs, how many of the query's terms contain each doc). Exact per
+    cell because cells partition docID space."""
     term_runs = assemble_cell_runs(pdf)
     docs_by_term = {
         t: decode_run(r)[0].astype(np.int64) for t, r in term_runs.items()
     }
-    deleted = bc_deleted.value if bc_deleted is not None else None
-    negs = bc_neg.value if bc_neg is not None else {}
+    lo, hi = int(pdf["first_doc"].min()), int(pdf["last_doc"].max()) + 1
+    mask = _CellMask(term_runs, lo, hi, deleted, negs, docs_by_term)
     out: dict[int, np.ndarray] = {}
-    for qid, terms in bc_payload.value:
+    for qid, terms in payload:
         arrs = [docs_by_term[t] for t in terms if t in docs_by_term]
         if not arrs:
             continue
-        u = arrs[0] if len(arrs) == 1 else np.unique(np.concatenate(arrs))
-        excl = [docs_by_term[t] for t in negs.get(qid, ()) if t in docs_by_term]
-        if deleted is not None:
-            excl.append(deleted)
-        if excl:
-            e = excl[0] if len(excl) == 1 else np.unique(np.concatenate(excl))
-            u = u[~np.isin(u, e)]
+        if counts:
+            u, n = np.unique(np.concatenate(arrs), return_counts=True)
+        else:
+            u = arrs[0] if len(arrs) == 1 else np.unique(np.concatenate(arrs))
+        e = mask(qid)
+        if e is not None:
+            keep = ~np.isin(u, e)
+            u = u[keep]
+            if counts:
+                n = n[keep]
         if len(u):
-            out[qid] = u
+            out[qid] = (u, n) if counts else u
     return out
 
 
@@ -158,10 +145,10 @@ def _count_matches(state) -> DataFrame:
     this count shape beats duplicating the URL-joined kernel lineage, and
     a persist() would trade that for cache ownership a lazy API can't
     release. Output (query_id, n)."""
-    bc_payload, bc_neg, bc_deleted, slices, _runs = state
+    payload, negs, deleted = state.payload, state.head.negs, state.deleted
 
     def count_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        matches = _cell_matches(pdf, bc_payload, bc_neg, bc_deleted)
+        matches = _cell_matches(pdf, payload, negs, deleted)
         return pd.DataFrame(
             {
                 "query_id": np.array(list(matches), dtype=np.int32),
@@ -169,75 +156,63 @@ def _count_matches(state) -> DataFrame:
             }
         )
 
-    partial = slices.groupBy("cell").applyInPandas(
+    partial = state.slices.groupBy("cell").applyInPandas(
         count_cell, schema="query_id int, n long"
     )
     return partial.groupBy("query_id").agg(F.sum("n").alias("n"))
 
 
+def _match_coords(se, state, rated: bool = False) -> DataFrame:
+    """The match kernel's docIDs as (query_id, part_id, local_pos) rows,
+    converted to coordinates IN the kernel (vectorized searchsorted over
+    the grid). ``rated`` adds each doc's term-coverage grade for
+    ``rank_eval``: rating = number of DISTINCT query terms whose postings
+    contain the doc — within a cell each term's decoded docID list is
+    already distinct, so the multiplicity of a docID across the query's
+    term lists IS the grade, and cells partition docID space, so no
+    cross-cell merge is needed. O(matches) rows."""
+    payload, negs, deleted = state.payload, state.head.negs, state.deleted
+    grid = se.grid_parts
+    cols = {"query_id": "int32", "part_id": "int32", "local_pos": "int64"}
+    if rated:
+        cols["rating"] = "int32"
+
+    def coord_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+        matches = _cell_matches(pdf, payload, negs, deleted, counts=rated)
+        if not matches:
+            return pd.DataFrame({c: [] for c in cols}).astype(cols)
+        out = {c: [] for c in cols}
+        for qid, m in matches.items():
+            u = m[0] if rated else m
+            pid = np.searchsorted(grid, u, side="right") - 1
+            out["query_id"].append(np.full(len(u), qid, dtype=np.int32))
+            out["part_id"].append(pid.astype(np.int32))
+            out["local_pos"].append(u - grid[pid])
+            if rated:
+                out["rating"].append(m[1].astype(np.int32))
+        return pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
+
+    schema = "query_id int, part_id int, local_pos long" + (
+        ", rating int" if rated else ""
+    )
+    return state.slices.groupBy("cell").applyInPandas(coord_cell, schema=schema)
+
+
 def _matched_urls(spark: SparkSession, se, state) -> DataFrame:
     """Shared tail for the full-match SURFACES (facets, sort-by-field):
-    the match kernel's docIDs as (query_id, part_id, url) rows. Matched
-    docIDs convert to (part_id, local_pos) coordinates IN the kernel
-    (broadcast grid, vectorized searchsorted), then the extracts scan is
-    filtered to the partitions the matches can live in before the url join
-    (partition-dir pruning — selective queries touch a handful of files)."""
-    bc_payload, bc_neg, bc_deleted, slices, runs = state
-    bc_parts = spark.sparkContext.broadcast(se.grid_parts)
-
-    def match_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        grid = bc_parts.value
-        matches = _cell_matches(pdf, bc_payload, bc_neg, bc_deleted)
-        qids, pids, lps = [], [], []
-        for qid, u in matches.items():
-            pid = np.searchsorted(grid, u, side="right") - 1
-            qids.append(np.full(len(u), qid, dtype=np.int32))
-            pids.append(pid.astype(np.int32))
-            lps.append(u - grid[pid])
-        if not qids:
-            return pd.DataFrame(
-                {"query_id": [], "part_id": [], "local_pos": []}
-            ).astype({"query_id": "int32", "part_id": "int32", "local_pos": "int64"})
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(qids),
-                "part_id": np.concatenate(pids),
-                "local_pos": np.concatenate(lps),
-            }
-        )
-
-    matched = slices.groupBy("cell").applyInPandas(
-        match_cell, schema="query_id int, part_id int, local_pos long"
-    )
+    the match kernel's docIDs as (query_id, part_id, url) rows. The
+    extracts scan is filtered to the partitions the matches can live in
+    before the url join (partition-dir pruning — selective queries touch a
+    handful of files)."""
     ext = spark.read.parquet(se.paths.docs_extracted).select(
         "part_id", "local_pos", "url"
     )
-    parts = _run_touched_parts(se, runs)
-    if 2 * len(parts) < len(se.grid_parts):
-        ext = ext.filter(F.col("part_id").isin(sorted(parts)))
-    return matched.join(ext, ["part_id", "local_pos"]).select(
+    parts = _run_parts(se, state.runs)
+    if parts is not None:
+        ext = ext.filter(F.col("part_id").isin(parts))
+    return _match_coords(se, state).join(ext, ["part_id", "local_pos"]).select(
         "query_id", "part_id", "url"
     )
-
-
-def _run_touched_parts(se, runs) -> set[int]:
-    """Extract partitions the pruned runs' docID ranges can touch — derived
-    driver-side from the RUN metadata (column-pruned, blobs never load;
-    collecting from the slices DF instead would re-execute the whole
-    slicing job for a second action), the same trick as prune_norms.
-    Shared by the ``_matched_urls`` url lookup and ``significant_terms``'
-    text scan."""
-    ranges = [
-        (int(r["first_doc"]), int(r["last_doc"]))
-        for r in runs.select("first_doc", "last_doc").collect()
-    ]
-    grid = se.grid_parts
-    parts: set[int] = set()
-    for first, last in ranges:
-        p0 = int(np.searchsorted(grid, first, side="right")) - 1
-        p1 = int(np.searchsorted(grid, last, side="right")) - 1
-        parts.update(range(max(p0, 0), min(p1, len(grid) - 1) + 1))
-    return parts
 
 
 def facet_counts(
@@ -790,8 +765,6 @@ def frequent_term_pairs(
     C(items, 2) sorted-array intersections, vectorized; the df window is
     what keeps C small — widening it is an explicit cost decision, the
     same dial ES documents for frequent_item_sets."""
-    from ..functions.murmur3 import term_bucket
-
     se = get_searcher(spark, index_dir, cell_parts)
     ts = se.term_dictionary()
     cand = sorted(
@@ -808,30 +781,18 @@ def frequent_term_pairs(
     )
     if len(cand) < 2:
         return empty
-    buckets = sorted({term_bucket(t, se.n_buckets) for t in cand})
-    runs = read_index_runs(
-        spark, se.paths.postings, se.n_buckets, se.iceberg_table
-    ).filter(F.col("bucket").isin(buckets) & F.col("term").isin(cand))
-    if se.committed_deltas is not None:
-        runs = runs.filter(F.col("delta").isin(se.committed_deltas))
-    bc_grid = spark.sparkContext.broadcast(se.cell_grid)
-    slices = runs.drop("bucket", "run_id", "n_bytes", "delta").mapInArrow(
-        _slice_mapper(bc_grid), schema=_SLICE_DDL
-    )
-    bc_deleted = (
-        spark.sparkContext.broadcast(se.deleted_ids)
-        if se.deleted_ids is not None and len(se.deleted_ids)
-        else None
-    )
+    slices = _cell_slices(se, se.postings_runs(cand))
+    deleted = se.deleted_ids
 
     def pair_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         term_runs = assemble_cell_runs(pdf)
-        deleted = bc_deleted.value if bc_deleted is not None else None
+        lo, hi = int(pdf["first_doc"].min()), int(pdf["last_doc"].max()) + 1
+        dead = _CellMask(term_runs, lo, hi, deleted, {}).deleted
         docs_by_term = {}
         for t, r in term_runs.items():
             docs = decode_run(r)[0].astype(np.int64)
-            if deleted is not None:
-                docs = docs[~np.isin(docs, deleted)]
+            if dead is not None:
+                docs = docs[~np.isin(docs, dead)]
             if len(docs):
                 docs_by_term[t] = docs
         terms = sorted(docs_by_term)
@@ -2034,7 +1995,6 @@ def significant_terms(
     the token explode, not the match kernel, is the cost being bought
     down, the same trade ES's shard sampler makes)."""
     from ..functions.sqlglue import spark_terms
-    from ..functions.tokenizer import parse_boost_query, parse_query, tokenize
     from pyspark.sql import Window
 
     se = get_searcher(spark, index_dir, cell_parts)
@@ -2044,13 +2004,14 @@ def significant_terms(
     )
     if state is None:
         return empty
-    # (query, own-term) exclusion relation — tiny, broadcast.
-    own_rows = []
-    for qid, text in queries:
-        txt, _w = parse_boost_query(text)
-        pos, negs = parse_query(txt)
-        for t in set(tokenize(pos)) | set(negs):
-            own_rows.append((qid, t))
+    # (query, own-term) exclusion relation — tiny, broadcast. A term the
+    # index lacks never reaches fg, so the head's present negations suffice.
+    head = state.head
+    own_rows = [
+        (qid, t)
+        for qid, ts in head.terms.items()
+        for t in set(ts) | set(head.negs.get(qid, ()))
+    ]
     own = spark.createDataFrame(own_rows or [(-1, "")], "query_id int, term string")
 
     matched = _matched_urls(spark, se, state)
@@ -2073,9 +2034,9 @@ def significant_terms(
     ext = spark.read.parquet(se.paths.docs_extracted).select(
         F.col("part_id").cast("int").alias("part_id"), "url", "text"
     )
-    parts = _run_touched_parts(se, state[4])
-    if 2 * len(parts) < len(se.grid_parts):
-        ext = ext.filter(F.col("part_id").isin(sorted(parts)))
+    parts = _run_parts(se, state.runs)
+    if parts is not None:
+        ext = ext.filter(F.col("part_id").isin(parts))
     doc_terms = matched.join(ext, ["part_id", "url"]).select(
         "query_id",
         "url",
@@ -2985,72 +2946,6 @@ def constant_score(
     )
 
 
-def _rated_coords(spark: SparkSession, se, state) -> DataFrame:
-    """Rating kernel for ``rank_eval``: every matched doc's term-coverage
-    grade as (query_id, part_id, local_pos, rating) rows — rating = number
-    of DISTINCT query terms whose postings contain the doc. Within a cell
-    each term's decoded docID list is already distinct, so the multiplicity
-    of a docID across the query's term lists (one ``np.unique``
-    with counts) IS the grade; cells partition docID space, so no
-    cross-cell merge is needed. Exclusions (tombstones, '-term' negations)
-    mask pre-emission — the engine-wide pre-heap contract. O(matches)
-    rows, the same price ``_matched_urls`` pays."""
-    bc_payload, bc_neg, bc_deleted, slices, _runs = state
-    bc_parts = spark.sparkContext.broadcast(se.grid_parts)
-
-    def rate_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        grid = bc_parts.value
-        term_runs = assemble_cell_runs(pdf)
-        docs_by_term = {
-            t: decode_run(r)[0].astype(np.int64) for t, r in term_runs.items()
-        }
-        deleted = bc_deleted.value if bc_deleted is not None else None
-        negs = bc_neg.value if bc_neg is not None else {}
-        qids, pids, lps, rts = [], [], [], []
-        for qid, terms in bc_payload.value:
-            arrs = [docs_by_term[t] for t in terms if t in docs_by_term]
-            if not arrs:
-                continue
-            u, counts = np.unique(np.concatenate(arrs), return_counts=True)
-            excl = [docs_by_term[t] for t in negs.get(qid, ()) if t in docs_by_term]
-            if deleted is not None:
-                excl.append(deleted)
-            if excl:
-                e = excl[0] if len(excl) == 1 else np.unique(np.concatenate(excl))
-                keep = ~np.isin(u, e)
-                u, counts = u[keep], counts[keep]
-            if not len(u):
-                continue
-            pid = np.searchsorted(grid, u, side="right") - 1
-            qids.append(np.full(len(u), qid, dtype=np.int32))
-            pids.append(pid.astype(np.int32))
-            lps.append(u - grid[pid])
-            rts.append(counts.astype(np.int32))
-        if not qids:
-            return pd.DataFrame(
-                {"query_id": [], "part_id": [], "local_pos": [], "rating": []}
-            ).astype(
-                {
-                    "query_id": "int32",
-                    "part_id": "int32",
-                    "local_pos": "int64",
-                    "rating": "int32",
-                }
-            )
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(qids),
-                "part_id": np.concatenate(pids),
-                "local_pos": np.concatenate(lps),
-                "rating": np.concatenate(rts),
-            }
-        )
-
-    return slices.groupBy("cell").applyInPandas(
-        rate_cell, schema="query_id int, part_id int, local_pos long, rating int"
-    )
-
-
 def rank_eval(
     spark: SparkSession,
     index_dir: str,
@@ -3063,7 +2958,7 @@ def rank_eval(
     (query_id, n_rel, p10_6, recall10_6, mrr6, dcg6, ndcg10_6): score the
     engine's own BM25 top-k against DETERMINISTIC term-coverage judgments
     — rating(q, d) = distinct query terms present in d (from the committed
-    postings, via ``_rated_coords``), relevant iff the doc covers ALL the
+    postings, via ``_match_coords``), relevant iff the doc covers ALL the
     query's distinct tokens. ``disc6`` is the fixed-point NDCG discount
     table (driverq.NDCG_DISC6): integer gains (2^rating - 1) times integer
     discounts make DCG/IDCG exact int64 sums, so the engine and the SQL
@@ -3082,7 +2977,6 @@ def rank_eval(
     convention). Must reproduce the rank_eval SQL twin exactly."""
     import math as _math
 
-    from ..functions.tokenizer import parse_boost_query, parse_query, tokenize
     from .query import search
 
     if k < 1:
@@ -3093,16 +2987,11 @@ def rank_eval(
         "query_id int, n_rel long, p10_6 long, recall10_6 long, "
         "mrr6 long, dcg6 long, ndcg10_6 long"
     )
-    n_q: dict[int, int] = {}
-    for qid, text in queries:
-        txt, _w = parse_boost_query(text)
-        pos, _negs = parse_query(txt)
-        n_q[qid] = len(set(tokenize(pos)))
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
     if state is None:
         return spark.createDataFrame([], out_ddl)
-    ratings = _rated_coords(spark, se, state)
+    ratings = _match_coords(se, state, rated=True)
     grade_rows = ratings.groupBy("query_id", "rating").count().collect()
     top = search(
         spark, index_dir, queries, k=k, cell_parts=cell_parts, fixed_point=True
@@ -3133,7 +3022,7 @@ def rank_eval(
         by_q.setdefault(int(r["query_id"]), []).append((int(r["rank"]), r["url"]))
     rows = []
     for qid, hits in sorted(by_q.items()):
-        nq = n_q[qid]
+        nq = len(state.head.terms[qid])
         g = grades.get(qid, {})
         n_rel = g.get(nq, 0)
         n_ret = len(hits)

@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from ..functions.tokenizer import BM25_B, BM25_K1, tokenize
 from ..operators.codec import vb_decode, vb_encode
 from ..operators.docids import attach_doc_ids
+from ..operators.wand import idf_value
 from ..sources.tables import read_meta, write_meta
 from .build_index import IndexPaths
 
@@ -208,7 +209,11 @@ def phrase_search_positions(
     if not allterms:
         return empty
     _ensure_idf(se, allterms)
-    idf = {t: v for t in allterms if (v := se._idf_cache[t]) is not None}
+    idf = {
+        t: idf_value(se.n_docs, df)
+        for t in allterms
+        if (df := se._df_cache[t]) is not None
+    }
     # A phrase containing a corpus-absent term matches nothing (the text
     # path's conjunctive stage has the same payload gate).
     payload = [
@@ -218,7 +223,6 @@ def phrase_search_positions(
     ]
     if not payload:
         return empty
-    bc_payload = spark.sparkContext.broadcast(payload)
     avgdl = se.avgdl
 
     present = sorted({t for _, ts, _ in payload for t in ts})
@@ -251,7 +255,7 @@ def phrase_search_positions(
                     for e in row["plists"]
                 }
                 dl = float(row["doc_len"])
-                for qid, terms, uniq_idf in bc_payload.value:
+                for qid, terms, uniq_idf in payload:
                     if any(t not in plist for t in terms):
                         continue
                     if not in_order:

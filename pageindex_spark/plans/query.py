@@ -14,9 +14,9 @@ Physical plan (north_star query path; SURVEY.md §3.3 target mapping):
    input (cells x queries x k); then one join to doc_map for urls (runtime-
    filtered by the tiny candidate set).
 
-Queries ship to executors as a broadcast list of (query_id, [(term, idf)]);
-idf comes from the pruned term_stats read, so executors never see global
-state beyond (n_docs, avgdl).
+Queries ship to executors inside the kernel closure as a list of
+(query_id, [(term, idf)]); idf comes from the pruned term_stats read, so
+executors never see global state beyond (n_docs, avgdl).
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ import operator
 import os
 import re
 from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -34,6 +35,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.murmur3 import term_bucket
 from ..functions.tokenizer import (
     BM25_B,
     BM25_K1,
@@ -42,6 +44,7 @@ from ..functions.tokenizer import (
     tokenize,
 )
 from ..operators.compaction import run_from_row
+from ..operators.runfmt import decode_run
 from ..operators.wand import (
     CellNorms,
     assemble_cell_runs,
@@ -146,9 +149,10 @@ class Searcher:
         )
         # Tombstoned docIDs (plans/deletes.py): materialized driver-side
         # from the COMMITTED version only and masked pre-heap in every
-        # scoring kernel. O(deleted) memory — the Lucene delete-bitset
-        # trade; the >broadcast-size upgrade path is a (cell -> deleted)
-        # side relation through the existing norms cogroup.
+        # scoring kernel (_CellMask). O(deleted) memory — the Lucene
+        # delete-bitset trade. Kernels capture the sorted array as a plain
+        # closure value; PySpark ships any UDF command over its broadcast
+        # threshold (1 MB) as a broadcast on its own.
         deletes = self.meta.get("deletes") or {}
         self.deleted_ids: np.ndarray | None = None
         if int(deletes.get("n_deleted", 0)) > 0:
@@ -182,21 +186,17 @@ class Searcher:
             # cogroup shuffle, which moves only the cells each query
             # touches). Pass cache=False where executor memory is tight.
             self.norms = self.norms.cache()
-        # idf per term, filled lazily from pruned term_stats reads. Sound
+        # df per term, filled lazily from pruned term_stats reads. Sound
         # because a Searcher is pinned to one immutable index version
         # (get_searcher keys on meta.json mtime). Repeat-term queries skip
         # the term_stats job entirely — one fewer sequential Spark job on
         # the latency path (real workloads repeat query terms heavily).
         # Entries are per-queried-term, so the cache stays O(distinct terms
         # asked), never O(vocabulary).
-        self._idf_cache: dict[str, float | None] = {}
-        # Per-call constants cached per Searcher (r6): the cell-grid
-        # broadcast and the empty-result DataFrames were rebuilt on every
-        # search() call (~0.1-0.2 s of py4j/broadcast overhead per query in
-        # this sandbox). Both are immutable for the life of a Searcher —
-        # the grid is pinned to the index version, and an empty DataFrame
-        # is just a reusable plan object.
-        self._bc_grid = spark.sparkContext.broadcast(self.cell_grid)
+        self._df_cache: dict[str, int | None] = {}
+        # Empty-result DataFrames, cached per Searcher: an empty DataFrame
+        # is a reusable plan object, and rebuilding one costs a py4j round
+        # trip per search() call.
         self._empty_cache: dict[str, DataFrame] = {}
         # local-fast-path caches (immutable per Searcher, which is pinned
         # to one index version): norms on-disk size and, once the fast
@@ -219,6 +219,20 @@ class Searcher:
         if self.committed_deltas is not None:
             ts = ts.filter(F.col("delta") == max(self.committed_deltas))
         return ts
+
+    def postings_runs(self, terms: list[str]) -> DataFrame:
+        """The committed postings runs of ``terms``: the scan reads only the
+        terms' hash-bucket dirs (partition pruning), pushes the term list
+        to parquet row groups, and on streamed indexes keeps only the
+        committed deltas (a crashed refresh's runs hold docIDs beyond the
+        committed grid and norms)."""
+        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
+        runs = read_index_runs(
+            self.spark, self.paths.postings, self.n_buckets, self.iceberg_table
+        ).filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+        if self.committed_deltas is not None:
+            runs = runs.filter(F.col("delta").isin(self.committed_deltas))
+        return runs
 
     def _local_norms_pdf(self):
         """norms as pandas with the cell column — the driver-side mirror of
@@ -1198,7 +1212,7 @@ def suggest_spelling(
     edit budget yields no rows.
 
     Plan shape: the exact-membership probe rides the Searcher's
-    bucket-pruned idf cache (``_ensure_idf`` — the dictionary scan
+    bucket-pruned df cache (``_ensure_idf`` — the dictionary scan
     filters to the tokens' hash buckets, a handful of parquet files);
     only the candidate pass is a full ``levenshtein`` dictionary scan
     like ``search_fuzzy`` (column-pruned to (term, df), streamed indexes
@@ -1220,11 +1234,11 @@ def suggest_spelling(
     if not tok_rows:
         return empty
     uniq = sorted({t for _qid, t in tok_rows})
-    # Membership via the Searcher's bucket-pruned idf cache (_ensure_idf
+    # Membership via the Searcher's bucket-pruned df cache (_ensure_idf
     # filters the dictionary scan to the tokens' hash buckets — a handful
     # of parquet files), not a bespoke full-dictionary isin scan.
     _ensure_idf(se, uniq)
-    known = {t for t in uniq if se._idf_cache[t] is not None}
+    known = {t for t in uniq if se._df_cache[t] is not None}
     missing = [(qid, t) for qid, t in tok_rows if t not in known]
     if not missing:
         return empty
@@ -2113,9 +2127,9 @@ def more_like_this(
         tf = Counter(tokenize(txt))
         _ensure_idf(se, sorted(tf))
         keyed = sorted(
-            (-math.floor(n * idf * 1_000_000), t)
+            (-math.floor(n * idf_value(se.n_docs, df) * 1_000_000), t)
             for t, n in tf.items()
-            if (idf := se._idf_cache.get(t)) is not None
+            if (df := se._df_cache.get(t)) is not None
         )
         sel = [t for _, t in keyed[:max_terms]]
         if sel:
@@ -2197,13 +2211,12 @@ def search_snippets(
     ).select("query_id", "rank", "url", "score", "snippet")
 
 
-def _slice_mapper(bc_grid):
+def _slice_mapper(grid: np.ndarray):
     """Map-side run -> docID-grid-cell slicer for ``mapInArrow`` (shared by
-    the top-k search plan and the full-match count/facet plans in
-    plans/hits.py). ``bc_grid`` is the broadcast cell grid."""
+    the top-k search plan, the full-match count/facet plans in
+    plans/hits.py and the local fast path). ``grid`` is the cell grid."""
 
     def slice_runs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        grid = bc_grid.value
         for batch in batches:
             # Columnar rehydration: one to_pylist per column per batch (the
             # run count for a heavy term grows with build partitions at
@@ -2237,17 +2250,65 @@ def _slice_mapper(bc_grid):
     return slice_runs
 
 
+def _cell_slices(se: Searcher, runs: DataFrame) -> DataFrame:
+    """Postings runs -> per-cell slices (``_SLICE_DDL``). "delta" exists
+    only on streamed indexes and drop() is lenient, so batch indexes pass
+    through unchanged; runs across deltas stay docID-disjoint per term."""
+    return runs.drop("bucket", "run_id", "n_bytes", "delta").mapInArrow(
+        _slice_mapper(se.cell_grid), schema=_SLICE_DDL
+    )
+
+
+def _id_range(ids: np.ndarray, lo: int, hi: int) -> np.ndarray:
+    """The slice of the sorted docID array ``ids`` inside ``[lo, hi)``."""
+    return ids[np.searchsorted(ids, lo) : np.searchsorted(ids, hi)]
+
+
+class _CellMask:
+    """The engine's one exclusion contract for one cell ``[lo, hi)``: a
+    query may match no tombstoned doc and no doc in the cell postings of
+    its '-term' negations that are present in the index. Each negated term
+    decodes once per cell (``decoded`` reuses docID arrays the caller
+    already has). Every kernel applies the mask before its heap or
+    aggregation, so an excluded doc never displaces a survivor."""
+
+    def __init__(self, term_runs, lo, hi, deleted, negs, decoded=None):
+        dead = None if deleted is None else _id_range(deleted, lo, hi)
+        self.deleted = dead if dead is not None and len(dead) else None
+        self._negs = negs
+        decoded = decoded or {}
+        self._neg_docs = {
+            t: decoded[t]
+            if t in decoded
+            else decode_run(term_runs[t])[0].astype(np.int64)
+            for t in {t for ns in negs.values() for t in ns}
+            if t in term_runs
+        }
+
+    def __call__(self, qid: int) -> np.ndarray | None:
+        """Sorted docIDs query ``qid`` must not match here (None: none)."""
+        arrs = [
+            self._neg_docs[t] for t in self._negs.get(qid, ()) if t in self._neg_docs
+        ]
+        if not arrs:
+            return self.deleted
+        if self.deleted is not None:
+            arrs.append(self.deleted)
+        return arrs[0] if len(arrs) == 1 else np.unique(np.concatenate(arrs))
+
+
 # Local scoring fast path (r6): when a query's PRUNED inputs — the term
 # buckets' postings files plus the norms relation — total under this many
-# bytes on disk, the scoring runs driver-side through the IDENTICAL cell
-# kernels (same _slice_mapper, same score_cell closure) instead of paying a
-# Spark job's fixed overhead (~0.7-1.2 s here: two Python stages + two
-# exchanges) to move a few MB. This is the ES/Lucene observation that a
-# small searchable segment does not need a cluster pass; the decision is a
-# per-query metadata check (os.stat over <= |buckets| dirs), the threshold
-# is parameterised, and any index over the bound — every real-scale index —
-# takes the distributed cogroup exactly as before. No results are cached:
-# every call re-reads the committed parquet.
+# bytes on disk, the scoring runs driver-side: the same _slice_mapper and
+# the same score_cell closure over the same captured values, so the two
+# paths differ only in where the rows come from (pyarrow reads on the
+# driver vs the Spark scan + cogroup), not in a Spark job's fixed overhead
+# (~0.7-1.2 s here: two Python stages + two exchanges) to move a few MB.
+# This is the ES/Lucene observation that a small searchable segment does
+# not need a cluster pass; the decision is a per-query metadata check
+# (os.stat over <= |buckets| dirs), a missing committed dir raises, and any
+# index over the bound — every real-scale index — takes the distributed
+# cogroup. No results are cached: every call re-reads the committed parquet.
 LOCAL_QUERY_MAX_BYTES = int(
     os.environ.get("SPARK_GRAFT_LOCAL_QUERY_MAX_BYTES", str(64 * 1024 * 1024))
 )
@@ -2256,16 +2317,6 @@ _RUN_COLS = [
     "term", "first_doc", "last_doc", "n_docs", "doc_blob", "tf_blob",
     "bm_last", "bm_maxq", "bm_doc_off", "bm_tf_off", "bm_ndocs",
 ]
-
-
-class _LocalVal:
-    """Driver-local stand-in for a Broadcast (same ``.value`` contract) so
-    the scoring closures are byte-identical between the two paths."""
-
-    __slots__ = ("value",)
-
-    def __init__(self, value):
-        self.value = value
 
 
 def _dir_parquet_bytes(path: str) -> int:
@@ -2306,22 +2357,18 @@ def _norms_files(se: Searcher) -> list[str]:
     return files
 
 
-def _local_query_bytes(se: Searcher, buckets: list[int]) -> int | None:
-    """On-disk bytes of the query's pruned inputs, or None when the layout
-    is not local parquet (caller then takes the distributed path)."""
-    try:
-        if se._norms_disk_bytes is None:
-            se._norms_disk_bytes = sum(
-                os.stat(f).st_size for f in _norms_files(se)
-            )
-        total = se._norms_disk_bytes
-        for d in _postings_bucket_dirs(se, buckets):
-            sub = os.path.join(se.paths.postings, d)
-            if os.path.isdir(sub):
-                total += _dir_parquet_bytes(sub)
-        return total
-    except OSError:
-        return None
+def _local_query_bytes(se: Searcher, buckets: list[int]) -> int:
+    """On-disk bytes of the query's pruned inputs. A missing committed
+    norms dir raises FileNotFoundError (a broken index, not a reason to
+    score in Spark without it)."""
+    if se._norms_disk_bytes is None:
+        se._norms_disk_bytes = sum(os.stat(f).st_size for f in _norms_files(se))
+    total = se._norms_disk_bytes
+    for d in _postings_bucket_dirs(se, buckets):
+        sub = os.path.join(se.paths.postings, d)
+        if os.path.isdir(sub):
+            total += _dir_parquet_bytes(sub)
+    return total
 
 
 def _score_local(se: Searcher, buckets: list[int], present: list[str], score_cell):
@@ -2348,7 +2395,7 @@ def _score_local(se: Searcher, buckets: list[int], present: list[str], score_cel
     if not tables:
         return []
     runs_t = pa.concat_tables(tables)
-    mapper = _slice_mapper(_LocalVal(se.cell_grid))
+    mapper = _slice_mapper(se.cell_grid)
     slice_batches = list(mapper(iter(runs_t.to_batches())))
     if not slice_batches:
         return []
@@ -2373,9 +2420,9 @@ def _parts_for_runs(
     """Build partitions whose docID span can intersect any of the given run
     ``[first_doc, last_doc]`` ranges — driver-side, metadata only. Returns
     None when pruning is useless (runs cover most cells, or the part list
-    would be huge); the caller then ships the full norms relation as
-    before. Superset-safe: a part with no matching postings merely adds an
-    empty cogroup side."""
+    would be huge); the caller then reads the full relation. Superset-safe:
+    a part with no matching postings merely adds an empty side. Pass the
+    build-partition grid with ``cell_parts=1`` for part granularity."""
     n_cells = len(cell_grid)
     cells: set[int] = set()
     for first, last in ranges:
@@ -2390,6 +2437,20 @@ def _parts_for_runs(
         for p in range(c * cell_parts, min((c + 1) * cell_parts, total_parts))
     ]
     return parts if len(parts) <= 8192 else None
+
+
+def _run_parts(se: Searcher, runs: DataFrame, cell_parts: int = 1) -> list[int] | None:
+    """``_parts_for_runs`` over the runs' docID ranges, at the granularity
+    of ``cell_parts`` build partitions. The ranges come from the run
+    METADATA (one column-pruned job: the blobs never load, and collecting
+    from the slices would re-execute the slicing job for a second action)."""
+    ranges = [
+        (int(r["first_doc"]), int(r["last_doc"]))
+        for r in runs.select("first_doc", "last_doc").collect()
+    ]
+    return _parts_for_runs(
+        ranges, se.grid_parts[::cell_parts], cell_parts, len(se.grid_parts)
+    )
 
 
 def _param_bound_scale(k1: float, b: float) -> float:
@@ -2429,59 +2490,26 @@ def _param_bound_scale(k1: float, b: float) -> float:
     return max(1.0, at_zero, at_inf)
 
 
-def _resolve_filter_ids(se: Searcher, filter_urls: DataFrame) -> np.ndarray:
-    """Resolve a filter's URL set to the index's docIDs (sorted int64):
-    docID = grid[part_id] + local_pos, via ONE scan of the extracts that is
-    column-pruned to (url, part_id, local_pos) and broadcast-joined on the
-    filter — the same resolution plans/deletes.py uses for tombstones.
-    URLs the index never ingested resolve to nothing (filter-by-key over a
-    corpus that may not contain them)."""
-    offsets = se.spark.createDataFrame(
-        [(p, int(g)) for p, g in enumerate(se.meta["grid"])],
-        "part_id int, offset long",
+def _url_doc_ids(se: Searcher, urls: DataFrame | list[str]) -> list[tuple[str, int]]:
+    """(url, docID) for every index doc whose url is wanted: ONE scan of
+    the extracts column-pruned to (url, part_id, local_pos) — the wanted
+    urls broadcast-joined when they come as a DataFrame, pushed to parquet
+    as an IN-list when they come as a list — and docID = grid[part_id] +
+    local_pos computed on the driver (the same resolution plans/deletes.py
+    uses for tombstones). URLs the index never ingested resolve to
+    nothing; callers that need every url check."""
+    ext = se.spark.read.parquet(se.paths.docs_extracted).select(
+        "url", "part_id", "local_pos"
     )
-    rows = (
-        se.spark.read.parquet(se.paths.docs_extracted)
-        .select(F.col("part_id").cast("int").alias("part_id"), "local_pos", "url")
-        .join(F.broadcast(filter_urls.select("url").distinct()), "url")
-        .join(F.broadcast(offsets), "part_id")
-        .select((F.col("offset") + F.col("local_pos")).cast("long").alias("doc_id"))
-        .collect()
-    )
-    return np.sort(np.asarray([r["doc_id"] for r in rows], dtype=np.int64))
-
-
-def _resolve_cursor_ids(se: Searcher, urls: list[str]) -> dict[str, int]:
-    """Resolve search_after cursor urls to docIDs (url -> docID) with the
-    same ONE column-pruned broadcast-joined extracts scan as
-    ``_resolve_filter_ids``. Cursors come from a previous page's rows, so
-    every url must exist in the index — a miss raises (a silent drop would
-    turn the tie-break into 'all ties admitted', silently duplicating
-    rows across pages)."""
-    want = sorted(set(urls))
-    url_df = se.spark.createDataFrame([(u,) for u in want], "url string")
-    offsets = se.spark.createDataFrame(
-        [(p, int(g)) for p, g in enumerate(se.meta["grid"])],
-        "part_id int, offset long",
-    )
-    rows = (
-        se.spark.read.parquet(se.paths.docs_extracted)
-        .select(F.col("part_id").cast("int").alias("part_id"), "local_pos", "url")
-        .join(F.broadcast(url_df), "url")
-        .join(F.broadcast(offsets), "part_id")
-        .select(
-            "url",
-            (F.col("offset") + F.col("local_pos")).cast("long").alias("doc_id"),
-        )
-        .collect()
-    )
-    out = {r["url"]: int(r["doc_id"]) for r in rows}
-    missing = [u for u in want if u not in out]
-    if missing:
-        raise ValueError(
-            f"search_after cursor urls not in the index: {missing}"
-        )
-    return out
+    if isinstance(urls, DataFrame):
+        ext = ext.join(F.broadcast(urls.select("url").distinct()), "url")
+    else:
+        ext = ext.filter(F.col("url").isin(sorted(set(urls))))
+    grid = se.grid_parts
+    return [
+        (r["url"], int(grid[int(r["part_id"])]) + int(r["local_pos"]))
+        for r in ext.collect()
+    ]
 
 
 def _pruned_parquet_rows(
@@ -2514,9 +2542,10 @@ def _pruned_parquet_rows(
 
 
 def _ensure_idf(se: Searcher, terms: list[str]) -> None:
-    """Fill the Searcher's idf cache for ``terms`` with ONE bucket- and
+    """Fill the Searcher's df cache for ``terms`` with ONE bucket- and
     term-pruned term_stats read covering the misses (None caches an absent
-    term). Shared by the BM25 paths and the positional phrase path.
+    term); a term's idf is ``idf_value(n_docs, df)``. Shared by the BM25
+    paths (through ``_query_head``) and the positional phrase path.
 
     The read happens DRIVER-SIDE with pyarrow (directory pruning to the
     misses' buckets, the term predicate pushed to parquet row groups), not
@@ -2525,9 +2554,7 @@ def _ensure_idf(se: Searcher, terms: list[str]) -> None:
     term_stats is parquet in every layout (Iceberg builds move only the
     postings to the table), and a missing relation raises rather than
     caching real terms as absent."""
-    from ..functions.murmur3 import term_bucket
-
-    misses = [t for t in terms if t not in se._idf_cache]
+    misses = [t for t in terms if t not in se._df_cache]
     if not misses:
         return
     root = se.paths.term_stats
@@ -2543,9 +2570,48 @@ def _ensure_idf(se: Searcher, terms: list[str]) -> None:
         ["term", "df"],
         filters=[("term", "in", misses)],
     )
-    found = {r["term"]: idf_value(se.n_docs, int(r["df"])) for r in rows}
+    found = {r["term"]: int(r["df"]) for r in rows}
     for t in misses:
-        se._idf_cache[t] = found.get(t)
+        se._df_cache[t] = found.get(t)
+
+
+class QueryHead(NamedTuple):
+    """A parsed query batch (``_query_head``)."""
+
+    terms: dict[int, list[str]]  # per query: distinct positive terms, sorted
+    boosts: dict[int, dict[str, float]]  # per query with 'term^w' weights
+    negs: dict[int, list[str]]  # per query: its '-term' negations in the index
+    df: dict[str, int]  # every term in the index, positive or negated
+    idf: dict[str, float]  # idf_value(n_docs, df) of the same terms
+
+
+def _query_head(se: Searcher, queries: list[tuple[int, str]]) -> QueryHead:
+    """The one parse of a query batch, shared by search, the full-match
+    plans (plans/hits.py) and explain: 'term^w' boosts
+    (functions/tokenizer.parse_boost_query), '-term' boolean NOT
+    (parse_query), tokenization, and one pruned term_stats read for the
+    terms the df cache has not seen (``_ensure_idf``)."""
+    terms: dict[int, list[str]] = {}
+    boosts: dict[int, dict[str, float]] = {}
+    negs: dict[int, list[str]] = {}
+    for qid, text in queries:
+        txt, w = parse_boost_query(text)
+        pos, ng = parse_query(txt)
+        terms[qid] = sorted(set(tokenize(pos)))
+        if w:
+            boosts[qid] = w
+        if ng:
+            negs[qid] = ng
+    every = sorted(
+        {t for ts in terms.values() for t in ts}
+        | {t for ns in negs.values() for t in ns}
+    )
+    _ensure_idf(se, every)
+    df = {t: d for t in every if (d := se._df_cache[t]) is not None}
+    # an absent negated term excludes nothing
+    negs = {qid: p for qid, ns in negs.items() if (p := [t for t in ns if t in df])}
+    idf = {t: idf_value(se.n_docs, d) for t, d in df.items()}
+    return QueryHead(terms, boosts, negs, df, idf)
 
 
 def _search_impl(
@@ -2565,8 +2631,6 @@ def _search_impl(
     search_after: dict[int, tuple[int, str]] | None = None,
     raw_scored: bool = False,
 ) -> DataFrame:
-    from ..functions.murmur3 import term_bucket
-
     if prune_norms is None:  # auto: prune once the norms relation is big
         prune_norms = se.n_docs >= PRUNE_NORMS_AUTO_MIN_DOCS
     if search_after:
@@ -2591,9 +2655,7 @@ def _search_impl(
                 "raw_scored returns the full match set; paging does not apply"
             )
 
-    spark = se.spark
-    paths = se.paths
-    n_docs, avgdl, n_buckets = se.n_docs, se.avgdl, se.n_buckets
+    avgdl = se.avgdl
     # Query-time BM25 parameter overrides (Lucene per-query similarity
     # config): the exhaustive kernels just evaluate at (q_k1, q_b); BMW's
     # build-time block-max bounds inflate by the provable parameter factor
@@ -2619,63 +2681,49 @@ def _search_impl(
 
     # Filtered search (Lucene filter context): the allowed docID set masks
     # candidates pre-heap as an INCLUSION — the mirror of the tombstone /
-    # '-term' exclusion contract. Resolved once per call, broadcast once.
-    bc_allowed = None
+    # '-term' exclusion contract. Resolved once per call.
+    allowed_ids = None
     if filter_urls is not None:
-        allowed_ids = _resolve_filter_ids(se, filter_urls)
+        allowed_ids = np.sort(
+            np.asarray([d for _u, d in _url_doc_ids(se, filter_urls)], dtype=np.int64)
+        )
         if allowed_ids.size == 0:
             return empty  # filter admits nothing — no doc can rank
-        bc_allowed = spark.sparkContext.broadcast(allowed_ids)
 
     # search_after cursors (docstring on ``search``): per-query
-    # (score6, doc_id) admission tuples, resolved with one pruned extracts
-    # scan and broadcast. Applied PRE-HEAP in every kernel, so page depth
-    # never deepens a heap (the offset path's cost model).
-    bc_after = None
+    # (score6, doc_id) admission tuples. Applied PRE-HEAP in every kernel,
+    # so page depth never deepens a heap (the offset path's cost model).
+    after = None
     if search_after:
-        url_ids = _resolve_cursor_ids(
-            se, [u for _s6, u in search_after.values()]
-        )
-        bc_after = spark.sparkContext.broadcast(
-            {qid: (int(s6), url_ids[u]) for qid, (s6, u) in search_after.items()}
-        )
+        want = [u for _s6, u in search_after.values()]
+        url_ids = dict(_url_doc_ids(se, want))
+        # cursors come from a previous page's rows: a silent drop would
+        # turn the tie-break into 'all ties admitted', duplicating rows
+        # across pages
+        missing = sorted({u for u in want if u not in url_ids})
+        if missing:
+            raise ValueError(
+                f"search_after cursor urls not in the index: {missing}"
+            )
+        after = {qid: (int(s6), url_ids[u]) for qid, (s6, u) in search_after.items()}
 
-    # 'term^2.5' boosts (functions/tokenizer.parse_boost_query) fold into
-    # the per-(query, term) idf BEFORE it ships in the payload — every
-    # scoring kernel (dense/conjunctive/msm and BMW's block-max bounds,
-    # which scale linearly in idf) stays exact with zero kernel changes.
-    boost_parsed = {qid: parse_boost_query(text) for qid, text in queries}
-    boosts = {qid: b for qid, (_t, b) in boost_parsed.items() if b}
-    # '-term' boolean NOT (functions/tokenizer.parse_query): negated terms
-    # never score — their postings become a per-query exclusion mask fed
-    # through the SAME pre-heap path as tombstoned docs, so an excluded doc
-    # can never displace a survivor and survivors' scores are untouched.
-    parsed = {qid: parse_query(txt) for qid, (txt, _b) in boost_parsed.items()}
-    qterms = {qid: sorted(set(tokenize(pos))) for qid, (pos, _) in parsed.items()}
-    qneg = {qid: negs for qid, (_, negs) in parsed.items() if negs}
-    terms = sorted(
-        {t for ts in qterms.values() for t in ts}
-        | {t for ns in qneg.values() for t in ns}
-    )
-    if not terms:
-        return empty
-
-    # Buckets per term are computed driver-side (no Spark job; the Python
-    # murmur3 matches F.hash) for both the term_stats and postings prunes.
-    # idf per term: cache hits skip the term_stats job; only unseen terms
-    # trigger a pruned read (None caches an absent term).
-    _ensure_idf(se, terms)
-    idf = {t: v for t in terms if (v := se._idf_cache[t]) is not None}
+    # 'term^2.5' boosts fold into the per-(query, term) idf BEFORE it ships
+    # in the payload — every scoring kernel (dense/conjunctive/msm and BMW's
+    # block-max bounds, which scale linearly in idf) stays exact with zero
+    # kernel changes. '-term' negations never score: their postings feed
+    # the per-cell exclusion mask (_CellMask) next to the tombstones.
+    head = _query_head(se, queries)
+    idf, negs = head.idf, head.negs
     payload = [
         (
             qid,
             [
-                (t, idf[t] * boosts.get(qid, {}).get(t, 1.0))
+                (t, idf[t] * head.boosts.get(qid, {}).get(t, 1.0))
                 for t in qts
                 if t in idf
             ],
         )
-        for qid, qts in qterms.items()
+        for qid, qts in head.terms.items()
     ]
     payload = [(qid, tl) for qid, tl in payload if tl]
     if mode == "conjunctive":
@@ -2683,7 +2731,7 @@ def _search_impl(
         # can match — drop the query here rather than intersecting the
         # remaining terms (which would silently widen the semantics).
         payload = [
-            (qid, tl) for qid, tl in payload if len(tl) == len(qterms[qid])
+            (qid, tl) for qid, tl in payload if len(tl) == len(head.terms[qid])
         ]
     msm_by_qid: dict[int, int] = {}
     if mode == "msm":
@@ -2694,93 +2742,46 @@ def _search_impl(
         # terms than their requirement can never be satisfied — drop them
         # driver-side rather than scoring cells for a provably-empty result.
         msm_by_qid = {
-            qid: min(min_match, len(qts)) for qid, qts in qterms.items()
+            qid: min(min_match, len(qts)) for qid, qts in head.terms.items()
         }
         payload = [
             (qid, tl) for qid, tl in payload if len(tl) >= msm_by_qid[qid]
         ]
     if not payload:
         return empty
-    # Scan prunes to PRESENT terms only (absent terms would widen the
-    # bucket IN-list for directories that can't contribute runs).
+    # The scan covers the PRESENT terms, negated ones included (absent
+    # terms would widen the bucket IN-list for dirs that can't contribute).
     present = sorted(idf)
-    buckets = sorted({term_bucket(t, n_buckets) for t in present})
+    buckets = sorted({term_bucket(t, se.n_buckets) for t in present})
     # Local fast path eligibility (see LOCAL_QUERY_MAX_BYTES): a per-query
     # metadata check over the pruned inputs' on-disk bytes. raw_scored
     # consumers expect a DataFrame and Iceberg has no local files — both
     # always go distributed.
-    local_bytes = (
-        _local_query_bytes(se, buckets)
-        if (not raw_scored and se.iceberg_table is None)
-        else None
+    local_mode = (
+        not raw_scored
+        and se.iceberg_table is None
+        and _local_query_bytes(se, buckets) <= LOCAL_QUERY_MAX_BYTES
     )
-    local_mode = local_bytes is not None and local_bytes <= LOCAL_QUERY_MAX_BYTES
-
-    def _bc(v):
-        # identical .value contract either way; in local mode the scoring
-        # closure runs on the driver, so no broadcast RPC is needed.
-        return _LocalVal(v) if local_mode else spark.sparkContext.broadcast(v)
-
-    bc_payload = _bc(payload)
-    bc_grid = se._bc_grid  # per-Searcher constant, broadcast once
-    # Negated terms PRESENT in the index (an absent neg term excludes
-    # nothing). Their postings ride the same pruned scan as scoring terms —
-    # `terms`/`idf` above already include them — but never enter the
-    # scoring payload.
-    neg_payload = {
-        qid: [t for t in ns if se._idf_cache.get(t) is not None]
-        for qid, ns in qneg.items()
-    }
-    neg_payload = {qid: ns for qid, ns in neg_payload.items() if ns}
-    bc_neg = _bc(neg_payload) if neg_payload else None
-
-    runs = None
-    if not local_mode:
-        runs = read_index_runs(
-            spark, paths.postings, n_buckets, se.iceberg_table
-        ).filter(F.col("bucket").isin(buckets) & F.col("term").isin(present))
-        if se.committed_deltas is not None:
-            # streamed: uncommitted delta dirs (crashed refresh) invisible.
-            runs = runs.filter(F.col("delta").isin(se.committed_deltas))
-
-        # "delta" exists only on incrementally-refreshed streamed indexes
-        # (one partition per refresh group); drop() is lenient so batch
-        # indexes pass through unchanged. Runs across deltas stay
-        # docID-disjoint per term.
-        slices = runs.drop("bucket", "run_id", "n_bytes", "delta").mapInArrow(
-            _slice_mapper(bc_grid), schema=_SLICE_DDL
-        )
 
     norms = se.norms
     raw_parts: list[int] | None = None
-    if not local_mode and (prune_norms or raw_scored):
-        # One metadata-only job (blobs column-pruned away) + a driver map
-        # from run docID ranges to grid cells -> the norms cogroup side
-        # shuffles only the partitions the query can actually touch (and
-        # raw_scored callers prune their url-join extracts scan the same
-        # way).
-        ranges = [
-            (int(r["first_doc"]), int(r["last_doc"]))
-            for r in runs.select("first_doc", "last_doc").collect()
-        ]
-        parts = _parts_for_runs(
-            ranges, cell_grid, se.cell_parts, len(se.grid_parts)
-        )
-        raw_parts = parts
-        if prune_norms and parts is not None:
-            norms = norms.filter(F.col("part_id").isin(parts))
+    if not local_mode:
+        runs = se.postings_runs(present)
+        slices = _cell_slices(se, runs)
+        if prune_norms or raw_scored:
+            # One metadata-only job -> the norms cogroup side shuffles only
+            # the cells the query can actually touch (and raw_scored callers
+            # prune their url-join extracts scan the same way).
+            raw_parts = _run_parts(se, runs, se.cell_parts)
+            if prune_norms and raw_parts is not None:
+                norms = norms.filter(F.col("part_id").isin(raw_parts))
     use_dense = mode in ("dense", "conjunctive", "msm")
     conjunctive = mode == "conjunctive"
-    bc_msm = _bc(msm_by_qid) if msm_by_qid else None
-    bc_deleted = (
-        _bc(se.deleted_ids)
-        if se.deleted_ids is not None and len(se.deleted_ids)
-        else None
-    )
-
-    bc_fullgrid = (
-        spark.sparkContext.broadcast(se.grid_parts) if raw_scored else None
-    )
+    # Everything the kernel reads is a plain value captured by the closure
+    # (the local path calls it directly; Spark pickles it with the UDF and
+    # broadcasts the command by itself past 1 MB).
+    deleted = se.deleted_ids
+    grid_parts = se.grid_parts
 
     def _empty_cell() -> pd.DataFrame:
         cols = {"query_id": "int32", "doc_id": "int64", "score": "float64"}
@@ -2806,65 +2807,30 @@ def _search_impl(
                 raise ValueError("norms ranges not contiguous")
             expect += int(r["n_docs"])
         norms_obj = CellNorms(lo, dl)
+        hi = lo + len(dl)
         cell_allowed = None
         bmw_allowed = None
-        if bc_allowed is not None:
-            aa = bc_allowed.value
-            a = np.searchsorted(aa, lo)
-            b = np.searchsorted(aa, lo + len(dl))
-            if b == a:
+        if allowed_ids is not None:
+            cell_allowed = _id_range(allowed_ids, lo, hi)
+            if not len(cell_allowed):
                 # no filter-passing doc lives in this cell: skip it before
                 # decoding a single posting block.
                 return _empty_cell()
-            cell_allowed = aa[a:b]
             bmw_allowed = frozenset(cell_allowed.tolist())
-        cell_deleted = None
-        if bc_deleted is not None:
-            dd = bc_deleted.value
-            a = np.searchsorted(dd, lo)
-            b = np.searchsorted(dd, lo + len(dl))
-            if b > a:
-                cell_deleted = dd[a:b]
+        mask = _CellMask(term_runs, lo, hi, deleted, negs)
         bmw_deleted = (
-            frozenset(cell_deleted.tolist()) if cell_deleted is not None else None
+            frozenset(mask.deleted.tolist()) if mask.deleted is not None else None
         )
-        # NOT terms: decode each negated term's cell postings ONCE (shared
-        # across the query batch), then union with the tombstone mask per
-        # query. Cost is the same class as scoring the term — the exact
-        # semantics of exclusion.
-        neg_docs_by_term: dict[str, np.ndarray] = {}
-        if bc_neg is not None:
-            from ..operators.runfmt import decode_run
-
-            for t in {t for ns in bc_neg.value.values() for t in ns}:
-                if t in term_runs:
-                    neg_docs_by_term[t] = decode_run(term_runs[t])[0].astype(
-                        np.int64
-                    )
         qids, dids, scores = [], [], []
-        for qid, term_idf in bc_payload.value:
+        for qid, term_idf in payload:
             if not any(t in term_runs for t, _ in term_idf):
                 continue
-            q_excl = cell_deleted
-            if bc_neg is not None and qid in bc_neg.value:
-                arrs = [
-                    neg_docs_by_term[t]
-                    for t in bc_neg.value[qid]
-                    if t in neg_docs_by_term
-                ]
-                if arrs:
-                    if q_excl is not None:
-                        arrs.append(q_excl)
-                    q_excl = (
-                        np.unique(np.concatenate(arrs))
-                        if len(arrs) > 1
-                        else arrs[0]
-                    )
+            q_excl = mask(qid)
             if use_dense:
-                if bc_msm is not None:
+                if msm_by_qid:
                     d, s = msm_score_cell(
                         term_runs, norms_obj, term_idf, avgdl,
-                        bc_msm.value[qid], deleted=q_excl,
+                        msm_by_qid[qid], deleted=q_excl,
                         allowed=cell_allowed, k1=q_k1, b=q_b,
                     )
                 else:
@@ -2875,10 +2841,10 @@ def _search_impl(
                         term_runs, norms_obj, term_idf, avgdl, deleted=q_excl,
                         allowed=cell_allowed, k1=q_k1, b=q_b,
                     )
-                if bc_after is not None and qid in bc_after.value:
+                if after is not None and qid in after:
                     # cursor admission BEFORE the truncate: docs at-or-
                     # before the cursor must not occupy candidate slots.
-                    cs6, cdid = bc_after.value[qid]
+                    cs6, cdid = after[qid]
                     s6 = np.floor(s * 1_000_000).astype(np.int64)
                     keep = (s6 < cs6) | ((s6 == cs6) & (d > cdid))
                     d, s = d[keep], s[keep]
@@ -2888,20 +2854,16 @@ def _search_impl(
                     d, s = d[order], s[order]
                 pairs = list(zip(d.tolist(), s.tolist()))
             else:
-                q_excl_set = (
-                    bmw_deleted
-                    if q_excl is cell_deleted
-                    else frozenset(q_excl.tolist())
-                )
                 pairs = bmw_score_cell(
                     term_runs, norms_obj, term_idf, avgdl, cell_k,
-                    deleted=q_excl_set, bound_scale=bound_scale,
-                    allowed=bmw_allowed, k1=q_k1, b=q_b,
-                    after=(
-                        bc_after.value.get(qid)
-                        if bc_after is not None
-                        else None
+                    deleted=(
+                        bmw_deleted
+                        if q_excl is mask.deleted
+                        else frozenset(q_excl.tolist())
                     ),
+                    bound_scale=bound_scale,
+                    allowed=bmw_allowed, k1=q_k1, b=q_b,
+                    after=after.get(qid) if after is not None else None,
                 )
             for did, sc in pairs:
                 qids.append(qid)
@@ -2916,10 +2878,9 @@ def _search_impl(
             # (part_id, local_pos) per row, vectorized off the full grid —
             # raw consumers join the extracts on these coordinates with the
             # same partition-pruned scan as _rank_and_lookup's url lookup.
-            g = bc_fullgrid.value
-            pid = np.searchsorted(g, out["doc_id"], side="right") - 1
+            pid = np.searchsorted(grid_parts, out["doc_id"], side="right") - 1
             out["part_id"] = pid.astype(np.int32)
-            out["local_pos"] = out["doc_id"] - g[pid]
+            out["local_pos"] = out["doc_id"] - grid_parts[pid]
         return pd.DataFrame(out)
 
     cell_schema = "query_id int, doc_id long, score double" + (

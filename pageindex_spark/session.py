@@ -13,6 +13,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+EXCLUDED_RULES = "spark.sql.optimizer.excludedRules"
+INFER_FILTERS_FROM_GENERATE = (
+    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+)
+
+
+def with_excluded_rule(rules: str | None, rule: str) -> str:
+    """``rules`` (a comma-separated ``excludedRules`` value, or None) with
+    ``rule`` appended unless already present — other exclusions stay."""
+    names = [r.strip() for r in (rules or "").split(",") if r.strip()]
+    return ",".join(names if rule in names else names + [rule])
+
 
 def get_spark(
     app_name: str = "pageindex_spark",
@@ -37,22 +49,23 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # InferFiltersFromGenerate turns every explode(tokenize(text)) into
-        # an inferred `size(tokenize(text)) > 0 AND isnotnull(tokenize(...))`
-        # predicate that predicate-pushdown then moves BELOW the fan-out
-        # exchange into the scan stage — i.e. the whole corpus is tokenized
-        # TWICE on the scan's (often single-split) tasks before the parallel
-        # stage begins (guide §7.2 "duplicated subtrees"; observed in the
-        # bm25 plan as a Filter re-evaluating the tokenizer per row under
-        # Exchange). Empty arrays are dropped by explode anyway, so the
-        # rule only ever re-orders work; for this engine it re-orders it
-        # onto the serial path. Excluding it is semantics-neutral.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
     )
-    for k, v in (extra_conf or {}).items():
+    # InferFiltersFromGenerate turns every explode(tokenize(text)) into
+    # an inferred `size(tokenize(text)) > 0 AND isnotnull(tokenize(...))`
+    # predicate that predicate-pushdown then moves BELOW the fan-out
+    # exchange into the scan stage — i.e. the whole corpus is tokenized
+    # TWICE on the scan's (often single-split) tasks before the parallel
+    # stage begins (guide §7.2 "duplicated subtrees"; observed in the
+    # bm25 plan as a Filter re-evaluating the tokenizer per row under
+    # Exchange). Empty arrays are dropped by explode anyway, so the
+    # rule only ever re-orders work; for this engine it re-orders it
+    # onto the serial path. Excluding it is semantics-neutral, and it
+    # joins any exclusions extra_conf brings.
+    conf = dict(extra_conf or {})
+    conf[EXCLUDED_RULES] = with_excluded_rule(
+        conf.get(EXCLUDED_RULES), INFER_FILTERS_FROM_GENERATE
+    )
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -104,6 +104,31 @@ def test_masking_exact_all_modes(spark, deleted_index):
         assert not ({r["url"] for r in m2} & set(d["dead"])), mode
 
 
+def test_masking_local_equals_distributed(spark, deleted_index, monkeypatch):
+    """The tombstone mask (alone, and merged with '-term' negations) gives
+    the same rows on the driver-local scoring path as on the distributed
+    cogroup forced by LOCAL_QUERY_MAX_BYTES=-1."""
+    import pageindex_spark.plans.query as Q
+
+    d = deleted_index
+    assert read_meta(d["idx"])["deletes"]["n_deleted"] == len(d["dead"])
+    neg = [(qid, f"{text} -ha") for qid, text in d["queries"]]
+    for qs in (d["queries"], neg):
+        for mode in ("bmw", "dense"):
+            fast = sorted(
+                tuple(r)
+                for r in search(spark, d["idx"], qs, k=20, mode=mode).collect()
+            )
+            with monkeypatch.context() as m:
+                m.setattr(Q, "LOCAL_QUERY_MAX_BYTES", -1)
+                slow = sorted(
+                    tuple(r)
+                    for r in search(spark, d["idx"], qs, k=20, mode=mode).collect()
+                )
+            assert fast and fast == slow, (qs[0], mode)
+            assert not ({r[2] for r in fast} & set(d["dead"]))
+
+
 def test_masking_applies_to_phrase(spark, deleted_index):
     """Phrase search candidates come from the same masked conjunctive
     path — a deleted doc can't match a phrase."""

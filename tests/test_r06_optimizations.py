@@ -2,12 +2,17 @@
 
 * the scan fan-out guard in ``driverq.register_views`` (scale-adaptive:
   fans out under-split layouts, leaves multi-file layouts alone, env
-  override respected) and its result-identity;
+  override respected) and its result-identity, and its excludedRules
+  merge;
 * committed-extract footer counts == the grouped partition counts;
+* the driver-local scoring path returns exactly what the distributed
+  cogroup returns, under every pre-heap channel;
 * the driver-side rank fast path in ``_rank_and_lookup`` returns exactly
-  what the Spark-window path returns (same rows, same ranks).
+  what the Spark-window path returns (same rows, same ranks);
+* the driver-side lookups raise on a broken index layout.
 """
 
+import math
 import os
 import shutil
 
@@ -72,6 +77,35 @@ def test_fanout_identical_results(spark, monkeypatch):
         assert a == b, f"{name} rows differ between fan-out settings"
 
 
+def test_register_views_merges_excluded_rules(spark, tmp_path):
+    """register_views adds InferFiltersFromGenerate to the session's
+    excludedRules without dropping a rule the caller excluded, and
+    get_spark's merge keeps an extra_conf exclusion the same way."""
+    from pageindex_spark.session import (
+        EXCLUDED_RULES,
+        INFER_FILTERS_FROM_GENERATE,
+        with_excluded_rule,
+    )
+
+    other = "org.apache.spark.sql.catalyst.optimizer.CombineUnions"
+    old = spark.conf.get(EXCLUDED_RULES, None)
+    try:
+        spark.conf.set(EXCLUDED_RULES, other)
+        register_views(spark, str(tmp_path))  # empty dir: no tables
+        rules = spark.conf.get(EXCLUDED_RULES).split(",")
+        assert other in rules and INFER_FILTERS_FROM_GENERATE in rules
+        register_views(spark, str(tmp_path))  # idempotent
+        assert spark.conf.get(EXCLUDED_RULES).split(",") == rules
+    finally:
+        if old is None:
+            spark.conf.unset(EXCLUDED_RULES)
+        else:
+            spark.conf.set(EXCLUDED_RULES, old)
+    assert with_excluded_rule(None, "a") == "a"
+    assert with_excluded_rule("b, a", "a") == "b,a"
+    assert with_excluded_rule("b", "a") == "b,a"
+
+
 def test_extract_footer_counts_match_grouped(spark, r06_index):
     from pageindex_spark.operators.docids import partition_counts
     from pageindex_spark.plans.build_index import IndexPaths, _extract_part_counts
@@ -81,40 +115,71 @@ def test_extract_footer_counts_match_grouped(spark, r06_index):
     assert _extract_part_counts(paths.docs_extracted) == partition_counts(ext)
 
 
-def test_local_fast_path_equals_cogroup(spark, r06_index):
+def test_local_fast_path_equals_cogroup(spark, r06_index, monkeypatch):
     """The byte-guarded local scoring path must be row-identical to the
-    distributed cogroup across modes (it shares the mapper and the cell
-    kernel closures; this pins the plumbing around them)."""
+    distributed cogroup across modes and under every pre-heap channel
+    ('-term' negations, filter_urls, search_after cursors) and a k1/b
+    override (both paths call the same cell kernel closure; this pins the
+    plumbing around it). A spy on ``_score_local`` proves which path ran."""
+    from pyspark.sql import functions as F
+
     import pageindex_spark.plans.query as Q
     from pageindex_spark.sources.corpus import make_queries
 
     queries = make_queries()
+    se = Q.get_searcher(spark, r06_index)
+    half = (
+        spark.read.parquet(se.paths.docs_extracted)
+        .select("url")
+        .filter(F.substring(F.md5("url"), 1, 1).isin(list("01234567")))
+    )
+    page1 = Q.search(spark, r06_index, queries, k=5, fixed_point=True).collect()
+    cursors = {
+        r["query_id"]: (math.floor(r["score"] * 1_000_000), r["url"])
+        for r in page1
+        if r["rank"] == 5
+    }
+    assert cursors
+    neg = [(qid, f"{text} -ha") for qid, text in queries]
     cases = [
-        dict(mode="bmw"),
-        dict(mode="bmw", fixed_point=True),
-        dict(mode="dense"),
-        dict(mode="conjunctive"),
-        dict(mode="msm", min_match=2),
-        dict(mode="bmw", with_text=True),
+        (queries, dict(mode="bmw")),
+        (queries, dict(mode="bmw", fixed_point=True)),
+        (queries, dict(mode="dense")),
+        (queries, dict(mode="conjunctive")),
+        (queries, dict(mode="msm", min_match=2)),
+        (queries, dict(mode="bmw", with_text=True)),
+        (neg, dict(mode="bmw")),
+        (neg, dict(mode="dense")),
+        (queries, dict(mode="bmw", filter_urls=half)),
+        (queries, dict(mode="dense", filter_urls=half)),
+        (queries, dict(mode="bmw", fixed_point=True, search_after=cursors)),
+        (queries, dict(mode="dense", fixed_point=True, search_after=cursors)),
+        (queries, dict(mode="bmw", k1=0.9, b=0.4)),
+        (queries, dict(mode="dense", k1=2.0, b=0.0)),
     ]
-    orig = Q.LOCAL_QUERY_MAX_BYTES
-    for kw in cases:
-        Q.LOCAL_QUERY_MAX_BYTES = orig  # local path (index is tiny)
+    real = Q._score_local
+    local_calls = []
+
+    def spy(*a, **kw):
+        local_calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(Q, "_score_local", spy)
+    for qs, kw in cases:
+        local_calls.clear()
         fast = sorted(
-            tuple(r)
-            for r in Q.search(spark, r06_index, queries, k=10, **kw).collect()
+            tuple(r) for r in Q.search(spark, r06_index, qs, k=10, **kw).collect()
         )
-        try:
-            Q.LOCAL_QUERY_MAX_BYTES = -1  # force the distributed cogroup
+        assert local_calls, f"local path did not run for {kw}"
+        local_calls.clear()
+        with monkeypatch.context() as m:
+            m.setattr(Q, "LOCAL_QUERY_MAX_BYTES", -1)  # distributed cogroup
             slow = sorted(
                 tuple(r)
-                for r in Q.search(
-                    spark, r06_index, queries, k=10, **kw
-                ).collect()
+                for r in Q.search(spark, r06_index, qs, k=10, **kw).collect()
             )
-        finally:
-            Q.LOCAL_QUERY_MAX_BYTES = orig
-        assert fast == slow, f"fast path diverged for {kw}"
+        assert not local_calls, f"distributed path not forced for {kw}"
+        assert fast and fast == slow, f"fast path diverged for {kw}"
 
 
 def test_driver_rank_equals_window_rank(spark, r06_index, monkeypatch):
@@ -167,8 +232,10 @@ def test_driver_rank_equals_window_rank(spark, r06_index, monkeypatch):
 def test_driver_lookups_raise_on_broken_layout(spark, r06_index, tmp_path):
     """The driver-side idf and url lookups have no silent second path: an
     index copy without term_stats/ raises instead of caching every term as
-    absent and returning no rows, and a winner whose docs_extracted
-    partition is gone raises naming its (part_id, local_pos)."""
+    absent and returning no rows, a winner whose docs_extracted
+    partition is gone raises naming its (part_id, local_pos), and a
+    streamed index missing a committed norms delta raises instead of
+    scoring in Spark over the remaining deltas."""
     import pageindex_spark.plans.query as Q
     from pageindex_spark.sources.corpus import make_queries
 
@@ -195,3 +262,27 @@ def test_driver_lookups_raise_on_broken_layout(spark, r06_index, tmp_path):
     shutil.rmtree(os.path.join(no_part, "docs_extracted", f"part_id={part}"))
     with pytest.raises(ValueError, match=r"\(part_id, local_pos\)"):
         Q.search(spark, no_part, queries, k=10).collect()
+
+    from pageindex_spark.sources.corpus import make_documents
+    from pageindex_spark.sources.tables import read_meta
+    from pageindex_spark.streaming.ingest import (
+        refresh_streamed_index,
+        segment_batch,
+    )
+
+    corpus = make_documents(150, seed=13)
+    docs = list(zip(corpus.url, corpus.text))
+    segs, state = str(tmp_path / "segs"), str(tmp_path / "state")
+    streamed = str(tmp_path / "streamed")
+    for g, (lo, hi) in enumerate([(0, 50), (50, 100), (100, 150)]):
+        batch = spark.createDataFrame(docs[lo:hi], "url string, text string")
+        segment_batch(batch, g, segs, state, num_partitions=4)
+        if g != 0:  # full refresh of batches 0-1, then an incremental one
+            refresh_streamed_index(spark, segs, state, streamed, n_buckets=8)
+    deltas = read_meta(streamed)["streamed"]["deltas"]
+    assert len(deltas) == 2
+    assert Q.search(spark, streamed, queries, k=10).collect()
+    shutil.rmtree(os.path.join(streamed, "norms", f"delta={deltas[-1]}"))
+    os.utime(os.path.join(streamed, "meta.json"))  # a fresh Searcher
+    with pytest.raises(FileNotFoundError, match=f"delta={deltas[-1]}"):
+        Q.search(spark, streamed, queries, k=10).collect()
