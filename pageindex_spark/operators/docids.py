@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+from ..session import local_df
+
 
 def add_partition_pos(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """Range-shuffle by url and add ``part_id`` (int32) + ``local_pos``
@@ -91,7 +93,8 @@ def attach_doc_ids(ext: DataFrame, offsets: list[int]) -> DataFrame:
     """+ ``doc_id`` = offsets[part_id] + local_pos via a broadcast join with
     the P-row offsets table (exact, no sampling, re-execution-safe)."""
     spark = ext.sparkSession
-    off_df = spark.createDataFrame(
+    off_df = local_df(
+        spark,
         [(int(pid), int(off)) for pid, off in enumerate(offsets)],
         "part_id int, _offset long",
     )

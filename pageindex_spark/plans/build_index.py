@@ -54,6 +54,7 @@ from ..operators.docids import (
 from ..functions.sqlglue import spark_term_count
 from ..operators.extract import with_extracted_text
 from ..operators.spimi import build_segments
+from ..session import local_df
 from ..sources.tables import (
     iceberg_available,
     read_index_runs,
@@ -481,9 +482,7 @@ def reindex(
             ),
             F.col("part_id").cast("int"),
         )
-        dead = spark.createDataFrame(
-            [(int(x),) for x in deleted], "docid long"
-        )
+        dead = local_df(spark, [(int(x),) for x in deleted], "docid long")
         docs = (
             docs.withColumn("docid", start_col + F.col("local_pos"))
             .join(F.broadcast(dead), "docid", "left_anti")

@@ -55,6 +55,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_df
 from ..sources.tables import read_meta, write_meta
 from .build_index import IndexPaths
 
@@ -113,16 +114,15 @@ def delete_docs(
     if isinstance(urls, DataFrame):
         urls_df = urls.select("url").distinct()
     else:
-        urls_df = spark.createDataFrame(
-            [(u,) for u in urls], "url string"
-        ).distinct()
+        urls_df = local_df(spark, [(u,) for u in urls], "url string").distinct()
 
     paths = IndexPaths(index_dir)
     # docID = grid[part_id] + local_pos — the same mapping the winner
     # lookup inverts. The offsets side is P rows (driver-known grid), the
     # urls side is the delete request: both broadcast; the corpus scan is
     # column-pruned to (url, part_id, local_pos).
-    offsets = spark.createDataFrame(
+    offsets = local_df(
+        spark,
         [(p, int(g)) for p, g in enumerate(meta["grid"])],
         "part_id int, offset long",
     )

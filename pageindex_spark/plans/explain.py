@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.tokenizer import BM25_B, BM25_K1
 from ..operators.codec import vb_decode
 from ..operators.runfmt import decode_run
+from ..session import local_df
 from .query import _query_head, _url_doc_ids, get_searcher
 
 
@@ -49,9 +50,8 @@ def explain_score(
     se = get_searcher(spark, index_dir, cell_parts)
     top = se.search(queries, k=k, fixed_point=True)
     winners = top.select("query_id", "url").collect()
-    empty = spark.createDataFrame(
-        [], "query_id int, url string, term string, tf long, df long, contrib double"
-    )
+    ddl = "query_id int, url string, term string, tf long, df long, contrib double"
+    empty = local_df(spark, [], ddl)
     if not winners:
         return empty
     urls = sorted({r["url"] for r in winners})
@@ -124,6 +124,4 @@ def explain_score(
             )
             out.append((qid, url, t, tf, df, contrib))
     out.sort()
-    return spark.createDataFrame(
-        out, "query_id int, url string, term string, tf long, df long, contrib double"
-    )
+    return local_df(spark, out, ddl)

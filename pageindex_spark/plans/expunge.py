@@ -63,6 +63,7 @@ from ..operators.compaction import (
     term_stats_from_runs,
     with_term_bucket,
 )
+from ..session import local_df
 from ..sources.tables import read_meta, write_meta
 from .build_index import FORMAT_VERSION, IndexPaths
 from .deletes import gc_stale_tombstones, read_tombstones
@@ -137,7 +138,7 @@ def expunge_index(spark: SparkSession, index_dir: str) -> dict:
     tomb = read_tombstones(spark, index_dir, meta).select("url", "doc_id")
     pairs = tomb.collect()  # O(deleted) — same bound as the Searcher mask
     deleted_ids = sorted(int(r["doc_id"]) for r in pairs)
-    dead_urls = spark.createDataFrame([(r["url"],) for r in pairs], "url string")
+    dead_urls = local_df(spark, [(r["url"],) for r in pairs], "url string")
     n_buckets = int(meta["n_buckets"])
 
     # -- phase 1: write every replacement relation under expunge_tmp/ ------

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from ..operators.runfmt import decode_run
 from ..operators.wand import assemble_cell_runs
+from ..session import local_df
 from .query import (
     QueryHead,
     _cell_slices,
@@ -130,7 +131,7 @@ def search_count(
     GROUP BY over matches)."""
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame([], "query_id int, n_hits long")
+    empty = local_df(spark, [], "query_id int, n_hits long")
     if state is None:
         return empty
     return _count_matches(state).withColumnRenamed("n", "n_hits")
@@ -249,7 +250,7 @@ def facet_counts(
 
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame([], "query_id int, facet string, n_docs long")
+    empty = local_df(spark, [], "query_id int, facet string, n_docs long")
     if state is None:
         return empty
     counts = (
@@ -309,7 +310,7 @@ def range_facets(
         )
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame([], "query_id int, bucket int, n_docs long")
+    empty = local_df(spark, [], "query_id int, bucket int, n_docs long")
     if state is None:
         return empty
     val = F.col("val").cast("double")
@@ -354,7 +355,7 @@ def match_stats(
         "query_id int, n_docs long, n_vals long, sum6 long, min6 long, "
         "max6 long, avg6 long"
     )
-    empty = spark.createDataFrame([], ddl)
+    empty = local_df(spark, [], ddl)
     if state is None:
         return empty
     val = F.col("val").cast("double")
@@ -408,7 +409,7 @@ def match_extended_stats(
         "query_id int, n_docs long, sum6 long, avg6 long, sumsq long, "
         "var6 long, std6 long, lo6 long, hi6 long"
     )
-    empty = spark.createDataFrame([], ddl)
+    empty = local_df(spark, [], ddl)
     if state is None:
         return empty
     val = F.col("val").cast("double")
@@ -460,7 +461,7 @@ def match_weighted_avg(
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
     ddl = "query_id int, n_docs long, wsum6 long, wtot6 long, wavg6 long"
-    empty = spark.createDataFrame([], ddl)
+    empty = local_df(spark, [], ddl)
     if state is None:
         return empty
     v = F.col("val").cast("double")
@@ -499,7 +500,7 @@ def match_missing(
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
     ddl = "query_id int, n_docs long, n_present long, n_missing long"
-    empty = spark.createDataFrame([], ddl)
+    empty = local_df(spark, [], ddl)
     if state is None:
         return empty
     return (
@@ -548,9 +549,7 @@ def date_histogram(
         )
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
-        [], "query_id int, bucket string, n_docs long"
-    )
+    empty = local_df(spark, [], "query_id int, bucket string, n_docs long")
     if state is None:
         return empty
     return (
@@ -594,8 +593,8 @@ def auto_date_histogram(
         raise ValueError(f"target_buckets must be >= 1, got {target_buckets}")
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
-        [], "query_id int, interval string, bucket string, n_docs long"
+    empty = local_df(
+        spark, [], "query_id int, interval string, bucket string, n_docs long"
     )
     if state is None:
         return empty
@@ -710,8 +709,8 @@ def diversified_sampler_stats(
 
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
-        [], "query_id int, n_sample long, n_keys long, avg_chars6 long"
+    empty = local_df(
+        spark, [], "query_id int, n_sample long, n_keys long, avg_chars6 long"
     )
     if state is None:
         return empty
@@ -776,9 +775,7 @@ def frequent_term_pairs(
         .distinct()
         .collect()
     )
-    empty = spark.createDataFrame(
-        [], "item_a string, item_b string, support long"
-    )
+    empty = local_df(spark, [], "item_a string, item_b string, support long")
     if len(cand) < 2:
         return empty
     slices = _cell_slices(se, se.postings_runs(cand))
@@ -982,9 +979,7 @@ def rare_terms(
         )
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
-        [], "query_id int, facet string, n_docs long"
-    )
+    empty = local_df(spark, [], "query_id int, facet string, n_docs long")
     if state is None:
         return empty
     return (
@@ -1032,7 +1027,7 @@ def multi_terms(
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
     key_ddl = ", ".join(f"{c} string" for c in keys)
-    empty = spark.createDataFrame([], f"query_id int, {key_ddl}, n_docs long")
+    empty = local_df(spark, [], f"query_id int, {key_ddl}, n_docs long")
     if state is None:
         return empty
     counts = (
@@ -1091,8 +1086,8 @@ def top_metrics(
         raise ValueError(f"size must be >= 1, got {size}")
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
-        [], "query_id int, rank int, url string, sort_key long, metric long"
+    empty = local_df(
+        spark, [], "query_id int, rank int, url string, sort_key long, metric long"
     )
     if state is None:
         return empty
@@ -1186,9 +1181,7 @@ def term_vectors(
             F.create_map(*[F.lit(x) for kv in starts.items() for x in kv]),
             F.col("part_id").cast("int"),
         )
-        dead = spark.createDataFrame(
-            [(int(x),) for x in se.deleted_ids], "docid long"
-        )
+        dead = local_df(spark, [(int(x),) for x in se.deleted_ids], "docid long")
         docs = (
             docs.withColumn("docid", start_col + F.col("local_pos"))
             .join(F.broadcast(dead), "docid", "left_anti")
@@ -1238,9 +1231,7 @@ def geo_distance_topk(
         raise ValueError(f"origin out of range: {origin}")
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
-        [], "query_id int, rank int, url string, dist6 long"
-    )
+    empty = local_df(spark, [], "query_id int, rank int, url string, dist6 long")
     if state is None:
         return empty
     dist = HAVERSINE_KM.format(
@@ -1286,7 +1277,7 @@ def geo_bounding_box_count(
         raise ValueError(f"box min > max: {box}")
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame([], "query_id int, n_in_box long")
+    empty = local_df(spark, [], "query_id int, n_in_box long")
     if state is None:
         return empty
     inside = (
@@ -1326,7 +1317,7 @@ def geotile_grid(
     n = 1 << zoom
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame([], "query_id int, tile string, n_docs long")
+    empty = local_df(spark, [], "query_id int, tile string, n_docs long")
     if state is None:
         return empty
     tx = GEOTILE_X.format(lon="lon", n=n)
@@ -1365,9 +1356,7 @@ def geohash_grid(
         raise ValueError(f"precision must be in [1, 10], got {precision}")
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
-        [], "query_id int, geohash string, n_docs long"
-    )
+    empty = local_df(spark, [], "query_id int, geohash string, n_docs long")
     if state is None:
         return empty
     lon_i, lat_i, code = geohash_cell_exprs("lon", "lat", precision)
@@ -1405,9 +1394,7 @@ def geo_centroid(
     coordinates, the agg is one partial-aggregated groupBy."""
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
-        [], "query_id int, n_docs long, lat6c long, lon6c long"
-    )
+    empty = local_df(spark, [], "query_id int, n_docs long, lat6c long, lon6c long")
     if state is None:
         return empty
     pts = (
@@ -1448,7 +1435,8 @@ def geo_bounds(
     the kernel's coordinates, the agg is one partial-aggregated groupBy."""
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
+    empty = local_df(
+        spark,
         [],
         "query_id int, n_docs long, top6 long, bottom6 long, "
         "left6 long, right6 long",
@@ -1522,7 +1510,8 @@ def search_pinned(
             F.lit(0).cast("long").alias("pinned"),
         )
     )
-    pin_rows = spark.createDataFrame(
+    pin_rows = local_df(
+        spark,
         [(qid, r + 1, doc, 1) for qid, _ in queries
          for r, doc in enumerate(alive)],
         "query_id int, rank long, doc_id long, pinned long",
@@ -1556,7 +1545,8 @@ def match_matrix_stats(
     corr6 is NULL there (0/0), matching SQL semantics in both engines."""
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
+    empty = local_df(
+        spark,
         [],
         "query_id int, n long, mean_x6 long, mean_y6 long, cov6 long, corr6 long",
     )
@@ -1667,7 +1657,8 @@ def match_string_stats(
     alphabet-bounded rows after the first combine."""
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
+    empty = local_df(
+        spark,
         [],
         "query_id int, n long, min_len long, max_len long, "
         "avg_len6 long, entropy6 long",
@@ -1785,7 +1776,7 @@ def match_boxplot(
         "query_id int, n_docs long, min6 long, max6 long, q16 long, "
         "q26 long, q36 long, lo6 long, hi6 long"
     )
-    empty = spark.createDataFrame([], ddl)
+    empty = local_df(spark, [], ddl)
     if state is None:
         return empty
     cum = _value_histogram(spark, se, state, values)
@@ -1833,9 +1824,7 @@ def match_mad(
 
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
-        [], "query_id int, n_docs long, med6 long, mad6 long"
-    )
+    empty = local_df(spark, [], "query_id int, n_docs long, med6 long, mad6 long")
     if state is None:
         return empty
     cum = _value_histogram(spark, se, state, values)
@@ -1892,7 +1881,7 @@ def match_t_test(
         "query_id int, n_a long, n_b long, mean_a6 long, mean_b6 long, "
         "t6 long, df6 long"
     )
-    empty = spark.createDataFrame([], ddl)
+    empty = local_df(spark, [], ddl)
     if state is None:
         return empty
     v = F.col("val").cast("double")
@@ -1999,8 +1988,8 @@ def significant_terms(
 
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
-        [], "query_id int, term string, fg long, bg long, lift6 long"
+    empty = local_df(
+        spark, [], "query_id int, term string, fg long, bg long, lift6 long"
     )
     if state is None:
         return empty
@@ -2012,7 +2001,7 @@ def significant_terms(
         for qid, ts in head.terms.items()
         for t in set(ts) | set(head.negs.get(qid, ()))
     ]
-    own = spark.createDataFrame(own_rows or [(-1, "")], "query_id int, term string")
+    own = local_df(spark, own_rows or [(-1, "")], "query_id int, term string")
 
     matched = _matched_urls(spark, se, state)
     if sample_hex is not None:
@@ -2127,9 +2116,7 @@ def search_sorted_by(
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
     kt = sort_keys.schema["sort_key"].dataType.simpleString()
-    empty = spark.createDataFrame(
-        [], f"query_id int, rank int, url string, sort_key {kt}"
-    )
+    empty = local_df(spark, [], f"query_id int, rank int, url string, sort_key {kt}")
     if state is None:
         return empty
     order = (
@@ -2140,7 +2127,8 @@ def search_sorted_by(
         sort_keys.select("url", "sort_key"), "url"
     )
     if search_after:
-        cur = spark.createDataFrame(
+        cur = local_df(
+            spark,
             [(int(q), sk, u) for q, (sk, u) in sorted(search_after.items())],
             f"query_id int, cur_key {kt}, cur_url string",
         )
@@ -2191,7 +2179,8 @@ def facet_stats(
     below 2^53), which is what makes the fixed-point hash portable."""
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
+    empty = local_df(
+        spark,
         [],
         "query_id int, facet string, n_docs long, n_vals long, sum6 long, "
         "min6 long, max6 long, avg6 long",
@@ -2250,9 +2239,7 @@ def match_percentiles(
         raise ValueError(f"percents must be ints in (0, 100], got {percents}")
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
-        [], "query_id int, pct int, n_docs long, pct6 long"
-    )
+    empty = local_df(spark, [], "query_id int, pct int, n_docs long, pct6 long")
     if state is None:
         return empty
     val = F.col("val").cast("double")
@@ -2274,7 +2261,7 @@ def match_percentiles(
     cum = hist.withColumn("cum", F.sum("c").over(w)).withColumn(
         "n_docs", F.sum("c").over(Window.partitionBy("query_id"))
     )
-    pdf = spark.createDataFrame([(p,) for p in ps], "pct int")
+    pdf = local_df(spark, [(p,) for p in ps], "pct int")
     return (
         cum.crossJoin(F.broadcast(pdf))
         .withColumn(
@@ -2380,9 +2367,7 @@ def match_percentile_ranks(
         raise ValueError("at_values must be a non-empty list of ints")
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
-        [], "query_id int, at int, n_docs long, rank6 long"
-    )
+    empty = local_df(spark, [], "query_id int, at int, n_docs long, rank6 long")
     if state is None:
         return empty
     val = F.col("val").cast("double")
@@ -2392,7 +2377,7 @@ def match_percentile_ranks(
         .groupBy("query_id", val.alias("v"))
         .agg(F.count("*").alias("c"))
     )
-    adf = spark.createDataFrame([(a,) for a in ats], "at int")
+    adf = local_df(spark, [(a,) for a in ats], "at int")
     return (
         hist.crossJoin(F.broadcast(adf))
         .groupBy("query_id", "at")
@@ -2441,7 +2426,7 @@ def composite_buckets(
         raise ValueError(f"size must be >= 1, got {size}")
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame([], "query_id int, facet string, n_docs long")
+    empty = local_df(spark, [], "query_id int, facet string, n_docs long")
     if state is None:
         return empty
     counts = (
@@ -2451,7 +2436,8 @@ def composite_buckets(
         .agg(F.count("*").alias("n_docs"))
     )
     if after:
-        cur = spark.createDataFrame(
+        cur = local_df(
+            spark,
             [(int(q), f) for q, f in sorted(after.items())],
             "query_id int, cur_facet string",
         )
@@ -2496,7 +2482,7 @@ def adjacency_counts(
     lacks qa in its set)."""
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame([], "qa int, qb int, n_docs long")
+    empty = local_df(spark, [], "qa int, qb int, n_docs long")
     if state is None:
         return empty
     per_doc = (
@@ -2548,7 +2534,8 @@ def range_facets_dense(
         spark, index_dir, queries, values, boundaries, cell_parts
     )
     n_buckets = len(boundaries) - 1
-    domain = spark.createDataFrame(
+    domain = local_df(
+        spark,
         [(int(qid), b) for qid, _t in queries for b in range(n_buckets)],
         "query_id int, bucket int",
     )
@@ -2591,7 +2578,7 @@ def match_cardinality_hll(
         "query_id int, n_docs long, n_exact long, zeros long, s53 long, "
         "est6 long"
     )
-    empty = spark.createDataFrame([], ddl)
+    empty = local_df(spark, [], ddl)
     if state is None:
         return empty
     vals = _matched_urls(spark, se, state).join(
@@ -2737,13 +2724,12 @@ def suggest_next_word(
         F.col("part_id").cast("int").alias("part_id"), "local_pos", "text"
     )
     if se.deleted_ids is not None and len(se.deleted_ids):
-        starts = spark.createDataFrame(
+        starts = local_df(
+            spark,
             [(int(p), int(s)) for p, s in enumerate(se.grid_parts)],
             "part_id int, start long",
         )
-        dels = spark.createDataFrame(
-            [(int(x),) for x in se.deleted_ids], "doc_id long"
-        )
+        dels = local_df(spark, [(int(x),) for x in se.deleted_ids], "doc_id long")
         ext = (
             ext.join(F.broadcast(starts), "part_id")
             .withColumn("doc_id", F.col("start") + F.col("local_pos"))
@@ -2757,7 +2743,7 @@ def suggest_next_word(
     ).select(
         F.expr("a[i]").alias("w1"), F.expr("a[i + 1]").alias("w2")
     )
-    seed_df = spark.createDataFrame([(s,) for s in seeds], "seed string")
+    seed_df = local_df(spark, [(s,) for s in seeds], "seed string")
     cnt = (
         bg.join(F.broadcast(seed_df), bg.w1 == F.col("seed"))
         .groupBy("seed", F.col("w2").alias("next_term"))
@@ -2870,7 +2856,8 @@ def date_histogram_bucket_script(
         )
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
+    empty = local_df(
+        spark,
         [],
         "query_id int, bucket string, n_docs long, sum_chars long, "
         "chars_per_doc6 long",
@@ -2923,9 +2910,7 @@ def constant_score(
         raise ValueError(f"k must be >= 1, got {k}")
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = spark.createDataFrame(
-        [], "query_id int, rank int, url string, score6 long"
-    )
+    empty = local_df(spark, [], "query_id int, rank int, url string, score6 long")
     if state is None:
         return empty
     score6 = int(math.floor(boost * 1_000_000))
@@ -2990,7 +2975,7 @@ def rank_eval(
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
     if state is None:
-        return spark.createDataFrame([], out_ddl)
+        return local_df(spark, [], out_ddl)
     ratings = _match_coords(se, state, rated=True)
     grade_rows = ratings.groupBy("query_id", "rating").count().collect()
     top = search(
@@ -2999,7 +2984,7 @@ def rank_eval(
     top_rows = top.select("query_id", "rank", "url").collect()
     top_urls = sorted({r["url"] for r in top_rows})
     if not top_urls:
-        return spark.createDataFrame([], out_ddl)
+        return local_df(spark, [], out_ddl)
     ext = (
         spark.read.parquet(se.paths.docs_extracted)
         .select("part_id", "local_pos", "url")
@@ -3047,7 +3032,7 @@ def rank_eval(
         mrr6 = _math.floor(1000000.0 / first_rel) if first_rel else 0
         ndcg6 = _math.floor(1000000.0 * dcg6 / idcg6) if idcg6 else 0
         rows.append((qid, n_rel, p10_6, recall6, mrr6, dcg6, ndcg6))
-    return spark.createDataFrame(rows, out_ddl)
+    return local_df(spark, rows, out_ddl)
 
 
 def suggest_phrase(
@@ -3098,18 +3083,17 @@ def suggest_phrase(
             )
         rows.append((qid, ts[0], ts[1]))
     se = get_searcher(spark, index_dir, cell_parts)
-    qdf = spark.createDataFrame(rows, "query_id int, t1 string, t2 string")
+    qdf = local_df(spark, rows, "query_id int, t1 string, t2 string")
     ext = spark.read.parquet(se.paths.docs_extracted).select(
         F.col("part_id").cast("int").alias("part_id"), "local_pos", "text"
     )
     if se.deleted_ids is not None and len(se.deleted_ids):
-        starts = spark.createDataFrame(
+        starts = local_df(
+            spark,
             [(int(p), int(s)) for p, s in enumerate(se.grid_parts)],
             "part_id int, start long",
         )
-        dels = spark.createDataFrame(
-            [(int(x),) for x in se.deleted_ids], "doc_id long"
-        )
+        dels = local_df(spark, [(int(x),) for x in se.deleted_ids], "doc_id long")
         ext = (
             ext.join(F.broadcast(starts), "part_id")
             .withColumn("doc_id", F.col("start") + F.col("local_pos"))
@@ -3233,7 +3217,7 @@ def variable_width_histogram(
         "mean6 long"
     )
     if state is None:
-        return spark.createDataFrame([], ddl)
+        return local_df(spark, [], ddl)
     vals = (
         _matched_urls(spark, se, state)
         .join(values.select("url", "val"), "url")

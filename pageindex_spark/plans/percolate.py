@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.tokenizer import parse_query, tokenize
+from ..session import local_df
 
 
 def _parse_registered(
@@ -133,7 +134,8 @@ def percolate(
         for qid, ts, ns, req in reg
         for t, is_neg in [(t, False) for t in ts] + [(t, True) for t in ns]
     ]
-    qdf = spark.createDataFrame(
+    qdf = local_df(
+        spark,
         rows, "query_id int, term string, is_neg boolean, n_required long"
     )
     return (

@@ -58,6 +58,7 @@ from ..functions.tokenizer import BM25_B, BM25_K1, tokenize
 from ..operators.codec import vb_decode, vb_encode
 from ..operators.docids import attach_doc_ids
 from ..operators.wand import idf_value
+from ..session import local_df
 from ..sources.tables import read_meta, write_meta
 from .build_index import IndexPaths
 
@@ -233,9 +234,7 @@ def phrase_search_positions(
         .drop("bucket")
     )
     if se.deleted_ids is not None and len(se.deleted_ids):
-        dead = spark.createDataFrame(
-            [(int(d),) for d in se.deleted_ids], "doc_id long"
-        )
+        dead = local_df(spark, [(int(d),) for d in se.deleted_ids], "doc_id long")
         pos = pos.join(F.broadcast(dead), "doc_id", "left_anti")
 
     grouped = pos.groupBy("doc_id", "doc_len").agg(

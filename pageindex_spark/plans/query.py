@@ -55,6 +55,7 @@ from ..operators.wand import (
     msm_score_cell,
     slice_run_to_cells,
 )
+from ..session import local_df
 from ..sources.tables import read_index_runs, read_meta
 from .build_index import IndexPaths
 
@@ -194,9 +195,10 @@ class Searcher:
         # Entries are per-queried-term, so the cache stays O(distinct terms
         # asked), never O(vocabulary).
         self._df_cache: dict[str, int | None] = {}
-        # Empty-result DataFrames, cached per Searcher: an empty DataFrame
-        # is a reusable plan object, and rebuilding one costs a py4j round
-        # trip per search() call.
+        # Empty-result DataFrames, cached per Searcher and keyed by DDL.
+        # Each is an Arrow LocalRelation (`local_df`), so collecting one
+        # runs no Spark job; the cache saves the Arrow hand-over to the
+        # JVM that building one costs per search() call.
         self._empty_cache: dict[str, DataFrame] = {}
         # local-fast-path caches (immutable per Searcher, which is pinned
         # to one index version): norms on-disk size and, once the fast
@@ -207,7 +209,7 @@ class Searcher:
 
     def _empty_df(self, schema: str) -> DataFrame:
         if schema not in self._empty_cache:
-            self._empty_cache[schema] = self.spark.createDataFrame([], schema)
+            self._empty_cache[schema] = local_df(self.spark, [], schema)
         return self._empty_cache[schema]
 
     def term_dictionary(self) -> DataFrame:
@@ -595,12 +597,16 @@ def _verified_topk(
     )
 
 
-def _empty_hits(se: Searcher, with_text: bool) -> DataFrame:
-    """The empty (query_id, rank, url, score[, text]) result frame."""
-    return se._empty_df(
-        "query_id int, rank int, url string, score double"
-        + (", text string" if with_text else "")
+def _hits_ddl(with_text: bool) -> str:
+    """The (query_id, rank, url, score[, text]) result schema."""
+    return "query_id int, rank int, url string, score double" + (
+        ", text string" if with_text else ""
     )
+
+
+def _empty_hits(se: Searcher, with_text: bool) -> DataFrame:
+    """The empty search result frame."""
+    return se._empty_df(_hits_ddl(with_text))
 
 
 def _validate_qids(queries: list[tuple]) -> None:
@@ -1111,7 +1117,7 @@ def suggest_terms(
     stems = sorted({p for _, p in prefixes})
     if not stems:
         return se._empty_df("query_id int, rank int, term string, df long")
-    pfx = spark.createDataFrame(prefixes, "query_id int, prefix string")
+    pfx = local_df(spark, prefixes, "query_id int, prefix string")
     w = Window.partitionBy("query_id").orderBy(F.desc("df"), F.asc("term"))
     return (
         se.term_dictionary()
@@ -1246,7 +1252,7 @@ def suggest_spelling(
     cand = se.term_dictionary().filter(
         _any(F.levenshtein(F.col("term"), F.lit(t)) <= max_edits for t in muniq)
     ).select("term", F.col("df").cast("long").alias("df"))
-    toks = spark.createDataFrame(missing, "query_id int, token string")
+    toks = local_df(spark, missing, "query_id int, token string")
     dist = F.levenshtein(F.col("term"), F.col("token"))
     w = Window.partitionBy("query_id", "token").orderBy(
         F.asc("dist"), F.desc("df"), F.asc("term")
@@ -1848,8 +1854,8 @@ def search_dis_max(
                 f"query {qid} has {len(terms)} terms > {_DIS_MAX_WIDTH}"
             )
         sub.extend((qid * _DIS_MAX_WIDTH + i, t) for i, t in enumerate(terms))
-    empty = spark.createDataFrame(
-        [], "query_id int, rank int, url string, final6 long, best6 long"
+    empty = local_df(
+        spark, [], "query_id int, rank int, url string, final6 long, best6 long"
     )
     if not sub:
         return empty
@@ -1940,8 +1946,8 @@ def search_boosting(
         sub.append((qid * 2, pos_text))
         if neg_text and tokenize(neg_text):
             sub.append((qid * 2 + 1, neg_text))
-    empty = spark.createDataFrame(
-        [], "query_id int, rank int, url string, final6 long, demoted int"
+    empty = local_df(
+        spark, [], "query_id int, rank int, url string, final6 long, demoted int"
     )
     if not sub:
         return empty
@@ -2032,7 +2038,8 @@ def search_terms_set(
                 f"query {qid} has {len(terms)} terms > {_DIS_MAX_WIDTH}"
             )
         sub.extend((qid * _DIS_MAX_WIDTH + i, t) for i, t in enumerate(terms))
-    empty = spark.createDataFrame(
+    empty = local_df(
+        spark,
         [],
         "query_id int, rank int, url string, score6 long, "
         "n_matched long, req long",
@@ -2137,7 +2144,7 @@ def more_like_this(
     if not queries:
         return _empty_hits(se, False)
     res = se.search(queries, k=k + 1, mode=mode, fixed_point=fixed_point)
-    seed_df = spark.createDataFrame(seeds, "sq int, seed_url string")
+    seed_df = local_df(spark, seeds, "sq int, seed_url string")
     survivors = res.join(
         F.broadcast(seed_df),
         (res["query_id"] == seed_df["sq"]) & (res["url"] == seed_df["seed_url"]),
@@ -2930,7 +2937,6 @@ def _rank_and_lookup(
     ranked winners with urls): global rank over the candidate rows, then a
     url lookup that reads ONLY the winners' partitions."""
     spark, paths = se.spark, se.paths
-    out_schema = empty.schema
     if isinstance(scored, list) or (
         max_candidate_rows is not None
         and max_candidate_rows <= DRIVER_RANK_MAX_ROWS
@@ -3020,7 +3026,7 @@ def _rank_and_lookup(
         rec = (int(r["query_id"]), int(r["rank"]), wrow["url"], float(r["score"]))
         out.append(rec + (wrow["text"],) if with_text else rec)
     out.sort(key=lambda x: (x[0], x[1]))
-    return spark.createDataFrame(out, out_schema)
+    return local_df(spark, out, _hits_ddl(with_text))
 
 
 def search_query_string(
@@ -3187,7 +3193,8 @@ def search_query_string(
                 F.col("query_id") == sub,
                 _adjacency_expr("tk", terms, 0, True),
             ).otherwise(cond)
-        meta = spark.createDataFrame(
+        meta = local_df(
+            spark,
             [(s, q, r) for s, q, r, _t in sub_meta],
             "sub int, qid int, is_req boolean",
         )
@@ -3212,7 +3219,8 @@ def search_query_string(
                 ),
             )
         )
-        need = spark.createDataFrame(
+        need = local_df(
+            spark,
             list(req_counts.items()) or [(-1, 0)],
             "query_id int, __n_req int",
         )

@@ -9,9 +9,16 @@ cluster this would be set to ~2-3x total cores via --conf.
 
 from __future__ import annotations
 
+import functools
+import json
 import os
+from collections.abc import Sequence
+from datetime import timezone
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _make_type_verifier
 
 EXCLUDED_RULES = "spark.sql.optimizer.excludedRules"
 INFER_FILTERS_FROM_GENERATE = (
@@ -24,6 +31,48 @@ def with_excluded_rule(rules: str | None, rule: str) -> str:
     ``rule`` appended unless already present — other exclusions stay."""
     names = [r.strip() for r in (rules or "").split(",") if r.strip()]
     return ",".join(names if rule in names else names + [rule])
+
+
+@functools.lru_cache(maxsize=256)
+def _ddl_json(ddl: str) -> str:
+    # Parsing DDL is a JVM round trip (~4 ms); the cache holds only the
+    # immutable JSON, so no caller shares a mutable StructType.
+    return StructType.fromDDL(ddl).json()
+
+
+def local_df(spark: SparkSession, rows: Sequence, ddl: str) -> DataFrame:
+    """``rows`` (tuples or Rows, positional in ``ddl`` column order) as a
+    DataFrame over an Arrow ``LocalRelation``.
+
+    Every frame the engine builds on the driver goes through here: result
+    hand-backs, empty results, the small sides of broadcast joins.
+    ``createDataFrame`` over a Python list is a parallelize RDD of pickled
+    rows, so collecting it launches a Spark job (~275 ms for a 10-row
+    hand-back, most of a local-path query). A ``pyarrow.Table`` under
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
+    LocalRelation: collecting it launches no job, and broadcasting it
+    collects rows already held by the JVM instead of that RDD.
+
+    Each row first passes the type verifier the list path runs
+    (``verifySchema``): a value that does not fit its column, such as an
+    int32 overflow or a float in a long column, raises the same error
+    instead of being converted by Arrow.
+    """
+    struct = StructType.fromJson(json.loads(_ddl_json(ddl)))
+    arrow_schema = to_arrow_schema(struct)
+    verify = _make_type_verifier(struct)
+    for r in rows:
+        verify(r)
+    cols = []
+    for i, f in enumerate(arrow_schema):
+        col = [r[i] for r in rows]
+        if pa.types.is_timestamp(f.type) and f.type.tz:
+            # Arrow reads a naive datetime as UTC; the list path (and
+            # collect()) take it as the process's local time.
+            col = [v if v is None else v.astimezone(timezone.utc) for v in col]
+        cols.append(pa.array(col, type=f.type))
+    table = pa.Table.from_arrays(cols, schema=arrow_schema)
+    return spark.createDataFrame(table, schema=struct)
 
 
 def get_spark(

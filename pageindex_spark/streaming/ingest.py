@@ -56,6 +56,7 @@ from ..operators.docids import (
 )
 from ..operators.extract import with_extracted_text
 from ..operators.spimi import build_segments
+from ..session import local_df
 
 
 def stream_extract(
@@ -584,9 +585,7 @@ def refresh_streamed_index(
         tomb = read_tombstones(spark, index_dir, old).select("url", "doc_id")
         pairs = tomb.collect()
         deleted_ids = np.sort(np.asarray([r["doc_id"] for r in pairs], dtype=np.int64))
-        dead_urls = spark.createDataFrame(
-            [(r["url"],) for r in pairs], "url string"
-        )
+        dead_urls = local_df(spark, [(r["url"],) for r in pairs], "url string")
     for p in (paths.docs_extracted, paths.norms, paths.postings, paths.term_stats):
         shutil.rmtree(p, ignore_errors=True)
     # any positional sidecar snapshots the pre-rebuild corpus: stale now

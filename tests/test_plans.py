@@ -387,10 +387,10 @@ def test_single_lineage_plans_no_duplicate_kernels(spark, index_dir):
         hybrid_search_linear(spark, index_dir, qs, qv, embs, k=5, depth=5)
     )
     # each retriever list must appear ONCE: the sparse list lands as a
-    # single ExistingRDD scan, the dense cosine pass as a single
-    # broadcast nested-loop join — the groupBy-rejoin normalization this
-    # guards against duplicated both subtrees
-    assert plan.count("Scan ExistingRDD") == 1
+    # single LocalTableScan (the driver-built hand-back), the dense cosine
+    # pass as a single broadcast nested-loop join — the groupBy-rejoin
+    # normalization this guards against duplicated both subtrees
+    assert plan.count("LocalTableScan") == 1
     assert plan.count("BroadcastNestedLoopJoin") == 1
 
 

@@ -9,16 +9,22 @@
   cogroup returns, under every pre-heap channel;
 * the driver-side rank fast path in ``_rank_and_lookup`` returns exactly
   what the Spark-window path returns (same rows, same ranks);
-* the driver-side lookups raise on a broken index layout.
+* the driver-side lookups raise on a broken index layout;
+* driver-built frames are Arrow LocalRelations (``session.local_df``):
+  their contract, the zero-job hand-back of a warm local-path query, and
+  a source scan that keeps list-built ``createDataFrame`` calls out.
 """
 
+import ast
 import math
 import os
+import pathlib
 import shutil
 
 import pytest
 
 from pageindex_spark.driverq import _scan_fanout, register_views
+from pageindex_spark.plans.query import _hits_ddl
 
 
 @pytest.fixture(scope="module")
@@ -167,19 +173,17 @@ def test_local_fast_path_equals_cogroup(spark, r06_index, monkeypatch):
     monkeypatch.setattr(Q, "_score_local", spy)
     for qs, kw in cases:
         local_calls.clear()
-        fast = sorted(
-            tuple(r) for r in Q.search(spark, r06_index, qs, k=10, **kw).collect()
-        )
+        fast_df = Q.search(spark, r06_index, qs, k=10, **kw)
+        fast = sorted(tuple(r) for r in fast_df.collect())
         assert local_calls, f"local path did not run for {kw}"
         local_calls.clear()
         with monkeypatch.context() as m:
             m.setattr(Q, "LOCAL_QUERY_MAX_BYTES", -1)  # distributed cogroup
-            slow = sorted(
-                tuple(r)
-                for r in Q.search(spark, r06_index, qs, k=10, **kw).collect()
-            )
+            slow_df = Q.search(spark, r06_index, qs, k=10, **kw)
+            slow = sorted(tuple(r) for r in slow_df.collect())
         assert not local_calls, f"distributed path not forced for {kw}"
         assert fast and fast == slow, f"fast path diverged for {kw}"
+        assert fast_df.schema == slow_df.schema, f"schemas differ for {kw}"
 
 
 def test_driver_rank_equals_window_rank(spark, r06_index, monkeypatch):
@@ -286,3 +290,143 @@ def test_driver_lookups_raise_on_broken_layout(spark, r06_index, tmp_path):
     os.utime(os.path.join(streamed, "meta.json"))  # a fresh Searcher
     with pytest.raises(FileNotFoundError, match=f"delta={deltas[-1]}"):
         Q.search(spark, streamed, queries, k=10).collect()
+
+
+@pytest.mark.parametrize(
+    "ddl, rows",
+    [
+        (
+            _hits_ddl(False),
+            [
+                (1, 1, "https://ex.org/straße/日本", 3.25),
+                (1, 2, None, None),
+                (-(2**31), 2**31 - 1, "", -1e-300),
+            ],
+        ),
+        (
+            _hits_ddl(True),
+            [(2, 1, "https://ex.org/çà", 0.5, "tëxt ☃"), (2, 2, "u", 0.0, None)],
+        ),
+        (_hits_ddl(False), []),
+        (_hits_ddl(True), []),
+        (
+            "doc_id long, live boolean, payload binary",
+            [
+                (2**63 - 1, True, b"\x00\xff"),
+                (-(2**63), False, b""),
+                (None, None, None),
+            ],
+        ),
+    ],
+)
+def test_local_df_contract(spark, ddl, rows):
+    """``local_df`` keeps the DDL schema (names, types, nullability) and
+    hands every row back exactly and in order."""
+    from pyspark.sql.types import StructType
+
+    from pageindex_spark.session import local_df
+
+    df = local_df(spark, rows, ddl)
+    assert df.schema == StructType.fromDDL(ddl)
+    assert [tuple(r) for r in df.collect()] == rows
+
+
+def test_local_df_naive_timestamps_are_local_time(spark, monkeypatch):
+    """A naive datetime means the process's local time, as on the list
+    path and in ``collect()``; Arrow alone would read it as UTC."""
+    import datetime as dt
+    import time
+
+    from pageindex_spark.session import local_df
+
+    naive = dt.datetime(2024, 1, 2, 3, 4, 5, 6)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        rows = [(1, naive), (2, naive.astimezone(dt.timezone.utc)), (3, None)]
+        got = local_df(spark, rows, "q int, ts timestamp").collect()
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert [tuple(r) for r in got] == [(1, naive), (2, naive), (3, None)]
+
+
+def test_local_df_rejects_values_outside_their_type(spark):
+    """A value its column cannot hold raises, as the list path's
+    ``verifySchema`` verifier does, instead of being converted by Arrow."""
+    from pageindex_spark.session import local_df
+
+    with pytest.raises(ValueError):  # int32 overflow
+        local_df(spark, [(2**31, 1, "u", 1.0)], _hits_ddl(False))
+    with pytest.raises(TypeError):  # a float in a long column
+        local_df(spark, [(1.5,)], "doc_id long")
+
+
+def test_local_path_handback_runs_no_job(spark, r06_index):
+    """A warm local-path query scores on the driver and hands its rows back
+    as an Arrow LocalRelation, so search() + collect() launch no Spark job;
+    neither does a query whose terms are all absent (the cached empty
+    frame). A list-built frame would cost one job at collect."""
+    import pageindex_spark.plans.query as Q
+    from pageindex_spark.sources.corpus import make_queries
+
+    sc = spark.sparkContext
+    queries = make_queries()[:1]
+    assert Q.search(spark, r06_index, queries, k=10).collect()  # warm
+    jobs = {}
+    for group, qs, hit in (
+        ("handback", queries, True),
+        ("handback-absent", [(7, "zzqxjvw qqzxvjk")], False),
+    ):
+        sc.setJobGroup(group, "local-path search + collect")
+        try:
+            rows = Q.search(spark, r06_index, qs, k=10).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert bool(rows) == hit
+        jobs[group] = sc.statusTracker().getJobIdsForGroup(group)
+    assert jobs == {"handback": [], "handback-absent": []}
+
+
+def test_driver_frames_built_only_by_local_df():
+    """Every driver-built frame under pageindex_spark/ goes through
+    ``session.local_df``: ``createDataFrame(list)`` is a parallelize RDD
+    whose collect, or broadcast, is a Spark job. Only ``local_df`` itself
+    and the ``synth_media`` test-fixture builder may call it."""
+    root = pathlib.Path(__file__).resolve().parents[1] / "pageindex_spark"
+    allowed = {
+        ("session.py", "local_df"),
+        ("operators/multimodal.py", "synth_media"),
+    }
+
+    class Calls(ast.NodeVisitor):
+        def __init__(self):
+            self.scope: list[str] = []
+            self.found: list[tuple[str, int]] = []
+
+        def visit_FunctionDef(self, node):
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Call(self, node):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            if name == "createDataFrame":
+                top = self.scope[0] if self.scope else "<module>"
+                self.found.append((top, node.lineno))
+            self.generic_visit(node)
+
+    stray = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        calls = Calls()
+        calls.visit(ast.parse(path.read_text(), filename=str(path)))
+        stray += [
+            f"{rel}:{line} in {fn}"
+            for fn, line in calls.found
+            if (rel, fn) not in allowed
+        ]
+    assert not stray, f"build driver frames with session.local_df: {stray}"
