@@ -8,6 +8,14 @@ Usage:
   python jobs/plan_dump.py after --out plans/r07             # <q>_after.txt
   python jobs/plan_dump.py before --out plans/r07 --time 3   # + min-of-3
   python jobs/plan_dump.py after --only bm25_topk,postings   # a subset
+  python jobs/plan_dump.py after --out plans/r07 --search INDEX_DIR
+
+``--search INDEX_DIR`` dumps, instead of the SQL leaves, the plan of a
+distributed ``search()`` batch over a built index: the ``make_queries()``
+batch with the local scoring path switched off, captured as the scored
+candidates DataFrame the engine hands to its rank step
+(``<out>/engine_batch_<tag>.txt``, the index path written as
+``<INDEX_DIR>``; no SPARK_GRAFT_SF_DIR needed).
 
 Plans go to ``<out>/<q>_<tag>.txt`` (default out: plans/dump, relative to
 the repo root); with --time, noop-sink timings go to
@@ -37,11 +45,44 @@ HEADLINE = [
 ]
 
 
+def _explain(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def dump_search(spark, index_dir: str, path: str) -> None:
+    """Write the formatted plan of a forced-distributed search() batch."""
+    import pageindex_spark.plans.query as Q
+    from pageindex_spark.sources.corpus import make_queries
+
+    Q.LOCAL_QUERY_MAX_BYTES = -1  # every batch scores in Spark
+    rank = Q._rank_and_lookup
+    plans = []
+
+    def capture(se, scored, *a, **kw):
+        plans.append(_explain(scored))
+        return rank(se, scored, *a, **kw)
+
+    Q._rank_and_lookup = capture
+    try:
+        Q.search(spark, index_dir, make_queries(), k=10).collect()
+    finally:
+        Q._rank_and_lookup = rank
+    if len(plans) != 1:
+        sys.exit(f"plan_dump: expected one scored plan, got {len(plans)}")
+    with open(path, "w") as f:  # location-free, so dumps diff across hosts
+        f.write(plans[0].replace(index_dir, "<INDEX_DIR>"))
+
+
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
-    if not sf_dir:
-        sys.exit("plan_dump: set SPARK_GRAFT_SF_DIR to a testdata scale dir")
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    search_index = None
+    if "--search" in sys.argv:
+        search_index = os.path.abspath(sys.argv[sys.argv.index("--search") + 1])
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not sf_dir and search_index is None:
+        sys.exit("plan_dump: set SPARK_GRAFT_SF_DIR to a testdata scale dir")
     n_time = 0
     if "--time" in sys.argv:
         n_time = int(sys.argv[sys.argv.index("--time") + 1])
@@ -57,19 +98,21 @@ def main() -> None:
 
     spark = get_spark(app_name=f"plan-dump-{tag}", cores=CPUS,
                       shuffle_partitions=max(CPUS, 8))
+    os.makedirs(out_dir, exist_ok=True)
+    if search_index is not None:
+        path = os.path.join(out_dir, f"engine_batch_{tag}.txt")
+        dump_search(spark, search_index, path)
+        return
     warm_up(spark)
     register_views(spark, sf_dir)
     pairs = paired_sql()
-    os.makedirs(out_dir, exist_ok=True)
 
     timings: dict[str, list[float]] = {}
     for name in HEADLINE:
         if only and name not in only:
             continue
         df = spark.sql(pairs[name][0])
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = _explain(df)
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan)
         if n_time:

@@ -5262,10 +5262,13 @@ def paired_sql() -> dict[str, tuple[str, str]]:
                 rows between unbounded preceding and current row), -1.0) * 100) as bigint) as last_purchase2
         from events""",
     )
+    # integer cents first: a float running sum depends on the engine's
+    # accumulation order, and a session boundary sits on exact multiples
     pairs["sessionize"] = same(
         """select event_id, user_id,
-        cast(floor((sum(value) over (partition by user_id order by ts, event_id
-          rows between unbounded preceding and current row) - value) / 500.0) as bigint) as session_id
+        cast(floor((sum(cast(floor(value * 100) as bigint)) over (partition by user_id
+          order by ts, event_id rows between unbounded preceding and current row)
+          - cast(floor(value * 100) as bigint)) / 50000) as bigint) as session_id
         from events"""
     )
     pairs["range_join"] = same(

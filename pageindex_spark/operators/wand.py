@@ -8,11 +8,13 @@ segments plus a global top-k heap merge"):
    docID-grid *cells* by pure byte slicing — per-block metadata gives byte
    offsets, and every block lies entirely inside one build partition, so
    block-granular slicing at grid boundaries is exact.
-2. **Co-partitioned scoring (shuffle by cell):** each cell task owns one
-   contiguous docID range with ALL query terms' postings for that range plus
-   the range's doc-length norms (cogrouped); it runs BMW per query with a
-   local top-k heap, decoding only blocks whose block-max upper bound can
-   beat the heap threshold.
+2. **Per-cell scoring (no shuffle):** each scoring task owns a contiguous
+   range of cells; it reads ALL query terms' runs that overlap the range
+   plus the range's doc-length norms itself (pruned parquet reads), keeps
+   the slices whose cell lies in its range, and runs BMW per query per cell
+   with a local top-k heap, decoding only blocks whose block-max upper
+   bound can beat the heap threshold. The local path runs the same reader
+   over every cell on the driver (``plans/query._score_cells``).
 3. **Global merge:** per-query merge of per-cell top-k (tiny: cells x
    queries x k rows) with the deterministic tie-break (score desc, doc_id
    asc == url asc by docID construction).

@@ -50,6 +50,8 @@ from .query import (
     _CellMask,
     _query_head,
     _run_parts,
+    _two_phase_rank,
+    _with_urls,
     get_searcher,
 )
 
@@ -2111,8 +2113,6 @@ def search_sorted_by(
     (offset paging here would deepen them to offset+k). A query id
     without a cursor entry pages from the top (ES semantics for a
     missing search_after)."""
-    from pyspark.sql import Window
-
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
     kt = sort_keys.schema["sort_key"].dataType.simpleString()
@@ -2144,15 +2144,7 @@ def search_sorted_by(
         keyed = keyed.filter(F.col("cur_key").isNull() | past).drop(
             "cur_key", "cur_url"
         )
-    w_part = Window.partitionBy("query_id", "part_id").orderBy(*order)
-    w_all = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        keyed.withColumn("pr", F.row_number().over(w_part))
-        .filter(F.col("pr") <= k)
-        .withColumn("rank", F.row_number().over(w_all))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "url", "sort_key")
-    )
+    return _two_phase_rank(keyed, order, k, ["query_id", "rank", "url", "sort_key"])
 
 
 def facet_stats(
@@ -2314,13 +2306,8 @@ def top_hits(
     scored, parts = _search_impl(
         se, queries, n, "dense", fixed_point=True, raw_scored=True
     )
-    ext = spark.read.parquet(se.paths.docs_extracted).select(
-        F.col("part_id").cast("int").alias("part_id"), "local_pos", "url"
-    )
-    if parts is not None and 2 * len(parts) < len(se.grid_parts):
-        ext = ext.filter(F.col("part_id").isin(sorted(parts)))
     keyed = (
-        scored.join(ext, ["part_id", "local_pos"])
+        _with_urls(se, scored, parts)
         .join(facets.select("url", "facet"), "url")
         .withColumn(
             "score6", F.floor(F.col("score") * 1_000_000).cast("long")

@@ -5,11 +5,13 @@ Physical plan (north_star query path; SURVEY.md §3.3 target mapping):
 1. **Pruned scan** — postings read ONLY the term-hash buckets of the query's
    terms (directory/partition pruning) and filter term IN (...) (row-group
    pruning via parquet min/max on the sorted term column).
-2. **Slice (map-side, zero decode)** — each run splits into docID-grid cells
-   by byte slicing whole blocks (`wand.slice_run_to_cells`).
-3. **Cogrouped scoring** — shuffle slices + norms by cell; each cell task
-   runs Block-Max WAND (or the dense verifier) per query over its contiguous
-   docID range with local norms; emits per-cell top-k.
+2. **Slice (zero decode)** — each run splits into docID-grid cells by byte
+   slicing whole blocks (`wand.slice_run_to_cells`).
+3. **Per-cell scoring, one stage** — `_score_cells` reads a contiguous range
+   of cells' runs and norms with pyarrow, slices them and runs Block-Max
+   WAND (or the dense verifier) per query per cell; it emits per-cell top-k.
+   The local path runs it on the driver over every cell; the distributed
+   path runs it in one ``mapInArrow`` task per range of cells (no shuffle).
 4. **Global top-k merge** — window rank over (score desc, doc_id asc), tiny
    input (cells x queries x k); then one join to doc_map for urls (runtime-
    filtered by the tiny candidate set).
@@ -34,6 +36,7 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..functions.murmur3 import term_bucket
 from ..functions.tokenizer import (
@@ -81,14 +84,10 @@ _SLICE_DDL = (
 )
 
 
-# prune_norms auto threshold (VERDICT r4 next #5): below this corpus size
-# the norms relation is tiny and the extra sequential metadata job that
-# pruning needs costs more wall than the norms shuffle it saves (measured in
-# this sandbox); at/above it the norms cogroup side is O(n_docs) bytes per
-# query batch and pruning pays for any selective query load. 5M docs ~ a few
-# MB of varbyte norms — roughly where the shuffle starts to dominate the
-# one extra job. Results are identical either way (pinned by
-# test_prune_norms_auto_identity); this only picks the faster plan.
+# prune_norms auto threshold (Iceberg-stored postings only: their norms
+# cogroup side is O(n_docs) bytes per batch, and from about this corpus size
+# on the extra metadata job that prunes it pays). Results are identical
+# either way (pinned by test_prune_norms_auto_identity).
 PRUNE_NORMS_AUTO_MIN_DOCS = 5_000_000
 
 # Extra per-cell candidates kept in fixed_point mode. PROBABILISTIC (ADVICE
@@ -178,14 +177,9 @@ class Searcher:
             "cell", (F.col("part_id") / cell_parts).cast("int")
         )
         if cache:
-            # norms is one row per build partition (P rows), but each row
-            # carries a varbyte blob of that part's doc lengths, so the
-            # relation is O(n_docs) BYTES total (~1-2 B/doc ≈ 1-2 TB at the
-            # 10^12-doc target). cache() distributes it across executor
-            # storage memory — appropriate on a real cluster sized for the
-            # index, and it saves the parquet scan (not the per-query
-            # cogroup shuffle, which moves only the cells each query
-            # touches). Pass cache=False where executor memory is tight.
+            # norms as a Spark relation serves explain and the Iceberg
+            # cogroup; it is O(n_docs) bytes, so pass cache=False where
+            # executor memory is tight.
             self.norms = self.norms.cache()
         # df per term, filled lazily from pruned term_stats reads. Sound
         # because a Searcher is pinned to one immutable index version
@@ -200,10 +194,8 @@ class Searcher:
         # runs no Spark job; the cache saves the Arrow hand-over to the
         # JVM that building one costs per search() call.
         self._empty_cache: dict[str, DataFrame] = {}
-        # local-fast-path caches (immutable per Searcher, which is pinned
-        # to one index version): norms on-disk size and, once the fast
-        # path actually fires (i.e. the index is small by construction),
-        # the norms relation as a pandas frame.
+        # local-path caches (a Searcher is pinned to one index version):
+        # norms on-disk size and, once the local path runs, the norms rows.
         self._norms_disk_bytes: int | None = None
         self._norms_pdf = None
 
@@ -235,23 +227,6 @@ class Searcher:
         if self.committed_deltas is not None:
             runs = runs.filter(F.col("delta").isin(self.committed_deltas))
         return runs
-
-    def _local_norms_pdf(self):
-        """norms as pandas with the cell column — the driver-side mirror of
-        ``self.norms`` (only materialized on the byte-guarded fast path)."""
-        if self._norms_pdf is None:
-            import pyarrow.parquet as pq
-
-            t = pa.concat_tables(
-                pq.read_table(
-                    f, columns=["part_id", "first_doc", "n_docs", "dl_blob"]
-                )
-                for f in _norms_files(self)
-            )
-            pdf = t.to_pandas()
-            pdf["cell"] = (pdf["part_id"] // self.cell_parts).astype("int32")
-            self._norms_pdf = pdf
-        return self._norms_pdf
 
     def search(
         self,
@@ -354,9 +329,8 @@ def search(
     before any postings decode. The resolved set is O(filter) driver
     memory — right for selective attribute filters (language, domain
     whitelists, date slices); a filter near corpus size should instead be
-    expunged into its own index, or shipped as a (cell -> allowed) side
-    relation through the norms cogroup (same upgrade path as the
-    tombstone note in plans/deletes.py).
+    expunged into its own index, or read per cell by the scoring tasks
+    (same upgrade path as the tombstone note in plans/deletes.py).
 
     ``offset`` pages past the first results (ranks offset+1..offset+k,
     absolute ranks preserved): per-cell heaps deepen to offset+k so page N
@@ -379,17 +353,11 @@ def search(
     retrieval parity: /root/reference/pageindex/utils.py:554-564 returns
     node text, not just ids) — same pruned partition read, one extra column.
 
-    ``prune_norms`` (the 100-TB switch): the scoring cogroup otherwise
-    shuffles the ENTIRE norms relation — O(n_docs) bytes, terabytes at the
-    10^12-doc target — for every query batch, even when the query terms'
-    postings touch a handful of cells. With the flag on, one extra
-    metadata-only job reads the pruned runs' (first_doc, last_doc) ranges
-    (column-pruned: blobs never load), the driver maps them to build
-    partitions via the docID grid, and the norms side of the cogroup is
-    filtered to exactly those partitions before it shuffles. Results are
-    identical (pinned by test); default off because in THIS sandbox the
-    extra sequential job costs more wall than the tiny norms shuffle saves
-    — on a real cluster flip it on for any selective query load.
+    ``prune_norms`` is a no-op on parquet indexes: each scoring task reads
+    only its own cells' norms rows. Iceberg-stored postings still score
+    through a slices/norms cogroup; there the flag filters the norms side
+    to the build partitions the pruned runs touch (one metadata-only job)
+    before it shuffles. Results are identical either way (pinned by test).
     """
     return get_searcher(spark, index_dir, cell_parts).search(
         queries, k, mode, fixed_point, with_text, prune_norms=prune_norms,
@@ -497,7 +465,7 @@ def search_phrase(
 
     The index stores no positions (bag-of-words postings), so phrase
     matching is the classic two-stage plan: (1) CONJUNCTIVE candidates
-    from the committed index — same pruned postings scan and cell cogroup
+    from the committed index — same pruned postings read and cell scoring
     as BM25, but the cell scorer intersects the phrase terms' postings
     (``conjunctive_score_cell``; exact per cell since cells partition
     docID space) — then (2) adjacency VERIFICATION on the candidates'
@@ -638,7 +606,7 @@ def search_phrase_prefix(
     terms and treating the expansion as a filter.
 
     Plan: conjunctive candidates on the full terms (stage 1 of
-    ``search_phrase`` — same pruned postings scan + cell cogroup), then
+    ``search_phrase`` — same pruned postings read + cell scoring), then
     a codegen'd verification predicate over the candidates' text:
     ``exists`` over positions anchoring the full-term run with a
     ``substr`` prefix test on the next slot. NO expansion cap: ES
@@ -920,13 +888,8 @@ def search_multi_field(
         scored, parts = _search_impl(
             se, queries, k, "dense", fixed_point=True, raw_scored=True
         )
-        ext = spark.read.parquet(se.paths.docs_extracted).select(
-            F.col("part_id").cast("int").alias("part_id"), "local_pos", "url"
-        )
-        if parts is not None and 2 * len(parts) < len(se.grid_parts):
-            ext = ext.filter(F.col("part_id").isin(sorted(parts)))
         per_field.append(
-            scored.join(ext, ["part_id", "local_pos"]).select(
+            _with_urls(se, scored, parts).select(
                 "query_id",
                 "url",
                 (F.col("score") * F.lit(float(boost))).alias("s"),
@@ -950,17 +913,40 @@ def search_multi_field(
         )
         .withColumn("best6", F.floor(F.col("mx") * 1_000_000).cast("long"))
     )
-    order = (F.desc("final6"), F.asc("url"))
-    w_bkt = Window.partitionBy(
-        "query_id", F.pmod(F.crc32(F.col("url")), F.lit(32))
-    ).orderBy(*order)
+    return _two_phase_rank(
+        agg, (F.desc("final6"), F.asc("url")), k,
+        ["query_id", "rank", "url", "final6", "best6"],
+        F.pmod(F.crc32(F.col("url")), F.lit(32)),
+    )
+
+
+def _with_urls(
+    se: Searcher, df: DataFrame, parts: list[int] | None, col: str = "url"
+) -> DataFrame:
+    """``raw_scored`` rows joined on (part_id, local_pos) to the extracts'
+    ``col``, read only from the build partitions in ``parts`` (the prune
+    list ``raw_scored`` returns) when those are under half of them."""
+    ext = se.spark.read.parquet(se.paths.docs_extracted).select(
+        F.col("part_id").cast("int").alias("part_id"), "local_pos", col
+    )
+    if parts is not None and 2 * len(parts) < len(se.grid_parts):
+        ext = ext.filter(F.col("part_id").isin(sorted(parts)))
+    return df.join(ext, ["part_id", "local_pos"])
+
+
+def _two_phase_rank(
+    df: DataFrame, order: tuple, k: int, cols: list[str], part="part_id"
+) -> DataFrame:
+    """Top-``k`` per query under ``order`` without a global sort: a top-k
+    per (query, ``part``) first, then a global rank over the survivors."""
+    w_part = Window.partitionBy("query_id", part).orderBy(*order)
     w_all = Window.partitionBy("query_id").orderBy(*order)
     return (
-        agg.withColumn("pr", F.row_number().over(w_bkt))
+        df.withColumn("pr", F.row_number().over(w_part))
         .filter(F.col("pr") <= k)
         .withColumn("rank", F.row_number().over(w_all))
         .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "url", "final6", "best6")
+        .select(*cols)
     )
 
 
@@ -1540,18 +1526,13 @@ def search_collapse(
     scored, parts = _search_impl(
         se, queries, k, "dense", fixed_point, raw_scored=True
     )
-    ext = spark.read.parquet(se.paths.docs_extracted).select(
-        F.col("part_id").cast("int").alias("part_id"), "local_pos", "url"
-    )
-    if parts is not None and 2 * len(parts) < len(se.grid_parts):
-        ext = ext.filter(F.col("part_id").isin(sorted(parts)))
     skey = (
         F.floor(F.col("score") * 1_000_000).cast("long")
         if fixed_point
         else F.col("score")
     )
     keyed = (
-        scored.join(ext, ["part_id", "local_pos"])
+        _with_urls(se, scored, parts)
         .join(collapse_keys.select("url", "ckey"), "url")
         .withColumn("skey", skey)
     )
@@ -1577,17 +1558,9 @@ def search_collapse(
             F.col("b.score").alias("score"),
         )
     )
-    order = (F.desc("skey"), F.asc("doc_id"))
-    w_part = Window.partitionBy(
-        "query_id", F.pmod(F.hash("ckey"), F.lit(64))
-    ).orderBy(*order)
-    w_all = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        best.withColumn("pr", F.row_number().over(w_part))
-        .filter(F.col("pr") <= k)
-        .withColumn("rank", F.row_number().over(w_all))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "url", "ckey", "score")
+    return _two_phase_rank(
+        best, (F.desc("skey"), F.asc("doc_id")), k,
+        ["query_id", "rank", "url", "ckey", "score"], F.pmod(F.hash("ckey"), F.lit(64)),
     )
 
 
@@ -1634,18 +1607,13 @@ def search_collapse_inner(
     scored, parts = _search_impl(
         se, queries, k, "dense", fixed_point, raw_scored=True
     )
-    ext = spark.read.parquet(se.paths.docs_extracted).select(
-        F.col("part_id").cast("int").alias("part_id"), "local_pos", "url"
-    )
-    if parts is not None and 2 * len(parts) < len(se.grid_parts):
-        ext = ext.filter(F.col("part_id").isin(sorted(parts)))
     skey = (
         F.floor(F.col("score") * 1_000_000).cast("long")
         if fixed_point
         else F.col("score")
     )
     keyed = (
-        scored.join(ext, ["part_id", "local_pos"])
+        _with_urls(se, scored, parts)
         .join(collapse_keys.select("url", "ckey"), "url")
         .withColumn("skey", skey)
     )
@@ -1664,16 +1632,8 @@ def search_collapse_inner(
             (-F.col("b.ndoc")).cast("long").alias("doc_id"),
         )
     )
-    w_part = Window.partitionBy(
-        "query_id", F.pmod(F.hash("ckey"), F.lit(64))
-    ).orderBy(*order)
-    w_all = Window.partitionBy("query_id").orderBy(*order)
-    groups = (
-        best.withColumn("pr", F.row_number().over(w_part))
-        .filter(F.col("pr") <= k)
-        .withColumn("rank", F.row_number().over(w_all))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "ckey", "rank")
+    groups = _two_phase_rank(
+        best, order, k, ["query_id", "ckey", "rank"], F.pmod(F.hash("ckey"), F.lit(64))
     )
     w_inner = Window.partitionBy("query_id", "ckey").orderBy(*order)
     inner = keyed.withColumn("inner_rank", F.row_number().over(w_inner)).filter(
@@ -1719,28 +1679,17 @@ def search_function_score(
     scored, parts = _search_impl(
         se, queries, k, "dense", fixed_point=True, raw_scored=True
     )
-    ext = spark.read.parquet(se.paths.docs_extracted).select(
-        F.col("part_id").cast("int").alias("part_id"), "local_pos", "url"
-    )
-    if parts is not None and 2 * len(parts) < len(se.grid_parts):
-        ext = ext.filter(F.col("part_id").isin(sorted(parts)))
     keyed = (
-        scored.join(ext, ["part_id", "local_pos"])
+        _with_urls(se, scored, parts)
         .join(factors.select("url", "factor"), "url")
         .withColumn(
             "final6",
             F.floor(F.col("score") * F.col("factor") * 1_000_000).cast("long"),
         )
     )
-    order = (F.desc("final6"), F.asc("doc_id"))
-    w_part = Window.partitionBy("query_id", "part_id").orderBy(*order)
-    w_all = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        keyed.withColumn("pr", F.row_number().over(w_part))
-        .filter(F.col("pr") <= k)
-        .withColumn("rank", F.row_number().over(w_all))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "url", "factor", "final6", "score")
+    return _two_phase_rank(
+        keyed, (F.desc("final6"), F.asc("doc_id")), k,
+        ["query_id", "rank", "url", "factor", "final6", "score"],
     )
 
 
@@ -1771,15 +1720,10 @@ def search_rank_feature(
     scored, parts = _search_impl(
         se, queries, k, "dense", fixed_point=True, raw_scored=True
     )
-    ext = spark.read.parquet(se.paths.docs_extracted).select(
-        F.col("part_id").cast("int").alias("part_id"), "local_pos", "url"
-    )
-    if parts is not None and 2 * len(parts) < len(se.grid_parts):
-        ext = ext.filter(F.col("part_id").isin(sorted(parts)))
     fd = F.col("f").cast("double")
     sat = F.coalesce(fd / (fd + F.lit(pivot)), F.lit(0.0))
     keyed = (
-        scored.join(ext, ["part_id", "local_pos"])
+        _with_urls(se, scored, parts)
         .join(features.select("url", "f"), "url", "left")
         .withColumn(
             "final6",
@@ -1791,15 +1735,9 @@ def search_rank_feature(
             "score6", F.floor(F.col("score") * 1_000_000).cast("long")
         )
     )
-    order = (F.desc("final6"), F.asc("url"))
-    w_part = Window.partitionBy("query_id", "part_id").orderBy(*order)
-    w_all = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        keyed.withColumn("pr", F.row_number().over(w_part))
-        .filter(F.col("pr") <= k)
-        .withColumn("rank", F.row_number().over(w_all))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "url", "final6", "score6")
+    return _two_phase_rank(
+        keyed, (F.desc("final6"), F.asc("url")), k,
+        ["query_id", "rank", "url", "final6", "score6"],
     )
 
 
@@ -1830,8 +1768,7 @@ def search_dis_max(
     the pruned postings scan dedups terms across subqueries, and since
     the subqueries are disjoint singletons the total decode work equals
     the plain OR query's. The per-doc max/sum then ride one map-side-
-    combined groupBy (same shuffle class as the kernel's own cell
-    cogroup), the factor math is two JVM ops, and ranking is the
+    combined groupBy, the factor math is two JVM ops, and ranking is the
     ``search_function_score`` two-phase shape (per-(query, part) top-k,
     then a global rank over the survivors — never a global sort). The
     max is order-free; the sum is the same partial-sum class as every
@@ -1884,21 +1821,10 @@ def search_dis_max(
             "best6", F.floor(F.col("mx") * 1_000_000).cast("long")
         )
     )
-    ext = spark.read.parquet(se.paths.docs_extracted).select(
-        F.col("part_id").cast("int").alias("part_id"), "local_pos", "url"
-    )
-    if parts is not None and 2 * len(parts) < len(se.grid_parts):
-        ext = ext.filter(F.col("part_id").isin(sorted(parts)))
-    keyed = agg.join(ext, ["part_id", "local_pos"])
-    order = (F.desc("final6"), F.asc("doc_id"))
-    w_part = Window.partitionBy("query_id", "part_id").orderBy(*order)
-    w_all = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        keyed.withColumn("pr", F.row_number().over(w_part))
-        .filter(F.col("pr") <= k)
-        .withColumn("rank", F.row_number().over(w_all))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "url", "final6", "best6")
+    keyed = _with_urls(se, agg, parts)
+    return _two_phase_rank(
+        keyed, (F.desc("final6"), F.asc("doc_id")), k,
+        ["query_id", "rank", "url", "final6", "best6"],
     )
 
 
@@ -1923,7 +1849,7 @@ def search_boosting(
 
     Plan: positive and negative ride ONE ``raw_scored`` exhaustive kernel
     call as even/odd-encoded subqueries (``qid*2`` positive, ``qid*2+1``
-    negative) — one pruned postings scan, one cell cogroup. The negative
+    negative) — one pruned postings read, one scoring stage. The negative
     rows collapse to a distinct (query, doc) membership set and LEFT-join
     the positive scored set (membership is per-partition-local — both
     sides carry the kernel's (part_id, local_pos) coordinates, so AQE
@@ -1981,21 +1907,10 @@ def search_boosting(
             "demoted", F.col("neg").isNotNull().cast("int")
         )
     )
-    ext = spark.read.parquet(se.paths.docs_extracted).select(
-        F.col("part_id").cast("int").alias("part_id"), "local_pos", "url"
-    )
-    if parts is not None and 2 * len(parts) < len(se.grid_parts):
-        ext = ext.filter(F.col("part_id").isin(sorted(parts)))
-    keyed = boosted.join(ext, ["part_id", "local_pos"])
-    order = (F.desc("final6"), F.asc("doc_id"))
-    w_part = Window.partitionBy("query_id", "part_id").orderBy(*order)
-    w_all = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        keyed.withColumn("pr", F.row_number().over(w_part))
-        .filter(F.col("pr") <= k)
-        .withColumn("rank", F.row_number().over(w_all))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "url", "final6", "demoted")
+    keyed = _with_urls(se, boosted, parts)
+    return _two_phase_rank(
+        keyed, (F.desc("final6"), F.asc("doc_id")), k,
+        ["query_id", "rank", "url", "final6", "demoted"],
     )
 
 
@@ -2060,13 +1975,8 @@ def search_terms_set(
             F.floor(F.sum("score") * 1_000_000).cast("long").alias("score6"),
         )
     )
-    ext = spark.read.parquet(se.paths.docs_extracted).select(
-        F.col("part_id").cast("int").alias("part_id"), "local_pos", "url"
-    )
-    if parts is not None and 2 * len(parts) < len(se.grid_parts):
-        ext = ext.filter(F.col("part_id").isin(sorted(parts)))
     keyed = (
-        agg.join(ext, ["part_id", "local_pos"])
+        _with_urls(se, agg, parts)
         .join(
             required.select(
                 "url", F.col("required").cast("long").alias("req")
@@ -2075,15 +1985,9 @@ def search_terms_set(
         )
         .filter(F.col("n_matched") >= F.col("req"))
     )
-    order = (F.desc("score6"), F.asc("doc_id"))
-    w_part = Window.partitionBy("query_id", "part_id").orderBy(*order)
-    w_all = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        keyed.withColumn("pr", F.row_number().over(w_part))
-        .filter(F.col("pr") <= k)
-        .withColumn("rank", F.row_number().over(w_all))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "url", "score6", "n_matched", "req")
+    return _two_phase_rank(
+        keyed, (F.desc("score6"), F.asc("doc_id")), k,
+        ["query_id", "rank", "url", "score6", "n_matched", "req"],
     )
 
 
@@ -2182,7 +2086,7 @@ def search_snippets(
     the wrong payload, so winners carry a bounded excerpt instead.
 
     Plan shape: identical to ``search(with_text=True)`` (pruned postings
-    scan, cell cogroup, winners'-partitions-only text fetch); the snippet
+    read, cell scoring, winners'-partitions-only text fetch); the snippet
     is a JVM codegen projection over the <= queries x k winner rows
     (``functions.sqlglue`` expressions — the DuckDB twin computes the
     SAME first-hit index and window, so snippets hash-match across
@@ -2306,16 +2210,13 @@ class _CellMask:
 
 # Local scoring fast path (r6): when a query's PRUNED inputs — the term
 # buckets' postings files plus the norms relation — total under this many
-# bytes on disk, the scoring runs driver-side: the same _slice_mapper and
-# the same score_cell closure over the same captured values, so the two
-# paths differ only in where the rows come from (pyarrow reads on the
-# driver vs the Spark scan + cogroup), not in a Spark job's fixed overhead
-# (~0.7-1.2 s here: two Python stages + two exchanges) to move a few MB.
-# This is the ES/Lucene observation that a small searchable segment does
-# not need a cluster pass; the decision is a per-query metadata check
-# (os.stat over <= |buckets| dirs), a missing committed dir raises, and any
-# index over the bound — every real-scale index — takes the distributed
-# cogroup. No results are cached: every call re-reads the committed parquet.
+# bytes on disk, ``_score_cells`` runs on the driver over every cell instead
+# of in a Spark stage (~0.3-0.5 s of fixed cost on a 4-core host). Both run
+# the same reader and score_cell closure over the same captured values. The
+# decision is a per-query metadata check (os.stat over <= |buckets| dirs),
+# a missing committed dir raises, and any index over the bound — every
+# real-scale index — takes the distributed stage. Nothing is cached but the
+# norms rows: every call re-reads the committed postings.
 LOCAL_QUERY_MAX_BYTES = int(
     os.environ.get("SPARK_GRAFT_LOCAL_QUERY_MAX_BYTES", str(64 * 1024 * 1024))
 )
@@ -2378,44 +2279,106 @@ def _local_query_bytes(se: Searcher, buckets: list[int]) -> int:
     return total
 
 
-def _score_local(se: Searcher, buckets: list[int], present: list[str], score_cell):
-    """Driver-side mirror of the slices/norms cell cogroup: read the pruned
-    runs, slice with the SAME mapper, score each cell with the SAME closure.
-    Returns the scored candidate rows as plain dicts."""
+class _CellSource(NamedTuple):
+    """What ``_score_cells`` reads, as plain picklable values (no Searcher,
+    no SparkSession): the postings root and the query's pruned bucket dirs
+    (``_postings_bucket_dirs``), its present terms, the cell grid, build
+    partitions per cell and the committed norms files."""
+
+    postings: str
+    bucket_dirs: list[str]
+    present: list[str]
+    cell_grid: np.ndarray
+    cell_parts: int
+    norms_files: list[str]
+
+
+def _read_norms(files: list[str], cell_parts: int, parts=None) -> pd.DataFrame:
+    """The norms rows of build partitions ``parts`` (a ``[p0, p1)`` pair;
+    None: all) with their cell id."""
     import pyarrow.parquet as pq
 
-    tables = []
-    for d in _postings_bucket_dirs(se, buckets):
-        sub = os.path.join(se.paths.postings, d)
-        if not os.path.isdir(sub):
-            continue
-        for f in sorted(os.listdir(sub)):
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                tables.append(
-                    pq.read_table(
-                        os.path.join(sub, f),
-                        columns=_RUN_COLS,
-                        filters=[("term", "in", present)],
-                    )
-                )
-    tables = [t for t in tables if t.num_rows]
-    if not tables:
-        return []
-    runs_t = pa.concat_tables(tables)
-    mapper = _slice_mapper(se.cell_grid)
-    slice_batches = list(mapper(iter(runs_t.to_batches())))
-    if not slice_batches:
-        return []
-    slices_pdf = pa.Table.from_batches(slice_batches).to_pandas()
-    norms_pdf = se._local_norms_pdf()
+    filters = None if parts is None else [
+        ("part_id", ">=", parts[0]), ("part_id", "<", parts[1])
+    ]
+    pdf = pa.concat_tables(
+        pq.read_table(
+            f, columns=["part_id", "first_doc", "n_docs", "dl_blob"],
+            filters=filters,
+        )
+        for f in files
+    ).to_pandas()
+    pdf["cell"] = (pdf["part_id"] // cell_parts).astype("int32")
+    return pdf
+
+
+def _score_cells(
+    src: _CellSource, c0: int, c1: int, score_cell, norms_pdf=None
+) -> pd.DataFrame | None:
+    """The one per-cell reader of both scoring paths: score cells
+    ``c0..c1`` (inclusive) with ``score_cell``. Reads the present terms'
+    runs with pyarrow, slices them with ``_slice_mapper`` and keeps the
+    pieces whose slicer cell id lies in the range; the runs' docID-range
+    filter only prunes the read (it drops runs with no block in these
+    cells). ``norms_pdf`` (every cell's rows, the local path's cache)
+    saves the norms read. Returns the scored rows, or None."""
+    grid = src.cell_grid
+    filters = [("term", "in", src.present)]
+    if c0 > 0:
+        filters.append(("last_doc", ">=", int(grid[c0])))
+    if c1 + 1 < len(grid):  # the last cell is open-ended
+        filters.append(("first_doc", "<", int(grid[c1 + 1])))
+    runs = _pruned_parquet_tables(src.postings, src.bucket_dirs, _RUN_COLS, filters)
+    slices = list(_slice_mapper(grid)(b for t in runs for b in t.to_batches()))
+    if not slices:
+        return None
+    slices_pdf = pa.Table.from_batches(slices).to_pandas()
+    if norms_pdf is None:
+        norms_pdf = _read_norms(
+            src.norms_files, src.cell_parts,
+            (c0 * src.cell_parts, (c1 + 1) * src.cell_parts),
+        )
     out = []
     for cell, s_pdf in slices_pdf.groupby("cell"):
+        if not c0 <= cell <= c1:  # a straddling run's pieces in other cells
+            continue
         res = score_cell(s_pdf, norms_pdf[norms_pdf["cell"] == cell])
         if len(res):
             out.append(res)
-    if not out:
-        return []
-    return pd.concat(out, ignore_index=True).to_dict("records")
+    return pd.concat(out, ignore_index=True) if out else None
+
+
+def _score_local(se: Searcher, src: _CellSource, score_cell) -> list[dict]:
+    """The local path: ``_score_cells`` over every cell on the driver, with
+    every cell's norms rows read once per Searcher. Returns the scored
+    candidate rows as plain dicts."""
+    if se._norms_pdf is None:
+        se._norms_pdf = _read_norms(src.norms_files, src.cell_parts)
+    scored = _score_cells(src, 0, len(src.cell_grid) - 1, score_cell, se._norms_pdf)
+    return [] if scored is None else scored.to_dict("records")
+
+
+def _score_fused(
+    spark: SparkSession, src: _CellSource, score_cell, schema: pa.Schema
+) -> DataFrame:
+    """The distributed path: one Python stage with no shuffle. A ``range``
+    of cell ids splits into contiguous per-task ranges, and each task runs
+    ``_score_cells`` over its own range."""
+
+    def score_range(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # numSlices <= n_cells, so every range split holds at least one cell
+        cells = [c for batch in batches for c in batch.column(0).to_pylist()]
+        scored = _score_cells(src, min(cells), max(cells), score_cell)
+        if scored is not None:
+            yield from pa.Table.from_pandas(
+                scored, schema=schema, preserve_index=False
+            ).to_batches()
+
+    n_cells = len(src.cell_grid)
+    n_tasks = min(n_cells, spark.sparkContext.defaultParallelism)
+    return spark.range(0, n_cells, 1, n_tasks).mapInArrow(
+        score_range, from_arrow_schema(schema)
+    )
 
 
 def _parts_for_runs(
@@ -2519,33 +2482,48 @@ def _url_doc_ids(se: Searcher, urls: DataFrame | list[str]) -> list[tuple[str, i
     ]
 
 
+def _pruned_parquet_tables(
+    root: str,
+    part_dirs: list[str],
+    columns: list[str],
+    filters=None,
+) -> list[pa.Table]:
+    """Driver- or task-side pruned parquet read of
+    ``root/<part_dir>/*.parquet``: the named columns only, with optional
+    pyarrow ``filters`` applied to the rows. A missing ``root`` raises
+    FileNotFoundError; a missing part dir under an existing root is an
+    empty partition and yields no table."""
+    import pyarrow.parquet as pq
+
+    if not os.path.isdir(root):
+        raise FileNotFoundError(f"index relation missing: {root}")
+    out: list[pa.Table] = []
+    for d in part_dirs:
+        sub = os.path.join(root, d)
+        if not os.path.isdir(sub):
+            continue
+        for f in sorted(os.listdir(sub)):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                out.append(
+                    pq.read_table(
+                        os.path.join(sub, f), columns=columns, filters=filters
+                    )
+                )
+    return out
+
+
 def _pruned_parquet_rows(
     root: str,
     part_dirs: list[str],
     columns: list[str],
     filters=None,
 ) -> list[dict]:
-    """Driver-side pruned parquet read of ``root/<part_dir>/*.parquet``: the
-    named columns only, with optional pyarrow ``filters`` pushed to row
-    groups. A missing ``root`` raises FileNotFoundError; a missing part dir
-    under an existing root is an empty partition and yields no rows."""
-    import pyarrow.parquet as pq
-
-    if not os.path.isdir(root):
-        raise FileNotFoundError(f"index relation missing: {root}")
-    out: list[dict] = []
-    for d in part_dirs:
-        sub = os.path.join(root, d)
-        if not os.path.isdir(sub):
-            continue
-        for f in sorted(os.listdir(sub)):
-            if not f.endswith(".parquet") or f.startswith(("_", ".")):
-                continue
-            t = pq.read_table(
-                os.path.join(sub, f), columns=columns, filters=filters
-            )
-            out.extend(t.to_pylist())
-    return out
+    """``_pruned_parquet_tables`` as plain rows."""
+    return [
+        r
+        for t in _pruned_parquet_tables(root, part_dirs, columns, filters)
+        for r in t.to_pylist()
+    ]
 
 
 def _ensure_idf(se: Searcher, terms: list[str]) -> None:
@@ -2764,15 +2742,17 @@ def _search_impl(
     # metadata check over the pruned inputs' on-disk bytes. raw_scored
     # consumers expect a DataFrame and Iceberg has no local files — both
     # always go distributed.
+    iceberg = se.iceberg_table is not None
     local_mode = (
         not raw_scored
-        and se.iceberg_table is None
+        and not iceberg
         and _local_query_bytes(se, buckets) <= LOCAL_QUERY_MAX_BYTES
     )
 
-    norms = se.norms
     raw_parts: list[int] | None = None
-    if not local_mode:
+    if iceberg:
+        # Iceberg-stored postings: the Spark scan + slices/norms cogroup.
+        norms = se.norms
         runs = se.postings_runs(present)
         slices = _cell_slices(se, runs)
         if prune_norms or raw_scored:
@@ -2782,6 +2762,22 @@ def _search_impl(
             raw_parts = _run_parts(se, runs, se.cell_parts)
             if prune_norms and raw_parts is not None:
                 norms = norms.filter(F.col("part_id").isin(raw_parts))
+    else:
+        src = _CellSource(
+            se.paths.postings, _postings_bucket_dirs(se, buckets), present,
+            cell_grid, se.cell_parts, _norms_files(se),
+        )
+        if raw_scored:
+            # the url-join prune list from the runs' docID ranges, read
+            # column-pruned on the driver (the blobs never load)
+            ranges = _pruned_parquet_rows(
+                src.postings, src.bucket_dirs, ["first_doc", "last_doc"],
+                filters=[("term", "in", present)],
+            )
+            raw_parts = _parts_for_runs(
+                [(r["first_doc"], r["last_doc"]) for r in ranges],
+                cell_grid, se.cell_parts, len(se.grid_parts),
+            )
     use_dense = mode in ("dense", "conjunctive", "msm")
     conjunctive = mode == "conjunctive"
     # Everything the kernel reads is a plain value captured by the closure
@@ -2890,19 +2886,22 @@ def _search_impl(
             out["local_pos"] = out["doc_id"] - grid_parts[pid]
         return pd.DataFrame(out)
 
-    cell_schema = "query_id int, doc_id long, score double" + (
-        ", part_id int, local_pos long" if raw_scored else ""
+    cell_schema = pa.schema(
+        [("query_id", pa.int32()), ("doc_id", pa.int64()), ("score", pa.float64())]
+        + ([("part_id", pa.int32()), ("local_pos", pa.int64())] if raw_scored else [])
     )
     if local_mode:
-        # zero Spark jobs: same mapper, same score_cell closure, same
-        # per-cell inputs — identity pinned by
+        # zero Spark jobs: the same per-cell reader and score_cell closure
+        # as the fused stage, run on the driver — identity pinned by
         # tests/test_r06_optimizations.py::test_local_fast_path_equals_cogroup.
-        scored = _score_local(se, buckets, present, score_cell)
+        scored = _score_local(se, src, score_cell)
+    elif not iceberg:
+        scored = _score_fused(se.spark, src, score_cell, cell_schema)
     else:
         scored = (
             slices.groupBy("cell")
             .cogroup(norms.groupBy("cell"))
-            .applyInPandas(score_cell, schema=cell_schema)
+            .applyInPandas(score_cell, schema=from_arrow_schema(cell_schema))
         )
 
     if raw_scored:
@@ -2944,7 +2943,7 @@ def _rank_and_lookup(
         # driver-side rank over the (provably small) candidate set: same
         # row_number() over (order_key desc, doc_id asc) per query_id.
         # `scored` arrives as plain rows from the local fast path, or is
-        # collected from the cogroup output when the bound is small.
+        # collected from the scoring stage when the bound is small.
         import math as _math
 
         cand = scored if isinstance(scored, list) else scored.collect()
@@ -3182,11 +3181,6 @@ def search_query_string(
             se, phr_sub, k, "conjunctive", fixed_point=fixed_point,
             raw_scored=True,
         )
-        ext = spark.read.parquet(se.paths.docs_extracted).select(
-            F.col("part_id").cast("int").alias("part_id"), "local_pos", "text"
-        )
-        if cparts is not None and 2 * len(cparts) < len(se.grid_parts):
-            ext = ext.filter(F.col("part_id").isin(sorted(cparts)))
         cond = F.lit(False)
         for sub, _qid, _is_req, terms in sub_meta:
             cond = F.when(
@@ -3205,7 +3199,7 @@ def search_query_string(
         # unique per (sub, doc) — cand is (cells partition docID space)
         # and (part_id, local_pos) is the extract's primary key.
         ver_agg = (
-            cand.join(ext, ["part_id", "local_pos"])
+            _with_urls(se, cand, cparts, "text")
             .withColumn("tk", F.expr(spark_terms("text")))
             .filter(cond)
             .join(F.broadcast(meta), F.col("query_id") == F.col("sub"))

@@ -106,8 +106,10 @@ def test_masking_exact_all_modes(spark, deleted_index):
 
 def test_masking_local_equals_distributed(spark, deleted_index, monkeypatch):
     """The tombstone mask (alone, and merged with '-term' negations) gives
-    the same rows on the driver-local scoring path as on the distributed
-    cogroup forced by LOCAL_QUERY_MAX_BYTES=-1."""
+    the same rows on the driver-local scoring path as on the fused
+    distributed stage forced by LOCAL_QUERY_MAX_BYTES=-1 (both run the same
+    per-cell reader and kernel; the fused tasks read the tombstones and
+    negations from the closure)."""
     import pageindex_spark.plans.query as Q
 
     d = deleted_index

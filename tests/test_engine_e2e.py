@@ -64,9 +64,10 @@ def test_dense_rank_identity(spark, built_index, golden):
 
 
 def test_prune_norms_identity(spark, built_index, golden):
-    """prune_norms=True (filter the norms cogroup side to the partitions
-    the pruned runs can touch — the 100-TB switch) must be invisible in
-    the results: full rank + score identity vs the oracle golden."""
+    """prune_norms=True must be invisible in the results: full rank + score
+    identity vs the oracle golden. On this parquet index the flag is a
+    no-op (each scoring task reads only its own cells' norms); on
+    Iceberg-stored postings it filters the norms cogroup side."""
     got = search(
         spark, built_index, make_queries(), k=10, mode="bmw", prune_norms=True
     ).collect()

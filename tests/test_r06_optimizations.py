@@ -5,8 +5,9 @@
   override respected) and its result-identity, and its excludedRules
   merge;
 * committed-extract footer counts == the grouped partition counts;
-* the driver-local scoring path returns exactly what the distributed
-  cogroup returns, under every pre-heap channel;
+* the driver-local scoring path returns exactly what the fused
+  distributed stage returns, under every pre-heap channel, and a
+  distributed batch is one job of one stage;
 * the driver-side rank fast path in ``_rank_and_lookup`` returns exactly
   what the Spark-window path returns (same rows, same ranks);
 * the driver-side lookups raise on a broken index layout;
@@ -123,10 +124,16 @@ def test_extract_footer_counts_match_grouped(spark, r06_index):
 
 def test_local_fast_path_equals_cogroup(spark, r06_index, monkeypatch):
     """The byte-guarded local scoring path must be row-identical to the
-    distributed cogroup across modes and under every pre-heap channel
-    ('-term' negations, filter_urls, search_after cursors) and a k1/b
-    override (both paths call the same cell kernel closure; this pins the
-    plumbing around it). A spy on ``_score_local`` proves which path ran."""
+    fused distributed stage (one ``mapInArrow`` over a range of cell ids)
+    across modes and under every pre-heap channel ('-term' negations,
+    filter_urls, search_after cursors) and a k1/b override (both paths run
+    the same per-cell reader and cell kernel closure; this pins the
+    plumbing around it). A spy on ``_score_local`` proves which path ran.
+    The multi-cell arm repeats the channels with ``cell_parts=1`` (8 cells,
+    so every light-term run straddles 8 cells and each fused task scores
+    several) and requires bit-equal scores, plus one ``raw_scored``
+    consumer: ``search_collapse`` keyed by url is the dense fixed-point
+    top-k, so its fused rows must equal the local path's."""
     from pyspark.sql import functions as F
 
     import pageindex_spark.plans.query as Q
@@ -171,6 +178,22 @@ def test_local_fast_path_equals_cogroup(spark, r06_index, monkeypatch):
         return real(*a, **kw)
 
     monkeypatch.setattr(Q, "_score_local", spy)
+    multi_cell = [
+        (queries, dict(mode="bmw")),
+        (queries, dict(mode="dense")),
+        (queries, dict(mode="conjunctive")),
+        (queries, dict(mode="msm", min_match=2)),
+        (neg, dict(mode="bmw")),
+        (queries, dict(mode="dense", filter_urls=half)),
+        (queries, dict(mode="bmw", fixed_point=True, search_after=cursors)),
+        (queries, dict(mode="bmw", k1=0.9, b=0.4)),
+    ]
+    assert len(Q.get_searcher(spark, r06_index, cell_parts=1).cell_grid) == 8
+    cases += [(qs, dict(kw, cell_parts=1)) for qs, kw in multi_cell]
+
+    def bits(rows):  # (query_id, rank, url, score) with the score's bits
+        return sorted(tuple(r)[:3] + (float(r[3]).hex(),) for r in rows)
+
     for qs, kw in cases:
         local_calls.clear()
         fast_df = Q.search(spark, r06_index, qs, k=10, **kw)
@@ -178,18 +201,72 @@ def test_local_fast_path_equals_cogroup(spark, r06_index, monkeypatch):
         assert local_calls, f"local path did not run for {kw}"
         local_calls.clear()
         with monkeypatch.context() as m:
-            m.setattr(Q, "LOCAL_QUERY_MAX_BYTES", -1)  # distributed cogroup
+            m.setattr(Q, "LOCAL_QUERY_MAX_BYTES", -1)  # fused distributed stage
             slow_df = Q.search(spark, r06_index, qs, k=10, **kw)
             slow = sorted(tuple(r) for r in slow_df.collect())
         assert not local_calls, f"distributed path not forced for {kw}"
         assert fast and fast == slow, f"fast path diverged for {kw}"
         assert fast_df.schema == slow_df.schema, f"schemas differ for {kw}"
+        if "cell_parts" in kw:
+            assert bits(fast) == bits(slow), kw
+
+    # raw_scored consumers always run fused: collapsing by url keeps every
+    # doc, so the rows are the local path's dense fixed-point top-k
+    from pageindex_spark import search_collapse
+
+    keys = spark.read.parquet(se.paths.docs_extracted).select(
+        "url", F.col("url").alias("ckey")
+    )
+    local_calls.clear()
+    dense = Q.search(
+        spark, r06_index, queries, k=10, mode="dense", fixed_point=True,
+        cell_parts=1,
+    ).collect()
+    assert local_calls
+    local_calls.clear()
+    collapsed = search_collapse(
+        spark, r06_index, queries, keys, k=10, cell_parts=1, fixed_point=True
+    ).select("query_id", "rank", "url", "score").collect()
+    assert not local_calls
+    assert dense and bits(dense) == bits(collapsed)
+
+
+def test_fused_batch_is_one_stage(spark, r06_index, monkeypatch):
+    """A distributed search batch is one Spark job of one stage: one task
+    per contiguous range of cells, min(n_cells, defaultParallelism) of them,
+    and no shuffle (each task reads and scores its own cells)."""
+    import pageindex_spark.plans.query as Q
+    from pageindex_spark.sources.corpus import make_queries
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    monkeypatch.setattr(Q, "LOCAL_QUERY_MAX_BYTES", -1)
+    for cell_parts in (4, 1):
+        n_cells = len(Q.get_searcher(spark, r06_index, cell_parts).cell_grid)
+        group = f"fused-{cell_parts}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = Q.search(
+                spark, r06_index, make_queries(), k=10, cell_parts=cell_parts
+            ).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rows
+        # the status store is fed by the listener bus, asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        jobs = tracker.getJobIdsForGroup(group)
+        assert len(jobs) == 1, (cell_parts, jobs)
+        stages = tracker.getJobInfo(jobs[0]).stageIds
+        assert len(stages) == 1, (cell_parts, stages)
+        assert tracker.getStageInfo(stages[0]).numTasks == min(
+            n_cells, sc.defaultParallelism
+        )
 
 
 def test_driver_rank_equals_window_rank(spark, r06_index, monkeypatch):
     """Force the Spark-window rank and compare to the default driver-side
     rank — byte-identical result rows. The slow arms also force the
-    distributed cogroup (LOCAL_QUERY_MAX_BYTES=-1): the local fast path
+    fused distributed stage (LOCAL_QUERY_MAX_BYTES=-1): the local fast path
     hands ``_rank_and_lookup`` plain rows, which always rank on the driver
     whatever DRIVER_RANK_MAX_ROWS says."""
     import pageindex_spark.plans.query as Q
@@ -219,7 +296,7 @@ def test_driver_rank_equals_window_rank(spark, r06_index, monkeypatch):
         )
         assert window_calls == [False]
         with monkeypatch.context() as m:
-            m.setattr(Q, "LOCAL_QUERY_MAX_BYTES", -1)  # distributed cogroup
+            m.setattr(Q, "LOCAL_QUERY_MAX_BYTES", -1)  # fused distributed stage
             m.setattr(Q, "DRIVER_RANK_MAX_ROWS", 0)  # window rank
             window_calls.clear()
             slow = sorted(
