@@ -4700,7 +4700,10 @@ def _has_child_sql(d: _Dialect) -> str:
     parents with >= 1 child matching the predicate, scored by the children
     (score_mode sum AND max exposed), top-20 by (sum desc, key asc). Child
     scores floor to cents-exact int64 BEFORE aggregation, so the sum is
-    order-independent across partitions/engines."""
+    order-independent across partitions/engines. DuckDB sums a bigint
+    into a HUGEINT, so its side casts the sum back to bigint (Spark's sum
+    of a bigint is a bigint)."""
+    score6 = "cast(sum(cscore) as bigint)" if d.duck else "sum(cscore)"
     return f"""
 with kids as (
   select l_orderkey, cast(floor(l_extendedprice * 100) as bigint) as cscore
@@ -4708,7 +4711,7 @@ with kids as (
 ),
 agg as (
   select l_orderkey as parent_id, cast(count(*) as bigint) as n_children,
-         sum(cscore) as score6, max(cscore) as max6
+         {score6} as score6, max(cscore) as max6
   from kids group by l_orderkey
 ),
 ranked as (

@@ -54,21 +54,24 @@ def vb_encode(values: np.ndarray) -> bytes:
 
 
 def vb_decode(blob: bytes) -> np.ndarray:
-    """Vectorized varbyte decode -> uint64 array."""
+    """Vectorized varbyte decode -> uint64 array. Each value is built
+    Horner-style from its last byte back to its first, all values at once:
+    one pass per byte of the longest value, over the values still that
+    long (one pass for blobs of 1- and 2-byte values)."""
     b = np.frombuffer(blob, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
     ends = np.flatnonzero(b < 128)
-    starts = np.concatenate(([0], ends[:-1] + 1))
-    lens = ends - starts + 1
-    vals = np.zeros(len(ends), dtype=np.uint64)
-    for length in np.unique(lens):
-        sel = lens == length
-        s = starts[sel]
-        acc = np.zeros(sel.sum(), dtype=np.uint64)
-        for j in range(int(length)):
-            acc |= (b[s + j].astype(np.uint64) & np.uint64(0x7F)) << np.uint64(7 * j)
-        vals[sel] = acc
+    if len(ends) == len(b):
+        return b.astype(np.uint64)
+    starts = np.empty_like(ends)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    vals = b[ends].astype(np.uint64)
+    at = ends - 1
+    live = np.flatnonzero(at >= starts)
+    while len(live):
+        vals[live] = (vals[live] << np.uint64(7)) | (b[at[live]] & 0x7F)
+        at[live] -= 1
+        live = live[at[live] >= starts[live]]
     return vals
 
 

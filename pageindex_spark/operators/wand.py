@@ -1,4 +1,4 @@
-"""Query engine: BM25 top-k via document-at-a-time Block-Max WAND.
+"""Query engine: BM25 top-k per docID-grid cell, scored one term at a time.
 
 Distribution model (north_star: "mapPartitions over co-partitioned posting
 segments plus a global top-k heap merge"):
@@ -11,10 +11,10 @@ segments plus a global top-k heap merge"):
 2. **Per-cell scoring (no shuffle):** each scoring task owns a contiguous
    range of cells; it reads ALL query terms' runs that overlap the range
    plus the range's doc-length norms itself (pruned parquet reads), keeps
-   the slices whose cell lies in its range, and runs BMW per query per cell
-   with a local top-k heap, decoding only blocks whose block-max upper
-   bound can beat the heap threshold. The local path runs the same reader
-   over every cell on the driver (``plans/query._score_cells``).
+   the slices whose cell lies in its range, and scores each query per
+   cell with a local top-k (``bmw_score_cell``; it decodes every block of
+   the query's terms, see its docstring). The local path runs the same
+   reader over every cell on the driver (``plans/query._score_cells``).
 3. **Global merge:** per-query merge of per-cell top-k (tiny: cells x
    queries x k rows) with the deterministic tie-break (score desc, doc_id
    asc == url asc by docID construction).
@@ -35,7 +35,6 @@ Reference parity: replaces the LLM tree-search retrieval
 
 from __future__ import annotations
 
-import heapq
 import math
 
 import numpy as np
@@ -43,16 +42,11 @@ import pandas as pd
 
 from ..functions.tokenizer import BM25_B, BM25_K1, tokenize
 from .codec import vb_decode
-from .runfmt import Run, concat_runs, decode_block, decode_run
+from .runfmt import Run, concat_runs, decode_run
 
-# Safety margin for float block-max pruning: never skip a block whose upper
-# bound is within EPS of the heap threshold (keeps exact ties alive; the
-# pytest tolerance is 1e-9, so 1e-10 of slack is free).
-EPS = 1e-10
-
-# Block-decode instrumentation: one integer add per lazy block decode (the
-# decode itself is O(block) numpy work, so the counter is noise). Read by
-# perfbench/kernels.py to measure BMW pruning effectiveness.
+# Block-decode instrumentation: every cell scorer adds the blocks it decodes
+# (one integer add per decoded run, noise beside the decode). Read by
+# perfbench/kernels.py as the share of the query's blocks BMW decodes.
 DECODE_STATS = {"blocks": 0}
 
 
@@ -148,8 +142,57 @@ def quality(
 
 
 # ---------------------------------------------------------------------------
-# Exhaustive (vectorized) cell scorer — verification + dense fallback
+# Exhaustive (vectorized) cell scorers — dense OR, AND, minimum_should_match
 # ---------------------------------------------------------------------------
+
+
+def _in_cell(ids: np.ndarray, lo: int, width: int) -> np.ndarray:
+    """Cell-local positions of the sorted docIDs ``ids`` inside [lo, lo+width)."""
+    return (ids - lo)[(ids >= lo) & (ids < lo + width)]
+
+
+def _exhaustive(
+    term_runs: dict[str, Run],
+    norms: CellNorms,
+    query_terms: list[tuple[str, float]],
+    avgdl: float,
+    deleted: np.ndarray | None,
+    allowed: np.ndarray | None,
+    k1: float,
+    b: float,
+    oracle_rounding: bool = False,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per cell position: the summed BM25 score over the query's terms,
+    added from 0.0 in the given (sorted) term order, and how many terms
+    matched. Each posting adds ``idf*(k1+1) * quality``, or with
+    ``oracle_rounding`` the oracle's ``weight * tf / (tf + k1 * (1.0 - b +
+    b * dl / avgdl))``, which rounds differently. Masked docs
+    (``deleted``, or outside ``allowed``) get a match count of 0, so no
+    kernel ranks them; survivors' scores are untouched."""
+    width = len(norms.dl)
+    acc = np.zeros(width, dtype=np.float64)
+    cnt = np.zeros(width, dtype=np.int32)
+    for term, idf in query_terms:
+        run = term_runs.get(term)
+        if run is None:
+            continue
+        docs, tfs = decode_run(run)
+        DECODE_STATS["blocks"] += run.n_blocks
+        local = docs.astype(np.int64) - norms.lo
+        dl = norms.dl[local]
+        if oracle_rounding:
+            tf = tfs.astype(np.float64)
+            acc[local] += idf * (k1 + 1.0) * tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
+        else:
+            acc[local] += idf * (k1 + 1.0) * quality(tfs, dl, avgdl, k1, b)
+        cnt[local] += 1
+    if deleted is not None and len(deleted):
+        cnt[_in_cell(deleted, norms.lo, width)] = 0
+    if allowed is not None:
+        inc = np.zeros(width, dtype=bool)
+        inc[_in_cell(allowed, norms.lo, width)] = True
+        cnt[~inc] = 0
+    return acc, cnt
 
 
 def dense_score_cell(
@@ -173,25 +216,10 @@ def dense_score_cell(
     docs in it may rank — same pre-heap contract, same stale-stats score
     identity for the docs that pass.
     """
-    width = len(norms.dl)
-    acc = np.zeros(width, dtype=np.float64)
-    touched = np.zeros(width, dtype=bool)
-    for term, idf in query_terms:
-        run = term_runs.get(term)
-        if run is None:
-            continue
-        docs, tfs = decode_run(run)
-        local = docs.astype(np.int64) - norms.lo
-        contrib = idf * (k1 + 1.0) * quality(tfs, norms.dl[local], avgdl, k1, b)
-        acc[local] += contrib
-        touched[local] = True
-    if deleted is not None and len(deleted):
-        touched[(deleted - norms.lo)[(deleted >= norms.lo) & (deleted < norms.lo + width)]] = False
-    if allowed is not None:
-        inc = np.zeros(width, dtype=bool)
-        inc[(allowed - norms.lo)[(allowed >= norms.lo) & (allowed < norms.lo + width)]] = True
-        touched &= inc
-    idx = np.flatnonzero(touched)
+    acc, cnt = _exhaustive(
+        term_runs, norms, query_terms, avgdl, deleted, allowed, k1, b
+    )
+    idx = np.flatnonzero(cnt)
     return idx + norms.lo, acc[idx]
 
 
@@ -208,30 +236,12 @@ def conjunctive_score_cell(
     """Docs containing EVERY query term (postings intersection within the
     cell — exact, because cells partition docID space so a doc's postings
     for all terms live in the same cell), with their full BM25 scores.
-    Any term absent from the cell -> empty. Vectorized per-term decode +
-    a match-count mask; for very long posting lists a galloping cursor
-    intersection (rarest term drives) is the next optimization — same
-    decode machinery, fewer touched blocks."""
-    width = len(norms.dl)
-    acc = np.zeros(width, dtype=np.float64)
-    cnt = np.zeros(width, dtype=np.int32)
-    empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
-    if not query_terms:
-        return empty
-    for term, idf in query_terms:
-        run = term_runs.get(term)
-        if run is None:
-            return empty
-        docs, tfs = decode_run(run)
-        local = docs.astype(np.int64) - norms.lo
-        acc[local] += idf * (k1 + 1.0) * quality(tfs, norms.dl[local], avgdl, k1, b)
-        cnt[local] += 1
-    if deleted is not None and len(deleted):
-        cnt[(deleted - norms.lo)[(deleted >= norms.lo) & (deleted < norms.lo + width)]] = 0
-    if allowed is not None:
-        inc = np.zeros(width, dtype=bool)
-        inc[(allowed - norms.lo)[(allowed >= norms.lo) & (allowed < norms.lo + width)]] = True
-        cnt[~inc] = 0
+    Any term absent from the cell -> empty, before anything decodes."""
+    if not query_terms or any(t not in term_runs for t, _ in query_terms):
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    acc, cnt = _exhaustive(
+        term_runs, norms, query_terms, avgdl, deleted, allowed, k1, b
+    )
     idx = np.flatnonzero(cnt == len(query_terms))
     return idx + norms.lo, acc[idx]
 
@@ -258,280 +268,81 @@ def msm_score_cell(
     to the AND intersection. Callers clamp min_match to the query's total
     term count BEFORE dropping index-absent terms (plans/query.py), matching
     the SQL twin's ``least(m, nt)``."""
-    width = len(norms.dl)
-    acc = np.zeros(width, dtype=np.float64)
-    cnt = np.zeros(width, dtype=np.int32)
-    for term, idf in query_terms:
-        run = term_runs.get(term)
-        if run is None:
-            continue
-        docs, tfs = decode_run(run)
-        local = docs.astype(np.int64) - norms.lo
-        acc[local] += idf * (k1 + 1.0) * quality(tfs, norms.dl[local], avgdl, k1, b)
-        cnt[local] += 1
-    if deleted is not None and len(deleted):
-        cnt[(deleted - norms.lo)[(deleted >= norms.lo) & (deleted < norms.lo + width)]] = 0
-    if allowed is not None:
-        inc = np.zeros(width, dtype=bool)
-        inc[(allowed - norms.lo)[(allowed >= norms.lo) & (allowed < norms.lo + width)]] = True
-        cnt[~inc] = 0
+    acc, cnt = _exhaustive(
+        term_runs, norms, query_terms, avgdl, deleted, allowed, k1, b
+    )
     idx = np.flatnonzero(cnt >= min_match)
     return idx + norms.lo, acc[idx]
 
 
 # ---------------------------------------------------------------------------
-# Block-Max WAND (doc-at-a-time)
+# Top-k (the BMW entry point)
 # ---------------------------------------------------------------------------
 
 
-class TermCursor:
-    """Lazy block-decoding cursor over one term's postings within a cell."""
-
-    __slots__ = (
-        "term", "run", "idf", "weight", "ub_weight", "block", "pos", "docs",
-        "tfs", "max_ub", "exhausted", "k1", "b",
-    )
-
-    def __init__(
-        self,
-        term: str,
-        run: Run,
-        idf: float,
-        bound_scale: float = 1.0,
-        k1: float = BM25_K1,
-        b: float = BM25_B,
-    ):
-        self.term = term
-        self.run = run
-        self.idf = idf
-        self.k1 = k1
-        self.b = b
-        self.weight = idf * (k1 + 1.0)
-        # Upper bounds use the recorded bm_maxq inflated by bound_scale:
-        # (a) max(1, live_avgdl / bound_avgdl) — an expunge that GROWS avgdl
-        # makes true qualities exceed the build-time bm_maxq by at most
-        # that factor (plans/expunge.py docstring carries the proof) — and
-        # (b) the query-time (k1, b) parameter factor from
-        # plans/query.py:_param_bound_scale when the caller overrides the
-        # index constants (may be math.inf for b=0; the cap below absorbs
-        # it). Scoring itself always uses the uninflated weight.
-        # Every bound is additionally capped at `weight`: quality <= 1
-        # pointwise, so idf*(k1+1)*quality <= weight unconditionally — the
-        # cap is always a valid upper bound and strictly TIGHTENS pruning
-        # whenever bound_scale * bm_maxq exceeds 1.
-        self.ub_weight = self.weight * bound_scale
-        self.max_ub = min(self.ub_weight * float(run.bm_maxq.max()), self.weight)
-        self.exhausted = False
-        self.block = -1
-        self.docs: np.ndarray | None = None
-        self.tfs: np.ndarray | None = None
-        self.pos = 0
-        self._load(0)
-
-    def _load(self, b: int) -> None:
-        if b >= self.run.n_blocks:
-            self.exhausted = True
-            return
-        self.block = b
-        self.docs, self.tfs = decode_block(self.run, b)
-        DECODE_STATS["blocks"] += 1
-        self.pos = 0
-
-    @property
-    def cur_doc(self) -> int:
-        return int(self.docs[self.pos])
-
-    def block_last(self) -> int:
-        return int(self.run.bm_last[self.block])
-
-    def block_ub_at(self, target: int) -> float:
-        """Upper bound of the block that would contain target (shallow —
-        metadata only, no decode of that block)."""
-        blk = self.block
-        if int(self.run.bm_last[blk]) < target:
-            blk = int(np.searchsorted(self.run.bm_last, target, side="left"))
-            if blk >= self.run.n_blocks:
-                return 0.0
-        return min(self.ub_weight * float(self.run.bm_maxq[blk]), self.weight)
-
-    def block_boundary_at(self, target: int) -> int:
-        """last_doc of the block containing target (for skip targeting)."""
-        b = self.block
-        if int(self.run.bm_last[b]) < target:
-            b = int(np.searchsorted(self.run.bm_last, target, side="left"))
-            if b >= self.run.n_blocks:
-                return 1 << 62
-        return int(self.run.bm_last[b])
-
-    def advance_to(self, target: int) -> None:
-        """Move to first doc >= target, skipping whole blocks by metadata."""
-        if self.exhausted:
-            return
-        if self.block_last() < target:
-            nb = int(np.searchsorted(self.run.bm_last, target, side="left"))
-            if nb >= self.run.n_blocks:
-                self.exhausted = True
-                return
-            self._load(nb)
-        p = int(np.searchsorted(self.docs, target, side="left"))
-        if p >= len(self.docs):
-            self._load(self.block + 1)
-        else:
-            self.pos = p
-
-    def next(self) -> None:
-        self.pos += 1
-        if self.pos >= len(self.docs):
-            self._load(self.block + 1)
-
-    def score_at(self, norms: CellNorms, avgdl: float) -> float:
-        tf = float(self.tfs[self.pos])
-        dl = float(norms.dl[self.cur_doc - norms.lo])
-        return self.weight * tf / (
-            tf + self.k1 * (1.0 - self.b + self.b * dl / avgdl)
-        )
-
-
-class TopK:
-    """Min-heap of (score, -doc_id): keeps k best by (score desc, doc asc)."""
-
-    def __init__(self, k: int):
-        self.k = k
-        self.heap: list[tuple[float, int]] = []
-
-    def threshold(self) -> float:
-        return self.heap[0][0] if len(self.heap) >= self.k else -math.inf
-
-    def offer(self, score: float, doc: int) -> None:
-        item = (score, -doc)
-        if len(self.heap) < self.k:
-            heapq.heappush(self.heap, item)
-        elif item > self.heap[0]:
-            heapq.heapreplace(self.heap, item)
-
-    def items(self) -> list[tuple[int, float]]:
-        return [(-nd, s) for s, nd in self.heap]
+def _top_k(d: np.ndarray, s: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """The k best (doc, score) pairs by (score desc, doc asc), unordered."""
+    if len(s) <= k:
+        return d, s
+    v = np.partition(s, len(s) - k)[len(s) - k]  # the k-th best score
+    above = np.flatnonzero(s > v)
+    tied = np.flatnonzero(s == v)
+    tied = tied[np.argsort(d[tied], kind="stable")[: k - len(above)]]
+    keep = np.concatenate((above, tied))
+    return d[keep], s[keep]
 
 
 def bmw_score_cell(
     term_runs: dict[str, Run],
     norms: CellNorms,
-    query_terms: list[tuple[str, float]],  # (term, idf) sorted by term
+    query_terms: list[tuple[str, float]],  # (term, idf) SORTED by term
     avgdl: float,
     k: int,
-    prior_threshold: float = -math.inf,
-    deleted: frozenset[int] | set[int] | None = None,
+    deleted: np.ndarray | None = None,
     bound_scale: float = 1.0,
-    allowed: frozenset[int] | set[int] | None = None,
+    allowed: np.ndarray | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
     after: tuple[int, int] | None = None,
 ) -> list[tuple[int, float]]:
-    """Block-Max WAND top-k for one query within one cell.
+    """Top-k for one query within one cell. Returns [(doc_id, score)] of at
+    most k docs, best first by (score desc, doc_id asc).
 
-    ``prior_threshold`` lets the driver thread a global threshold through
-    sequential cell batches (tightens pruning; correctness unaffected).
-    Returns [(doc_id, score)] of at most k candidates.
+    One vectorized pass: every query term's run decodes whole, and each
+    doc's score is summed from 0.0, one term at a time in sorted term
+    order, with the oracle's per-posting ``weight * tf / (tf + k1 * (1.0 -
+    b + b * dl / avgdl))`` (``weight = idf * (k1 + 1)``), so scores are
+    bit-identical to the oracle's. Nothing is skipped: on the indexes
+    measured, a block-max skipping kernel cost more per posting than this
+    pass. ``bound_scale`` is the factor (expunge avgdl drift, k1/b
+    overrides; plans/query.py:_param_bound_scale) by which a skipping
+    kernel must inflate the build-time block bounds, each capped at
+    ``weight``; this pass bounds nothing, so it does not read it.
 
-    ``after`` = (cursor_score6, cursor_doc_id) is the search_after cursor
-    (plans/query.py): only docs STRICTLY past the cursor in the global
-    (floor(score*1e6) desc, doc_id asc) order may enter the heap — admit
-    iff s6 < cursor_s6, or s6 == cursor_s6 and doc_id > cursor_doc_id.
-    The admission test runs at evaluation time (a too-high-scoring doc is
-    scored then discarded, never offered), so the heap threshold reflects
-    admissible docs only and pruning stays exact: any admissible doc that
-    belongs in the top-k has score > threshold, hence block UB > threshold,
-    hence it is always evaluated. Block-max bounds can NOT prune "above
-    the cursor" (they are upper bounds — a high-UB block may hold
-    admissible docs), so the cursor never tightens pruning, it only
-    filters admissions.
-
-    ``deleted`` (tombstoned docIDs in this cell) masks docs PRE-HEAP: a
-    deleted pivot is fully skipped (cursors advance past it, nothing is
-    offered), so it can never displace a surviving doc from the top-k and
-    the threshold only ever reflects survivors — exact masked retrieval.
-    Block-max upper bounds still include deleted docs' quality; bounds
-    stay valid (masking only removes candidates), merely loose until an
-    expunge rewrites the affected runs.
-
-    ``allowed`` (filtered search, Lucene filter context) is the INCLUSION
-    mirror: a pivot NOT in it is skipped exactly like a deleted one, so
-    only filter-passing docs enter the heap and their scores are identical
-    to the unfiltered query's (stats untouched by the filter).
+    Admission masks, applied before the top-k: ``deleted`` (tombstoned
+    docIDs) and docs outside ``allowed`` (filtered search) are dropped;
+    with ``after`` = (cursor_score6, cursor_doc_id), the search_after
+    cursor, only docs STRICTLY past it in the global (floor(score*1e6)
+    desc, doc_id asc) order are admitted.
     """
-    cursors = [
-        TermCursor(t, term_runs[t], idf, bound_scale, k1, b)
-        for t, idf in query_terms
-        if t in term_runs
-    ]
-    cursors = [c for c in cursors if not c.exhausted]
-    topk = TopK(k)
-    while cursors:
-        cursors.sort(key=lambda c: c.cur_doc)
-        threshold = max(topk.threshold(), prior_threshold)
-        # WAND pivot: smallest prefix whose run-level UBs can beat threshold.
-        acc = 0.0
-        pivot_idx = -1
-        for i, c in enumerate(cursors):
-            acc += c.max_ub
-            if acc > threshold - EPS:
-                pivot_idx = i
-                break
-        if pivot_idx < 0:
-            break  # no remaining doc can enter the top-k
-        pivot_doc = cursors[pivot_idx].cur_doc
-        if cursors[0].cur_doc == pivot_doc:
-            # All cursors sitting exactly on the pivot (a contiguous prefix
-            # of the sorted list, possibly extending past pivot_idx on ties).
-            n_at = pivot_idx + 1
-            while n_at < len(cursors) and cursors[n_at].cur_doc == pivot_doc:
-                n_at += 1
-            at_pivot = cursors[:n_at]
-            # Block-max refinement: shallow block UBs of every term that can
-            # actually contribute to pivot_doc's score.
-            ub = 0.0
-            for c in at_pivot:
-                ub += c.block_ub_at(pivot_doc)
-            if ub > threshold - EPS:
-                if (deleted is not None and pivot_doc in deleted) or (
-                    allowed is not None and pivot_doc not in allowed
-                ):
-                    for c in at_pivot:  # masked: skip, never offer
-                        c.next()
-                else:
-                    # Fully evaluate pivot_doc, accumulating in SORTED TERM
-                    # ORDER (oracle-identical float association).
-                    score = 0.0
-                    for c in sorted(at_pivot, key=lambda c: c.term):
-                        score += c.score_at(norms, avgdl)
-                    if after is None:
-                        topk.offer(score, pivot_doc)
-                    else:
-                        s6 = math.floor(score * 1_000_000)
-                        if s6 < after[0] or (
-                            s6 == after[0] and pivot_doc > after[1]
-                        ):
-                            topk.offer(score, pivot_doc)
-                    for c in at_pivot:
-                        c.next()
-            else:
-                # Skip: jump past the earliest block boundary among the
-                # pivot's cursors (every boundary >= pivot_doc, so the jump
-                # strictly advances). BMW GetNewCandidate cap: never jump
-                # past the next cursor's current doc — docs in between may
-                # score with ITS term too.
-                boundary = min(c.block_boundary_at(pivot_doc) for c in at_pivot)
-                if n_at < len(cursors):
-                    boundary = min(boundary, cursors[n_at].cur_doc - 1)
-                target = max(boundary + 1, pivot_doc + 1)
-                for c in at_pivot:
-                    c.advance_to(target)
-        else:
-            # Align the earlier cursors onto the pivot.
-            for c in cursors[:pivot_idx]:
-                c.advance_to(pivot_doc)
-        cursors = [c for c in cursors if not c.exhausted]
-    return topk.items()
+    if k <= 0:
+        return []
+    acc, cnt = _exhaustive(
+        term_runs, norms, query_terms, avgdl, deleted, allowed, k1, b,
+        oracle_rounding=True,
+    )
+    idx = np.flatnonzero(cnt)
+    d, s = idx + norms.lo, acc[idx]
+    if after is not None:
+        s6 = np.floor(s * 1_000_000).astype(np.int64)
+        keep = (s6 < after[0]) | ((s6 == after[0]) & (d > after[1]))
+        d, s = d[keep], s[keep]
+    return _ranked(*_top_k(d, s, k))
+
+
+def _ranked(d: np.ndarray, s: np.ndarray) -> list[tuple[int, float]]:
+    order = np.lexsort((d, -s))
+    return list(zip(d[order].tolist(), s[order].tolist()))
 
 
 def assemble_cell_runs(pdf: pd.DataFrame) -> dict[str, Run]:

@@ -3191,8 +3191,8 @@ def variable_width_histogram(
     Scale shape: the O(matches) value rows reduce through ONE map-side-
     combined groupBy; every window (gap lag, gap ranking, boundary
     cumsum) runs on the DISTINCT-value relation — facet-cardinality
-    class, never match class. mean6 floors (sum*1e6)/count, a single
-    division of exactly-representable integers."""
+    class, never match class. mean6 floors (sum*1e6)/count, one double
+    division of the exact decimal(38) product (the SQL twin's HUGEINT)."""
     from pyspark.sql import Window
 
     if n_buckets < 1:
@@ -3237,8 +3237,12 @@ def variable_width_histogram(
             n.alias("n_docs"),
             F.min("val").alias("vmin"),
             F.max("val").alias("vmax"),
+            # a decimal(38) sum: sum * 1e6 overflows a long once the
+            # sum passes ~9.2e12, and is exact as the twin's HUGEINT
             F.floor(
-                (F.sum("val") * F.lit(1000000)).cast("double")
+                (F.sum(F.col("val").cast("decimal(38,0)")) * F.lit(1000000)).cast(
+                    "double"
+                )
                 / n.cast("double")
             )
             .cast("long")

@@ -100,9 +100,10 @@ FIXED_POINT_TIE_MARGIN = 16
 
 
 class Searcher:
-    """Warm handle over a built index: caches the tiny norms relation and
-    the meta, computes term buckets driver-side (Spark-compatible murmur3 in
-    Python — no job), and prunes every read to the query's buckets."""
+    """Warm handle over a built index: holds the meta (and, on first use,
+    the norms relation), computes term buckets driver-side
+    (Spark-compatible murmur3 in Python — no job), and prunes every read to
+    the query's buckets."""
 
     def __init__(
         self, spark: SparkSession, index_dir: str, cell_parts: int = 4, cache: bool = True
@@ -168,19 +169,7 @@ class Searcher:
             self.deleted_ids = np.sort(
                 np.asarray([r["doc_id"] for r in rows], dtype=np.int64)
             )
-        norms = spark.read.parquet(self.paths.norms)
-        if self.committed_deltas is not None:
-            norms = norms.filter(
-                F.col("delta").isin(self.committed_deltas)
-            ).drop("delta")
-        self.norms = norms.withColumn(
-            "cell", (F.col("part_id") / cell_parts).cast("int")
-        )
-        if cache:
-            # norms as a Spark relation serves explain and the Iceberg
-            # cogroup; it is O(n_docs) bytes, so pass cache=False where
-            # executor memory is tight.
-            self.norms = self.norms.cache()
+        self._cache_norms = cache
         # df per term, filled lazily from pruned term_stats reads. Sound
         # because a Searcher is pinned to one immutable index version
         # (get_searcher keys on meta.json mtime). Repeat-term queries skip
@@ -198,6 +187,22 @@ class Searcher:
         # norms on-disk size and, once the local path runs, the norms rows.
         self._norms_disk_bytes: int | None = None
         self._norms_pdf = None
+
+    @functools.cached_property
+    def norms(self) -> DataFrame:
+        """The committed norms as a Spark relation with each row's cell,
+        built on first use: only explain and the Iceberg cogroup read it
+        (parquet searches read norms rows with pyarrow). Cached unless the
+        Searcher was opened with cache=False, since it is O(n_docs) bytes."""
+        norms = self.spark.read.parquet(self.paths.norms)
+        if self.committed_deltas is not None:
+            norms = norms.filter(
+                F.col("delta").isin(self.committed_deltas)
+            ).drop("delta")
+        norms = norms.withColumn(
+            "cell", (F.col("part_id") / self.cell_parts).cast("int")
+        )
+        return norms.cache() if self._cache_norms else norms
 
     def _empty_df(self, schema: str) -> DataFrame:
         if schema not in self._empty_cache:
@@ -2444,7 +2449,7 @@ def _param_bound_scale(k1: float, b: float) -> float:
     max(1, those two) therefore bounds q(k1,b)/q(K1,B) everywhere, so
     ub_weight = idf*(k1+1) * factor * bm_maxq stays an upper bound of the
     true contribution idf*(k1+1)*q(k1,b). The b=0 infinity is absorbed by
-    TermCursor's unconditional cap ub <= idf*(k1+1) (quality <= 1
+    bmw_score_cell's unconditional cap ub <= idf*(k1+1) (quality <= 1
     pointwise). The factor bounds a ratio at FIXED avgdl, and the expunge
     factor (plans/expunge.py) bounds the avgdl-drift ratio at FIXED
     parameters, so their product bounds the joint ratio — _search_impl
@@ -2812,18 +2817,13 @@ def _search_impl(
         norms_obj = CellNorms(lo, dl)
         hi = lo + len(dl)
         cell_allowed = None
-        bmw_allowed = None
         if allowed_ids is not None:
             cell_allowed = _id_range(allowed_ids, lo, hi)
             if not len(cell_allowed):
                 # no filter-passing doc lives in this cell: skip it before
                 # decoding a single posting block.
                 return _empty_cell()
-            bmw_allowed = frozenset(cell_allowed.tolist())
         mask = _CellMask(term_runs, lo, hi, deleted, negs)
-        bmw_deleted = (
-            frozenset(mask.deleted.tolist()) if mask.deleted is not None else None
-        )
         qids, dids, scores = [], [], []
         for qid, term_idf in payload:
             if not any(t in term_runs for t, _ in term_idf):
@@ -2859,13 +2859,8 @@ def _search_impl(
             else:
                 pairs = bmw_score_cell(
                     term_runs, norms_obj, term_idf, avgdl, cell_k,
-                    deleted=(
-                        bmw_deleted
-                        if q_excl is mask.deleted
-                        else frozenset(q_excl.tolist())
-                    ),
-                    bound_scale=bound_scale,
-                    allowed=bmw_allowed, k1=q_k1, b=q_b,
+                    deleted=q_excl, bound_scale=bound_scale,
+                    allowed=cell_allowed, k1=q_k1, b=q_b,
                     after=after.get(qid) if after is not None else None,
                 )
             for did, sc in pairs:

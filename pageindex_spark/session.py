@@ -25,6 +25,26 @@ INFER_FILTERS_FROM_GENERATE = (
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 )
 
+# The worker daemon (pageindex_daemon.py, beside the package): Python
+# workers import the installed pyspark instead of re-reading pyspark.zip's
+# central directory on every task. Workers find the module through their
+# PYTHONPATH, so they need not run in the driver's directory.
+DAEMON_MODULE = "pageindex_daemon"
+DAEMON_MODULE_CONF = "spark.python.daemon.module"
+WORKER_PYTHONPATH_CONF = "spark.executorEnv.PYTHONPATH"
+_DAEMON_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def worker_daemon_conf(extra_conf: dict) -> dict:
+    """The daemon-module settings ``get_spark`` adds, or none when the
+    module is not beside the package (an archive-shipped package) or the
+    caller sets either key itself."""
+    if DAEMON_MODULE_CONF in extra_conf or WORKER_PYTHONPATH_CONF in extra_conf:
+        return {}
+    if not os.path.isfile(os.path.join(_DAEMON_DIR, f"{DAEMON_MODULE}.py")):
+        return {}
+    return {DAEMON_MODULE_CONF: DAEMON_MODULE, WORKER_PYTHONPATH_CONF: _DAEMON_DIR}
+
 
 def with_excluded_rule(rules: str | None, rule: str) -> str:
     """``rules`` (a comma-separated ``excludedRules`` value, or None) with
@@ -114,6 +134,7 @@ def get_spark(
     conf[EXCLUDED_RULES] = with_excluded_rule(
         conf.get(EXCLUDED_RULES), INFER_FILTERS_FROM_GENERATE
     )
+    conf.update(worker_daemon_conf(conf))
     for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
@@ -139,6 +160,11 @@ def warm_up(spark: SparkSession) -> None:
     keeps the timed sections measuring throughput, not cold-start
     (measured: first mapInArrow-bearing write 4.7 s vs 1.3 s steady at
     sf1.0). Total warm-up cost: a few seconds on tiny synthetic data.
+
+    Warming the pool once is enough: the workers run ``pageindex_daemon``
+    (see ``get_spark``), so no task re-reads pyspark.zip's central
+    directory. An identity mapInArrow job over 2 tasks measured a p50 of
+    ~157 ms with it against ~320 ms without (4-core box, warm pool).
     """
     import shutil
     import tempfile

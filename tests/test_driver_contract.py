@@ -28,8 +28,58 @@ def sviews(spark):
     return spark
 
 
-def _norm(rows):
-    return sorted(tuple(r) for r in rows)
+_INT_TYPES = {
+    "tinyint", "smallint", "int", "integer", "bigint",
+    "utinyint", "usmallint", "uinteger", "ubigint",
+}
+
+
+def _family(type_name: str) -> str:
+    """A column type's family, spelled the same for Spark's simpleString
+    and DuckDB's type names: integer widths are one family (a Spark int
+    rank equals a DuckDB BIGINT rank), HUGEINT is its own."""
+    t = type_name.lower()
+    if t in _INT_TYPES:
+        return "int"
+    if t in ("float", "double", "real"):
+        return "float"
+    if t in ("string", "varchar"):
+        return "str"
+    if t.endswith("[]") or t.startswith("array<"):
+        return "list"
+    for prefix in ("decimal", "timestamp", "struct"):
+        if t.startswith(prefix):
+            return prefix
+    return t
+
+
+# Twins whose DuckDB side still sums a bigint into a HUGEINT column; the
+# type check below found them. Casting one changes its frozen oracle text
+# (tests/data_oracle_fp_r06.json), a change of its own: entry -> column.
+_HUGEINT_TWINS = {
+    "histo_bucket_stats": "sum_docs",
+    "engine_histo_bucket_stats": "sum_docs",
+}
+
+
+def _norm(rows, types):
+    """(column type families, sorted rows): the comparison fails on a
+    column whose family differs between the engines even when every value
+    compares equal, as a DuckDB HUGEINT sum does against a Spark bigint."""
+    return [_family(str(t)) for t in types], sorted(tuple(r) for r in rows)
+
+
+def _spark_norm(sdf):
+    return _norm(sdf.collect(), [f.dataType.simpleString() for f in sdf.schema])
+
+
+def _duck_norm(rel, name):
+    known = _HUGEINT_TWINS.get(name)
+    types = [
+        "BIGINT" if c.lower() == known and str(t) == "HUGEINT" else t
+        for c, t in zip(rel.columns, rel.types)
+    ]
+    return _norm(rel.fetchall(), types)
 
 
 def test_entry_smoke(spark):
@@ -49,8 +99,8 @@ def test_engine_bm25_matches_sql_oracle(spark, duck):
     import __spark_entry__ as E
 
     shutil.rmtree(f"{E._INDEX_CACHE_ROOT}_sf0.001", ignore_errors=True)
-    got = _norm([tuple(r) for r in E._engine_bm25_wand(spark, SF_DIR).collect()])
-    want = _norm(duck.execute(paired_sql()["bm25_topk"][1]).fetchall())
+    got = _spark_norm(E._engine_bm25_wand(spark, SF_DIR))
+    want = _duck_norm(duck.sql(paired_sql()["bm25_topk"][1]), "bm25_topk")
     assert got == want
 
 
@@ -59,11 +109,12 @@ def test_pair_matches(name, sviews, duck):
     ssql, dsql = paired_sql()[name]
     sdf = sviews.sql(ssql)
     got_cols = [c.lower() for c in sdf.columns]
-    want = duck.execute(dsql)
-    want_cols = [c[0].lower() for c in want.description]
+    want = duck.sql(dsql)
+    want_cols = [c.lower() for c in want.columns]
     assert got_cols == want_cols, (got_cols, want_cols)
-    got_rows = _norm([tuple(r) for r in sdf.collect()])
-    want_rows = _norm(want.fetchall())
+    got_types, got_rows = _spark_norm(sdf)
+    want_types, want_rows = _duck_norm(want, name)
+    assert got_types == want_types, (name, got_types, want_types)
     assert len(got_rows) == len(want_rows), (name, len(got_rows), len(want_rows))
     mism = [
         (g, w) for g, w in zip(got_rows, want_rows) if g != w
@@ -187,9 +238,10 @@ def test_custom_entries_match_their_oracles(name, spark, duck):
     import __spark_entry__ as E
 
     sdf = E.queries()[name](spark, SF_DIR)
-    want = duck.execute(E.oracle_sql()[name])
-    want_cols = [c[0].lower() for c in want.description]
+    want = duck.sql(E.oracle_sql()[name])
+    want_cols = [c.lower() for c in want.columns]
     assert [c.lower() for c in sdf.columns] == want_cols
-    got_rows = _norm([tuple(r) for r in sdf.collect()])
-    want_rows = _norm(want.fetchall())
+    got_types, got_rows = _spark_norm(sdf)
+    want_types, want_rows = _duck_norm(want, name)
+    assert got_types == want_types, (name, got_types, want_types)
     assert got_rows == want_rows, (name, got_rows[:3], want_rows[:3])

@@ -63,29 +63,54 @@ def test_dense_rank_identity(spark, built_index, golden):
     _assert_matches_golden(got, golden)
 
 
-def test_prune_norms_identity(spark, built_index, golden):
+def _fresh_searches(spark, index_dir, monkeypatch, **kw):
+    """The fixture queries on a new Searcher, first scored locally, then in
+    the fused Spark stage: yields (rows, searcher) for each path."""
+    from pageindex_spark.plans import query as qmod
+
+    default = qmod.LOCAL_QUERY_MAX_BYTES
+    for local_max in (default, -1):
+        monkeypatch.setattr(qmod, "LOCAL_QUERY_MAX_BYTES", local_max)
+        se = qmod.Searcher(spark, index_dir)
+        yield se.search(make_queries(), k=10, mode="bmw", **kw).collect(), se
+    monkeypatch.setattr(qmod, "LOCAL_QUERY_MAX_BYTES", default)
+
+
+def test_prune_norms_identity(spark, built_index, golden, monkeypatch):
     """prune_norms=True must be invisible in the results: full rank + score
     identity vs the oracle golden. On this parquet index the flag is a
-    no-op (each scoring task reads only its own cells' norms); on
-    Iceberg-stored postings it filters the norms cogroup side."""
+    no-op: each scoring task reads only its own cells' norms rows with
+    pyarrow, so neither the local nor the fused path builds the Spark
+    norms relation. On Iceberg-stored postings it filters the norms
+    cogroup side."""
     got = search(
         spark, built_index, make_queries(), k=10, mode="bmw", prune_norms=True
     ).collect()
     _assert_matches_golden(got, golden)
+    for got, se in _fresh_searches(spark, built_index, monkeypatch, prune_norms=True):
+        _assert_matches_golden(got, golden)
+        assert "norms" not in vars(se)
 
 
 def test_prune_norms_auto_identity(spark, built_index, golden, monkeypatch):
     """prune_norms=None (auto, the default) must be answer-identical on BOTH
     sides of the PRUNE_NORMS_AUTO_MIN_DOCS threshold — the heuristic picks a
-    plan, never an answer (VERDICT r4 next #5)."""
+    plan, never an answer (VERDICT r4 next #5) — and a parquet search on
+    either path never builds the Spark norms relation."""
     from pageindex_spark.plans import query as qmod
 
     monkeypatch.setattr(qmod, "PRUNE_NORMS_AUTO_MIN_DOCS", 0)  # auto -> prune
     got = search(spark, built_index, make_queries(), k=10, mode="bmw").collect()
     _assert_matches_golden(got, golden)
+    for got, se in _fresh_searches(spark, built_index, monkeypatch):
+        _assert_matches_golden(got, golden)
+        assert "norms" not in vars(se)
     monkeypatch.setattr(qmod, "PRUNE_NORMS_AUTO_MIN_DOCS", 1 << 60)  # auto -> full
     got = search(spark, built_index, make_queries(), k=10, mode="bmw").collect()
     _assert_matches_golden(got, golden)
+    for got, se in _fresh_searches(spark, built_index, monkeypatch):
+        _assert_matches_golden(got, golden)
+        assert "norms" not in vars(se)
 
 
 def test_search_after_cursor_paging(spark, built_index):
@@ -1132,6 +1157,51 @@ def test_facet_stats_matches_python(spark, built_index, sf_unit_dir):
     for qid, _fac in got:
         buckets[qid] = buckets.get(qid, 0) + 1
     assert buckets and max(buckets.values()) >= 2
+
+
+def test_variable_width_histogram_large_values(spark, built_index, sf_unit_dir):
+    """Values near 1e11: a cluster of 100 of them sums past 9.2e12, so
+    sum(val) * 1e6 leaves the long range (ARITHMETIC_OVERFLOW under ANSI)
+    while mean6 itself still fits its bigint column. mean6 comes from an
+    exact decimal sum (the SQL twin's HUGEINT), and every cluster equals a
+    Python pass over the oracle's match set (largest-gap breaks, gap desc
+    then boundary value asc)."""
+    import math
+
+    from pageindex_spark.oracle.bm25 import OracleIndex
+    from pageindex_spark.plans.hits import variable_width_histogram
+
+    tbl = pq.read_table(
+        os.path.join(sf_unit_dir, "documents.parquet"), columns=["url", "text"]
+    )
+    rows = list(zip(tbl["url"].to_pylist(), tbl["text"].to_pylist()))
+    oi = OracleIndex(rows)
+    vals = {u: 10**11 + 7919 * (i % 97) + len(t) for i, (u, t) in enumerate(rows)}
+    n_buckets = 4
+    want, top_sum = {}, 0
+    for qid, text in make_queries():
+        vs = [vals[oi.urls[did]] for did in oi.score_all(text)]
+        dv = sorted(set(vs))
+        gaps = sorted(
+            ((b - a, b) for a, b in zip(dv, dv[1:])), key=lambda g: (-g[0], g[1])
+        )
+        breaks = {v for _gap, v in gaps[: n_buckets - 1]}
+        per: dict[int, list[int]] = {}
+        for v in vs:
+            per.setdefault(1 + sum(b <= v for b in breaks), []).append(v)
+        for cluster, xs in per.items():
+            mean6 = math.floor(float(sum(xs) * 1_000_000) / float(len(xs)))
+            want[(qid, cluster)] = (len(xs), min(xs), max(xs), mean6)
+            top_sum = max(top_sum, sum(xs))
+    assert top_sum * 1_000_000 > 2**63 - 1  # the parent's long product overflows
+    values = spark.createDataFrame(list(vals.items()), "url string, val long")
+    got = {
+        (r["query_id"], r["cluster"]): (r["n_docs"], r["vmin"], r["vmax"], r["mean6"])
+        for r in variable_width_histogram(
+            spark, built_index, make_queries(), values, n_buckets=n_buckets
+        ).collect()
+    }
+    assert got == want
 
 
 def test_match_percentiles_matches_python(spark, built_index, sf_unit_dir):

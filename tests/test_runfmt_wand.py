@@ -18,7 +18,6 @@ from pageindex_spark.operators.runfmt import (
 )
 from pageindex_spark.operators.wand import (
     CellNorms,
-    TopK,
     bmw_score_cell,
     dense_score_cell,
     idf_value,
@@ -211,9 +210,13 @@ def test_salted_group_merge_equals_unsalted(seed=99):
 
 
 def test_topk_tie_break_prefers_smaller_doc():
-    tk = TopK(2)
-    tk.offer(1.0, 5)
-    tk.offer(1.0, 3)
-    tk.offer(1.0, 4)  # ties with heap min; smaller doc wins over doc 5
-    items = sorted(tk.items(), key=lambda x: (-x[1], x[0]))
-    assert [d for d, _ in items] == [3, 4]
+    """Three docs tie on score at k=2: the two smaller docIDs win (docID
+    order == url order, the oracle's tie-break)."""
+    docs = np.array([3, 4, 5], dtype=np.uint64)
+    tfs = np.array([2, 2, 2], dtype=np.uint64)
+    dls = np.array([10, 10, 10], dtype=np.int64)
+    run = encode_run(docs, tfs, dls, avgdl=10.0, block_size=2)
+    norms = CellNorms(0, np.full(6, 10.0))
+    got = bmw_score_cell({"t": run}, norms, [("t", 1.5)], 10.0, 2)
+    assert [d for d, _ in got] == [3, 4]
+    assert got[0][1] == got[1][1]
