@@ -9,13 +9,17 @@ Usage:
   python jobs/plan_dump.py before --out plans/r07 --time 3   # + min-of-3
   python jobs/plan_dump.py after --only bm25_topk,postings   # a subset
   python jobs/plan_dump.py after --out plans/r07 --search INDEX_DIR
+  python jobs/plan_dump.py after --out plans/r10 --hits INDEX_DIR
 
 ``--search INDEX_DIR`` dumps, instead of the SQL leaves, the plan of a
 distributed ``search()`` batch over a built index: the ``make_queries()``
 batch with the local scoring path switched off, captured as the scored
 candidates DataFrame the engine hands to its rank step
 (``<out>/engine_batch_<tag>.txt``, the index path written as
-``<INDEX_DIR>``; no SPARK_GRAFT_SF_DIR needed).
+``<INDEX_DIR>``; no SPARK_GRAFT_SF_DIR needed). ``--hits INDEX_DIR``
+likewise dumps the plans of ``search_count`` and ``facet_counts`` (facet
+= first hex digit of md5(url)) over the same batch
+(``<out>/hits_count_<tag>.txt``, ``<out>/facet_counts_<tag>.txt``).
 
 Plans go to ``<out>/<q>_<tag>.txt`` (default out: plans/dump, relative to
 the repo root); with --time, noop-sink timings go to
@@ -75,13 +79,32 @@ def dump_search(spark, index_dir: str, path: str) -> None:
         f.write(plans[0].replace(index_dir, "<INDEX_DIR>"))
 
 
+def dump_hits(spark, index_dir: str, out_dir: str, tag: str) -> None:
+    """Write the formatted plans of a search_count and a facet_counts."""
+    from pyspark.sql import functions as F
+
+    from pageindex_spark.plans.hits import facet_counts, search_count
+    from pageindex_spark.sources.corpus import make_queries
+
+    ext = spark.read.parquet(os.path.join(index_dir, "docs_extracted"))
+    facets = ext.select("url", F.substring(F.md5("url"), 1, 1).alias("facet"))
+    for name, df in (
+        ("hits_count", search_count(spark, index_dir, make_queries())),
+        ("facet_counts", facet_counts(spark, index_dir, make_queries(), facets)),
+    ):
+        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
+            f.write(_explain(df).replace(index_dir, "<INDEX_DIR>"))
+
+
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    search_index = None
+    search_index = hits_index = None
     if "--search" in sys.argv:
         search_index = os.path.abspath(sys.argv[sys.argv.index("--search") + 1])
+    if "--hits" in sys.argv:
+        hits_index = os.path.abspath(sys.argv[sys.argv.index("--hits") + 1])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
-    if not sf_dir and search_index is None:
+    if not sf_dir and search_index is None and hits_index is None:
         sys.exit("plan_dump: set SPARK_GRAFT_SF_DIR to a testdata scale dir")
     n_time = 0
     if "--time" in sys.argv:
@@ -102,6 +125,9 @@ def main() -> None:
     if search_index is not None:
         path = os.path.join(out_dir, f"engine_batch_{tag}.txt")
         dump_search(spark, search_index, path)
+        return
+    if hits_index is not None:
+        dump_hits(spark, hits_index, out_dir, tag)
         return
     warm_up(spark)
     register_views(spark, sf_dir)

@@ -3314,13 +3314,16 @@ from sums
 
 def _histo_bucket_stats_sql(d: _Dialect, sel: int = HISTO_SEL_MIN) -> str:
     """Sibling-pipeline twin (plans/hits.py ``date_histogram_bucket_stats``):
-    avg/min/max/sum_bucket + bucket_selector over the month histogram."""
+    avg/min/max/sum_bucket + bucket_selector over the month histogram.
+    DuckDB sums a bigint into a HUGEINT, so its side casts the sum back to
+    bigint (Spark's sum of a bigint is a bigint)."""
+    sum_docs = "cast(sum(n_docs) as bigint)" if d.duck else "sum(n_docs)"
     return f"""{_date_histo_cte(d)}
 select query_id,
        cast(count(*) as bigint) as n_buckets,
        min(n_docs) as min_docs,
        max(n_docs) as max_docs,
-       sum(n_docs) as sum_docs,
+       {sum_docs} as sum_docs,
        cast(floor(cast(sum(n_docs) as double) / count(*) * 1000000) as bigint) as avg_docs6,
        cast(sum(case when n_docs >= {sel} then 1 else 0 end) as bigint) as n_selected
 from hist group by query_id

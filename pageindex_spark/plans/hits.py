@@ -7,37 +7,40 @@ aggregations a search UI shows NEXT to the top-k — the total hit count
 aggregations / Lucene faceting). These aggregate the ENTIRE match set, so
 they get their own plan instead of riding the top-k heap:
 
-1. **Query head + pruned scan + cell slicing** — identical to the search
-   plan (`query._query_head`, `Searcher.postings_runs`,
-   `query._cell_slices`).
+1. **Query head + search's cell reader** — the same parse as the search
+   plan (`query._query_head`), and the same way postings reach a per-cell
+   function (`query._run_cells`): on parquet indexes one ``mapInArrow``
+   stage over a range of cell ids, each task reading and slicing its own
+   cells' runs with pyarrow. The match kernels read no norms.
 2. **Per-cell match kernel** — decode each query term's cell postings once,
    union (OR semantics), subtract the cell's exclusion mask
    (`query._CellMask`: tombstones and '-term' negations, the same pre-heap
    contract as search). Kernels capture the payload, negations and
-   tombstones as plain closure values, like search's. Counting emits per-cell
-   PARTIAL counts — O(cells) rows shuffle, never O(matches); faceting must
-   materialize matched doc coordinates, so it emits (query_id, part_id,
-   local_pos) rows — inherently O(matches), the price of the statistic.
-3. **Tiny agg / dimension join** — counts: one sum per query. Facets: join
-   the extracts for urls with the scan FILTERED to the matched partitions
-   (partition-dir pruning, same trick as prune_norms), then join the
-   caller's (url, facet) dimension and count per (query, facet value).
+   tombstones as plain closure values, like search's. Counting emits
+   per-cell PARTIAL counts — O(cells) rows, never O(matches); faceting
+   must materialize matched doc coordinates, so it emits (query_id,
+   part_id, local_pos) rows — inherently O(matches), the price of the
+   statistic.
+3. **Tiny agg / dimension join** — counts: one sum per query. Facets
+   (``_matched_agg``): join the extracts for urls with the scan FILTERED to
+   the build partitions the runs touch (`query._touched_parts`, a
+   driver-side read of the runs' docID ranges), then join the caller's
+   (url, facet) dimension and count per (query, facet value).
 
-No norms ever shuffle (doc lengths don't matter to matching), and the
-kernels share the search plan's exclusion semantics, so
-``search_count(q)`` == number of docs ``search(q, k=inf)`` would rank.
-Counting ships tf blobs it doesn't decode (the slice schema is shared with
-scoring); a dedicated doc-only slice schema would halve count shuffle bytes
-— noted, not needed until counting dominates a real workload.
+Doc lengths don't matter to matching, and the kernels share the search
+plan's exclusion semantics, so ``search_count(q)`` == number of docs
+``search(q, k=inf)`` would rank.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,10 +49,10 @@ from ..operators.wand import assemble_cell_runs
 from ..session import local_df
 from .query import (
     QueryHead,
-    _cell_slices,
     _CellMask,
     _query_head,
-    _run_parts,
+    _run_cells,
+    _touched_parts,
     _two_phase_rank,
     _with_urls,
     get_searcher,
@@ -57,34 +60,28 @@ from .query import (
 
 
 class _MatchState(NamedTuple):
-    """A parsed batch plus its pruned slices (``_match_state``)."""
+    """A parsed batch (``_match_state``)."""
 
     head: QueryHead
     payload: list[tuple[int, list[str]]]  # per query: its terms in the index
-    deleted: np.ndarray | None  # the Searcher's tombstones (sorted)
-    slices: DataFrame
-    runs: DataFrame
+    present: list[str]  # the payload's terms and the present negations
 
 
-def _match_state(se, queries: list[tuple[int, str]]) -> _MatchState | None:
+def _match_state(se, queries: list[tuple[int, str]]) -> _MatchState:
     """Shared head for the full-match plans: the shared query head
     (``_query_head``: 'term^w' boosts tolerated and ignored — weights don't
-    change the match set; '-term' negations honored) and the pruned slices
-    of every present term. Returns None when no query can match anything."""
+    change the match set; '-term' negations honored) and the terms whose
+    runs the kernels read. An empty payload: no query can match anything."""
     head = _query_head(se, queries)
     payload = [
         (qid, ts) for qid, qts in head.terms.items()
         if (ts := [t for t in qts if t in head.df])
     ]
-    if not payload:
-        return None
-    runs = se.postings_runs(
-        sorted(
-            {t for _, ts in payload for t in ts}
-            | {t for ns in head.negs.values() for t in ns}
-        )
+    present = sorted(
+        {t for _, ts in payload for t in ts}
+        | {t for ns in head.negs.values() for t in ns}
     )
-    return _MatchState(head, payload, se.deleted_ids, _cell_slices(se, runs), runs)
+    return _MatchState(head, payload, present)
 
 
 def _cell_matches(pdf: pd.DataFrame, payload, negs, deleted, counts=False):
@@ -128,29 +125,31 @@ def search_count(
     """Total hit count per query -> (query_id, n_hits): the number of docs
     an unbounded ``search(q)`` would rank (OR semantics; tombstones and
     '-term' exclusions applied identically). Per-cell partial counts are
-    the only shuffled rows — O(cells), never O(matches) — then one tiny
+    the only kernel rows — O(cells), never O(matches) — then one tiny
     sum. Queries with zero hits emit no row (matching the SQL twin's
     GROUP BY over matches)."""
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = local_df(spark, [], "query_id int, n_hits long")
-    if state is None:
-        return empty
-    return _count_matches(state).withColumnRenamed("n", "n_hits")
+    if not state.payload:
+        return se._empty_df("query_id int, n_hits long")
+    return _count_matches(se, state).withColumnRenamed("n", "n_hits")
 
 
-def _count_matches(state) -> DataFrame:
-    """Per-query match counts from a ``_match_state`` — the cheap count
-    kernel: per-cell partial counts (no coordinates, no url join) are the
-    only shuffled rows — O(cells), never O(matches) — then one tiny sum.
-    Shared by ``search_count`` and the surfaces that need the match-set
-    SIZE next to the match set itself (``significant_terms``): re-running
-    this count shape beats duplicating the URL-joined kernel lineage, and
-    a persist() would trade that for cache ownership a lazy API can't
-    release. Output (query_id, n)."""
-    payload, negs, deleted = state.payload, state.head.negs, state.deleted
+_COUNT_SCHEMA = pa.schema([("query_id", pa.int32()), ("n", pa.int64())])
 
-    def count_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+
+def _count_matches(se, state: _MatchState) -> DataFrame:
+    """Per-query match counts — the cheap count kernel: per-cell partial
+    counts (no coordinates, no url join) are the only kernel rows —
+    O(cells), never O(matches) — then one tiny sum. Shared by
+    ``search_count`` and the surfaces that need the match-set SIZE next to
+    the match set itself (``significant_terms``): re-running this count
+    shape beats duplicating the URL-joined kernel lineage, and a persist()
+    would trade that for cache ownership a lazy API can't release. Output
+    (query_id, n)."""
+    payload, negs, deleted = state.payload, state.head.negs, se.deleted_ids
+
+    def count_cell(pdf: pd.DataFrame, _norms) -> pd.DataFrame:
         matches = _cell_matches(pdf, payload, negs, deleted)
         return pd.DataFrame(
             {
@@ -159,13 +158,11 @@ def _count_matches(state) -> DataFrame:
             }
         )
 
-    partial = state.slices.groupBy("cell").applyInPandas(
-        count_cell, schema="query_id int, n long"
-    )
+    partial = _run_cells(se, state.present, count_cell, _COUNT_SCHEMA, norms=False)
     return partial.groupBy("query_id").agg(F.sum("n").alias("n"))
 
 
-def _match_coords(se, state, rated: bool = False) -> DataFrame:
+def _match_coords(se, state: _MatchState, rated: bool = False) -> DataFrame:
     """The match kernel's docIDs as (query_id, part_id, local_pos) rows,
     converted to coordinates IN the kernel (vectorized searchsorted over
     the grid). ``rated`` adds each doc's term-coverage grade for
@@ -174,17 +171,18 @@ def _match_coords(se, state, rated: bool = False) -> DataFrame:
     already distinct, so the multiplicity of a docID across the query's
     term lists IS the grade, and cells partition docID space, so no
     cross-cell merge is needed. O(matches) rows."""
-    payload, negs, deleted = state.payload, state.head.negs, state.deleted
+    payload, negs, deleted = state.payload, state.head.negs, se.deleted_ids
     grid = se.grid_parts
-    cols = {"query_id": "int32", "part_id": "int32", "local_pos": "int64"}
-    if rated:
-        cols["rating"] = "int32"
+    schema = pa.schema(
+        [("query_id", pa.int32()), ("part_id", pa.int32()), ("local_pos", pa.int64())]
+        + ([("rating", pa.int32())] if rated else [])
+    )
 
-    def coord_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+    def coord_cell(pdf: pd.DataFrame, _norms) -> pd.DataFrame:
         matches = _cell_matches(pdf, payload, negs, deleted, counts=rated)
         if not matches:
-            return pd.DataFrame({c: [] for c in cols}).astype(cols)
-        out = {c: [] for c in cols}
+            return schema.empty_table().to_pandas()
+        out = {c: [] for c in schema.names}
         for qid, m in matches.items():
             u = m[0] if rated else m
             pid = np.searchsorted(grid, u, side="right") - 1
@@ -195,27 +193,36 @@ def _match_coords(se, state, rated: bool = False) -> DataFrame:
                 out["rating"].append(m[1].astype(np.int32))
         return pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
 
-    schema = "query_id int, part_id int, local_pos long" + (
-        ", rating int" if rated else ""
-    )
-    return state.slices.groupBy("cell").applyInPandas(coord_cell, schema=schema)
+    return _run_cells(se, state.present, coord_cell, schema, norms=False)
 
 
-def _matched_urls(spark: SparkSession, se, state) -> DataFrame:
-    """Shared tail for the full-match SURFACES (facets, sort-by-field):
-    the match kernel's docIDs as (query_id, part_id, url) rows. The
-    extracts scan is filtered to the partitions the matches can live in
-    before the url join (partition-dir pruning — selective queries touch a
-    handful of files)."""
-    ext = spark.read.parquet(se.paths.docs_extracted).select(
-        "part_id", "local_pos", "url"
-    )
-    parts = _run_parts(se, state.runs)
-    if parts is not None:
-        ext = ext.filter(F.col("part_id").isin(parts))
-    return _match_coords(se, state).join(ext, ["part_id", "local_pos"]).select(
-        "query_id", "part_id", "url"
-    )
+def _matched_urls(se, state: _MatchState) -> DataFrame:
+    """The match kernel's docIDs as (query_id, part_id, url) rows. The
+    extracts scan is filtered to the build partitions the runs touch
+    before the url join (partition-dir pruning — selective queries touch
+    a handful of files)."""
+    return _with_urls(
+        se, _match_coords(se, state), _touched_parts(se, state.present)
+    ).select("query_id", "part_id", "url")
+
+
+def _matched_agg(
+    spark: SparkSession,
+    index_dir: str,
+    cell_parts: int,
+    queries: list[tuple[int, str]],
+    ddl: str,
+    build: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The full-match surfaces' one front-end: ``build`` turns the matched
+    (query_id, part_id, url) rows (``_matched_urls``) into the surface's
+    aggregation. When no query can match, the result is the Searcher's
+    cached empty frame of ``ddl``."""
+    se = get_searcher(spark, index_dir, cell_parts)
+    state = _match_state(se, queries)
+    if not state.payload:
+        return se._empty_df(ddl)
+    return build(_matched_urls(se, state))
 
 
 def facet_counts(
@@ -250,34 +257,35 @@ def facet_counts(
     re-run the match kernel, and never a global sort."""
     from pyspark.sql import Window
 
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(spark, [], "query_id int, facet string, n_docs long")
-    if state is None:
-        return empty
-    counts = (
-        _matched_urls(spark, se, state)
-        .join(facets, "url")
-        .groupBy("query_id", "facet")
-        .agg(F.count("*").alias("n_docs"))
-    )
-    if top_n is None:
-        return counts
-    if top_n < 1:
+    if top_n is not None and top_n < 1:
         raise ValueError(f"top_n must be >= 1, got {top_n}")
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("n_docs"), F.asc("facet")
-    )
-    return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .withColumn(
-            "facet",
-            F.when(F.col("rk") <= top_n, F.col("facet")).otherwise(
-                F.lit(other_label)
-            ),
+
+    def build(matched: DataFrame) -> DataFrame:
+        counts = (
+            matched.join(facets, "url")
+            .groupBy("query_id", "facet")
+            .agg(F.count("*").alias("n_docs"))
         )
-        .groupBy("query_id", "facet")
-        .agg(F.sum("n_docs").alias("n_docs"))
+        if top_n is None:
+            return counts
+        w = Window.partitionBy("query_id").orderBy(
+            F.desc("n_docs"), F.asc("facet")
+        )
+        return (
+            counts.withColumn("rk", F.row_number().over(w))
+            .withColumn(
+                "facet",
+                F.when(F.col("rk") <= top_n, F.col("facet")).otherwise(
+                    F.lit(other_label)
+                ),
+            )
+            .groupBy("query_id", "facet")
+            .agg(F.sum("n_docs").alias("n_docs"))
+        )
+
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, facet string, n_docs long", build,
     )
 
 
@@ -310,11 +318,6 @@ def range_facets(
         raise ValueError(
             f"boundaries must be >= 2 strictly ascending values, got {boundaries}"
         )
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(spark, [], "query_id int, bucket int, n_docs long")
-    if state is None:
-        return empty
     val = F.col("val").cast("double")
     bucket = None
     for b in bl[1:-1]:
@@ -322,13 +325,14 @@ def range_facets(
         bucket = term if bucket is None else bucket + term
     if bucket is None:
         bucket = F.lit(0)
-    return (
-        _matched_urls(spark, se, state)
-        .join(values.select("url", "val"), "url")
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, bucket int, n_docs long",
+        lambda matched: matched.join(values.select("url", "val"), "url")
         .filter((val >= F.lit(bl[0])) & (val < F.lit(bl[-1])))
         .withColumn("bucket", bucket.cast("int"))
         .groupBy("query_id", "bucket")
-        .agg(F.count("*").alias("n_docs"))
+        .agg(F.count("*").alias("n_docs")),
     )
 
 
@@ -351,20 +355,13 @@ def match_stats(
     cardinality agg makes by default, documented not taken). avg divides
     the raw double sum by the count BEFORE flooring — the same one-rounding
     rule as every other fixed-point column."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    ddl = (
-        "query_id int, n_docs long, n_vals long, sum6 long, min6 long, "
-        "max6 long, avg6 long"
-    )
-    empty = local_df(spark, [], ddl)
-    if state is None:
-        return empty
     val = F.col("val").cast("double")
     f6 = lambda c: F.floor(c * 1_000_000).cast("long")  # noqa: E731
-    return (
-        _matched_urls(spark, se, state)
-        .join(values.select("url", "val"), "url")
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, n_docs long, n_vals long, sum6 long, min6 long, "
+        "max6 long, avg6 long",
+        lambda matched: matched.join(values.select("url", "val"), "url")
         .groupBy("query_id")
         .agg(
             F.count("*").alias("n_docs"),
@@ -373,7 +370,7 @@ def match_stats(
             f6(F.min(val)).alias("min6"),
             f6(F.max(val)).alias("max6"),
             f6(F.sum(val) / F.count("*")).alias("avg6"),
-        )
+        ),
     )
 
 
@@ -405,40 +402,33 @@ def match_extended_stats(
     column can land an ulp below zero and NaN the stddev in BOTH engines
     otherwise. One map-side-combined groupBy over the ``_matched_urls``
     tail — same cost class as ``match_stats``."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    ddl = (
-        "query_id int, n_docs long, sum6 long, avg6 long, sumsq long, "
-        "var6 long, std6 long, lo6 long, hi6 long"
-    )
-    empty = local_df(spark, [], ddl)
-    if state is None:
-        return empty
     val = F.col("val").cast("double")
-    agg = (
-        _matched_urls(spark, se, state)
-        .join(values.select("url", "val"), "url")
+    mean = F.col("s") / F.col("n")
+    var = F.greatest(F.col("ss") / F.col("n") - mean * mean, F.lit(0.0))
+    std = F.sqrt(var)
+    f6 = lambda c: F.floor(c * 1_000_000).cast("long")  # noqa: E731
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, n_docs long, sum6 long, avg6 long, sumsq long, "
+        "var6 long, std6 long, lo6 long, hi6 long",
+        lambda matched: matched.join(values.select("url", "val"), "url")
         .groupBy("query_id")
         .agg(
             F.count("*").alias("n"),
             F.sum(val).alias("s"),
             F.sum(val * val).alias("ss"),
         )
-    )
-    mean = F.col("s") / F.col("n")
-    var = F.greatest(F.col("ss") / F.col("n") - mean * mean, F.lit(0.0))
-    std = F.sqrt(var)
-    f6 = lambda c: F.floor(c * 1_000_000).cast("long")  # noqa: E731
-    return agg.select(
-        "query_id",
-        F.col("n").alias("n_docs"),
-        f6(F.col("s")).alias("sum6"),
-        f6(mean).alias("avg6"),
-        F.col("ss").cast("long").alias("sumsq"),
-        f6(var).alias("var6"),
-        f6(std).alias("std6"),
-        f6(mean - F.lit(2.0) * std).alias("lo6"),
-        f6(mean + F.lit(2.0) * std).alias("hi6"),
+        .select(
+            "query_id",
+            F.col("n").alias("n_docs"),
+            f6(F.col("s")).alias("sum6"),
+            f6(mean).alias("avg6"),
+            F.col("ss").cast("long").alias("sumsq"),
+            f6(var).alias("var6"),
+            f6(std).alias("std6"),
+            f6(mean - F.lit(2.0) * std).alias("lo6"),
+            f6(mean + F.lit(2.0) * std).alias("hi6"),
+        ),
     )
 
 
@@ -460,25 +450,20 @@ def match_weighted_avg(
     leaving one division + one flooring multiply, identical across
     engines. One map-side-combined groupBy over the ``_matched_urls``
     tail."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    ddl = "query_id int, n_docs long, wsum6 long, wtot6 long, wavg6 long"
-    empty = local_df(spark, [], ddl)
-    if state is None:
-        return empty
     v = F.col("val").cast("double")
     w = F.col("w").cast("double")
     f6 = lambda c: F.floor(c * 1_000_000).cast("long")  # noqa: E731
-    return (
-        _matched_urls(spark, se, state)
-        .join(values.select("url", "val", "w"), "url")
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, n_docs long, wsum6 long, wtot6 long, wavg6 long",
+        lambda matched: matched.join(values.select("url", "val", "w"), "url")
         .groupBy("query_id")
         .agg(
             F.count("*").alias("n_docs"),
             f6(F.sum(v * w)).alias("wsum6"),
             f6(F.sum(w)).alias("wtot6"),
             f6(F.sum(v * w) / F.sum(w)).alias("wavg6"),
-        )
+        ),
     )
 
 
@@ -499,21 +484,16 @@ def match_missing(
     the split rides two conditional counts in ONE map-side-combined
     groupBy — never an anti-join fork that would re-run the match
     kernel."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    ddl = "query_id int, n_docs long, n_present long, n_missing long"
-    empty = local_df(spark, [], ddl)
-    if state is None:
-        return empty
-    return (
-        _matched_urls(spark, se, state)
-        .join(values.select("url", "val"), "url", "left")
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, n_docs long, n_present long, n_missing long",
+        lambda matched: matched.join(values.select("url", "val"), "url", "left")
         .groupBy("query_id")
         .agg(
             F.count("*").alias("n_docs"),
             F.count("val").alias("n_present"),
             (F.count("*") - F.count("val")).alias("n_missing"),
-        )
+        ),
     )
 
 
@@ -549,17 +529,13 @@ def date_histogram(
             f"interval must be one of {sorted(_DATE_HISTO_FMT)}, got "
             f"{interval!r}"
         )
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(spark, [], "query_id int, bucket string, n_docs long")
-    if state is None:
-        return empty
-    return (
-        _matched_urls(spark, se, state)
-        .join(dates.select("url", "d"), "url")
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, bucket string, n_docs long",
+        lambda matched: matched.join(dates.select("url", "d"), "url")
         .withColumn("bucket", F.date_format("d", fmt))
         .groupBy("query_id", "bucket")
-        .agg(F.count("*").alias("n_docs"))
+        .agg(F.count("*").alias("n_docs")),
     )
 
 
@@ -593,42 +569,38 @@ def auto_date_histogram(
     bounded by the ladder (3)."""
     if target_buckets < 1:
         raise ValueError(f"target_buckets must be >= 1, got {target_buckets}")
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(
-        spark, [], "query_id int, interval string, bucket string, n_docs long"
-    )
-    if state is None:
-        return empty
-    dated = _matched_urls(spark, se, state).join(
-        dates.select("url", "d"), "url"
-    )
-    spans = {
-        r["query_id"]: (r["lo"], r["hi"])
-        for r in dated.groupBy("query_id")
-        .agg(F.min("d").alias("lo"), F.max("d").alias("hi"))
-        .collect()
-    }
-    by_iv: dict[str, list[int]] = {}
-    for qid, (lo, hi) in spans.items():
-        span = (hi - lo).days + 1
-        iv = (
-            "day"
-            if span <= target_buckets
-            else "month" if span <= target_buckets * 31 else "year"
-        )
-        by_iv.setdefault(iv, []).append(qid)
-    out = None
-    for iv, qids in sorted(by_iv.items()):
-        part = (
-            dated.filter(F.col("query_id").isin(qids))
-            .withColumn("interval", F.lit(iv))
-            .withColumn("bucket", F.date_format("d", _DATE_HISTO_FMT[iv]))
-            .groupBy("query_id", "interval", "bucket")
-            .agg(F.count("*").alias("n_docs"))
-        )
-        out = part if out is None else out.unionByName(part)
-    return out if out is not None else empty
+    ddl = "query_id int, interval string, bucket string, n_docs long"
+
+    def build(matched: DataFrame) -> DataFrame:
+        dated = matched.join(dates.select("url", "d"), "url")
+        spans = {
+            r["query_id"]: (r["lo"], r["hi"])
+            for r in dated.groupBy("query_id")
+            .agg(F.min("d").alias("lo"), F.max("d").alias("hi"))
+            .collect()
+        }
+        by_iv: dict[str, list[int]] = {}
+        for qid, (lo, hi) in spans.items():
+            span = (hi - lo).days + 1
+            iv = (
+                "day"
+                if span <= target_buckets
+                else "month" if span <= target_buckets * 31 else "year"
+            )
+            by_iv.setdefault(iv, []).append(qid)
+        out = None
+        for iv, qids in sorted(by_iv.items()):
+            part = (
+                dated.filter(F.col("query_id").isin(qids))
+                .withColumn("interval", F.lit(iv))
+                .withColumn("bucket", F.date_format("d", _DATE_HISTO_FMT[iv]))
+                .groupBy("query_id", "interval", "bucket")
+                .agg(F.count("*").alias("n_docs"))
+            )
+            out = part if out is None else out.unionByName(part)
+        return out if out is not None else local_df(spark, [], ddl)
+
+    return _matched_agg(spark, index_dir, cell_parts, queries, ddl, build)
 
 
 def date_histogram_pipeline(
@@ -709,34 +681,27 @@ def diversified_sampler_stats(
     <= keys x max_per_key rows per query."""
     from pyspark.sql import Window
 
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(
-        spark, [], "query_id int, n_sample long, n_keys long, avg_chars6 long"
-    )
-    if state is None:
-        return empty
-    keyed = (
-        _matched_urls(spark, se, state)
-        .join(dims.select("url", "key", "val"), "url")
-        .withColumn("h", F.md5(F.col("url")))
-    )
     w_key = Window.partitionBy("query_id", "key").orderBy(
         F.asc("h"), F.asc("url")
     )
     w_all = Window.partitionBy("query_id").orderBy(F.asc("h"), F.asc("url"))
-    divs = (
-        keyed.withColumn("kpos", F.row_number().over(w_key))
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, n_sample long, n_keys long, avg_chars6 long",
+        lambda matched: matched.join(dims.select("url", "key", "val"), "url")
+        .withColumn("h", F.md5(F.col("url")))
+        .withColumn("kpos", F.row_number().over(w_key))
         .filter(F.col("kpos") <= max_per_key)
         .withColumn("spos", F.row_number().over(w_all))
         .filter(F.col("spos") <= shard_size)
-    )
-    return divs.groupBy("query_id").agg(
-        F.count("*").alias("n_sample"),
-        F.countDistinct("key").alias("n_keys"),
-        F.floor(F.avg(F.col("val").cast("double")) * 1000000)
-        .cast("long")
-        .alias("avg_chars6"),
+        .groupBy("query_id")
+        .agg(
+            F.count("*").alias("n_sample"),
+            F.countDistinct("key").alias("n_keys"),
+            F.floor(F.avg(F.col("val").cast("double")) * 1000000)
+            .cast("long")
+            .alias("avg_chars6"),
+        ),
     )
 
 
@@ -756,8 +721,9 @@ def frequent_term_pairs(
     Plan — the pair analogue of the match kernels, and the reason this
     scales: items come from one column-pruned term_stats scan with the
     df-window predicate pushed down (the apriori prefilter — it bounds
-    the item set before any postings load); their postings load through
-    the standard bucket-pruned slice path; and because CELLS PARTITION
+    the item set before any postings load); their postings reach the
+    pair kernel through search's bucket-pruned cell reader; and because
+    CELLS PARTITION
     DOCID SPACE, per-cell pair intersections sum to the exact corpus-wide
     support — the only shuffled rows are per-cell (item_a, item_b,
     partial) triples, O(items² x cells) worst case and typically far
@@ -777,13 +743,11 @@ def frequent_term_pairs(
         .distinct()
         .collect()
     )
-    empty = local_df(spark, [], "item_a string, item_b string, support long")
     if len(cand) < 2:
-        return empty
-    slices = _cell_slices(se, se.postings_runs(cand))
+        return se._empty_df("item_a string, item_b string, support long")
     deleted = se.deleted_ids
 
-    def pair_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+    def pair_cell(pdf: pd.DataFrame, _norms) -> pd.DataFrame:
         term_runs = assemble_cell_runs(pdf)
         lo, hi = int(pdf["first_doc"].min()), int(pdf["last_doc"].max()) + 1
         dead = _CellMask(term_runs, lo, hi, deleted, {}).deleted
@@ -817,9 +781,10 @@ def frequent_term_pairs(
             }
         )
 
-    partial = slices.groupBy("cell").applyInPandas(
-        pair_cell, schema="item_a string, item_b string, n long"
+    schema = pa.schema(
+        [("item_a", pa.string()), ("item_b", pa.string()), ("n", pa.int64())]
     )
+    partial = _run_cells(se, cand, pair_cell, schema, norms=False)
     return (
         partial.groupBy("item_a", "item_b")
         .agg(F.sum("n").alias("support"))
@@ -979,17 +944,13 @@ def rare_terms(
         raise ValueError(
             f"max_doc_count must be >= 1, got {max_doc_count}"
         )
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(spark, [], "query_id int, facet string, n_docs long")
-    if state is None:
-        return empty
-    return (
-        _matched_urls(spark, se, state)
-        .join(values.select("url", "facet"), "url")
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, facet string, n_docs long",
+        lambda matched: matched.join(values.select("url", "facet"), "url")
         .groupBy("query_id", "facet")
         .agg(F.count("*").alias("n_docs"))
-        .filter(F.col("n_docs") <= max_doc_count)
+        .filter(F.col("n_docs") <= max_doc_count),
     )
 
 
@@ -1026,35 +987,36 @@ def multi_terms(
 
     if not keys:
         raise ValueError("multi_terms needs >= 1 key column")
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    key_ddl = ", ".join(f"{c} string" for c in keys)
-    empty = local_df(spark, [], f"query_id int, {key_ddl}, n_docs long")
-    if state is None:
-        return empty
-    counts = (
-        _matched_urls(spark, se, state)
-        .join(values.select("url", *keys), "url")
-        .groupBy("query_id", *keys)
-        .agg(F.count("*").alias("n_docs"))
-    )
-    if top_n is None:
-        return counts
-    if top_n < 1:
+    if top_n is not None and top_n < 1:
         raise ValueError(f"top_n must be >= 1, got {top_n}")
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("n_docs"), *[F.asc(c) for c in keys]
-    )
-    ranked = counts.withColumn("rk", F.row_number().over(w))
-    for c in keys:
-        ranked = ranked.withColumn(
-            c,
-            F.when(F.col("rk") <= top_n, F.col(c)).otherwise(
-                F.lit(other_label)
-            ),
+
+    def build(matched: DataFrame) -> DataFrame:
+        counts = (
+            matched.join(values.select("url", *keys), "url")
+            .groupBy("query_id", *keys)
+            .agg(F.count("*").alias("n_docs"))
         )
-    return ranked.groupBy("query_id", *keys).agg(
-        F.sum("n_docs").alias("n_docs")
+        if top_n is None:
+            return counts
+        w = Window.partitionBy("query_id").orderBy(
+            F.desc("n_docs"), *[F.asc(c) for c in keys]
+        )
+        ranked = counts.withColumn("rk", F.row_number().over(w))
+        for c in keys:
+            ranked = ranked.withColumn(
+                c,
+                F.when(F.col("rk") <= top_n, F.col(c)).otherwise(
+                    F.lit(other_label)
+                ),
+            )
+        return ranked.groupBy("query_id", *keys).agg(
+            F.sum("n_docs").alias("n_docs")
+        )
+
+    key_ddl = ", ".join(f"{c} string" for c in keys)
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        f"query_id int, {key_ddl}, n_docs long", build,
     )
 
 
@@ -1086,21 +1048,17 @@ def top_metrics(
 
     if size < 1:
         raise ValueError(f"size must be >= 1, got {size}")
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(
-        spark, [], "query_id int, rank int, url string, sort_key long, metric long"
-    )
-    if state is None:
-        return empty
     key = F.desc("sort_key") if descending else F.asc("sort_key")
     w = Window.partitionBy("query_id").orderBy(key, F.asc("url"))
-    return (
-        _matched_urls(spark, se, state)
-        .join(values.select("url", "sort_key", "metric"), "url")
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, rank int, url string, sort_key long, metric long",
+        lambda matched: matched.join(
+            values.select("url", "sort_key", "metric"), "url"
+        )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= size)
-        .select("query_id", "rank", "url", "sort_key", "metric")
+        .select("query_id", "rank", "url", "sort_key", "metric"),
     )
 
 
@@ -1231,11 +1189,6 @@ def geo_distance_topk(
 
     if not -90.0 <= origin[0] <= 90.0 or not -180.0 <= origin[1] <= 180.0:
         raise ValueError(f"origin out of range: {origin}")
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(spark, [], "query_id int, rank int, url string, dist6 long")
-    if state is None:
-        return empty
     dist = HAVERSINE_KM.format(
         lat1=repr(float(origin[0])),
         lon1=repr(float(origin[1])),
@@ -1245,16 +1198,17 @@ def geo_distance_topk(
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy(F.asc("dist6"), F.asc("url"))
-    return (
-        _matched_urls(spark, se, state)
-        .join(geo.select("url", "lat", "lon"), "url")
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, rank int, url string, dist6 long",
+        lambda matched: matched.join(geo.select("url", "lat", "lon"), "url")
         .withColumn(
             "dist6",
             F.floor(F.expr(dist) * 1_000_000).cast("long"),
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "url", "dist6")
+        .select("query_id", "rank", "url", "dist6"),
     )
 
 
@@ -1277,21 +1231,17 @@ def geo_bounding_box_count(
     min_lat, min_lon, max_lat, max_lon = box
     if min_lat > max_lat or min_lon > max_lon:
         raise ValueError(f"box min > max: {box}")
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(spark, [], "query_id int, n_in_box long")
-    if state is None:
-        return empty
     inside = (
         F.col("lat").between(float(min_lat), float(max_lat))
         & F.col("lon").between(float(min_lon), float(max_lon))
     )
-    return (
-        _matched_urls(spark, se, state)
-        .join(geo.select("url", "lat", "lon"), "url")
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, n_in_box long",
+        lambda matched: matched.join(geo.select("url", "lat", "lon"), "url")
         .filter(inside)
         .groupBy("query_id")
-        .agg(F.count("*").alias("n_in_box"))
+        .agg(F.count("*").alias("n_in_box")),
     )
 
 
@@ -1317,20 +1267,16 @@ def geotile_grid(
     if not 0 <= zoom <= 29:
         raise ValueError(f"zoom must be in [0, 29], got {zoom}")
     n = 1 << zoom
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(spark, [], "query_id int, tile string, n_docs long")
-    if state is None:
-        return empty
     tx = GEOTILE_X.format(lon="lon", n=n)
     ty = GEOTILE_Y.format(lat="lat", n=n)
     tile = f"concat('{zoom}/', cast(({tx}) as string), '/', cast(({ty}) as string))"
-    return (
-        _matched_urls(spark, se, state)
-        .join(geo.select("url", "lat", "lon"), "url")
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, tile string, n_docs long",
+        lambda matched: matched.join(geo.select("url", "lat", "lon"), "url")
         .withColumn("tile", F.expr(tile))
         .groupBy("query_id", "tile")
-        .agg(F.count("*").alias("n_docs"))
+        .agg(F.count("*").alias("n_docs")),
     )
 
 
@@ -1356,24 +1302,20 @@ def geohash_grid(
 
     if not 1 <= precision <= 10:
         raise ValueError(f"precision must be in [1, 10], got {precision}")
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(spark, [], "query_id int, geohash string, n_docs long")
-    if state is None:
-        return empty
     lon_i, lat_i, code = geohash_cell_exprs("lon", "lat", precision)
     gh = "concat(" + ", ".join(
         geohash_char_expr(i, precision) for i in range(precision)
     ) + ")"
-    return (
-        _matched_urls(spark, se, state)
-        .join(geo.select("url", "lat", "lon"), "url")
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, geohash string, n_docs long",
+        lambda matched: matched.join(geo.select("url", "lat", "lon"), "url")
         .withColumn("lon_i", F.expr(lon_i))
         .withColumn("lat_i", F.expr(lat_i))
         .withColumn("code", F.expr(code).cast("long"))
         .withColumn("geohash", F.expr(gh))
         .groupBy("query_id", "geohash")
-        .agg(F.count("*").alias("n_docs"))
+        .agg(F.count("*").alias("n_docs")),
     )
 
 
@@ -1394,29 +1336,29 @@ def geo_centroid(
     twins agree bit-for-bit. Same single-shuffle class as
     ``facet_counts``: the only O(matches) rows are the kernel's
     coordinates, the agg is one partial-aggregated groupBy."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(spark, [], "query_id int, n_docs long, lat6c long, lon6c long")
-    if state is None:
-        return empty
-    pts = (
-        _matched_urls(spark, se, state)
-        .join(geo.select("url", "lat", "lon"), "url")
-        .select(
-            "query_id",
-            F.floor(F.col("lat") * 1000000).cast("long").alias("lat6"),
-            F.floor(F.col("lon") * 1000000).cast("long").alias("lon6"),
-        )
-    )
     n = F.count("*")
-    return pts.groupBy("query_id").agg(
-        n.alias("n_docs"),
-        F.floor(F.sum("lat6").cast("double") / n.cast("double"))
-        .cast("long")
-        .alias("lat6c"),
-        F.floor(F.sum("lon6").cast("double") / n.cast("double"))
-        .cast("long")
-        .alias("lon6c"),
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, n_docs long, lat6c long, lon6c long",
+        lambda matched: _geo_points(matched, geo).groupBy("query_id").agg(
+            n.alias("n_docs"),
+            F.floor(F.sum("lat6").cast("double") / n.cast("double"))
+            .cast("long")
+            .alias("lat6c"),
+            F.floor(F.sum("lon6").cast("double") / n.cast("double"))
+            .cast("long")
+            .alias("lon6c"),
+        ),
+    )
+
+
+def _geo_points(matched: DataFrame, geo: DataFrame) -> DataFrame:
+    """Matched rows joined to a (url, lat, lon) dimension as (query_id,
+    lat6, lon6): coordinates integerized to floor(x*1e6) int64."""
+    return matched.join(geo.select("url", "lat", "lon"), "url").select(
+        "query_id",
+        F.floor(F.col("lat") * 1000000).cast("long").alias("lat6"),
+        F.floor(F.col("lon") * 1000000).cast("long").alias("lon6"),
     )
 
 
@@ -1435,31 +1377,17 @@ def geo_bounds(
     int64, bit-identical to the SQL twin by construction. Same
     single-shuffle class as ``geo_centroid``: the only O(matches) rows are
     the kernel's coordinates, the agg is one partial-aggregated groupBy."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(
-        spark,
-        [],
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
         "query_id int, n_docs long, top6 long, bottom6 long, "
         "left6 long, right6 long",
-    )
-    if state is None:
-        return empty
-    pts = (
-        _matched_urls(spark, se, state)
-        .join(geo.select("url", "lat", "lon"), "url")
-        .select(
-            "query_id",
-            F.floor(F.col("lat") * 1000000).cast("long").alias("lat6"),
-            F.floor(F.col("lon") * 1000000).cast("long").alias("lon6"),
-        )
-    )
-    return pts.groupBy("query_id").agg(
-        F.count("*").alias("n_docs"),
-        F.max("lat6").alias("top6"),
-        F.min("lat6").alias("bottom6"),
-        F.min("lon6").alias("left6"),
-        F.max("lon6").alias("right6"),
+        lambda matched: _geo_points(matched, geo).groupBy("query_id").agg(
+            F.count("*").alias("n_docs"),
+            F.max("lat6").alias("top6"),
+            F.min("lat6").alias("bottom6"),
+            F.min("lon6").alias("left6"),
+            F.max("lon6").alias("right6"),
+        ),
     )
 
 
@@ -1545,25 +1473,15 @@ def match_matrix_stats(
     groupBy over the match kernel tail — the ``match_stats`` cost class.
     Degenerate inputs: n=1 or a constant field yields a zero variance —
     corr6 is NULL there (0/0), matching SQL semantics in both engines."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(
-        spark,
-        [],
-        "query_id int, n long, mean_x6 long, mean_y6 long, cov6 long, corr6 long",
+    xy = values.select(
+        "url",
+        F.col("x").cast("long").alias("x"),
+        F.col("y").cast("long").alias("y"),
     )
-    if state is None:
-        return empty
-    sums = (
-        _matched_urls(spark, se, state)
-        .join(
-            values.select(
-                "url",
-                F.col("x").cast("long").alias("x"),
-                F.col("y").cast("long").alias("y"),
-            ),
-            "url",
-        )
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, n long, mean_x6 long, mean_y6 long, cov6 long, corr6 long",
+        lambda matched: matched.join(xy, "url")
         .groupBy("query_id")
         .agg(
             F.count("*").alias("n"),
@@ -1573,16 +1491,16 @@ def match_matrix_stats(
             F.sum(F.col("y") * F.col("y")).alias("syy"),
             F.sum(F.col("x") * F.col("y")).alias("sxy"),
         )
-    )
-    # finishing floats: identical expression text in the SQL twin.
-    return sums.selectExpr(
-        "query_id",
-        "n",
-        "cast(floor(cast(sx as double) / n * 1000000) as bigint) as mean_x6",
-        "cast(floor(cast(sy as double) / n * 1000000) as bigint) as mean_y6",
-        "cast(floor(cast(n * sxy - sx * sy as double) / (cast(n as double) * n) * 1000000) as bigint) as cov6",
-        # nullif: a zero variance must yield NULL, not ANSI divide-by-zero
-        "cast(floor(cast(n * sxy - sx * sy as double) / nullif(sqrt(cast(n * sxx - sx * sx as double)) * sqrt(cast(n * syy - sy * sy as double)), 0.0) * 1000000) as bigint) as corr6",
+        # finishing floats: identical expression text in the SQL twin.
+        .selectExpr(
+            "query_id",
+            "n",
+            "cast(floor(cast(sx as double) / n * 1000000) as bigint) as mean_x6",
+            "cast(floor(cast(sy as double) / n * 1000000) as bigint) as mean_y6",
+            "cast(floor(cast(n * sxy - sx * sy as double) / (cast(n as double) * n) * 1000000) as bigint) as cov6",
+            # nullif: a zero variance must yield NULL, not ANSI divide-by-zero
+            "cast(floor(cast(n * sxy - sx * sy as double) / nullif(sqrt(cast(n * sxx - sx * sx as double)) * sqrt(cast(n * syy - sy * sy as double)), 0.0) * 1000000) as bigint) as corr6",
+        ),
     )
 
 
@@ -1657,58 +1575,55 @@ def match_string_stats(
     the identical float additions in the identical order. Two
     map-side-combined groupBys ((query, char) then query), both over
     alphabet-bounded rows after the first combine."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(
-        spark,
-        [],
+
+    def build(matched: DataFrame) -> DataFrame:
+        keyed = matched.join(values.select("url", "s"), "url")
+        lens = keyed.groupBy("query_id").agg(
+            F.count("*").alias("n"),
+            F.min(F.length("s")).cast("long").alias("min_len"),
+            F.max(F.length("s")).cast("long").alias("max_len"),
+            F.floor(
+                F.sum(F.length("s")).cast("double") / F.count("*") * 1_000_000
+            )
+            .cast("long")
+            .alias("avg_len6"),
+        )
+        chars = (
+            keyed.select(
+                "query_id", F.explode(F.split(F.col("s"), "")).alias("c")
+            )
+            .filter(F.col("c") != "")
+            .groupBy("query_id", "c")
+            .agg(F.count("*").alias("nc"))
+        )
+        ent = (
+            chars.groupBy("query_id")
+            .agg(
+                F.sum("nc").alias("t"),
+                F.array_sort(F.collect_list(F.struct("c", "nc"))).alias("arr"),
+            )
+            .selectExpr(
+                "query_id",
+                # sequential fold in char order — identical text in the twin
+                "cast(floor((log2(cast(t as double)) - aggregate(arr, "
+                "cast(0.0 as double), (acc, e) -> acc + cast(e.nc as double) "
+                "* log2(cast(e.nc as double))) / cast(t as double)) * 1000000) "
+                "as bigint) as entropy6",
+            )
+        )
+        return lens.join(ent, "query_id").select(
+            "query_id", "n", "min_len", "max_len", "avg_len6", "entropy6"
+        )
+
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
         "query_id int, n long, min_len long, max_len long, "
         "avg_len6 long, entropy6 long",
-    )
-    if state is None:
-        return empty
-    matched = _matched_urls(spark, se, state).join(
-        values.select("url", "s"), "url"
-    )
-    lens = matched.groupBy("query_id").agg(
-        F.count("*").alias("n"),
-        F.min(F.length("s")).cast("long").alias("min_len"),
-        F.max(F.length("s")).cast("long").alias("max_len"),
-        F.floor(
-            F.sum(F.length("s")).cast("double") / F.count("*") * 1_000_000
-        )
-        .cast("long")
-        .alias("avg_len6"),
-    )
-    chars = (
-        matched.select(
-            "query_id", F.explode(F.split(F.col("s"), "")).alias("c")
-        )
-        .filter(F.col("c") != "")
-        .groupBy("query_id", "c")
-        .agg(F.count("*").alias("nc"))
-    )
-    ent = (
-        chars.groupBy("query_id")
-        .agg(
-            F.sum("nc").alias("t"),
-            F.array_sort(F.collect_list(F.struct("c", "nc"))).alias("arr"),
-        )
-        .selectExpr(
-            "query_id",
-            # sequential fold in char order — identical text in the twin
-            "cast(floor((log2(cast(t as double)) - aggregate(arr, "
-            "cast(0.0 as double), (acc, e) -> acc + cast(e.nc as double) "
-            "* log2(cast(e.nc as double))) / cast(t as double)) * 1000000) "
-            "as bigint) as entropy6",
-        )
-    )
-    return lens.join(ent, "query_id").select(
-        "query_id", "n", "min_len", "max_len", "avg_len6", "entropy6"
+        build,
     )
 
 
-def _value_histogram(spark, se, state, values) -> DataFrame:
+def _value_histogram(matched: DataFrame, values: DataFrame) -> DataFrame:
     """Shared head for the selection-by-rank aggs (percentiles / boxplot /
     MAD): the match set joined to a (url, val) dimension and collapsed to
     a per-query VALUE HISTOGRAM (query_id, v, c) with a cumulative count
@@ -1719,8 +1634,7 @@ def _value_histogram(spark, se, state, values) -> DataFrame:
 
     val = F.col("val").cast("double")
     hist = (
-        _matched_urls(spark, se, state)
-        .join(values.select("url", "val"), "url")
+        matched.join(values.select("url", "val"), "url")
         .groupBy("query_id", val.alias("v"))
         .agg(F.count("*").alias("c"))
     )
@@ -1772,34 +1686,29 @@ def match_boxplot(
     and quartile exact in a double; 1.5*IQR is dyadic, so the whisker
     comparisons and the floor(x*1e6) departures round identically across
     engines."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    ddl = (
-        "query_id int, n_docs long, min6 long, max6 long, q16 long, "
-        "q26 long, q36 long, lo6 long, hi6 long"
-    )
-    empty = local_df(spark, [], ddl)
-    if state is None:
-        return empty
-    cum = _value_histogram(spark, se, state, values)
-    q = (
-        cum.withColumn("q1", _disc_over("v", 25))
-        .withColumn("q2", _disc_over("v", 50))
-        .withColumn("q3", _disc_over("v", 75))
-    )
     iqr = F.col("q3") - F.col("q1")
     lo_b = F.col("q1") - F.lit(1.5) * iqr
     hi_b = F.col("q3") + F.lit(1.5) * iqr
     f6 = lambda c: F.floor(c * 1_000_000).cast("long")  # noqa: E731
-    return q.groupBy("query_id").agg(
-        F.max("n").alias("n_docs"),
-        f6(F.min("v")).alias("min6"),
-        f6(F.max("v")).alias("max6"),
-        f6(F.max("q1")).alias("q16"),
-        f6(F.max("q2")).alias("q26"),
-        f6(F.max("q3")).alias("q36"),
-        f6(F.min(F.when(F.col("v") >= lo_b, F.col("v")))).alias("lo6"),
-        f6(F.max(F.when(F.col("v") <= hi_b, F.col("v")))).alias("hi6"),
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, n_docs long, min6 long, max6 long, q16 long, "
+        "q26 long, q36 long, lo6 long, hi6 long",
+        lambda matched: _value_histogram(matched, values)
+        .withColumn("q1", _disc_over("v", 25))
+        .withColumn("q2", _disc_over("v", 50))
+        .withColumn("q3", _disc_over("v", 75))
+        .groupBy("query_id")
+        .agg(
+            F.max("n").alias("n_docs"),
+            f6(F.min("v")).alias("min6"),
+            f6(F.max("v")).alias("max6"),
+            f6(F.max("q1")).alias("q16"),
+            f6(F.max("q2")).alias("q26"),
+            f6(F.max("q3")).alias("q36"),
+            f6(F.min(F.when(F.col("v") >= lo_b, F.col("v")))).alias("lo6"),
+            f6(F.max(F.when(F.col("v") <= hi_b, F.col("v")))).alias("hi6"),
+        ),
     )
 
 
@@ -1824,33 +1733,28 @@ def match_mad(
     arithmetic — bit-identical to the SQL twin."""
     from pyspark.sql import Window
 
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(spark, [], "query_id int, n_docs long, med6 long, mad6 long")
-    if state is None:
-        return empty
-    cum = _value_histogram(spark, se, state, values)
-    devs = (
-        cum.withColumn("med", _disc_over("v", 50))
-        .groupBy("query_id", F.abs(F.col("v") - F.col("med")).alias("dv"))
-        .agg(F.sum("c").alias("c"), F.max("n").alias("n"), F.max("med").alias("med"))
-    )
     wcum = (
         Window.partitionBy("query_id")
         .orderBy("dv")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cum2 = devs.withColumn("cum", F.sum("c").over(wcum))
     tgt = F.expr("(cast(50 as bigint) * n + 99) div 100")
     f6 = lambda c: F.floor(c * 1_000_000).cast("long")  # noqa: E731
-    return (
-        cum2.filter(F.col("cum") >= tgt)
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, n_docs long, med6 long, mad6 long",
+        lambda matched: _value_histogram(matched, values)
+        .withColumn("med", _disc_over("v", 50))
+        .groupBy("query_id", F.abs(F.col("v") - F.col("med")).alias("dv"))
+        .agg(F.sum("c").alias("c"), F.max("n").alias("n"), F.max("med").alias("med"))
+        .withColumn("cum", F.sum("c").over(wcum))
+        .filter(F.col("cum") >= tgt)
         .groupBy("query_id")
         .agg(
             F.max("n").alias("n_docs"),
             f6(F.max("med")).alias("med6"),
             f6(F.min("dv")).alias("mad6"),
-        )
+        ),
     )
 
 
@@ -1877,32 +1781,31 @@ def match_t_test(
     shared verbatim with the twin. Degenerate groups (n <= 1, zero
     pooled variance) yield NULL t/df via nullif — ANSI-safe in Spark 4,
     same semantics in DuckDB."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    ddl = (
-        "query_id int, n_a long, n_b long, mean_a6 long, mean_b6 long, "
-        "t6 long, df6 long"
-    )
-    empty = local_df(spark, [], ddl)
-    if state is None:
-        return empty
     v = F.col("val").cast("double")
     in_a = F.col("grp") == 0
-    agg = (
-        _matched_urls(spark, se, state)
-        .join(values.select("url", "val", "grp"), "url")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.when(in_a, 1).otherwise(0)).cast("long").alias("na"),
-            F.sum(F.when(~in_a, 1).otherwise(0)).cast("long").alias("nb"),
-            F.sum(F.when(in_a, v).otherwise(0.0)).alias("sa"),
-            F.sum(F.when(~in_a, v).otherwise(0.0)).alias("sb"),
-            F.sum(F.when(in_a, v * v).otherwise(0.0)).alias("ssa"),
-            F.sum(F.when(~in_a, v * v).otherwise(0.0)).alias("ssb"),
-        )
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, n_a long, n_b long, mean_a6 long, mean_b6 long, "
+        "t6 long, df6 long",
+        lambda matched: _welch(
+            matched.join(values.select("url", "val", "grp"), "url")
+            .groupBy("query_id")
+            .agg(
+                F.sum(F.when(in_a, 1).otherwise(0)).cast("long").alias("na"),
+                F.sum(F.when(~in_a, 1).otherwise(0)).cast("long").alias("nb"),
+                F.sum(F.when(in_a, v).otherwise(0.0)).alias("sa"),
+                F.sum(F.when(~in_a, v).otherwise(0.0)).alias("sb"),
+                F.sum(F.when(in_a, v * v).otherwise(0.0)).alias("ssa"),
+                F.sum(F.when(~in_a, v * v).otherwise(0.0)).alias("ssb"),
+            )
+        ),
     )
-    # finishing chain — identical expression layering in the twin (one
-    # CTE per select here), one rounding per op
+
+
+def _welch(agg: DataFrame) -> DataFrame:
+    """``match_t_test``'s finishing chain over the per-query sufficient
+    statistics — identical expression layering in the twin (one CTE per
+    select here), one rounding per op."""
     fin = agg.selectExpr(
         "query_id",
         "na",
@@ -1990,11 +1893,8 @@ def significant_terms(
 
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    empty = local_df(
-        spark, [], "query_id int, term string, fg long, bg long, lift6 long"
-    )
-    if state is None:
-        return empty
+    if not state.payload:
+        return se._empty_df("query_id int, term string, fg long, bg long, lift6 long")
     # (query, own-term) exclusion relation — tiny, broadcast. A term the
     # index lacks never reaches fg, so the head's present negations suffice.
     head = state.head
@@ -2005,7 +1905,7 @@ def significant_terms(
     ]
     own = local_df(spark, own_rows or [(-1, "")], "query_id int, term string")
 
-    matched = _matched_urls(spark, se, state)
+    matched = _matched_urls(se, state)
     if sample_hex is not None:
         digits = sorted(set(sample_hex.lower()))
         if not digits or not set(digits) <= set("0123456789abcdef"):
@@ -2025,7 +1925,7 @@ def significant_terms(
     ext = spark.read.parquet(se.paths.docs_extracted).select(
         F.col("part_id").cast("int").alias("part_id"), "url", "text"
     )
-    parts = _run_parts(se, state.runs)
+    parts = _touched_parts(se, state.present)
     if parts is not None:
         ext = ext.filter(F.col("part_id").isin(parts))
     doc_terms = matched.join(ext, ["part_id", "url"]).select(
@@ -2045,8 +1945,8 @@ def significant_terms(
         # Match-set SIZE via the cheap count kernel (_count_matches), NOT
         # a count over `matched`: the latter would duplicate the
         # URL-joined kernel lineage (Spark recomputes a branched DAG),
-        # doubling the dominant cost at scale. O(cells) shuffled rows.
-        n_matched = _count_matches(state).withColumnRenamed("n", "n_matched")
+        # doubling the dominant cost at scale. O(cells) kernel rows.
+        n_matched = _count_matches(se, state).withColumnRenamed("n", "n_matched")
     else:
         # Sampled size must count the SAMPLE — the url-hash filter only
         # exists post-join, so this forks the kernel lineage (docstring:
@@ -2113,38 +2013,40 @@ def search_sorted_by(
     (offset paging here would deepen them to offset+k). A query id
     without a cursor entry pages from the top (ES semantics for a
     missing search_after)."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
     kt = sort_keys.schema["sort_key"].dataType.simpleString()
-    empty = local_df(spark, [], f"query_id int, rank int, url string, sort_key {kt}")
-    if state is None:
-        return empty
     order = (
         F.col("sort_key").desc() if descending else F.col("sort_key").asc(),
         F.col("url").asc(),
     )
-    keyed = _matched_urls(spark, se, state).join(
-        sort_keys.select("url", "sort_key"), "url"
+
+    def build(matched: DataFrame) -> DataFrame:
+        keyed = matched.join(sort_keys.select("url", "sort_key"), "url")
+        if search_after:
+            cur = local_df(
+                spark,
+                [(int(q), sk, u) for q, (sk, u) in sorted(search_after.items())],
+                f"query_id int, cur_key {kt}, cur_url string",
+            )
+            keyed = keyed.join(F.broadcast(cur), "query_id", "left")
+            past = (
+                (F.col("sort_key") < F.col("cur_key"))
+                if descending
+                else (F.col("sort_key") > F.col("cur_key"))
+            ) | (
+                (F.col("sort_key") == F.col("cur_key"))
+                & (F.col("url") > F.col("cur_url"))
+            )
+            keyed = keyed.filter(F.col("cur_key").isNull() | past).drop(
+                "cur_key", "cur_url"
+            )
+        return _two_phase_rank(
+            keyed, order, k, ["query_id", "rank", "url", "sort_key"]
+        )
+
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        f"query_id int, rank int, url string, sort_key {kt}", build,
     )
-    if search_after:
-        cur = local_df(
-            spark,
-            [(int(q), sk, u) for q, (sk, u) in sorted(search_after.items())],
-            f"query_id int, cur_key {kt}, cur_url string",
-        )
-        keyed = keyed.join(F.broadcast(cur), "query_id", "left")
-        past = (
-            (F.col("sort_key") < F.col("cur_key"))
-            if descending
-            else (F.col("sort_key") > F.col("cur_key"))
-        ) | (
-            (F.col("sort_key") == F.col("cur_key"))
-            & (F.col("url") > F.col("cur_url"))
-        )
-        keyed = keyed.filter(F.col("cur_key").isNull() | past).drop(
-            "cur_key", "cur_url"
-        )
-    return _two_phase_rank(keyed, order, k, ["query_id", "rank", "url", "sort_key"])
 
 
 def facet_stats(
@@ -2169,21 +2071,13 @@ def facet_stats(
     by the count BEFORE flooring — the engine-wide one-rounding rule; sums
     over integer-valued attributes are order-independent (exact doubles
     below 2^53), which is what makes the fixed-point hash portable."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(
-        spark,
-        [],
-        "query_id int, facet string, n_docs long, n_vals long, sum6 long, "
-        "min6 long, max6 long, avg6 long",
-    )
-    if state is None:
-        return empty
     val = F.col("val").cast("double")
     f6 = lambda c: F.floor(c * 1_000_000).cast("long")  # noqa: E731
-    return (
-        _matched_urls(spark, se, state)
-        .join(facets.select("url", "facet"), "url")
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, facet string, n_docs long, n_vals long, sum6 long, "
+        "min6 long, max6 long, avg6 long",
+        lambda matched: matched.join(facets.select("url", "facet"), "url")
         .join(values.select("url", "val"), "url")
         .groupBy("query_id", "facet")
         .agg(
@@ -2193,7 +2087,7 @@ def facet_stats(
             f6(F.min(val)).alias("min6"),
             f6(F.max(val)).alias("max6"),
             f6(F.sum(val) / F.count("*")).alias("avg6"),
-        )
+        ),
     )
 
 
@@ -2223,39 +2117,19 @@ def match_percentiles(
     trade (constant memory, approximate) maps to ``approx_percentile`` —
     documented, not taken: the histogram form is already shuffle-light and
     exactness keeps the oracle byte-comparable. Percents outside (0, 100]
-    raise; docs absent from ``values`` drop."""
-    from pyspark.sql import Window
-
+    raise; docs absent from ``values`` drop. The value histogram is
+    ``_value_histogram``'s: n_docs is a whole-partition window over it, not
+    a second groupBy (a branched DAG would re-run the match kernel)."""
     ps = sorted({int(p) for p in percents})
     if not ps or ps[0] <= 0 or ps[-1] > 100:
         raise ValueError(f"percents must be ints in (0, 100], got {percents}")
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(spark, [], "query_id int, pct int, n_docs long, pct6 long")
-    if state is None:
-        return empty
-    val = F.col("val").cast("double")
-    hist = (
-        _matched_urls(spark, se, state)
-        .join(values.select("url", "val"), "url")
-        .groupBy("query_id", val.alias("v"))
-        .agg(F.count("*").alias("c"))
-    )
-    w = (
-        Window.partitionBy("query_id")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # n_docs as a whole-partition window over the SAME histogram relation
-    # (not a second groupBy off `hist`): a branched DAG would recompute
-    # the whole match kernel for the count side — one lineage, one kernel
-    # pass, and both windows share the per-query exchange.
-    cum = hist.withColumn("cum", F.sum("c").over(w)).withColumn(
-        "n_docs", F.sum("c").over(Window.partitionBy("query_id"))
-    )
     pdf = local_df(spark, [(p,) for p in ps], "pct int")
-    return (
-        cum.crossJoin(F.broadcast(pdf))
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, pct int, n_docs long, pct6 long",
+        lambda matched: _value_histogram(matched, values)
+        .withColumnRenamed("n", "n_docs")
+        .crossJoin(F.broadcast(pdf))
         .withColumn(
             "tgt", F.expr("(cast(pct as bigint) * n_docs + 99) div 100")
         )
@@ -2265,7 +2139,7 @@ def match_percentiles(
             F.first("n_docs").alias("n_docs"),
             F.floor(F.min("v") * 1_000_000).cast("long").alias("pct6"),
         )
-        .select("query_id", "pct", "n_docs", "pct6")
+        .select("query_id", "pct", "n_docs", "pct6"),
     )
 
 
@@ -2352,21 +2226,15 @@ def match_percentile_ranks(
     ats = sorted({int(a) for a in at_values})
     if not ats:
         raise ValueError("at_values must be a non-empty list of ints")
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(spark, [], "query_id int, at int, n_docs long, rank6 long")
-    if state is None:
-        return empty
     val = F.col("val").cast("double")
-    hist = (
-        _matched_urls(spark, se, state)
-        .join(values.select("url", "val"), "url")
+    adf = local_df(spark, [(a,) for a in ats], "at int")
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, at int, n_docs long, rank6 long",
+        lambda matched: matched.join(values.select("url", "val"), "url")
         .groupBy("query_id", val.alias("v"))
         .agg(F.count("*").alias("c"))
-    )
-    adf = local_df(spark, [(a,) for a in ats], "at int")
-    return (
-        hist.crossJoin(F.broadcast(adf))
+        .crossJoin(F.broadcast(adf))
         .groupBy("query_id", "at")
         .agg(
             F.sum(
@@ -2376,7 +2244,7 @@ def match_percentile_ranks(
             F.sum("c").alias("n_docs"),
         )
         .withColumn("rank6", F.expr("(cnt * 100000000) div n_docs"))
-        .select("query_id", "at", "n_docs", "rank6")
+        .select("query_id", "at", "n_docs", "rank6"),
     )
 
 
@@ -2411,36 +2279,37 @@ def composite_buckets(
 
     if size < 1:
         raise ValueError(f"size must be >= 1, got {size}")
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(spark, [], "query_id int, facet string, n_docs long")
-    if state is None:
-        return empty
-    counts = (
-        _matched_urls(spark, se, state)
-        .join(facets, "url")
-        .groupBy("query_id", "facet")
-        .agg(F.count("*").alias("n_docs"))
-    )
-    if after:
-        cur = local_df(
-            spark,
-            [(int(q), f) for q, f in sorted(after.items())],
-            "query_id int, cur_facet string",
-        )
-        counts = (
-            counts.join(F.broadcast(cur), "query_id", "left")
-            .filter(
-                F.col("cur_facet").isNull()
-                | (F.col("facet") > F.col("cur_facet"))
-            )
-            .drop("cur_facet")
-        )
     w = Window.partitionBy("query_id").orderBy(F.asc("facet"))
-    return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= size)
-        .select("query_id", "facet", "n_docs")
+
+    def build(matched: DataFrame) -> DataFrame:
+        counts = (
+            matched.join(facets, "url")
+            .groupBy("query_id", "facet")
+            .agg(F.count("*").alias("n_docs"))
+        )
+        if after:
+            cur = local_df(
+                spark,
+                [(int(q), f) for q, f in sorted(after.items())],
+                "query_id int, cur_facet string",
+            )
+            counts = (
+                counts.join(F.broadcast(cur), "query_id", "left")
+                .filter(
+                    F.col("cur_facet").isNull()
+                    | (F.col("facet") > F.col("cur_facet"))
+                )
+                .drop("cur_facet")
+            )
+        return (
+            counts.withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") <= size)
+            .select("query_id", "facet", "n_docs")
+        )
+
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, facet string, n_docs long", build,
     )
 
 
@@ -2467,16 +2336,6 @@ def adjacency_counts(
     out. The pre-aggregation exclusion contract applies per query inside
     the kernel as always (a doc tombstoned or negated for qa simply
     lacks qa in its set)."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(spark, [], "qa int, qb int, n_docs long")
-    if state is None:
-        return empty
-    per_doc = (
-        _matched_urls(spark, se, state)
-        .groupBy("part_id", "url")
-        .agg(F.sort_array(F.collect_set("query_id")).alias("qs"))
-    )
     pairs = F.explode(
         F.expr(
             "flatten(transform(qs, (x, i) -> "
@@ -2484,11 +2343,15 @@ def adjacency_counts(
             "y -> struct(x as qa, y as qb))))"
         )
     ).alias("p")
-    return (
-        per_doc.select(pairs)
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "qa int, qb int, n_docs long",
+        lambda matched: matched.groupBy("part_id", "url")
+        .agg(F.sort_array(F.collect_set("query_id")).alias("qs"))
+        .select(pairs)
         .select(F.col("p.qa").alias("qa"), F.col("p.qb").alias("qb"))
         .groupBy("qa", "qb")
-        .agg(F.count("*").alias("n_docs"))
+        .agg(F.count("*").alias("n_docs")),
     )
 
 
@@ -2559,25 +2422,22 @@ def match_cardinality_hll(
     scale keeps the sketch and drops the audit column. ``values`` is a
     (url, v) dimension with v ALREADY RENDERED to string — hashing bytes,
     not floats, keeps every engine's input identical."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    ddl = (
+
+    def build(matched: DataFrame) -> DataFrame:
+        vals = matched.join(values.select("url", "v"), "url")
+        counts = vals.groupBy("query_id").agg(
+            F.count("*").alias("n_docs"),
+            F.countDistinct("v").alias("n_exact"),
+        )
+        return counts.join(_hll_agg(vals, ["query_id"]), "query_id").select(
+            "query_id", "n_docs", "n_exact", "zeros", "s53", "est6"
+        )
+
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
         "query_id int, n_docs long, n_exact long, zeros long, s53 long, "
-        "est6 long"
-    )
-    empty = local_df(spark, [], ddl)
-    if state is None:
-        return empty
-    vals = _matched_urls(spark, se, state).join(
-        values.select("url", "v"), "url"
-    )
-    counts = vals.groupBy("query_id").agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct("v").alias("n_exact"),
-    )
-    fin = _hll_agg(vals, ["query_id"])
-    return counts.join(fin, "query_id").select(
-        "query_id", "n_docs", "n_exact", "zeros", "s53", "est6"
+        "est6 long",
+        build,
     )
 
 
@@ -2841,19 +2701,11 @@ def date_histogram_bucket_script(
             f"interval must be one of {sorted(_DATE_HISTO_FMT)}, got "
             f"{interval!r}"
         )
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(
-        spark,
-        [],
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
         "query_id int, bucket string, n_docs long, sum_chars long, "
         "chars_per_doc6 long",
-    )
-    if state is None:
-        return empty
-    return (
-        _matched_urls(spark, se, state)
-        .join(dates.select("url", "d"), "url")
+        lambda matched: matched.join(dates.select("url", "d"), "url")
         .join(values.select("url", "v"), "url")
         .withColumn("bucket", F.date_format("d", fmt))
         .groupBy("query_id", "bucket")
@@ -2868,7 +2720,7 @@ def date_histogram_bucket_script(
                 / F.col("n_docs")
                 * 1_000_000
             ).cast("long"),
-        )
+        ),
     )
 
 
@@ -2895,17 +2747,13 @@ def constant_score(
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    empty = local_df(spark, [], "query_id int, rank int, url string, score6 long")
-    if state is None:
-        return empty
     score6 = int(math.floor(boost * 1_000_000))
     wpart = Window.partitionBy("query_id", "part_id").orderBy(F.asc("url"))
     wq = Window.partitionBy("query_id").orderBy(F.asc("url"))
-    return (
-        _matched_urls(spark, se, state)
-        .withColumn("_pr", F.row_number().over(wpart))
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, rank int, url string, score6 long",
+        lambda matched: matched.withColumn("_pr", F.row_number().over(wpart))
         .filter(F.col("_pr") <= k)
         .withColumn("rank", F.row_number().over(wq))
         .filter(F.col("rank") <= k)
@@ -2914,7 +2762,7 @@ def constant_score(
             "rank",
             "url",
             F.lit(score6).cast("long").alias("score6"),
-        )
+        ),
     )
 
 
@@ -2961,8 +2809,8 @@ def rank_eval(
     )
     se = get_searcher(spark, index_dir, cell_parts)
     state = _match_state(se, queries)
-    if state is None:
-        return local_df(spark, [], out_ddl)
+    if not state.payload:
+        return se._empty_df(out_ddl)
     ratings = _match_coords(se, state, rated=True)
     grade_rows = ratings.groupBy("query_id", "rating").count().collect()
     top = search(
@@ -2971,7 +2819,7 @@ def rank_eval(
     top_rows = top.select("query_id", "rank", "url").collect()
     top_urls = sorted({r["url"] for r in top_rows})
     if not top_urls:
-        return local_df(spark, [], out_ddl)
+        return se._empty_df(out_ddl)
     ext = (
         spark.read.parquet(se.paths.docs_extracted)
         .select("part_id", "local_pos", "url")
@@ -3197,55 +3045,55 @@ def variable_width_histogram(
 
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    se = get_searcher(spark, index_dir, cell_parts)
-    state = _match_state(se, queries)
-    ddl = (
-        "query_id int, cluster long, n_docs long, vmin long, vmax long, "
-        "mean6 long"
-    )
-    if state is None:
-        return local_df(spark, [], ddl)
-    vals = (
-        _matched_urls(spark, se, state)
-        .join(values.select("url", "val"), "url")
-        .select("query_id", F.col("val").cast("long").alias("val"))
-    )
-    dv = vals.distinct()
     w_ord = Window.partitionBy("query_id").orderBy(F.asc("val"))
-    gaps = dv.withColumn("gap", F.col("val") - F.lag("val").over(w_ord))
     w_gap = Window.partitionBy("query_id").orderBy(
         F.desc("gap"), F.asc("val")
     )
-    bset = (
-        gaps.filter(F.col("gap").isNotNull())
-        .withColumn("grank", F.row_number().over(w_gap))
-        .filter(F.col("grank") <= n_buckets - 1)
-        .select("query_id", "val", F.lit(1).alias("is_b"))
-    )
     w_run = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cids = (
-        dv.join(bset, ["query_id", "val"], "left")
-        .withColumn("b", F.coalesce(F.col("is_b"), F.lit(0)))
-        .withColumn("cluster", (F.sum("b").over(w_run) + 1).cast("long"))
-        .select("query_id", "val", "cluster")
-    )
     n = F.count("*")
-    return (
-        vals.join(cids, ["query_id", "val"])
-        .groupBy("query_id", "cluster")
-        .agg(
-            n.alias("n_docs"),
-            F.min("val").alias("vmin"),
-            F.max("val").alias("vmax"),
-            # a decimal(38) sum: sum * 1e6 overflows a long once the
-            # sum passes ~9.2e12, and is exact as the twin's HUGEINT
-            F.floor(
-                (F.sum(F.col("val").cast("decimal(38,0)")) * F.lit(1000000)).cast(
-                    "double"
-                )
-                / n.cast("double")
-            )
-            .cast("long")
-            .alias("mean6"),
+
+    def build(matched: DataFrame) -> DataFrame:
+        vals = matched.join(values.select("url", "val"), "url").select(
+            "query_id", F.col("val").cast("long").alias("val")
         )
+        dv = vals.distinct()
+        bset = (
+            dv.withColumn("gap", F.col("val") - F.lag("val").over(w_ord))
+            .filter(F.col("gap").isNotNull())
+            .withColumn("grank", F.row_number().over(w_gap))
+            .filter(F.col("grank") <= n_buckets - 1)
+            .select("query_id", "val", F.lit(1).alias("is_b"))
+        )
+        cids = (
+            dv.join(bset, ["query_id", "val"], "left")
+            .withColumn("b", F.coalesce(F.col("is_b"), F.lit(0)))
+            .withColumn("cluster", (F.sum("b").over(w_run) + 1).cast("long"))
+            .select("query_id", "val", "cluster")
+        )
+        return (
+            vals.join(cids, ["query_id", "val"])
+            .groupBy("query_id", "cluster")
+            .agg(
+                n.alias("n_docs"),
+                F.min("val").alias("vmin"),
+                F.max("val").alias("vmax"),
+                # a decimal(38) sum: sum * 1e6 overflows a long once the
+                # sum passes ~9.2e12, and is exact as the twin's HUGEINT
+                F.floor(
+                    (
+                        F.sum(F.col("val").cast("decimal(38,0)"))
+                        * F.lit(1000000)
+                    ).cast("double")
+                    / n.cast("double")
+                )
+                .cast("long")
+                .alias("mean6"),
+            )
+        )
+
+    return _matched_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, cluster long, n_docs long, vmin long, vmax long, "
+        "mean6 long",
+        build,
     )

@@ -220,11 +220,13 @@ class Searcher:
         return ts
 
     def postings_runs(self, terms: list[str]) -> DataFrame:
-        """The committed postings runs of ``terms``: the scan reads only the
-        terms' hash-bucket dirs (partition pruning), pushes the term list
-        to parquet row groups, and on streamed indexes keeps only the
-        committed deltas (a crashed refresh's runs hold docIDs beyond the
-        committed grid and norms)."""
+        """The committed postings runs of ``terms`` as a Spark scan, read
+        only for Iceberg-stored postings (``_run_cells``, ``_touched_parts``)
+        and by explain; parquet queries read runs with pyarrow. The scan
+        reads only the terms' hash-bucket dirs (partition pruning), pushes
+        the term list to parquet row groups, and on streamed indexes keeps
+        only the committed deltas (a crashed refresh's runs hold docIDs
+        beyond the committed grid and norms)."""
         buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
         runs = read_index_runs(
             self.spark, self.paths.postings, self.n_buckets, self.iceberg_table
@@ -358,11 +360,13 @@ def search(
     retrieval parity: /root/reference/pageindex/utils.py:554-564 returns
     node text, not just ids) — same pruned partition read, one extra column.
 
-    ``prune_norms`` is a no-op on parquet indexes: each scoring task reads
-    only its own cells' norms rows. Iceberg-stored postings still score
-    through a slices/norms cogroup; there the flag filters the norms side
-    to the build partitions the pruned runs touch (one metadata-only job)
-    before it shuffles. Results are identical either way (pinned by test).
+    ``prune_norms`` changes no scoring read on parquet indexes: each
+    scoring task reads only its own cells' norms rows (the flag costs one
+    driver-side read of the runs' docID ranges). Iceberg-stored postings
+    still score through a slices/norms cogroup; there the flag filters the
+    norms side to the build partitions the pruned runs touch (one
+    metadata-only job) before it shuffles. Results are identical either
+    way (pinned by test).
     """
     return get_searcher(spark, index_dir, cell_parts).search(
         queries, k, mode, fixed_point, with_text, prune_norms=prune_norms,
@@ -925,14 +929,19 @@ def search_multi_field(
     )
 
 
+# The committed extracts' columns, the same in every layout. Reading with
+# this schema plans the scan without Spark's schema-inference job.
+_EXTRACTS_DDL = "part_id int, local_pos long, url string, text string, doc_len long"
+
+
 def _with_urls(
     se: Searcher, df: DataFrame, parts: list[int] | None, col: str = "url"
 ) -> DataFrame:
-    """``raw_scored`` rows joined on (part_id, local_pos) to the extracts'
-    ``col``, read only from the build partitions in ``parts`` (the prune
-    list ``raw_scored`` returns) when those are under half of them."""
-    ext = se.spark.read.parquet(se.paths.docs_extracted).select(
-        F.col("part_id").cast("int").alias("part_id"), "local_pos", col
+    """(part_id, local_pos) rows (``raw_scored``'s, the match kernels')
+    joined to the extracts' ``col``, read only from the build partitions in
+    ``parts`` (``_touched_parts``) when those are under half of them."""
+    ext = se.spark.read.schema(_EXTRACTS_DDL).parquet(se.paths.docs_extracted).select(
+        "part_id", "local_pos", col
     )
     if parts is not None and 2 * len(parts) < len(se.grid_parts):
         ext = ext.filter(F.col("part_id").isin(sorted(parts)))
@@ -2128,9 +2137,10 @@ def search_snippets(
 
 
 def _slice_mapper(grid: np.ndarray):
-    """Map-side run -> docID-grid-cell slicer for ``mapInArrow`` (shared by
-    the top-k search plan, the full-match count/facet plans in
-    plans/hits.py and the local fast path). ``grid`` is the cell grid."""
+    """Run -> docID-grid-cell slicer over Arrow batches: the per-cell reader
+    ``_score_cells`` calls it on every path, and ``_cell_slices`` runs it as
+    a ``mapInArrow`` over Iceberg-stored postings. ``grid`` is the cell
+    grid."""
 
     def slice_runs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -2167,9 +2177,10 @@ def _slice_mapper(grid: np.ndarray):
 
 
 def _cell_slices(se: Searcher, runs: DataFrame) -> DataFrame:
-    """Postings runs -> per-cell slices (``_SLICE_DDL``). "delta" exists
-    only on streamed indexes and drop() is lenient, so batch indexes pass
-    through unchanged; runs across deltas stay docID-disjoint per term."""
+    """A Spark postings runs scan -> per-cell slices (``_SLICE_DDL``): the
+    Iceberg branch of ``_run_cells``. "delta" exists only on streamed
+    indexes and drop() is lenient, so batch indexes pass through unchanged;
+    runs across deltas stay docID-disjoint per term."""
     return runs.drop("bucket", "run_id", "n_bytes", "delta").mapInArrow(
         _slice_mapper(se.cell_grid), schema=_SLICE_DDL
     )
@@ -2288,7 +2299,8 @@ class _CellSource(NamedTuple):
     """What ``_score_cells`` reads, as plain picklable values (no Searcher,
     no SparkSession): the postings root and the query's pruned bucket dirs
     (``_postings_bucket_dirs``), its present terms, the cell grid, build
-    partitions per cell and the committed norms files."""
+    partitions per cell and the committed norms files (none for kernels
+    that only match: then no norms are read)."""
 
     postings: str
     bucket_dirs: list[str]
@@ -2326,7 +2338,8 @@ def _score_cells(
     pieces whose slicer cell id lies in the range; the runs' docID-range
     filter only prunes the read (it drops runs with no block in these
     cells). ``norms_pdf`` (every cell's rows, the local path's cache)
-    saves the norms read. Returns the scored rows, or None."""
+    saves the norms read; without norms files ``score_cell`` gets None for
+    them. Returns the scored rows, or None."""
     grid = src.cell_grid
     filters = [("term", "in", src.present)]
     if c0 > 0:
@@ -2338,7 +2351,7 @@ def _score_cells(
     if not slices:
         return None
     slices_pdf = pa.Table.from_batches(slices).to_pandas()
-    if norms_pdf is None:
+    if norms_pdf is None and src.norms_files:
         norms_pdf = _read_norms(
             src.norms_files, src.cell_parts,
             (c0 * src.cell_parts, (c1 + 1) * src.cell_parts),
@@ -2347,7 +2360,8 @@ def _score_cells(
     for cell, s_pdf in slices_pdf.groupby("cell"):
         if not c0 <= cell <= c1:  # a straddling run's pieces in other cells
             continue
-        res = score_cell(s_pdf, norms_pdf[norms_pdf["cell"] == cell])
+        cell_norms = None if norms_pdf is None else norms_pdf[norms_pdf["cell"] == cell]
+        res = score_cell(s_pdf, cell_norms)
         if len(res):
             out.append(res)
     return pd.concat(out, ignore_index=True) if out else None
@@ -2414,18 +2428,72 @@ def _parts_for_runs(
     return parts if len(parts) <= 8192 else None
 
 
-def _run_parts(se: Searcher, runs: DataFrame, cell_parts: int = 1) -> list[int] | None:
-    """``_parts_for_runs`` over the runs' docID ranges, at the granularity
-    of ``cell_parts`` build partitions. The ranges come from the run
-    METADATA (one column-pruned job: the blobs never load, and collecting
-    from the slices would re-execute the slicing job for a second action)."""
-    ranges = [
-        (int(r["first_doc"]), int(r["last_doc"]))
-        for r in runs.select("first_doc", "last_doc").collect()
-    ]
+def _touched_parts(
+    se: Searcher, present: list[str], cell_parts: int = 1
+) -> list[int] | None:
+    """The build partitions the committed runs of ``present`` can touch
+    (``_parts_for_runs`` at the granularity of ``cell_parts`` partitions),
+    from the runs' ``(first_doc, last_doc)`` alone: a driver-side pyarrow
+    read of those two columns on parquet indexes, one column-pruned Spark
+    collect for Iceberg-stored postings. The blobs never load."""
+    if se.iceberg_table is not None:
+        rows = se.postings_runs(present).select("first_doc", "last_doc").collect()
+    else:
+        buckets = sorted({term_bucket(t, se.n_buckets) for t in present})
+        rows = _pruned_parquet_rows(
+            se.paths.postings, _postings_bucket_dirs(se, buckets),
+            ["first_doc", "last_doc"], filters=[("term", "in", present)],
+        )
     return _parts_for_runs(
-        ranges, se.grid_parts[::cell_parts], cell_parts, len(se.grid_parts)
+        [(int(r["first_doc"]), int(r["last_doc"])) for r in rows],
+        se.grid_parts[::cell_parts], cell_parts, len(se.grid_parts),
     )
+
+
+def _run_cells(
+    se: Searcher,
+    present: list[str],
+    cell_fn,
+    schema: pa.Schema,
+    norms: bool = True,
+    norm_parts: list[int] | None = None,
+    local: bool = False,
+) -> DataFrame | list[dict]:
+    """The one way a query's postings reach a per-cell function:
+    ``cell_fn(slices_pdf, norms_pdf)`` runs once per docID cell holding
+    runs of the ``present`` terms and returns rows of ``schema``.
+    ``norms=False`` reads no norms (``cell_fn`` gets None for them).
+
+    Parquet indexes run the per-cell reader ``_score_cells``: on the driver
+    when ``local`` and the pruned inputs fit ``LOCAL_QUERY_MAX_BYTES``
+    (the rows come back as plain dicts), else in one ``mapInArrow`` stage
+    over a range of cell ids (``_score_fused``). Iceberg-stored postings
+    have no local files: the Spark runs scan, ``_cell_slices`` and a pandas
+    stage grouped by cell, cogrouped with the norms (pruned to
+    ``norm_parts`` when given) when ``norms`` is set."""
+    if se.iceberg_table is not None:
+        slices = _cell_slices(se, se.postings_runs(present))
+        spark_schema = from_arrow_schema(schema)
+        if not norms:
+            return slices.groupBy("cell").applyInPandas(
+                lambda pdf: cell_fn(pdf, None), schema=spark_schema
+            )
+        nrm = se.norms
+        if norm_parts is not None:
+            nrm = nrm.filter(F.col("part_id").isin(norm_parts))
+        return (
+            slices.groupBy("cell")
+            .cogroup(nrm.groupBy("cell"))
+            .applyInPandas(cell_fn, schema=spark_schema)
+        )
+    buckets = sorted({term_bucket(t, se.n_buckets) for t in present})
+    src = _CellSource(
+        se.paths.postings, _postings_bucket_dirs(se, buckets), present,
+        se.cell_grid, se.cell_parts, _norms_files(se) if norms else [],
+    )
+    if local and _local_query_bytes(se, buckets) <= LOCAL_QUERY_MAX_BYTES:
+        return _score_local(se, src, cell_fn)
+    return _score_fused(se.spark, src, cell_fn, schema)
 
 
 def _param_bound_scale(k1: float, b: float) -> float:
@@ -2655,7 +2723,6 @@ def _search_impl(
     q_k1 = BM25_K1 if k1 is None else float(k1)
     q_b = BM25_B if b is None else float(b)
     bound_scale = se.bound_scale * _param_bound_scale(q_k1, q_b)
-    cell_grid = se.cell_grid
     # Tie margin: per-cell heaps order by RAW score; two docs < 1e-6 apart
     # share a floored cell but may sit in opposite raw order. Keeping a few
     # extra candidates per cell makes the floored global cut exact unless
@@ -2739,50 +2806,17 @@ def _search_impl(
         ]
     if not payload:
         return empty
-    # The scan covers the PRESENT terms, negated ones included (absent
+    # The read covers the PRESENT terms, negated ones included (absent
     # terms would widen the bucket IN-list for dirs that can't contribute).
     present = sorted(idf)
-    buckets = sorted({term_bucket(t, se.n_buckets) for t in present})
-    # Local fast path eligibility (see LOCAL_QUERY_MAX_BYTES): a per-query
-    # metadata check over the pruned inputs' on-disk bytes. raw_scored
-    # consumers expect a DataFrame and Iceberg has no local files — both
-    # always go distributed.
-    iceberg = se.iceberg_table is not None
-    local_mode = (
-        not raw_scored
-        and not iceberg
-        and _local_query_bytes(se, buckets) <= LOCAL_QUERY_MAX_BYTES
+    # raw_scored callers prune their url-join extracts scan to the build
+    # partitions the runs touch; prune_norms (Iceberg-stored postings) ships
+    # only those partitions' norms to the cogroup.
+    raw_parts = (
+        _touched_parts(se, present, se.cell_parts)
+        if raw_scored or prune_norms
+        else None
     )
-
-    raw_parts: list[int] | None = None
-    if iceberg:
-        # Iceberg-stored postings: the Spark scan + slices/norms cogroup.
-        norms = se.norms
-        runs = se.postings_runs(present)
-        slices = _cell_slices(se, runs)
-        if prune_norms or raw_scored:
-            # One metadata-only job -> the norms cogroup side shuffles only
-            # the cells the query can actually touch (and raw_scored callers
-            # prune their url-join extracts scan the same way).
-            raw_parts = _run_parts(se, runs, se.cell_parts)
-            if prune_norms and raw_parts is not None:
-                norms = norms.filter(F.col("part_id").isin(raw_parts))
-    else:
-        src = _CellSource(
-            se.paths.postings, _postings_bucket_dirs(se, buckets), present,
-            cell_grid, se.cell_parts, _norms_files(se),
-        )
-        if raw_scored:
-            # the url-join prune list from the runs' docID ranges, read
-            # column-pruned on the driver (the blobs never load)
-            ranges = _pruned_parquet_rows(
-                src.postings, src.bucket_dirs, ["first_doc", "last_doc"],
-                filters=[("term", "in", present)],
-            )
-            raw_parts = _parts_for_runs(
-                [(r["first_doc"], r["last_doc"]) for r in ranges],
-                cell_grid, se.cell_parts, len(se.grid_parts),
-            )
     use_dense = mode in ("dense", "conjunctive", "msm")
     conjunctive = mode == "conjunctive"
     # Everything the kernel reads is a plain value captured by the closure
@@ -2885,25 +2919,20 @@ def _search_impl(
         [("query_id", pa.int32()), ("doc_id", pa.int64()), ("score", pa.float64())]
         + ([("part_id", pa.int32()), ("local_pos", pa.int64())] if raw_scored else [])
     )
-    if local_mode:
-        # zero Spark jobs: the same per-cell reader and score_cell closure
-        # as the fused stage, run on the driver — identity pinned by
-        # tests/test_r06_optimizations.py::test_local_fast_path_equals_cogroup.
-        scored = _score_local(se, src, score_cell)
-    elif not iceberg:
-        scored = _score_fused(se.spark, src, score_cell, cell_schema)
-    else:
-        scored = (
-            slices.groupBy("cell")
-            .cogroup(norms.groupBy("cell"))
-            .applyInPandas(score_cell, schema=from_arrow_schema(cell_schema))
-        )
+    # The local path (zero Spark jobs) runs the same per-cell reader and
+    # score_cell closure as the fused stage, on the driver — identity pinned
+    # by tests/test_r06_optimizations.py::test_local_fast_path_equals_cogroup.
+    # raw_scored consumers expect a DataFrame, so they always run in Spark.
+    scored = _run_cells(
+        se, present, score_cell, cell_schema,
+        norm_parts=raw_parts if prune_norms else None, local=not raw_scored,
+    )
 
     if raw_scored:
         return scored, raw_parts
     return _rank_and_lookup(
         se, scored, k, fixed_point, with_text, empty, offset=offset,
-        max_candidate_rows=len(cell_grid) * cell_k * len(payload),
+        max_candidate_rows=len(se.cell_grid) * cell_k * len(payload),
     )
 
 

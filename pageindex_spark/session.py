@@ -153,9 +153,8 @@ def warm_up(spark: SparkSession) -> None:
 
     r6 extension, same amortization argument: the first Arrow-Python stage
     pays the Python worker-pool spawn (one process per core, reused for the
-    session — ``spark.python.worker.reuse``), the first grouped/cogrouped
-    pandas stage initializes its own runner class, and the first parquet
-    write instantiates the output committer + codec. All are one-time
+    session — ``spark.python.worker.reuse``), and the first parquet write
+    instantiates the output committer + codec. All are one-time
     session costs a long-lived cluster never re-pays; warming them here
     keeps the timed sections measuring throughput, not cold-start
     (measured: first mapInArrow-bearing write 4.7 s vs 1.3 s steady at
@@ -241,9 +240,9 @@ def warm_up(spark: SparkSession) -> None:
         .collect()
     )
 
-    # Arrow-Python worker pool + two of the engine's Python runner flavors:
-    # mapInArrow and cogrouped applyInPandas (plain grouped applyInPandas
-    # is not warmed here).
+    # Arrow-Python worker pool + the Python runner of every parquet query
+    # path: mapInArrow. The build's grouped applyInPandas and the
+    # Iceberg-only cogroup runner are not warmed here.
     def _ident(batches):
         yield from batches
 
@@ -253,9 +252,6 @@ def warm_up(spark: SparkSession) -> None:
     base.mapInArrow(_ident, schema="id long, g int").write.format(
         "noop"
     ).mode("overwrite").save()
-    base.groupBy("g").cogroup(base.groupBy("g")).applyInPandas(
-        lambda a, b: a.head(1), schema="id long, g int"
-    ).write.format("noop").mode("overwrite").save()
 
     # Parquet writer (committer + codec init) and reader.
     tmp = os.path.join(tempfile.gettempdir(), f"spark_warm_{os.getpid()}")

@@ -53,15 +53,6 @@ def _family(type_name: str) -> str:
     return t
 
 
-# Twins whose DuckDB side still sums a bigint into a HUGEINT column; the
-# type check below found them. Casting one changes its frozen oracle text
-# (tests/data_oracle_fp_r06.json), a change of its own: entry -> column.
-_HUGEINT_TWINS = {
-    "histo_bucket_stats": "sum_docs",
-    "engine_histo_bucket_stats": "sum_docs",
-}
-
-
 def _norm(rows, types):
     """(column type families, sorted rows): the comparison fails on a
     column whose family differs between the engines even when every value
@@ -73,13 +64,8 @@ def _spark_norm(sdf):
     return _norm(sdf.collect(), [f.dataType.simpleString() for f in sdf.schema])
 
 
-def _duck_norm(rel, name):
-    known = _HUGEINT_TWINS.get(name)
-    types = [
-        "BIGINT" if c.lower() == known and str(t) == "HUGEINT" else t
-        for c, t in zip(rel.columns, rel.types)
-    ]
-    return _norm(rel.fetchall(), types)
+def _duck_norm(rel):
+    return _norm(rel.fetchall(), rel.types)
 
 
 def test_entry_smoke(spark):
@@ -100,7 +86,7 @@ def test_engine_bm25_matches_sql_oracle(spark, duck):
 
     shutil.rmtree(f"{E._INDEX_CACHE_ROOT}_sf0.001", ignore_errors=True)
     got = _spark_norm(E._engine_bm25_wand(spark, SF_DIR))
-    want = _duck_norm(duck.sql(paired_sql()["bm25_topk"][1]), "bm25_topk")
+    want = _duck_norm(duck.sql(paired_sql()["bm25_topk"][1]))
     assert got == want
 
 
@@ -113,7 +99,7 @@ def test_pair_matches(name, sviews, duck):
     want_cols = [c.lower() for c in want.columns]
     assert got_cols == want_cols, (got_cols, want_cols)
     got_types, got_rows = _spark_norm(sdf)
-    want_types, want_rows = _duck_norm(want, name)
+    want_types, want_rows = _duck_norm(want)
     assert got_types == want_types, (name, got_types, want_types)
     assert len(got_rows) == len(want_rows), (name, len(got_rows), len(want_rows))
     mism = [
@@ -242,6 +228,6 @@ def test_custom_entries_match_their_oracles(name, spark, duck):
     want_cols = [c.lower() for c in want.columns]
     assert [c.lower() for c in sdf.columns] == want_cols
     got_types, got_rows = _spark_norm(sdf)
-    want_types, want_rows = _duck_norm(want, name)
+    want_types, want_rows = _duck_norm(want)
     assert got_types == want_types, (name, got_types, want_types)
     assert got_rows == want_rows, (name, got_rows[:3], want_rows[:3])

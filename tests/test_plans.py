@@ -288,16 +288,53 @@ def test_wildcard_literal_head_scan_pushed(spark, index_dir, monkeypatch):
     assert "term" in read_schema and "df" not in read_schema
 
 
-def test_hits_count_plan_reads_no_norms(spark, index_dir):
-    """The full-match count plan (plans/hits.py) must never scan the norms
-    relation (doc lengths don't matter to matching) and must keep the
-    postings scan bucket-pruned — O(cells) shuffled rows is the contract."""
-    from pageindex_spark.plans.hits import search_count
+def test_hits_count_plan_reads_no_norms(spark, index_dir, monkeypatch):
+    """The full-match count plan (plans/hits.py) must never read the norms
+    (doc lengths don't matter to matching) and must keep the postings read
+    bucket-pruned: the count's per-cell reader source holds only the
+    query's bucket dirs and no norms files, and running its kernel on the
+    driver never reads norms. Planning a facet count launches no Spark
+    job: the match kernel, its prune list and the url join are planned
+    from driver-side reads."""
+    import pageindex_spark.plans.query as Q
+    from pageindex_spark.functions.murmur3 import term_bucket
+    from pageindex_spark.plans.hits import facet_counts, search_count
 
+    real_fused = Q._score_fused
+    fused = []
+
+    def spy(spark_, src, cell_fn, schema):
+        fused.append((src, cell_fn))
+        return real_fused(spark_, src, cell_fn, schema)
+
+    monkeypatch.setattr(Q, "_score_fused", spy)
     df = search_count(spark, index_dir, [(1, "ba di")])
-    plan = _explain(df)
-    assert "norms" not in plan
-    assert "PartitionFilters" in plan and "bucket" in plan
+    assert "norms" not in _explain(df)
+    (n_hits,) = [r["n_hits"] for r in df.collect()]
+    ((src, count_cell),) = fused
+    n_buckets = Q.get_searcher(spark, index_dir).n_buckets
+    buckets = sorted({term_bucket(t, n_buckets) for t in ("ba", "di")})
+    assert src.bucket_dirs == [f"bucket={b}" for b in buckets]
+    assert src.present == ["ba", "di"] and src.norms_files == []
+
+    def no_norms(*a, **kw):
+        raise AssertionError("the count kernel read norms")
+
+    monkeypatch.setattr(Q, "_read_norms", no_norms)
+    rows = Q._score_cells(src, 0, len(src.cell_grid) - 1, count_cell)
+    assert int(rows["n"].sum()) == n_hits > 0
+
+    ext = spark.read.parquet(os.path.join(index_dir, "docs_extracted"))
+    facets = ext.select("url", F.substring(F.md5("url"), 1, 1).alias("facet"))
+    sc = spark.sparkContext
+    sc.setJobGroup("facet-plan", "facet-plan")
+    try:
+        facet_counts(spark, index_dir, [(1, "ba di"), (2, "ce")], facets)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert list(sc.statusTracker().getJobIdsForGroup("facet-plan")) == []
 
 
 def test_fuzzy_negation_passes_through(spark, index_dir):
@@ -323,8 +360,9 @@ def test_single_lineage_plans_no_duplicate_kernels(spark, index_dir):
     significant_terms TWO with exactly one URL-joined (the second is the
     cheap O(cells) count shape: no extracts join on that branch), and
     hybrid_search_linear's min-max normalization must not re-execute the
-    retrievers (one FlatMapGroupsInPandas for the BM25 side, one corpus
-    scan for the cosine side)."""
+    retrievers (one LocalTableScan for the BM25 side, one corpus scan for
+    the cosine side). A match kernel is one MapInArrow stage (the per-cell
+    reader over a range of cell ids)."""
     from pyspark.sql import Window
 
     from pageindex_spark.plans.hits import match_percentiles, significant_terms
@@ -340,7 +378,7 @@ def test_single_lineage_plans_no_duplicate_kernels(spark, index_dir):
     dim = ext.select("url", F.length("text").cast("double").alias("val"))
 
     plan = tree(match_percentiles(spark, index_dir, qs, dim))
-    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert plan.count("MapInArrow") == 1
 
     # the sibling rank-selection aggs share the value-histogram head and
     # must stay single-kernel too: quartiles/median attach as WINDOW
@@ -350,19 +388,19 @@ def test_single_lineage_plans_no_duplicate_kernels(spark, index_dir):
     from pageindex_spark.plans.hits import match_boxplot, match_mad, match_t_test
 
     plan = tree(match_boxplot(spark, index_dir, qs, dim))
-    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert plan.count("MapInArrow") == 1
     plan = tree(match_mad(spark, index_dir, qs, dim))
-    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert plan.count("MapInArrow") == 1
     dim3 = ext.select(
         "url",
         F.length("text").cast("double").alias("val"),
         (F.length("text") % 2).cast("int").alias("grp"),
     )
     plan = tree(match_t_test(spark, index_dir, qs, dim3))
-    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert plan.count("MapInArrow") == 1
 
     full = _explain(significant_terms(spark, index_dir, qs))
-    assert full.split("\n\n(1)")[0].count("FlatMapGroupsInPandas") == 2
+    assert full.split("\n\n(1)")[0].count("MapInArrow") == 2
     # exactly ONE scan reads the extracts TEXT (the count branch ships no
     # text — that's what makes the second kernel pass the cheap shape)
     text_scans = [

@@ -263,6 +263,42 @@ def test_fused_batch_is_one_stage(spark, r06_index, monkeypatch):
         )
 
 
+def test_hits_multi_cell_identity(spark, r06_index):
+    """The full-match kernels return the same rows whatever the cell grid:
+    ``cell_parts=1`` (8 cells, so light-term runs straddle cells and a task
+    reads the pieces of runs that belong to other tasks' cells) against
+    ``cell_parts=8`` (one cell). Counting a straddling piece outside its
+    own cell would count its docs twice."""
+    from pyspark.sql import functions as F
+
+    from pageindex_spark.driverq import NDCG_DISC6
+    from pageindex_spark.plans import hits as H
+    from pageindex_spark.plans.query import get_searcher
+    from pageindex_spark.sources.corpus import make_queries
+
+    queries = make_queries()
+    ext = spark.read.parquet(os.path.join(r06_index, "docs_extracted"))
+    facets = ext.select("url", F.substring(F.md5("url"), 1, 1).alias("facet"))
+    assert len(get_searcher(spark, r06_index, 1).cell_grid) == 8
+    assert len(get_searcher(spark, r06_index, 8).cell_grid) == 1
+
+    def rows(cell_parts):
+        kw = dict(cell_parts=cell_parts)
+        out = {
+            "count": H.search_count(spark, r06_index, queries, **kw),
+            "facets": H.facet_counts(spark, r06_index, queries, facets, **kw),
+            "pairs": H.frequent_term_pairs(spark, r06_index, 50, 60, 5, **kw),
+            "rank_eval": H.rank_eval(
+                spark, r06_index, queries, NDCG_DISC6, k=10, **kw
+            ),
+        }
+        return {name: sorted(tuple(r) for r in df.collect()) for name, df in out.items()}
+
+    one_cell, eight_cells = rows(8), rows(1)
+    for name, got in eight_cells.items():
+        assert got and got == one_cell[name], name
+
+
 def test_driver_rank_equals_window_rank(spark, r06_index, monkeypatch):
     """Force the Spark-window rank and compare to the default driver-side
     rank — byte-identical result rows. The slow arms also force the

@@ -278,6 +278,7 @@ def test_crashed_refresh_invisible_to_queries(spark, monkeypatch):
     must leave queries exactly as they were — the uncommitted delta holds
     docIDs beyond the committed grid/norms, so reading it would mis-score
     or fail. Readers now filter every scan to meta.streamed.deltas."""
+    from pageindex_spark.plans.hits import search_count
     from pageindex_spark.plans.query import Searcher
     from pageindex_spark.sources import tables
     from pageindex_spark.sources.tables import read_meta
@@ -303,10 +304,15 @@ def test_crashed_refresh_invisible_to_queries(spark, monkeypatch):
             .collect()
         ]
 
+    def count(index_dir):
+        rows = search_count(spark, index_dir, queries).collect()
+        return sorted(tuple(r) for r in rows)
+
     assert segment_batch(mk(0, 120), 0, segs, state, num_partitions=3) == 120
     refresh_streamed_index(spark, segs, state, idx, n_buckets=8)
     before = run(idx)
-    assert before
+    counts_before = count(idx)
+    assert before and counts_before
 
     # batch 1 arrives; the refresh "crashes" at the commit point
     assert segment_batch(mk(120, 180), 1, segs, state, num_partitions=3) == 60
@@ -325,6 +331,7 @@ def test_crashed_refresh_invisible_to_queries(spark, monkeypatch):
     assert read_meta(idx)["streamed"]["deltas"] == [0]
     # ...but queries still see exactly the committed index
     assert run(idx) == before
+    assert count(idx) == counts_before
 
     # the next (successful) refresh GCs the stale dirs and commits batch 1
     refresh_streamed_index(spark, segs, state, idx, n_buckets=8)
