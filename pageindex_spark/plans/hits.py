@@ -50,7 +50,9 @@ from ..session import local_df
 from .query import (
     QueryHead,
     _CellMask,
+    _extracts,
     _query_head,
+    _read_dictionary,
     _run_cells,
     _touched_parts,
     _two_phase_rank,
@@ -719,8 +721,9 @@ def frequent_term_pairs(
     ``min_support`` docs, mined ENTIRELY from the committed index.
 
     Plan — the pair analogue of the match kernels, and the reason this
-    scales: items come from one column-pruned term_stats scan with the
-    df-window predicate pushed down (the apriori prefilter — it bounds
+    scales: items come from one driver-side read of term_stats' ``term``
+    column (``_read_dictionary``, no Spark job) with the df-window
+    predicate pushed to its row groups (the apriori prefilter — it bounds
     the item set before any postings load); their postings reach the
     pair kernel through search's bucket-pruned cell reader; and because
     CELLS PARTITION
@@ -733,16 +736,8 @@ def frequent_term_pairs(
     what keeps C small — widening it is an explicit cost decision, the
     same dial ES documents for frequent_item_sets."""
     se = get_searcher(spark, index_dir, cell_parts)
-    ts = se.term_dictionary()
-    cand = sorted(
-        r["term"]
-        for r in ts.filter(
-            (F.col("df") >= df_lo) & (F.col("df") <= df_hi)
-        )
-        .select("term")
-        .distinct()
-        .collect()
-    )
+    d = _read_dictionary(se, ["term"], [("df", ">=", df_lo), ("df", "<=", df_hi)])
+    cand = sorted(set(d["term"].to_pylist()))
     if len(cand) < 2:
         return se._empty_df("item_a string, item_b string, support long")
     deleted = se.deleted_ids
@@ -1083,7 +1078,7 @@ def index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     the scorer sees the index: avgdl stays the BUILD-time value until
     expunge)."""
     se = get_searcher(spark, index_dir, cell_parts=4)
-    docs = spark.read.parquet(se.paths.docs_extracted).agg(
+    docs = _extracts(se).agg(
         F.count("*").alias("n_docs"),
         F.sum("doc_len").alias("total_tokens"),
     )
@@ -1131,7 +1126,7 @@ def term_vectors(
     from ..functions.sqlglue import spark_terms
 
     se = get_searcher(spark, index_dir, cell_parts=4)
-    docs = spark.read.parquet(se.paths.docs_extracted).filter(
+    docs = _extracts(se).filter(
         F.col("url").isin(list(urls))
     )
     if se.deleted_ids is not None and len(se.deleted_ids):
@@ -1922,7 +1917,7 @@ def significant_terms(
     # tokenize every scanned row: Catalyst does not hoist expensive
     # projections). Sampling composes: the md5 filter already shrank
     # `matched`, so the explode shrinks with it.
-    ext = spark.read.parquet(se.paths.docs_extracted).select(
+    ext = _extracts(se).select(
         F.col("part_id").cast("int").alias("part_id"), "url", "text"
     )
     parts = _touched_parts(se, state.present)
@@ -2526,7 +2521,7 @@ def match_random_score(
     The dimension derives from the index's OWN extracts (url column only,
     column-pruned scan) — no external table needed."""
     se = get_searcher(spark, index_dir, cell_parts)
-    urls = spark.read.parquet(se.paths.docs_extracted).select("url")
+    urls = _extracts(se).select("url")
     dim = urls.select(
         "url",
         F.expr(
@@ -2567,7 +2562,7 @@ def suggest_next_word(
     from ..functions.sqlglue import SPARK_TERMS
 
     se = get_searcher(spark, index_dir, cell_parts)
-    ext = spark.read.parquet(se.paths.docs_extracted).select(
+    ext = _extracts(se).select(
         F.col("part_id").cast("int").alias("part_id"), "local_pos", "text"
     )
     if se.deleted_ids is not None and len(se.deleted_ids):
@@ -2821,7 +2816,7 @@ def rank_eval(
     if not top_urls:
         return se._empty_df(out_ddl)
     ext = (
-        spark.read.parquet(se.paths.docs_extracted)
+        _extracts(se)
         .select("part_id", "local_pos", "url")
         .filter(F.col("url").isin(top_urls))
     )
@@ -2919,7 +2914,7 @@ def suggest_phrase(
         rows.append((qid, ts[0], ts[1]))
     se = get_searcher(spark, index_dir, cell_parts)
     qdf = local_df(spark, rows, "query_id int, t1 string, t2 string")
-    ext = spark.read.parquet(se.paths.docs_extracted).select(
+    ext = _extracts(se).select(
         F.col("part_id").cast("int").alias("part_id"), "local_pos", "text"
     )
     if se.deleted_ids is not None and len(se.deleted_ids):

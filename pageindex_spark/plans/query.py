@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import functools
 import math
-import operator
 import os
 import re
 from collections.abc import Callable, Iterator
@@ -210,7 +209,10 @@ class Searcher:
         return self._empty_cache[schema]
 
     def term_dictionary(self) -> DataFrame:
-        """The committed term dictionary (term, df, bucket) as a Spark scan.
+        """The committed term dictionary (term, df, bucket) as a Spark scan,
+        for the Spark plans that consume it (``hits.index_stats``,
+        ``term_vectors``, ``significant_terms``, ``index_vocab_hll``);
+        reads whose result ends on the driver use ``_read_dictionary``.
         Streamed indexes version term_stats per refresh; the committed max
         delta holds the full recompute (a crashed refresh's delta would
         carry uncommitted docs' df)."""
@@ -929,9 +931,14 @@ def search_multi_field(
     )
 
 
-# The committed extracts' columns, the same in every layout. Reading with
-# this schema plans the scan without Spark's schema-inference job.
+# The committed extracts' columns, the same in every layout.
 _EXTRACTS_DDL = "part_id int, local_pos long, url string, text string, doc_len long"
+
+
+def _extracts(se: Searcher) -> DataFrame:
+    """The committed extracts as a Spark scan. Reading with their fixed
+    schema plans the scan without Spark's schema-inference job."""
+    return se.spark.read.schema(_EXTRACTS_DDL).parquet(se.paths.docs_extracted)
 
 
 def _with_urls(
@@ -940,9 +947,7 @@ def _with_urls(
     """(part_id, local_pos) rows (``raw_scored``'s, the match kernels')
     joined to the extracts' ``col``, read only from the build partitions in
     ``parts`` (``_touched_parts``) when those are under half of them."""
-    ext = se.spark.read.schema(_EXTRACTS_DDL).parquet(se.paths.docs_extracted).select(
-        "part_id", "local_pos", col
-    )
+    ext = _extracts(se).select("part_id", "local_pos", col)
     if parts is not None and 2 * len(parts) < len(se.grid_parts):
         ext = ext.filter(F.col("part_id").isin(sorted(parts)))
     return df.join(ext, ["part_id", "local_pos"])
@@ -964,42 +969,30 @@ def _two_phase_rank(
     )
 
 
-def _any(conds) -> Column:
-    """OR of a non-empty iterable of boolean Columns."""
-    return functools.reduce(operator.or_, conds)
-
-
-def _expansion_scan(
-    se: Searcher, patterns: list[str], spark_pred: Callable[[list[str]], Column]
-) -> DataFrame:
-    """The term-dictionary scan behind every expansion: column-pruned to
-    ``term`` with ``spark_pred(patterns)`` evaluated JVM-side (pushed to
-    parquet where it can be — StartsWith prunes row groups, terms sort
-    within files). A metadata-class read, never postings blobs."""
-    return (
-        se.term_dictionary().filter(spark_pred(patterns)).select("term").distinct()
-    )
-
-
 def _expand_terms(
     se: Searcher,
     patterns: list[str],
-    spark_pred: Callable[[list[str]], Column],
-    py_match: Callable[[str, str], bool],
+    matcher: Callable[[str], Callable[[str], object]],
     kind: str,
     max_expansions: int,
+    stems: list[str] | None = None,
 ) -> dict[str, list[str]]:
-    """ONE dictionary scan expanding every pattern of a batch to its sorted
-    index terms -> {pattern: terms}. ``spark_pred`` narrows the scan;
-    ``py_match(pattern, term)`` assigns the collected terms to patterns
-    exactly. Raises when a pattern matches more than ``max_expansions``
-    terms: silent truncation would make results depend on scan order."""
+    """ONE driver-side dictionary read expanding every pattern of a batch
+    to its sorted index terms -> {pattern: terms}. ``matcher(pattern)``
+    returns the exact test a term must pass; every test is built before
+    the read, so a malformed pattern raises first. With ``stems`` the read
+    keeps only the terms in some stem's ``[stem, stem⁺)`` range (row groups
+    outside every range never load); without, it reads the whole ``term``
+    column. Raises when a pattern matches more than ``max_expansions``
+    terms: silent truncation would make results depend on read order."""
     if not patterns:
         return {}
-    vocab = [r["term"] for r in _expansion_scan(se, patterns, spark_pred).collect()]
+    tests = {p: matcher(p) for p in patterns}
+    filters = None if stems is None else [_stem_range(s) for s in stems]
+    vocab = sorted(set(_read_dictionary(se, ["term"], filters)["term"].to_pylist()))
     out: dict[str, list[str]] = {}
-    for p in patterns:
-        terms = sorted(t for t in vocab if py_match(p, t))
+    for p, test in tests.items():
+        terms = [t for t in vocab if test(t)]
         if len(terms) > max_expansions:
             label = f"prefix '{p}*'" if kind == "prefix" else f"{kind} {p!r}"
             raise ValueError(
@@ -1013,15 +1006,11 @@ def _expand_terms(
 def _expand_prefixes(
     se: Searcher, stems: list[str], max_expansions: int
 ) -> dict[str, list[str]]:
-    """Prefix expansion: the scan ships a pushed StringStartsWith per stem
-    (buckets hash whole terms, so it cannot bucket-prune)."""
+    """Prefix expansion: one read kept to the stems' ranges (buckets hash
+    whole terms, so it cannot bucket-prune)."""
     return _expand_terms(
-        se,
-        stems,
-        lambda ss: _any(F.col("term").startswith(s) for s in ss),
-        lambda s, t: t.startswith(s),
-        "prefix",
-        max_expansions,
+        se, stems, lambda s: lambda t: t.startswith(s), "prefix",
+        max_expansions, stems=stems,
     )
 
 
@@ -1047,7 +1036,7 @@ def _expansion_search(
 ) -> DataFrame:
     """Front-end of the prefix, fuzzy and wildcard variants: ``parse``
     splits each query into (literal words, patterns), ``expand`` maps the
-    batch's patterns to their terms with one dictionary scan, and each
+    batch's patterns to their terms with one dictionary read, and each
     query runs as its literals plus its patterns' expansions."""
     _validate_qids(queries)
     parsed = {qid: parse(text) for qid, text in queries}
@@ -1079,8 +1068,11 @@ def search_prefix(
     equivalent — each expansion scores with its own idf). Everything
     downstream reuses the standard plan: expansions are concrete terms, so
     bucket pruning, BMW, '-term' negation, deletes and fixed_point all work
-    unchanged. A stem matching nothing contributes no terms (a query left
-    with no terms at all returns no rows)."""
+    unchanged. The expansion is one driver-side read of the ``term``
+    column kept to the stems' ``[stem, stem⁺)`` ranges
+    (``_expand_prefixes``), so only overlapping row groups load and no
+    Spark job runs. A stem matching nothing contributes no terms (a query
+    left with no terms at all returns no rows)."""
     from ..functions.tokenizer import parse_prefix_query
 
     se = get_searcher(spark, index_dir, cell_parts)
@@ -1103,45 +1095,53 @@ def suggest_terms(
     Elasticsearch ``completion``-lite surface): for each ``(query_id,
     prefix)``, the top-``k`` index terms starting with the prefix, ranked
     by document frequency desc with term-asc tie-break ->
-    (query_id, rank, term, df).
+    (query_id, rank, term, df). A query_id with several prefixes ranks
+    the union of their matches, a term matching two of them counting
+    twice. A prefix matching nothing yields no rows for its query_id.
 
-    Plan shape: ONE term-dictionary scan, column-pruned to (term, df) with
-    every prefix's StringStartsWith pushed to parquet (row-group pruning —
-    terms sort within files; bucket dirs can't prune, buckets hash whole
-    terms), then a broadcast join against the tiny prefix relation and a
-    per-query window rank. Everything stays JVM-side; shuffled rows are
-    O(matching vocabulary), never postings. Streamed indexes pin the scan
-    to the committed max delta (the full recompute). A prefix matching
-    nothing yields no rows for its query_id."""
+    Plan shape: ONE driver-side dictionary read (``_read_dictionary``) of
+    (term, df), kept to the prefixes' ``[stem, stem⁺)`` ranges (bucket
+    dirs can't prune, buckets hash whole terms), then a rank per query_id
+    on the driver, handed back with ``local_df``: no Spark job runs."""
     se = get_searcher(spark, index_dir, cell_parts)
+    ddl = "query_id int, rank int, term string, df long"
     stems = sorted({p for _, p in prefixes})
     if not stems:
-        return se._empty_df("query_id int, rank int, term string, df long")
-    pfx = local_df(spark, prefixes, "query_id int, prefix string")
-    w = Window.partitionBy("query_id").orderBy(F.desc("df"), F.asc("term"))
-    return (
-        se.term_dictionary()
-        .filter(_any(F.col("term").startswith(s) for s in stems))
-        .select("term", F.col("df").cast("long").alias("df"))
-        .join(F.broadcast(pfx), F.col("term").startswith(F.col("prefix")))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "term", "df")
-    )
+        return se._empty_df(ddl)
+    d = _read_dictionary(se, ["term", "df"], [_stem_range(s) for s in stems])
+    vocab = list(zip(d["term"].to_pylist(), d["df"].to_pylist()))
+    by_qid: dict[int, list[tuple[int, str]]] = {}
+    for qid, p in prefixes:
+        by_qid.setdefault(qid, []).extend((-df, t) for t, df in vocab if t.startswith(p))
+    rows = [
+        (qid, i, t, -neg_df)
+        for qid, cands in sorted(by_qid.items())
+        for i, (neg_df, t) in enumerate(sorted(cands)[: max(k, 0)], 1)
+    ]
+    return local_df(spark, rows, ddl)
 
 
-def _within_edits(a: str, b: str, max_edits: int) -> bool:
-    """Levenshtein(a, b) <= max_edits — classic DP; tokens are short and
-    the vocabulary is pre-filtered by the JVM-side scan."""
-    if abs(len(a) - len(b)) > max_edits:
-        return False
+def _within_edits(a: str, b: str, max_edits: int) -> int | None:
+    """Levenshtein(a, b) when it is at most ``max_edits``, else None: the
+    classic DP, given up once a whole row exceeds the budget (a row's
+    minimum never falls further down). Before it, a pigeonhole filter: cut
+    ``b`` into ``max_edits + 1`` pieces; each edit breaks at most one, so
+    some piece must occur in ``a`` verbatim."""
+    n = max_edits + 1
+    if abs(len(a) - len(b)) > max_edits or (
+        len(b) >= n
+        and not any(b[i * len(b) // n : (i + 1) * len(b) // n] in a for i in range(n))
+    ):
+        return None
     prev = list(range(len(b) + 1))
     for i, ca in enumerate(a, 1):
         cur = [i]
         for j, cb in enumerate(b, 1):
             cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        if min(cur) > max_edits:
+            return None
         prev = cur
-    return prev[-1] <= max_edits
+    return prev[-1] if prev[-1] <= max_edits else None
 
 
 def search_fuzzy(
@@ -1162,15 +1162,15 @@ def search_fuzzy(
     retrieval over the expansion union — the same scoring-rewrite as
     ``search_prefix``, each expansion scoring with its own idf. (Lucene
     additionally down-weights by similarity; this engine keeps pure BM25 so
-    the DuckDB twin is exact — both engines ship the same ``levenshtein``.)
+    the DuckDB twin is exact — it ships the same ``levenshtein``.)
 
-    The expansion scan is a FULL pass over the term dictionary (edit
-    distance can't push to parquet min/max) but stays column-pruned to
-    ``term`` and JVM-side (``F.levenshtein`` in codegen) — a metadata-class
-    read. At trillion-term vocabularies, swap in a deletion-neighborhood or
-    trigram sidecar keyed like the positions sidecar; the plan downstream
-    is unchanged either way. A token expanding to more than
-    ``max_expansions`` terms raises (never silent truncation)."""
+    The expansion is a driver-side read of the whole ``term`` column (edit
+    distance can't prune parquet min/max) matched by ``_within_edits``; no
+    Spark job runs before the search. At trillion-term vocabularies, swap
+    in a deletion-neighborhood or trigram sidecar keyed like the positions
+    sidecar; the plan downstream is unchanged either way. A token
+    expanding to more than ``max_expansions`` terms raises (never silent
+    truncation)."""
     se = get_searcher(spark, index_dir, cell_parts)
 
     def parse(text: str) -> tuple[list[str], list[str]]:
@@ -1186,10 +1186,7 @@ def search_fuzzy(
         lambda toks: _expand_terms(
             se,
             toks,
-            lambda ts: _any(
-                F.levenshtein(F.col("term"), F.lit(t)) <= max_edits for t in ts
-            ),
-            lambda t, v: _within_edits(v, t, max_edits),
+            lambda t: lambda v: _within_edits(v, t, max_edits) is not None,
             "fuzzy term",
             max_expansions,
         ),
@@ -1218,59 +1215,41 @@ def suggest_spelling(
     edit budget yields no rows.
 
     Plan shape: the exact-membership probe rides the Searcher's
-    bucket-pruned df cache (``_ensure_idf`` — the dictionary scan
-    filters to the tokens' hash buckets, a handful of parquet files);
-    only the candidate pass is a full ``levenshtein`` dictionary scan
-    like ``search_fuzzy`` (column-pruned to (term, df), streamed indexes
-    pinned to the committed max delta; edit distance can't push to
-    parquet min/max — a deletion-neighborhood or trigram sidecar is the
-    trillion-term swap, plan unchanged). Candidates join the tiny
-    (query, token) relation BROADCAST; ranking is one window over
-    O(tokens x candidates) rows — never postings, never norms."""
+    bucket-pruned df cache (``_ensure_idf``); the candidate pass reads
+    (term, df) of the whole dictionary on the driver
+    (``_read_dictionary``) and measures each term against each missing
+    token with ``_within_edits``, ``search_fuzzy``'s matcher. The ranking
+    runs on the driver over O(tokens x candidates) rows and is handed
+    back with ``local_df``: no Spark job runs."""
+    from collections import Counter
+
     se = get_searcher(spark, index_dir, cell_parts)
-    tok_rows: list[tuple[int, str]] = []
-    for qid, text in queries:
-        pos, _negs = parse_query(text)
-        for t in sorted(set(tokenize(pos))):
-            tok_rows.append((qid, t))
-    empty = se._empty_df(
+    tok_rows = [
+        (qid, t)
+        for qid, text in queries
+        for t in sorted(set(tokenize(parse_query(text)[0])))
+    ]
+    _ensure_idf(se, sorted({t for _qid, t in tok_rows}))
+    # a (query, token) listed twice ranks each candidate twice
+    missing = Counter((qid, t) for qid, t in tok_rows if se._df_cache[t] is None)
+    ddl = (
         "query_id int, token string, rank int, suggestion string, "
         "dist int, df long"
     )
-    if not tok_rows:
-        return empty
-    uniq = sorted({t for _qid, t in tok_rows})
-    # Membership via the Searcher's bucket-pruned df cache (_ensure_idf
-    # filters the dictionary scan to the tokens' hash buckets — a handful
-    # of parquet files), not a bespoke full-dictionary isin scan.
-    _ensure_idf(se, uniq)
-    known = {t for t in uniq if se._df_cache[t] is not None}
-    missing = [(qid, t) for qid, t in tok_rows if t not in known]
     if not missing:
-        return empty
-    muniq = sorted({t for _qid, t in missing})
-    cand = se.term_dictionary().filter(
-        _any(F.levenshtein(F.col("term"), F.lit(t)) <= max_edits for t in muniq)
-    ).select("term", F.col("df").cast("long").alias("df"))
-    toks = local_df(spark, missing, "query_id int, token string")
-    dist = F.levenshtein(F.col("term"), F.col("token"))
-    w = Window.partitionBy("query_id", "token").orderBy(
-        F.asc("dist"), F.desc("df"), F.asc("term")
-    )
-    return (
-        cand.join(F.broadcast(toks), dist <= max_edits)
-        .withColumn("dist", dist.cast("int"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= s)
-        .select(
-            "query_id",
-            "token",
-            "rank",
-            F.col("term").alias("suggestion"),
-            "dist",
-            "df",
-        )
-    )
+        return se._empty_df(ddl)
+    cands: dict[str, list[tuple[int, int, str]]] = {t: [] for _qid, t in missing}
+    d = _read_dictionary(se, ["term", "df"])
+    for term, df in zip(d["term"].to_pylist(), d["df"].to_pylist()):
+        for t, out in cands.items():
+            if (dist := _within_edits(term, t, max_edits)) is not None:
+                out.append((dist, -df, term))
+    rows = [
+        (qid, t, i, term, dist, -neg_df)
+        for (qid, t), n in sorted(missing.items())
+        for i, (dist, neg_df, term) in enumerate(sorted(cands[t] * n)[: max(s, 0)], 1)
+    ]
+    return local_df(spark, rows, ddl)
 
 
 def search_wildcard(
@@ -1294,44 +1273,43 @@ def search_wildcard(
     idf; bucket pruning / negation / deletes / fixed_point all compose
     unchanged on the concrete terms).
 
-    Expansion plan: ONE column-pruned term-dictionary scan. Every
-    pattern's regex (``wildcard_regex`` — shared with the SQL twin, so
-    both engines match the identical term set) evaluates JVM-side via
-    ``rlike``; patterns with a literal head additionally push their
-    ``wildcard_prefix`` as StringStartsWith to parquet (row-group pruning
-    — terms sort within files), so 'cust*er' reads like a prefix query
-    and only leading-wildcard patterns pay the full dictionary pass. A
-    pattern matching more than ``max_expansions`` terms raises (silent
-    truncation would make results scan-order-dependent); a pattern
-    matching nothing contributes no terms."""
+    Expansion plan: ONE driver-side read of the ``term`` column, each term
+    matched against every pattern's regex (``wildcard_regex`` — shared
+    with the SQL twin, so both engines match the identical term set).
+    When every pattern has a literal head (``wildcard_prefix``) the read
+    keeps only the heads' ``[head, head⁺)`` ranges, so 'cust*er' reads
+    like a prefix query and only leading-wildcard patterns read the whole
+    column. A pattern matching more than ``max_expansions`` terms raises
+    (silent truncation would make results read-order-dependent); a
+    pattern matching nothing contributes no terms."""
     from ..functions.tokenizer import (
         parse_wildcard_query,
         wildcard_prefix,
         wildcard_regex,
     )
 
-    def spark_pred(pats: list[str]) -> Column:
-        cond = _any(F.col("term").rlike(wildcard_regex(p)) for p in pats)
-        heads = [wildcard_prefix(p) for p in pats]
-        if all(heads):
-            # every pattern has a literal head -> the scan is prefix-pushed
-            # exactly like search_prefix (the rlike then verifies).
-            cond = _any(F.col("term").startswith(h) for h in heads) & cond
-        return cond
-
     se = get_searcher(spark, index_dir, cell_parts)
+
+    def expand(pats: list[str]) -> dict[str, list[str]]:
+        heads = [wildcard_prefix(p) for p in pats]
+        return _expand_terms(
+            se, pats, lambda p: re.compile(wildcard_regex(p)).match, "wildcard",
+            max_expansions, stems=heads if all(heads) else None,
+        )
+
     return _expansion_search(
-        se, queries, parse_wildcard_query,
-        lambda pats: _expand_terms(
-            se,
-            pats,
-            spark_pred,
-            lambda p, t: re.match(wildcard_regex(p), t) is not None,
-            "wildcard",
-            max_expansions,
-        ),
+        se, queries, parse_wildcard_query, expand,
         with_text, k=k, mode=mode, fixed_point=fixed_point,
     )
+
+
+def _regexp_matcher(pattern: str) -> Callable[[str], object]:
+    """The full-match test of one ``search_regexp`` pattern; a pattern
+    that does not compile raises ValueError naming it."""
+    try:
+        return re.compile(f"(?:{pattern})").fullmatch
+    except re.error as e:
+        raise ValueError(f"invalid regexp {pattern!r}: {e}") from None
 
 
 def search_regexp(
@@ -1355,15 +1333,15 @@ def search_regexp(
     equivalent, each expansion scoring with its own idf; pruning /
     deletes / fixed_point compose unchanged on the concrete terms).
 
-    Expansion plan: ONE column-pruned term-dictionary scan, every pattern
-    evaluated JVM-side as ``rlike('^(?:pat)$')`` (anchors supply the
-    full-match contract). Patterns use Java regex here and RE2-family
-    engines in twins/oracles — the engine-portable subset (literals,
-    char classes, '.', '*', '+', '?', '{m,n}', alternation, grouping) is
-    the documented domain, the same subset the ES regexp query guarantees;
-    backrefs/lookarounds are Java-only and out of contract. A pattern
-    expanding past ``max_expansions`` raises (silent truncation would be
-    scan-order-dependent); one matching nothing contributes no terms, and
+    Expansion plan: ONE driver-side read of the whole ``term`` column,
+    each term tested with Python ``re.fullmatch``. A pattern that does not
+    compile raises ValueError before any read. Patterns use Python regex
+    here and each SQL engine's own in the twins — the engine-portable
+    subset (literals, char classes, '.', '*', '+', '?', '{m,n}',
+    alternation, grouping) is the documented domain, the same subset the
+    ES regexp query guarantees; backrefs/lookarounds are out of contract. A pattern expanding past
+    ``max_expansions`` raises (silent truncation would be
+    read-order-dependent); one matching nothing contributes no terms, and
     a query with no surviving terms returns no rows. At trillion-term
     vocabularies the dictionary pass swaps to an n-gram sidecar that
     prefilters candidate terms by the pattern's literal n-grams (Lucene's
@@ -1372,8 +1350,7 @@ def search_regexp(
     exp = _expand_terms(
         se,
         sorted({p for _qid, p in patterns}),
-        lambda ps: _any(F.col("term").rlike(f"^(?:{p})$") for p in ps),
-        lambda p, t: re.fullmatch(f"(?:{p})", t) is not None,
+        _regexp_matcher,
         "regexp",
         max_expansions,
     )
@@ -2030,18 +2007,16 @@ def more_like_this(
     whose winners drop the seed and re-rank — exact, because removing at
     most one row from an exact top-(k+1) leaves an exact top-k, and docID
     order == url order makes the url tie-break identical to the kernel's
-    doc_id tie-break. A seed url the index never ingested (or whose terms
-    all left the index) contributes no result rows."""
-    import math
+    doc_id tie-break. The drop and the re-rank run on the driver over the
+    search's O(queries x (k+1)) rows, handed back with ``local_df``. A
+    seed url the index never ingested (or whose terms all left the index)
+    contributes no result rows."""
     from collections import Counter
 
     se = get_searcher(spark, index_dir, cell_parts)
     urls = sorted({u for _, u in seeds})
     rows = (
-        spark.read.parquet(se.paths.docs_extracted)
-        .filter(F.col("url").isin(urls))
-        .select("url", "text")
-        .collect()
+        _extracts(se).filter(F.col("url").isin(urls)).select("url", "text").collect()
     )
     text_by_url = {r["url"]: r["text"] for r in rows}
     queries: list[tuple[int, str]] = []
@@ -2061,24 +2036,21 @@ def more_like_this(
             queries.append((qid, " ".join(sel)))
     if not queries:
         return _empty_hits(se, False)
-    res = se.search(queries, k=k + 1, mode=mode, fixed_point=fixed_point)
-    seed_df = local_df(spark, seeds, "sq int, seed_url string")
-    survivors = res.join(
-        F.broadcast(seed_df),
-        (res["query_id"] == seed_df["sq"]) & (res["url"] == seed_df["seed_url"]),
-        "left_anti",
-    )
-    order_key = (
-        F.floor(F.col("score") * 1_000_000).cast("long")
-        if fixed_point
-        else F.col("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc(order_key), F.asc("url"))
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "url", "score")
-    )
+    res = se.search(queries, k=k + 1, mode=mode, fixed_point=fixed_point).collect()
+    # drop each query's seed, then rank by the score (floored under
+    # fixed_point) desc with url asc, on the driver
+    seed_set = set(seeds)
+    by_qid: dict[int, list[tuple]] = {}
+    for qid, _rank, url, score in res:
+        if (qid, url) not in seed_set:
+            key = math.floor(score * 1_000_000) if fixed_point else score
+            by_qid.setdefault(qid, []).append((-key, url, score))
+    out = [
+        (qid, i, url, score)
+        for qid, hits in sorted(by_qid.items())
+        for i, (_key, url, score) in enumerate(sorted(hits)[: max(k, 0)], 1)
+    ]
+    return local_df(spark, out, _hits_ddl(False))
 
 
 def search_snippets(
@@ -2541,9 +2513,7 @@ def _url_doc_ids(se: Searcher, urls: DataFrame | list[str]) -> list[tuple[str, i
     local_pos computed on the driver (the same resolution plans/deletes.py
     uses for tombstones). URLs the index never ingested resolve to
     nothing; callers that need every url check."""
-    ext = se.spark.read.parquet(se.paths.docs_extracted).select(
-        "url", "part_id", "local_pos"
-    )
+    ext = _extracts(se).select("url", "part_id", "local_pos")
     if isinstance(urls, DataFrame):
         ext = ext.join(F.broadcast(urls.select("url").distinct()), "url")
     else:
@@ -2599,36 +2569,61 @@ def _pruned_parquet_rows(
     ]
 
 
+def _read_dictionary(
+    se: Searcher, columns: list[str], filters=None, buckets=None
+) -> pa.Table:
+    """The one driver-side read of the committed term dictionary: the
+    ``columns`` of term_stats, pyarrow ``filters`` pushed to its row
+    groups, from the hash-bucket dirs in ``buckets`` (every bucket when
+    None). Streamed indexes version term_stats per refresh; the read pins
+    the committed max delta (a crashed refresh's recompute includes
+    uncommitted docs' df — idf drift on the committed index). term_stats
+    is parquet in every layout (Iceberg builds move only the postings to
+    the table), and a missing relation raises rather than reading as an
+    empty vocabulary."""
+    root = se.paths.term_stats
+    if se.committed_deltas is not None:
+        root = os.path.join(root, f"delta={max(se.committed_deltas)}")
+    if buckets is None:
+        buckets = range(se.n_buckets)
+    tables = _pruned_parquet_tables(
+        root, [f"bucket={b}" for b in buckets], columns, filters
+    )
+    return pa.concat_tables(tables) if tables else pa.table({c: [] for c in columns})
+
+
+def _stem_range(stem: str) -> list[tuple]:
+    """The pyarrow filter keeping the terms in ``[stem, stem⁺)``, stem⁺
+    being ``stem`` with its last character incremented, so only row groups
+    whose min/max overlap that range load. Open-ended when the stem is
+    empty or ends in a character without a plain successor: the range only
+    prunes, the caller's matcher decides."""
+    rng = [("term", ">=", stem)]
+    if stem and ord(stem[-1]) < 0xD7FF:
+        rng.append(("term", "<", stem[:-1] + chr(ord(stem[-1]) + 1)))
+    return rng
+
+
 def _ensure_idf(se: Searcher, terms: list[str]) -> None:
     """Fill the Searcher's df cache for ``terms`` with ONE bucket- and
     term-pruned term_stats read covering the misses (None caches an absent
     term); a term's idf is ``idf_value(n_docs, df)``. Shared by the BM25
     paths (through ``_query_head``) and the positional phrase path.
 
-    The read happens DRIVER-SIDE with pyarrow (directory pruning to the
-    misses' buckets, the term predicate pushed to parquet row groups), not
-    as a Spark job: the pruned slice is O(queried buckets' vocabulary) and
-    was always collected to the driver to build the query payload anyway.
-    term_stats is parquet in every layout (Iceberg builds move only the
-    postings to the table), and a missing relation raises rather than
-    caching real terms as absent."""
+    The read is ``_read_dictionary`` pruned to the misses' buckets with
+    the term predicate pushed to parquet row groups, not a Spark job: the
+    pruned slice is O(queried buckets' vocabulary) and was always
+    collected to the driver to build the query payload anyway."""
     misses = [t for t in terms if t not in se._df_cache]
     if not misses:
         return
-    root = se.paths.term_stats
-    if se.committed_deltas is not None:
-        # streamed: term_stats is VERSIONED per refresh; pin to the
-        # committed max delta (a crashed refresh's recompute includes
-        # uncommitted docs' df — idf drift on the committed index).
-        root = os.path.join(root, f"delta={max(se.committed_deltas)}")
-    miss_buckets = sorted({term_bucket(t, se.n_buckets) for t in misses})
-    rows = _pruned_parquet_rows(
-        root,
-        [f"bucket={b}" for b in miss_buckets],
+    d = _read_dictionary(
+        se,
         ["term", "df"],
-        filters=[("term", "in", misses)],
+        [("term", "in", misses)],
+        sorted({term_bucket(t, se.n_buckets) for t in misses}),
     )
-    found = {r["term"]: int(r["df"]) for r in rows}
+    found = dict(zip(d["term"].to_pylist(), d["df"].to_pylist()))
     for t in misses:
         se._df_cache[t] = found.get(t)
 
@@ -3119,7 +3114,7 @@ def search_query_string(
     se = get_searcher(spark, index_dir, cell_parts)
     parsed = {qid: parse_query_string(text) for qid, text in queries}
 
-    # prefix expansion: one term-dictionary scan for every stem in the batch
+    # prefix expansion: one term-dictionary read for every stem in the batch
     stems = sorted({s for p in parsed.values() for s in p["prefixes"]})
     exp = _expand_prefixes(se, stems, max_expansions)
     full_w: dict[int, dict[str, float]] = {}

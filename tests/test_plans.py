@@ -7,6 +7,8 @@ import io
 import os
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 
@@ -190,41 +192,71 @@ def test_positions_scan_pruned_and_pushed(spark, index_dir):
     assert "term" in plan.split("PushedFilters")[1].split("\n")[0]
 
 
-def _engine_expansion_scan(monkeypatch, call):
-    """Run ``call`` and return the term-dictionary scan DataFrame the
-    engine's expansion front-end built for it (plans/query.py
-    ``_expansion_scan``, the scan ``_expand_terms`` collects)."""
-    import pageindex_spark.plans.query as Q
+def _spy_dictionary_reads(monkeypatch) -> list[tuple[str, list, list]]:
+    """Record every pyarrow read of the term dictionary from now on, as
+    (file, columns, filters)."""
+    import pyarrow.parquet as pq
 
-    real, seen = Q._expansion_scan, []
+    real, seen = pq.read_table, []
 
-    def spy(*a, **kw):
-        seen.append(real(*a, **kw))
-        return seen[-1]
+    def spy(path, *a, columns=None, filters=None, **kw):
+        if f"{os.sep}term_stats{os.sep}" in str(path):
+            seen.append((str(path), columns, filters))
+        return real(path, *a, columns=columns, filters=filters, **kw)
 
-    monkeypatch.setattr(Q, "_expansion_scan", spy)
-    call()
-    assert len(seen) == 1
-    return seen[0]
+    monkeypatch.setattr(pq, "read_table", spy)
+    return seen
 
 
-def test_prefix_expansion_scan_pushed_and_pruned(spark, index_dir, monkeypatch):
-    """The term-dictionary scan behind 'term*' expansion must push
-    StartsWith to parquet and column-prune to the term column (df never
-    loads; no postings blobs anywhere near)."""
+def _assert_range_read(index_dir, reads, ranges, tmp_path):
+    """The expansion read every term_stats file for ``term`` only, under
+    one filter keeping the terms in ``ranges`` ([lo, hi) pairs). Applied
+    to a file of the same terms cut into many row groups, that filter
+    loads exactly the row groups whose min/max overlap some range."""
+    import glob
+
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    want = [[("term", ">=", lo), ("term", "<", hi)] for lo, hi in ranges]
+    expansion = [r for r in reads if r[1] == ["term"]]
+    files = sorted(glob.glob(os.path.join(index_dir, "term_stats", "*", "*.parquet")))
+    assert sorted(f for f, _c, _f in expansion) == files
+    assert all(f == want for _p, _c, f in expansion)
+    # every other term_stats read is the idf lookup of the expanded terms
+    assert all(c == ["term", "df"] and f[0][1] == "in" for _p, c, f in reads if c != ["term"])
+
+    terms = pq.read_table(files[0], columns=["term"]).sort_by("term")
+    many = str(tmp_path / "terms.parquet")
+    pq.write_table(terms, many, row_group_size=64)
+    meta = pq.ParquetFile(many).metadata
+    overlap = [
+        i
+        for i in range(meta.num_row_groups)
+        if any(
+            meta.row_group(i).column(0).statistics.min < hi
+            and meta.row_group(i).column(0).statistics.max >= lo
+            for lo, hi in ranges
+        )
+    ]
+    assert 0 < len(overlap) < meta.num_row_groups
+    (frag,) = ds.dataset(many, format="parquet").get_fragments()
+    kept = frag.split_by_row_group(pq.filters_to_expression(want))
+    assert [g.id for f in kept for g in f.row_groups] == overlap
+
+
+def test_prefix_expansion_scan_pushed_and_pruned(
+    spark, index_dir, monkeypatch, tmp_path
+):
+    """The term-dictionary read behind 'term*' expansion is a driver-side
+    pyarrow read of the ``term`` column only (df never loads; no postings
+    blobs anywhere near) under each stem's [stem, stem⁺) range, so only
+    the row groups overlapping a stem load."""
     from pageindex_spark import search_prefix
 
-    ts = _engine_expansion_scan(
-        monkeypatch,
-        lambda: search_prefix(
-            spark, index_dir, [(1, "ba* qu*")], max_expansions=100_000
-        ),
-    )
-    plan = _explain(ts)
-    assert "PushedFilters" in plan
-    assert "StartsWith" in plan.split("PushedFilters")[1].split("\n")[0]
-    read_schema = plan.split("ReadSchema:")[1].split("\n")[0]
-    assert "term" in read_schema and "df" not in read_schema
+    reads = _spy_dictionary_reads(monkeypatch)
+    search_prefix(spark, index_dir, [(1, "ba* qu*")], max_expansions=100_000)
+    _assert_range_read(index_dir, reads, [("ba", "bb"), ("qu", "qv")], tmp_path)
 
 
 def test_parse_prefix_query_contract():
@@ -268,24 +300,85 @@ def test_parse_wildcard_query_contract():
     assert wildcard_prefix("?uery") == ""
 
 
-def test_wildcard_literal_head_scan_pushed(spark, index_dir, monkeypatch):
-    """When every wildcard pattern has a literal head, the expansion scan
-    (plans/query.py search_wildcard) must push StartsWith to parquet just
-    like the prefix path — the rlike merely verifies (leading-wildcard
-    patterns are the only ones that pay a full dictionary pass)."""
+def test_wildcard_literal_head_scan_pushed(spark, index_dir, monkeypatch, tmp_path):
+    """When every wildcard pattern has a literal head, the expansion read
+    (plans/query.py search_wildcard) is range-pruned on that head just
+    like the prefix path — the regex merely verifies (leading-wildcard
+    patterns are the only ones that read the whole ``term`` column)."""
     from pageindex_spark import search_wildcard
 
-    ts = _engine_expansion_scan(
-        monkeypatch,
-        lambda: search_wildcard(
-            spark, index_dir, [(1, "ba*a")], max_expansions=100_000
+    reads = _spy_dictionary_reads(monkeypatch)
+    search_wildcard(spark, index_dir, [(1, "ba*a")], max_expansions=100_000)
+    _assert_range_read(index_dir, reads, [("ba", "bb")], tmp_path)
+
+
+def test_invalid_regexp_raises_before_any_read(spark, index_dir, monkeypatch):
+    """A regexp that does not compile raises ValueError naming the
+    pattern, before the term dictionary is read."""
+    from pageindex_spark import search_regexp
+
+    reads = _spy_dictionary_reads(monkeypatch)
+    with pytest.raises(ValueError, match=r"'ab\('"):
+        search_regexp(spark, index_dir, [(1, "ba.*"), (2, "ab(")])
+    assert reads == []
+
+
+def _jobs_of(spark, group: str, call) -> list[int]:
+    """Spark jobs launched while ``call`` runs under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dictionary_surfaces_run_no_job(spark, index_dir):
+    """The expansions and the term suggesters read the term dictionary on
+    the driver and, on the local path, score and hand back without Spark:
+    call + collect launch zero jobs."""
+    import pageindex_spark.plans.query as Q
+
+    calls = {
+        "prefix": lambda: Q.search_prefix(spark, index_dir, [(1, "bab* di")]),
+        "wildcard": lambda: Q.search_wildcard(spark, index_dir, [(1, "b?b*a")]),
+        "fuzzy": lambda: Q.search_fuzzy(spark, index_dir, [(1, "babacefo")]),
+        "regexp": lambda: Q.search_regexp(spark, index_dir, [(1, "bab[a-c].*")]),
+        "suggest_terms": lambda: Q.suggest_terms(spark, index_dir, [(1, "ba")]),
+        "suggest_spelling": lambda: Q.suggest_spelling(
+            spark, index_dir, [(1, "babacefx")]
         ),
+    }
+    jobs = {}
+    for name, call in calls.items():
+        assert call().collect(), name  # warm, and not vacuous
+        jobs[name] = _jobs_of(spark, f"dict-{name}", lambda: call().collect())
+    assert jobs == {name: [] for name in calls}
+
+
+def test_filter_urls_plans_extracts_without_inference(spark, index_dir):
+    """``filter_urls`` resolves its urls through the extracts read with a
+    fixed schema: a local-path search with a url filter runs the url
+    lookup's one job and no parquet schema-inference job."""
+    import pageindex_spark.plans.query as Q
+    from pageindex_spark.session import local_df
+
+    url = (
+        spark.read.parquet(os.path.join(index_dir, "docs_extracted"))
+        .select("url").first()["url"]
     )
-    plan = _explain(ts)
-    assert "PushedFilters" in plan
-    assert "StartsWith" in plan.split("PushedFilters")[1].split("\n")[0]
-    read_schema = plan.split("ReadSchema:")[1].split("\n")[0]
-    assert "term" in read_schema and "df" not in read_schema
+
+    def call():
+        allowed = local_df(spark, [(url,)], "url string")
+        return Q.search(spark, index_dir, [(1, "ba di")], filter_urls=allowed).collect()
+
+    call()
+    # the url lookup's own jobs; a schema-inference job on the extracts
+    # scan would make it three
+    assert len(_jobs_of(spark, "filter-urls", call)) == 2
 
 
 def test_hits_count_plan_reads_no_norms(spark, index_dir, monkeypatch):
@@ -350,6 +443,26 @@ def test_fuzzy_negation_passes_through(spark, index_dir):
     assert out  # fuzzy 'ba' matches something
     for r in out:
         assert "ce" not in tokenize(r["text"])
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.text("abc", max_size=7), st.text("abc", max_size=7), st.integers(-1, 3)
+)
+def test_within_edits_is_levenshtein(a, b, max_edits):
+    """The fuzzy/spelling matcher (with its pigeonhole pre-filter and its
+    early exit) returns the plain Levenshtein DP's distance when it is
+    within ``max_edits``, and None otherwise."""
+    from pageindex_spark.plans.query import _within_edits
+
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    want = prev[-1] if prev[-1] <= max_edits else None
+    assert _within_edits(a, b, max_edits) == want
 
 
 def test_single_lineage_plans_no_duplicate_kernels(spark, index_dir):
