@@ -10,6 +10,7 @@ Usage:
   python jobs/plan_dump.py after --only bm25_topk,postings   # a subset
   python jobs/plan_dump.py after --out plans/r07 --search INDEX_DIR
   python jobs/plan_dump.py after --out plans/r10 --hits INDEX_DIR
+  python jobs/plan_dump.py after --out plans/r13 --scored INDEX_DIR
 
 ``--search INDEX_DIR`` dumps, instead of the SQL leaves, the plan of a
 distributed ``search()`` batch over a built index: the ``make_queries()``
@@ -20,6 +21,10 @@ candidates DataFrame the engine hands to its rank step
 likewise dumps the plans of ``search_count`` and ``facet_counts`` (facet
 = first hex digit of md5(url)) over the same batch
 (``<out>/hits_count_<tag>.txt``, ``<out>/facet_counts_<tag>.txt``).
+``--scored INDEX_DIR`` dumps the plans of three scored full-match
+surfaces over the same batch: ``search_dis_max``, ``search_terms_set``
+(required = 1 + length(url) mod 2) and ``search_collapse`` (ckey = first
+hex digit of md5(url)) (``<out>/scored_<surface>_<tag>.txt``).
 
 Plans go to ``<out>/<q>_<tag>.txt`` (default out: plans/dump, relative to
 the repo root); with --time, noop-sink timings go to
@@ -96,15 +101,41 @@ def dump_hits(spark, index_dir: str, out_dir: str, tag: str) -> None:
             f.write(_explain(df).replace(index_dir, "<INDEX_DIR>"))
 
 
+def dump_scored(spark, index_dir: str, out_dir: str, tag: str) -> None:
+    """Write the formatted plans of dis_max, terms_set and collapse."""
+    from pyspark.sql import functions as F
+
+    from pageindex_spark.plans.query import (
+        search_collapse,
+        search_dis_max,
+        search_terms_set,
+    )
+    from pageindex_spark.sources.corpus import make_queries
+
+    ext = spark.read.parquet(os.path.join(index_dir, "docs_extracted"))
+    required = ext.select("url", (F.length("url") % 2 + 1).alias("required"))
+    ckeys = ext.select("url", F.substring(F.md5("url"), 1, 1).alias("ckey"))
+    q = make_queries()
+    for name, df in (
+        ("dis_max", search_dis_max(spark, index_dir, q)),
+        ("terms_set", search_terms_set(spark, index_dir, q, required)),
+        ("collapse", search_collapse(spark, index_dir, q, ckeys)),
+    ):
+        with open(os.path.join(out_dir, f"scored_{name}_{tag}.txt"), "w") as f:
+            f.write(_explain(df).replace(index_dir, "<INDEX_DIR>"))
+
+
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    search_index = hits_index = None
+    search_index = hits_index = scored_index = None
     if "--search" in sys.argv:
         search_index = os.path.abspath(sys.argv[sys.argv.index("--search") + 1])
     if "--hits" in sys.argv:
         hits_index = os.path.abspath(sys.argv[sys.argv.index("--hits") + 1])
+    if "--scored" in sys.argv:
+        scored_index = os.path.abspath(sys.argv[sys.argv.index("--scored") + 1])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
-    if not sf_dir and search_index is None and hits_index is None:
+    if not sf_dir and (search_index, hits_index, scored_index) == (None,) * 3:
         sys.exit("plan_dump: set SPARK_GRAFT_SF_DIR to a testdata scale dir")
     n_time = 0
     if "--time" in sys.argv:
@@ -128,6 +159,9 @@ def main() -> None:
         return
     if hits_index is not None:
         dump_hits(spark, hits_index, out_dir, tag)
+        return
+    if scored_index is not None:
+        dump_scored(spark, scored_index, out_dir, tag)
         return
     warm_up(spark)
     register_views(spark, sf_dir)

@@ -10,13 +10,14 @@ Plan shape (everything here is metadata-sized — winners are <= queries x k):
 1. the ordinary ``search`` produces the winners (same plan, same results);
 2. ONE url-pushed extracts scan maps winner urls back to (part_id,
    local_pos) -> docID (inverse of the winner lookup);
-3. run METADATA for the query terms is already collected by the pruned
-   postings scan; only the few runs whose [first_doc, last_doc] span a
-   winner fetch their blobs (run_id-pushed second read) and decode;
-4. doc lengths come from the winners' norms partitions, df from the query
-   head's pruned term_stats read, n_docs/avgdl from meta — contributions recompute
-   exactly the scoring kernels' formula, in the driver, over <= q x k x
-   |terms| rows.
+3. the winners' tf per query term and doc length come from search's own
+   cell reader (``query._run_cells``): a per-cell function decodes the
+   cell's slices of the terms' runs and its norms rows and keeps the
+   winners' entries — on the driver, like the search itself, when the
+   pruned inputs are small;
+4. df comes from the query head's pruned term_stats read, n_docs/avgdl
+   from meta — contributions recompute exactly the scoring kernels'
+   formula, in the driver, over <= q x k x |terms| rows.
 
 The invariant pinned by the twin: per-term contributions SUM to the score
 ``search`` ranked by (floored at 1e-6 like everything else).
@@ -25,14 +26,20 @@ The invariant pinned by the twin: per-term contributions SUM to the score
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..functions.tokenizer import BM25_B, BM25_K1
 from ..operators.codec import vb_decode
 from ..operators.runfmt import decode_run
+from ..operators.wand import assemble_cell_runs
 from ..session import local_df
-from .query import _query_head, _url_doc_ids, get_searcher
+from .query import _query_head, _run_cells, _url_doc_ids, get_searcher
+
+_TF_DL = pa.schema(
+    [("term", pa.string()), ("doc_id", pa.int64()), ("tf", pa.int64()), ("dl", pa.int64())]
+)
 
 
 def explain_score(
@@ -51,7 +58,7 @@ def explain_score(
     top = se.search(queries, k=k, fixed_point=True)
     winners = top.select("query_id", "url").collect()
     ddl = "query_id int, url string, term string, tf long, df long, contrib double"
-    empty = local_df(spark, [], ddl)
+    empty = se._empty_df(ddl)
     if not winners:
         return empty
     urls = sorted({r["url"] for r in winners})
@@ -65,44 +72,30 @@ def explain_score(
     if not present:
         return empty
 
-    # runs metadata (column-pruned) -> only runs spanning a winner fetch blobs
-    runs_meta = se.postings_runs(present)
-    meta_rows = runs_meta.select("term", "run_id", "first_doc", "last_doc").collect()
-    dids = sorted(did_of_url.values())
-    want_runs: dict[str, set[int]] = {}
-    for r in meta_rows:
-        lo, hi = int(r["first_doc"]), int(r["last_doc"])
-        if any(lo <= d <= hi for d in dids):
-            want_runs.setdefault(r["term"], set()).add(int(r["run_id"]))
-    tf_of: dict[tuple[str, int], int] = {}
-    if want_runs:
-        rids = sorted({rid for s in want_runs.values() for rid in s})
-        from ..operators.compaction import run_from_row
+    dids = np.asarray(list(did_of_url.values()), dtype=np.int64)
 
-        blob_rows = runs_meta.filter(F.col("run_id").isin(rids)).collect()
-        for row in blob_rows:
-            docs, tfs = decode_run(run_from_row(row.asDict()))
-            idx = np.searchsorted(docs, dids)
-            for j, d in zip(idx, dids):
-                if j < len(docs) and int(docs[j]) == d:
-                    tf_of[(row["term"], d)] = int(tfs[j])
+    def tf_dl_cell(slices_pdf: pd.DataFrame, norms_pdf) -> pd.DataFrame:
+        """(term, doc_id, tf, dl) of the winners in one cell."""
+        out = {name: [] for name in _TF_DL.names}
+        if slices_pdf.empty or norms_pdf.empty:
+            return pd.DataFrame(out)
+        nrows = norms_pdf.sort_values("first_doc")
+        lo = int(nrows["first_doc"].iloc[0])
+        dl = np.concatenate([vb_decode(bytes(b)) for b in nrows["dl_blob"]])
+        for t, run in assemble_cell_runs(slices_pdf).items():
+            docs, tfs = decode_run(run)
+            hit = np.isin(docs.astype(np.int64), dids)
+            out["term"] += [t] * int(hit.sum())
+            out["doc_id"] += docs[hit].tolist()
+            out["tf"] += tfs[hit].tolist()
+            out["dl"] += dl[docs[hit].astype(np.int64) - lo].tolist()
+        return pd.DataFrame(out)
 
-    # doc lengths from the winners' norms partitions
-    grid = se.grid_parts
-    parts = sorted(
-        {int(np.searchsorted(grid, d, side="right") - 1) for d in dids}
-    )
-    dl_of: dict[int, int] = {}
-    for r in (
-        se.norms.filter(F.col("part_id").isin(parts))
-        .select("part_id", "first_doc", "dl_blob")
-        .collect()
-    ):
-        dls = vb_decode(bytes(r["dl_blob"]))
-        lo = int(r["first_doc"])
-        for d in dids:
-            if lo <= d < lo + len(dls):
-                dl_of[d] = int(dls[d - lo])
+    rows = _run_cells(se, present, tf_dl_cell, _TF_DL, local=True)
+    if isinstance(rows, DataFrame):  # the distributed stage or Iceberg
+        rows = rows.collect()
+    tf_of = {(r["term"], int(r["doc_id"])): int(r["tf"]) for r in rows}
+    dl_of = {int(r["doc_id"]): int(r["dl"]) for r in rows}
 
     avgdl = se.avgdl
     out = []

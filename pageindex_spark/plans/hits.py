@@ -50,10 +50,13 @@ from ..session import local_df
 from .query import (
     QueryHead,
     _CellMask,
+    _dim_type,
     _extracts,
+    _fixed6,
     _query_head,
     _read_dictionary,
     _run_cells,
+    _scored_agg,
     _touched_parts,
     _two_phase_rank,
     _with_urls,
@@ -2156,39 +2159,28 @@ def top_hits(
     Exactness needs every bucket's GLOBAL best docs, which only the full
     scored match set contains (a per-cell top-k could hide a sparse
     bucket's best behind same-cell docs of other buckets — the field-
-    collapsing argument exactly), so matching runs the exhaustive dense
-    kernel via ``raw_scored`` — O(matches) scored rows, the inherent ES
-    cost class (ES evaluates top_hits on every matching doc per shard
-    too). Full pre-heap exclusion contract applies inside the kernel.
-    After the kernel all JVM: ONE extracts url-join pruned to the
-    partitions the runs can touch, broadcast-class facet join, then ONE
-    row_number window partitioned by (query, facet) — the bucket key IS
-    the partition key, so ranking shuffles each bucket to one task and
-    never global-sorts; no second phase needed (vs search_collapse's
-    64-way pre-top-k) because the per-bucket result is already k-bounded
-    by the window filter."""
+    collapsing argument exactly), so the plan is ``query._scored_agg``'s
+    full scored match set (the inherent ES cost class: ES evaluates
+    top_hits on every matching doc per shard too), then all JVM: a
+    broadcast-class facet join and ONE row_number window partitioned by
+    (query, facet) — the bucket key IS the partition key, so ranking
+    shuffles each bucket to one task and never global-sorts; no second
+    phase needed (vs search_collapse's 64-way pre-top-k) because the
+    per-bucket result is already k-bounded by the window filter."""
     from pyspark.sql import Window
 
-    from .query import _search_impl
-
-    se = get_searcher(spark, index_dir, cell_parts)
-    scored, parts = _search_impl(
-        se, queries, n, "dense", fixed_point=True, raw_scored=True
-    )
-    keyed = (
-        _with_urls(se, scored, parts)
-        .join(facets.select("url", "facet"), "url")
-        .withColumn(
-            "score6", F.floor(F.col("score") * 1_000_000).cast("long")
-        )
-    )
     w = Window.partitionBy("query_id", "facet").orderBy(
         F.desc("score6"), F.asc("doc_id")
     )
-    return (
-        keyed.withColumn("rank", F.row_number().over(w))
+    return _scored_agg(
+        spark, index_dir, cell_parts, queries,
+        f"query_id int, facet {_dim_type(facets, 'facet')}, rank int, "
+        "url string, score6 long",
+        lambda keyed: keyed.join(facets.select("url", "facet"), "url")
+        .withColumn("score6", _fixed6("score"))
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= n)
-        .select("query_id", "facet", "rank", "url", "score6")
+        .select("query_id", "facet", "rank", "url", "score6"),
     )
 
 

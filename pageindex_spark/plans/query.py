@@ -190,8 +190,8 @@ class Searcher:
     @functools.cached_property
     def norms(self) -> DataFrame:
         """The committed norms as a Spark relation with each row's cell,
-        built on first use: only explain and the Iceberg cogroup read it
-        (parquet searches read norms rows with pyarrow). Cached unless the
+        built on first use: only the Iceberg cogroup reads it (parquet
+        indexes read norms rows with pyarrow). Cached unless the
         Searcher was opened with cache=False, since it is O(n_docs) bytes."""
         norms = self.spark.read.parquet(self.paths.norms)
         if self.committed_deltas is not None:
@@ -223,12 +223,12 @@ class Searcher:
 
     def postings_runs(self, terms: list[str]) -> DataFrame:
         """The committed postings runs of ``terms`` as a Spark scan, read
-        only for Iceberg-stored postings (``_run_cells``, ``_touched_parts``)
-        and by explain; parquet queries read runs with pyarrow. The scan
-        reads only the terms' hash-bucket dirs (partition pruning), pushes
-        the term list to parquet row groups, and on streamed indexes keeps
-        only the committed deltas (a crashed refresh's runs hold docIDs
-        beyond the committed grid and norms)."""
+        only for Iceberg-stored postings (``_run_cells``, ``_touched_parts``);
+        parquet queries read runs with pyarrow. The scan reads only the
+        terms' hash-bucket dirs (partition pruning), pushes the term list
+        to parquet row groups, and on streamed indexes keeps only the
+        committed deltas (a crashed refresh's runs hold docIDs beyond the
+        committed grid and norms)."""
         buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
         runs = read_index_runs(
             self.spark, self.paths.postings, self.n_buckets, self.iceberg_table
@@ -560,11 +560,7 @@ def _verified_topk(
         .filter(cond)
         .drop("tk", "rank")
     )
-    order_key = (
-        F.floor(F.col("score") * 1_000_000).cast("long")
-        if fixed_point
-        else F.col("score")
-    )
+    order_key = _fixed6("score") if fixed_point else F.col("score")
     w = Window.partitionBy("query_id").orderBy(F.desc(order_key), F.asc("url"))
     out_cols = ["query_id", "rank", "url", "score"] + (
         ["text"] if with_text else []
@@ -871,16 +867,15 @@ def search_multi_field(
     survive the combination). tie_breaker=0 is pure dis_max across
     fields; 1 sums the fields.
 
-    Plan: ONE exhaustive raw-score kernel per field (the standard pruned
-    scan — fields run independently, so a 100-TB body index and a 100-GB
-    title index each prune to their own touched cells), each field's
-    (query, doc) scores joined to its OWN extracts for the url key
-    (grids may differ across indexes — url is the cross-field identity,
-    the engine's standing docID==url-order invariant), boosted, then one
-    UNION + map-side-combined groupBy(query, url) for max/sum. Ranking
-    is two-phase over a url-hash bucket (per-bucket top-k, global rank
-    over survivors — never a global sort; the part grids differ across
-    fields so the hash bucket replaces part_id as the skew shield).
+    Plan: ``_scored_urls`` per field — a 100-TB body index and a 100-GB
+    title index each prune to their own touched cells and join their OWN
+    extracts for the url key (grids may differ across indexes — url is the
+    cross-field identity, the engine's standing docID==url-order
+    invariant), boosted, then one UNION + map-side-combined
+    groupBy(query, url) for max/sum. Ranking is two-phase over a url-hash
+    bucket (per-bucket top-k, global rank over survivors — never a global
+    sort; the part grids differ across fields so the hash bucket replaces
+    part_id as the skew shield).
     Pick boosts and tie_breaker exactly representable (0.25, 0.5, 2.0):
     the combination is then two IEEE ops both engines round identically
     (per-doc per-field addends are commutative at 2 fields; beyond ~3
@@ -893,36 +888,22 @@ def search_multi_field(
     for idx, boost in fields:
         if boost <= 0:
             raise ValueError(f"field {idx}: boost must be > 0, got {boost}")
-    per_field: list[DataFrame] = []
-    for index_dir, boost in fields:
-        se = get_searcher(spark, index_dir, cell_parts)
-        scored, parts = _search_impl(
-            se, queries, k, "dense", fixed_point=True, raw_scored=True
+    searchers = [get_searcher(spark, d, cell_parts) for d, _b in fields]
+    per_field = [
+        keyed.select("query_id", "url", (F.col("score") * F.lit(float(b))).alias("s"))
+        for se, (_d, b) in zip(searchers, fields)
+        if (keyed := _scored_urls(se, queries)) is not None
+    ]
+    if not per_field:  # no field can match
+        return searchers[0]._empty_df(
+            "query_id int, rank int, url string, final6 long, best6 long"
         )
-        per_field.append(
-            _with_urls(se, scored, parts).select(
-                "query_id",
-                "url",
-                (F.col("score") * F.lit(float(boost))).alias("s"),
-            )
-        )
-    unioned = per_field[0]
-    for df in per_field[1:]:
-        unioned = unioned.unionByName(df)
-    agg = (
-        unioned.groupBy("query_id", "url")
-        .agg(F.max("s").alias("mx"), F.sum("s").alias("sm"))
-        .withColumn(
-            "final6",
-            F.floor(
-                (
-                    F.col("mx")
-                    + F.lit(float(tie_breaker)) * (F.col("sm") - F.col("mx"))
-                )
-                * 1_000_000
-            ).cast("long"),
-        )
-        .withColumn("best6", F.floor(F.col("mx") * 1_000_000).cast("long"))
+    unioned = functools.reduce(DataFrame.unionByName, per_field)
+    agg = _dis_max_keys(
+        unioned.groupBy("query_id", "url").agg(
+            F.max("s").alias("best"), F.sum("s").alias("score")
+        ),
+        tie_breaker,
     )
     return _two_phase_rank(
         agg, (F.desc("final6"), F.asc("url")), k,
@@ -951,6 +932,92 @@ def _with_urls(
     if parts is not None and 2 * len(parts) < len(se.grid_parts):
         ext = ext.filter(F.col("part_id").isin(sorted(parts)))
     return df.join(ext, ["part_id", "local_pos"])
+
+
+_DIS_MAX_WIDTH = 64  # max distinct terms per query of a per-term split
+
+
+def _scored_urls(
+    se: Searcher, queries: list[tuple[int, str]], per_term: bool = False
+) -> DataFrame | None:
+    """The full scored match set as (query_id, doc_id, part_id, local_pos,
+    url, score) rows — the raw dense kernel, its url join pruned to the
+    partitions the runs touch — or None when no query can match.
+    ``per_term`` scores each query's distinct terms as single-term
+    subqueries ``qid * _DIS_MAX_WIDTH + i`` of one kernel call (disjoint
+    singletons decode what the plain OR query would), combined per doc
+    before the url join into ``score`` (sum), ``best`` (max) and
+    ``n_matched`` (count)."""
+    if per_term:
+        sub: list[tuple[int, str]] = []
+        for qid, text in queries:
+            terms = sorted(set(tokenize(text)))
+            if len(terms) > _DIS_MAX_WIDTH:
+                raise ValueError(
+                    f"query {qid} has {len(terms)} terms > {_DIS_MAX_WIDTH}"
+                )
+            sub.extend((qid * _DIS_MAX_WIDTH + i, t) for i, t in enumerate(terms))
+        queries = sub
+    res = _search_impl(se, queries, 1, "dense", raw_scored=True)  # k: unused
+    if res is None:
+        return None
+    scored, parts = res
+    if per_term:
+        scored = (
+            scored.withColumn(
+                "query_id", F.expr(f"query_id div {_DIS_MAX_WIDTH}").cast("int")
+            )
+            .groupBy("query_id", "doc_id", "part_id", "local_pos")
+            .agg(
+                F.sum("score").alias("score"),
+                F.max("score").alias("best"),
+                F.count("*").alias("n_matched"),
+            )
+        )
+    return _with_urls(se, scored, parts)
+
+
+def _scored_agg(
+    spark: SparkSession,
+    index_dir: str,
+    cell_parts: int,
+    queries: list[tuple[int, str]],
+    ddl: str,
+    build: Callable[[DataFrame], DataFrame],
+    per_term: bool = False,
+) -> DataFrame:
+    """The scored full-match surfaces' one front-end. Their rank key is not
+    BM25 order, so a per-cell top-k could hide a doc that wins under it:
+    they rank the FULL scored match set (``_scored_urls``: the exhaustive
+    dense kernel, O(matches) rows, exclusion contract pre-heap; ONE url
+    join pruned to the touched partitions), and ``build`` adds the
+    surface's dimension join, key and rank. When no query can match, the
+    Searcher's cached empty frame of ``ddl``, with no Spark plan built."""
+    se = get_searcher(spark, index_dir, cell_parts)
+    keyed = _scored_urls(se, queries, per_term)
+    if keyed is None:
+        return se._empty_df(ddl)
+    return build(keyed)
+
+
+def _dim_type(dim: DataFrame, col: str) -> str:
+    """A dimension column's DDL type (no job): empty results keep it."""
+    return dim.schema[col].dataType.simpleString()
+
+
+def _fixed6(col: str) -> Column:
+    """``floor(col * 1e6)`` as a long: the engine's fixed-point score."""
+    return F.floor(F.col(col) * 1_000_000).cast("long")
+
+
+def _dis_max_keys(df: DataFrame, tie_breaker: float) -> DataFrame:
+    """``df`` with the dis_max rank key ``final6 = floor((best +
+    tie_breaker * (score - best)) * 1e6)`` and ``best6``."""
+    b = F.col("best")
+    final = (b + F.lit(float(tie_breaker)) * (F.col("score") - b)) * 1_000_000
+    return df.withColumn("final6", F.floor(final).cast("long")).withColumn(
+        "best6", _fixed6("best")
+    )
 
 
 def _two_phase_rank(
@@ -1487,20 +1554,13 @@ def search_collapse(
     ES's keep-missing behavior supply a defaulted dimension, e.g. ckey =
     url).
 
-    Exactness needs the best doc of EVERY key that matched, which only the
-    full scored match set contains (a per-cell top-k could hide a key's
-    global best behind same-cell docs of other keys), so matching runs the
-    exhaustive dense kernel with no per-cell truncate — O(matches) scored
-    rows, the inherent ES-collapse cost class, same as facets /
-    sort-by-field (BMW's top-k contract cannot serve collapse). The full
-    exclusion contract applies pre-heap as always (tombstones, '-term',
-    ``filter_urls`` via ``search``'s machinery). Plan shape after the
-    kernel, all JVM-side:
+    Exactness needs the best doc of EVERY key that matched (a per-cell
+    top-k could hide a key's global best behind same-cell docs of other
+    keys), so the plan is ``_scored_agg``'s full scored match set — the
+    inherent ES-collapse cost class, same as facets / sort-by-field — then,
+    all JVM-side (``_collapse_groups``):
 
-    1. url join: ONE extracts scan column-pruned to (part_id, local_pos,
-       url) and filtered to the partitions the pruned runs can touch (the
-       prune list ``raw_scored`` computes driver-side), joined on the
-       kernel-emitted coordinates; then the ckey dimension joins on url.
+    1. the ckey dimension joins on url.
     2. collapse: ``groupBy(query_id, ckey).agg(max(struct(...)))`` — an
        argmax by (score6 desc, docID asc) encoded as a lexicographic
        struct max, so Spark runs it as ONE shuffle with map-side partial
@@ -1513,45 +1573,38 @@ def search_collapse(
     ``fixed_point`` collapses and ranks over floor(score*1e6) with docID
     tie-break (the oracle-exact order); raw doubles otherwise. Ties break
     url-asc == docID order, the engine-wide tie-break."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    scored, parts = _search_impl(
-        se, queries, k, "dense", fixed_point, raw_scored=True
+    return _scored_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, rank int, url string, "
+        f"ckey {_dim_type(collapse_keys, 'ckey')}, score double",
+        lambda keyed: _collapse_groups(
+            keyed, collapse_keys, fixed_point, k,
+            ["query_id", "rank", "url", "ckey", "score"],
+        )[1],
     )
-    skey = (
-        F.floor(F.col("score") * 1_000_000).cast("long")
-        if fixed_point
-        else F.col("score")
+
+
+def _collapse_groups(
+    keyed: DataFrame, collapse_keys: DataFrame, fixed_point: bool, k: int,
+    cols: list[str],
+) -> tuple[DataFrame, DataFrame]:
+    """Scored url rows keyed by ``ckey`` and ``skey`` (floor(score*1e6)
+    under ``fixed_point``, else the raw score), and the top-``k`` groups
+    per query: each (query, ckey)'s best doc by (skey desc, docID asc) as
+    a struct max, two-phase ranked over hash(ckey) mod 64."""
+    skey = _fixed6("score") if fixed_point else F.col("score")
+    keyed = keyed.join(collapse_keys.select("url", "ckey"), "url").withColumn(
+        "skey", skey
     )
-    keyed = (
-        _with_urls(se, scored, parts)
-        .join(collapse_keys.select("url", "ckey"), "url")
-        .withColumn("skey", skey)
-    )
+    ndoc = (-F.col("doc_id")).alias("ndoc")
     best = (
         keyed.groupBy("query_id", "ckey")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("skey"),
-                    (-F.col("doc_id")).alias("ndoc"),
-                    F.col("doc_id"),
-                    F.col("url"),
-                    F.col("score"),
-                )
-            ).alias("b")
-        )
-        .select(
-            "query_id",
-            "ckey",
-            F.col("b.skey").alias("skey"),
-            F.col("b.doc_id").alias("doc_id"),
-            F.col("b.url").alias("url"),
-            F.col("b.score").alias("score"),
-        )
+        .agg(F.max(F.struct("skey", ndoc, "doc_id", "url", "score")).alias("b"))
+        .select("query_id", "ckey", "b.skey", "b.doc_id", "b.url", "b.score")
     )
-    return _two_phase_rank(
-        best, (F.desc("skey"), F.asc("doc_id")), k,
-        ["query_id", "rank", "url", "ckey", "score"], F.pmod(F.hash("ckey"), F.lit(64)),
+    return keyed, _two_phase_rank(
+        best, (F.desc("skey"), F.asc("doc_id")), k, cols,
+        F.pmod(F.hash("ckey"), F.lit(64)),
     )
 
 
@@ -1574,16 +1627,12 @@ def search_collapse_inner(
     docs within it (inner_rank 1 IS the doc plain ``search_collapse``
     would return).
 
-    Same exactness argument as ``search_collapse`` (a per-cell top-k could
-    hide a group's global best), so matching runs the exhaustive dense
-    kernel — O(matches) scored rows. Plan shape:
+    Same exactness argument and plan head as ``search_collapse``:
 
-    1. url + ckey join as in ``search_collapse`` (pruned extracts scan).
-    2. group ranking: the argmax-per-key struct max (ONE map-side-combined
-       shuffle), then the two-phase rank (per-(query, hash(ckey) mod 64)
-       top-k, global rank over <= queries x 64 x k survivors) — never a
-       global sort.
-    3. inner hits: row_number per (query_id, ckey) keeps each group's top
+    1. ``_scored_agg``, then the ckey join and group ranking of
+       ``_collapse_groups`` (argmax-per-key struct max, ONE map-side-
+       combined shuffle; two-phase rank over hash(ckey) mod 64).
+    2. inner hits: row_number per (query_id, ckey) keeps each group's top
        ``inner_k``; the surviving groups (<= queries x k rows after the
        rank filter) BROADCAST-join onto them, so the only wide exchange
        on the O(matches) side is the window's own (query, ckey) shuffle.
@@ -1594,44 +1643,26 @@ def search_collapse_inner(
     docID tie-break — the oracle-exact order."""
     if k < 1 or inner_k < 1:
         raise ValueError(f"k and inner_k must be >= 1, got k={k}, inner_k={inner_k}")
-    se = get_searcher(spark, index_dir, cell_parts)
-    scored, parts = _search_impl(
-        se, queries, k, "dense", fixed_point, raw_scored=True
+    w_inner = Window.partitionBy("query_id", "ckey").orderBy(
+        F.desc("skey"), F.asc("doc_id")
     )
-    skey = (
-        F.floor(F.col("score") * 1_000_000).cast("long")
-        if fixed_point
-        else F.col("score")
-    )
-    keyed = (
-        _with_urls(se, scored, parts)
-        .join(collapse_keys.select("url", "ckey"), "url")
-        .withColumn("skey", skey)
-    )
-    order = (F.desc("skey"), F.asc("doc_id"))
-    best = (
-        keyed.groupBy("query_id", "ckey")
-        .agg(
-            F.max(
-                F.struct(F.col("skey"), (-F.col("doc_id")).alias("ndoc"))
-            ).alias("b")
+
+    def build(keyed: DataFrame) -> DataFrame:
+        keyed, groups = _collapse_groups(
+            keyed, collapse_keys, fixed_point, k, ["query_id", "ckey", "rank"]
         )
-        .select(
-            "query_id",
-            "ckey",
-            F.col("b.skey").alias("skey"),
-            (-F.col("b.ndoc")).cast("long").alias("doc_id"),
+        return (
+            keyed.withColumn("inner_rank", F.row_number().over(w_inner))
+            .filter(F.col("inner_rank") <= inner_k)
+            .join(F.broadcast(groups), ["query_id", "ckey"])
+            .select("query_id", "rank", "ckey", "inner_rank", "url", "score")
         )
-    )
-    groups = _two_phase_rank(
-        best, order, k, ["query_id", "ckey", "rank"], F.pmod(F.hash("ckey"), F.lit(64))
-    )
-    w_inner = Window.partitionBy("query_id", "ckey").orderBy(*order)
-    inner = keyed.withColumn("inner_rank", F.row_number().over(w_inner)).filter(
-        F.col("inner_rank") <= inner_k
-    )
-    return inner.join(F.broadcast(groups), ["query_id", "ckey"]).select(
-        "query_id", "rank", "ckey", "inner_rank", "url", "score"
+
+    return _scored_agg(
+        spark, index_dir, cell_parts, queries,
+        f"query_id int, rank int, ckey {_dim_type(collapse_keys, 'ckey')}, "
+        "inner_rank int, url string, score double",
+        build,
     )
 
 
@@ -1656,31 +1687,26 @@ def search_function_score(
 
     A multiplicative factor REORDERS globally (a low-BM25 doc with a huge
     factor may beat everything), so a top-k heap under BM25 order cannot
-    serve it exactly — matching runs the exhaustive dense kernel via
-    ``raw_scored`` (O(matches) scored rows, the same inherent cost class
-    as collapse; ES pays it too unless users settle for the
-    rescore-window approximation, which this engine also offers). The
-    upgrade path when the factor is BOUNDED is documented: with
-    max(factor) known, BMW block bounds scale by it and the heap stays
-    exact — a one-line bound_scale change, not taken here because the
-    generic dimension is unbounded. After the kernel: pruned extracts
-    url-join, broadcast-class dimension join, two-phase rank
-    (per-(query, part) top-k, then global — never a global sort)."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    scored, parts = _search_impl(
-        se, queries, k, "dense", fixed_point=True, raw_scored=True
-    )
-    keyed = (
-        _with_urls(se, scored, parts)
-        .join(factors.select("url", "factor"), "url")
-        .withColumn(
-            "final6",
-            F.floor(F.col("score") * F.col("factor") * 1_000_000).cast("long"),
-        )
-    )
-    return _two_phase_rank(
-        keyed, (F.desc("final6"), F.asc("doc_id")), k,
-        ["query_id", "rank", "url", "factor", "final6", "score"],
+    serve it exactly — it ranks ``_scored_agg``'s full scored match set
+    (the same inherent cost class as collapse; ES pays it too unless users
+    settle for the rescore-window approximation, which this engine also
+    offers). The upgrade path when the factor is BOUNDED is documented:
+    with max(factor) known, BMW block bounds scale by it and the heap
+    stays exact — a one-line bound_scale change, not taken here because
+    the generic dimension is unbounded. After the front-end: a
+    broadcast-class dimension join, two-phase rank (per-(query, part)
+    top-k, then global — never a global sort)."""
+    final6 = F.floor(F.col("score") * F.col("factor") * 1_000_000).cast("long")
+    return _scored_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, rank int, url string, "
+        f"factor {_dim_type(factors, 'factor')}, final6 long, score double",
+        lambda keyed: _two_phase_rank(
+            keyed.join(factors.select("url", "factor"), "url")
+            .withColumn("final6", final6),
+            (F.desc("final6"), F.asc("doc_id")), k,
+            ["query_id", "rank", "url", "factor", "final6", "score"],
+        ),
     )
 
 
@@ -1706,33 +1732,22 @@ def search_rank_feature(
     exhaustive dense kernel keeps the generic case exact (an additive
     bounded boost can still promote a doc from below any per-cell top-k).
     Float ops in pinned order (one division, one multiply, one add, one
-    floor) — identical to the ``rank_feature`` SQL twin."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    scored, parts = _search_impl(
-        se, queries, k, "dense", fixed_point=True, raw_scored=True
-    )
+    floor) — identical to the ``rank_feature`` SQL twin. Plan:
+    ``_scored_agg``, LEFT feature join, two-phase rank."""
     fd = F.col("f").cast("double")
     sat = F.coalesce(fd / (fd + F.lit(pivot)), F.lit(0.0))
-    keyed = (
-        _with_urls(se, scored, parts)
-        .join(features.select("url", "f"), "url", "left")
-        .withColumn(
-            "final6",
-            F.floor(
-                (F.col("score") + F.lit(weight) * sat) * 1_000_000
-            ).cast("long"),
-        )
-        .withColumn(
-            "score6", F.floor(F.col("score") * 1_000_000).cast("long")
-        )
+    final6 = F.floor((F.col("score") + F.lit(weight) * sat) * 1_000_000).cast("long")
+    return _scored_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, rank int, url string, final6 long, score6 long",
+        lambda keyed: _two_phase_rank(
+            keyed.join(features.select("url", "f"), "url", "left")
+            .withColumn("final6", final6)
+            .withColumn("score6", _fixed6("score")),
+            (F.desc("final6"), F.asc("url")), k,
+            ["query_id", "rank", "url", "final6", "score6"],
+        ),
     )
-    return _two_phase_rank(
-        keyed, (F.desc("final6"), F.asc("url")), k,
-        ["query_id", "rank", "url", "final6", "score6"],
-    )
-
-
-_DIS_MAX_WIDTH = 64  # max distinct terms per dis_max query (id encoding)
 
 
 def search_dis_max(
@@ -1754,17 +1769,11 @@ def search_dis_max(
     are plain OR term lists — operator syntax has no meaning when each
     term is its own subquery.
 
-    Plan: each query decomposes into single-term subqueries encoded as
-    ``qid * 64 + i`` through ONE ``raw_scored`` exhaustive kernel call —
-    the pruned postings scan dedups terms across subqueries, and since
-    the subqueries are disjoint singletons the total decode work equals
-    the plain OR query's. The per-doc max/sum then ride one map-side-
-    combined groupBy, the factor math is two JVM ops, and ranking is the
-    ``search_function_score`` two-phase shape (per-(query, part) top-k,
-    then a global rank over the survivors — never a global sort). The
-    max is order-free; the sum is the same partial-sum class as every
-    scored twin. Exclusion contract (tombstones, filter) applies pre-heap
-    inside the kernel per subquery, identical to ``search``.
+    Plan: ``_scored_agg``'s per-term split (ONE kernel call over the
+    single-term subqueries, the per-doc max/sum in one map-side-combined
+    groupBy below the url join), the factor math as two JVM ops, then the
+    ``search_function_score`` two-phase rank. The max is order-free; the
+    sum is the same partial-sum class as every scored twin.
 
     Pick ``tie_breaker`` exactly representable (0, 0.25, 0.5, 1) and the
     combination is a fused multiply-add both engines round identically.
@@ -1773,49 +1782,15 @@ def search_dis_max(
     this engine's kernel."""
     if not 0.0 <= tie_breaker <= 1.0:
         raise ValueError(f"tie_breaker must be in [0, 1], got {tie_breaker}")
-    se = get_searcher(spark, index_dir, cell_parts)
-    sub: list[tuple[int, str]] = []
-    for qid, text in queries:
-        terms = sorted(set(tokenize(text)))
-        if len(terms) > _DIS_MAX_WIDTH:
-            raise ValueError(
-                f"query {qid} has {len(terms)} terms > {_DIS_MAX_WIDTH}"
-            )
-        sub.extend((qid * _DIS_MAX_WIDTH + i, t) for i, t in enumerate(terms))
-    empty = local_df(
-        spark, [], "query_id int, rank int, url string, final6 long, best6 long"
-    )
-    if not sub:
-        return empty
-    scored, parts = _search_impl(
-        se, sub, k, "dense", fixed_point=True, raw_scored=True
-    )
-    agg = (
-        scored.withColumn(
-            "query_id",
-            F.expr(f"query_id div {_DIS_MAX_WIDTH}").cast("int"),
-        )
-        .groupBy("query_id", "doc_id", "part_id", "local_pos")
-        .agg(F.max("score").alias("mx"), F.sum("score").alias("sm"))
-        .withColumn(
-            "final6",
-            F.floor(
-                (
-                    F.col("mx")
-                    + F.lit(float(tie_breaker))
-                    * (F.col("sm") - F.col("mx"))
-                )
-                * 1_000_000
-            ).cast("long"),
-        )
-        .withColumn(
-            "best6", F.floor(F.col("mx") * 1_000_000).cast("long")
-        )
-    )
-    keyed = _with_urls(se, agg, parts)
-    return _two_phase_rank(
-        keyed, (F.desc("final6"), F.asc("doc_id")), k,
-        ["query_id", "rank", "url", "final6", "best6"],
+    return _scored_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, rank int, url string, final6 long, best6 long",
+        lambda keyed: _two_phase_rank(
+            _dis_max_keys(keyed, tie_breaker),
+            (F.desc("final6"), F.asc("doc_id")), k,
+            ["query_id", "rank", "url", "final6", "best6"],
+        ),
+        per_term=True,
     )
 
 
@@ -1840,7 +1815,8 @@ def search_boosting(
 
     Plan: positive and negative ride ONE ``raw_scored`` exhaustive kernel
     call as even/odd-encoded subqueries (``qid*2`` positive, ``qid*2+1``
-    negative) — one pruned postings read, one scoring stage. The negative
+    negative) — one pruned postings read, one scoring stage; a query
+    whose positive side has no index term drops before it. The negative
     rows collapse to a distinct (query, doc) membership set and LEFT-join
     the positive scored set (membership is per-partition-local — both
     sides carry the kernel's (part_id, local_pos) coordinates, so AQE
@@ -1858,16 +1834,18 @@ def search_boosting(
             f"negative_boost must be in [0, 1], got {negative_boost}"
         )
     se = get_searcher(spark, index_dir, cell_parts)
+    head = _query_head(se, [(qid, pos_text) for qid, pos_text, _n in queries])
     sub: list[tuple[int, str]] = []
     for qid, pos_text, neg_text in queries:
+        if not any(t in head.df for t in head.terms[qid]):
+            continue  # the positive side matches nothing
         sub.append((qid * 2, pos_text))
         if neg_text and tokenize(neg_text):
             sub.append((qid * 2 + 1, neg_text))
-    empty = local_df(
-        spark, [], "query_id int, rank int, url string, final6 long, demoted int"
-    )
     if not sub:
-        return empty
+        return se._empty_df(
+            "query_id int, rank int, url string, final6 long, demoted int"
+        )
     scored, parts = _search_impl(
         se, sub, k, "dense", fixed_point=True, raw_scored=True
     )
@@ -1881,26 +1859,15 @@ def search_boosting(
         .distinct()
         .withColumn("neg", F.lit(1))
     )
-    boosted = (
-        pos.join(neg, ["query_id", "doc_id"], "left")
-        .withColumn(
-            "factor",
-            F.when(F.col("neg").isNotNull(), F.lit(float(negative_boost)))
-            .otherwise(F.lit(1.0)),
-        )
-        .withColumn(
-            "final6",
-            F.floor(F.col("score") * F.col("factor") * 1_000_000).cast(
-                "long"
-            ),
-        )
-        .withColumn(
-            "demoted", F.col("neg").isNotNull().cast("int")
-        )
+    demoted = F.col("neg").isNotNull()
+    factor = F.when(demoted, F.lit(float(negative_boost))).otherwise(F.lit(1.0))
+    boosted = pos.join(neg, ["query_id", "doc_id"], "left").select(
+        "*",
+        F.floor(F.col("score") * factor * 1_000_000).cast("long").alias("final6"),
+        demoted.cast("int").alias("demoted"),
     )
-    keyed = _with_urls(se, boosted, parts)
     return _two_phase_rank(
-        keyed, (F.desc("final6"), F.asc("doc_id")), k,
+        _with_urls(se, boosted, parts), (F.desc("final6"), F.asc("doc_id")), k,
         ["query_id", "rank", "url", "final6", "demoted"],
     )
 
@@ -1924,61 +1891,25 @@ def search_terms_set(
     a defaulted dimension for keep-missing). Ranked by the full OR BM25
     sum over floored score6 with url-asc (docID) ties.
 
-    Plan: the ``search_dis_max`` decomposition — single-term subqueries
-    encoded ``qid*64+i`` through ONE ``raw_scored`` exhaustive kernel
-    call (one pruned postings scan; disjoint singleton subqueries keep
-    total decode work equal to the plain OR query's). Per-doc matched
-    count and score sum ride one map-side-combined groupBy; the required
-    join happens AFTER the url lookup (both dimension joins are
-    broadcast-class); the threshold filter is one codegen'd comparison;
-    then the standard two-phase rank. The static-msm kernel can't serve
-    this (its threshold is per-query, applied pre-heap); the per-doc
-    threshold needs the count materialized, which only the exhaustive
-    path produces. Exclusion contract applies pre-heap per subquery."""
-    se = get_searcher(spark, index_dir, cell_parts)
-    sub: list[tuple[int, str]] = []
-    for qid, text in queries:
-        terms = sorted(set(tokenize(text)))
-        if len(terms) > _DIS_MAX_WIDTH:
-            raise ValueError(
-                f"query {qid} has {len(terms)} terms > {_DIS_MAX_WIDTH}"
-            )
-        sub.extend((qid * _DIS_MAX_WIDTH + i, t) for i, t in enumerate(terms))
-    empty = local_df(
-        spark,
-        [],
-        "query_id int, rank int, url string, score6 long, "
-        "n_matched long, req long",
-    )
-    if not sub:
-        return empty
-    scored, parts = _search_impl(
-        se, sub, k, "dense", fixed_point=True, raw_scored=True
-    )
-    agg = (
-        scored.withColumn(
-            "query_id",
-            F.expr(f"query_id div {_DIS_MAX_WIDTH}").cast("int"),
-        )
-        .groupBy("query_id", "doc_id", "part_id", "local_pos")
-        .agg(
-            F.count("*").alias("n_matched"),
-            F.floor(F.sum("score") * 1_000_000).cast("long").alias("score6"),
-        )
-    )
-    keyed = (
-        _with_urls(se, agg, parts)
-        .join(
-            required.select(
-                "url", F.col("required").cast("long").alias("req")
-            ),
-            "url",
-        )
-        .filter(F.col("n_matched") >= F.col("req"))
-    )
-    return _two_phase_rank(
-        keyed, (F.desc("score6"), F.asc("doc_id")), k,
-        ["query_id", "rank", "url", "score6", "n_matched", "req"],
+    Plan: ``_scored_agg``'s per-term split, as ``search_dis_max`` (per-doc
+    matched count and score sum below the url join); the required join
+    after the url lookup (broadcast-class); the threshold filter is one
+    codegen'd comparison; then the standard two-phase rank. The static-msm
+    kernel can't serve this (its threshold is per-query, applied
+    pre-heap); the per-doc threshold needs the count materialized, which
+    only the exhaustive path produces."""
+    req = F.col("required").cast("long").alias("req")
+    return _scored_agg(
+        spark, index_dir, cell_parts, queries,
+        "query_id int, rank int, url string, score6 long, n_matched long, req long",
+        lambda keyed: _two_phase_rank(
+            keyed.join(required.select("url", req), "url")
+            .filter(F.col("n_matched") >= F.col("req"))
+            .withColumn("score6", _fixed6("score")),
+            (F.desc("score6"), F.asc("doc_id")), k,
+            ["query_id", "rank", "url", "score6", "n_matched", "req"],
+        ),
+        per_term=True,
     )
 
 
@@ -2694,10 +2625,12 @@ def _search_impl(
             )
         if offset:
             raise ValueError("search_after and offset are mutually exclusive")
-    # raw_scored (internal; search_collapse): return the FULL scored match
-    # set as (query_id, doc_id, part_id, local_pos, score) rows — no per-cell
-    # truncate, no global rank, no url lookup — plus the driver-side build-
-    # partition prune list. Exhaustive modes only (BMW's contract is top-k).
+    # raw_scored (internal; _scored_urls, search_query_string,
+    # search_boosting): return the FULL scored match set as (query_id,
+    # doc_id, part_id, local_pos, score) rows — no per-cell truncate, no
+    # global rank, no url lookup — plus the driver-side build-partition
+    # prune list (None: pruning is useless), or None when no query can
+    # match. Exhaustive modes only (BMW's contract is top-k).
     if raw_scored:
         if mode not in ("dense", "conjunctive", "msm"):
             raise ValueError(
@@ -2725,11 +2658,7 @@ def _search_impl(
     # Paging: ranks (offset, offset+k] of the GLOBAL order — every per-cell
     # heap must hold offset+k candidates for the page to be exact.
     cell_k = k + offset + (tie_margin if fixed_point else 0)
-    _RAW_DDL = "query_id int, doc_id long, part_id int, local_pos long, score double"
-    if raw_scored:
-        empty = (se._empty_df(_RAW_DDL), None)
-    else:
-        empty = _empty_hits(se, with_text)
+    empty = None if raw_scored else _empty_hits(se, with_text)
 
     # Filtered search (Lucene filter context): the allowed docID set masks
     # candidates pre-heap as an INCLUSION — the mirror of the tombstone /
@@ -3146,11 +3075,12 @@ def search_query_string(
         for qid in sorted(parsed)
         if full_w[qid]  # a query whose prefixes all expanded to nothing
     ]
-    if not main_q:
-        return empty
-    scored, _parts = _search_impl(
+    res = _search_impl(
         se, main_q, k, "dense", fixed_point=fixed_point, raw_scored=True
     )
+    if res is None:  # no query has a scored term in the index
+        return empty
+    scored, _parts = res
 
     # must admission (step 2)
     must_q = [
@@ -3158,18 +3088,19 @@ def search_query_string(
         for qid, _t in main_q
         if parsed[qid]["must"]
     ]
-    if must_q:
-        conj, _ = _search_impl(
-            se, must_q, k, "conjunctive", fixed_point=fixed_point,
-            raw_scored=True,
-        )
+    mq = [qid for qid, _t in must_q]
+    res = _search_impl(
+        se, must_q, k, "conjunctive", fixed_point=fixed_point, raw_scored=True
+    ) if mq else None
+    if res is None and mq:  # no doc holds every must term of any query
+        scored = scored.filter(~F.col("query_id").isin(mq))
+    elif res is not None:
         # single-lineage admission (no filter/union fork re-executing the
         # kernel subtree): conjunctive rows are unique per (query, doc) —
         # cells partition docID space — so a left join never duplicates.
-        mq = [qid for qid, _t in must_q]
         scored = (
             scored.join(
-                conj.select("query_id", "doc_id").withColumn(
+                res[0].select("query_id", "doc_id").withColumn(
                     "__m", F.lit(1)
                 ),
                 ["query_id", "doc_id"],
@@ -3195,11 +3126,13 @@ def search_query_string(
             sub_meta.append((qid * 64 + i, qid, i < len(ph), terms))
         if ph:
             req_counts[qid] = len(ph)
-    if phr_sub:
-        cand, cparts = _search_impl(
-            se, phr_sub, k, "conjunctive", fixed_point=fixed_point,
-            raw_scored=True,
-        )
+    res = _search_impl(
+        se, phr_sub, k, "conjunctive", fixed_point=fixed_point, raw_scored=True
+    ) if phr_sub else None
+    if res is None and req_counts:  # no doc holds every term of any phrase
+        scored = scored.filter(~F.col("query_id").isin(list(req_counts)))
+    elif res is not None:
+        cand, cparts = res
         cond = F.lit(False)
         for sub, _qid, _is_req, terms in sub_meta:
             cond = F.when(

@@ -359,6 +359,69 @@ def test_dictionary_surfaces_run_no_job(spark, index_dir):
     assert jobs == {name: [] for name in calls}
 
 
+def test_scored_surfaces_empty_batch_build_no_plan(spark, index_dir):
+    """A batch whose only term is absent from the index can match nothing:
+    every scored full-match surface hands back the Searcher's cached empty
+    frame (the same object on every call) and launches no Spark job.
+    boosting's negative side alone must not keep the kernel alive."""
+    import pageindex_spark.plans.query as Q
+    from pageindex_spark.plans.hits import top_hits
+
+    ext = Q._extracts(Q.get_searcher(spark, index_dir))
+    dim = ext.select("url", F.substring(F.md5("url"), 1, 1).alias("v"))
+    num = ext.select("url", (F.length("url") % 3 + 1).alias("v"))
+    q = [(1, "zzqqxx")]
+    calls = {
+        "collapse": lambda: Q.search_collapse(
+            spark, index_dir, q, dim.withColumnRenamed("v", "ckey")
+        ),
+        "collapse_inner": lambda: Q.search_collapse_inner(
+            spark, index_dir, q, dim.withColumnRenamed("v", "ckey")
+        ),
+        "function_score": lambda: Q.search_function_score(
+            spark, index_dir, q, num.withColumnRenamed("v", "factor")
+        ),
+        "rank_feature": lambda: Q.search_rank_feature(
+            spark, index_dir, q, num.withColumnRenamed("v", "f"), 2.0, 1.0
+        ),
+        "dis_max": lambda: Q.search_dis_max(spark, index_dir, q),
+        "terms_set": lambda: Q.search_terms_set(
+            spark, index_dir, q, num.withColumnRenamed("v", "required")
+        ),
+        "top_hits": lambda: top_hits(
+            spark, index_dir, q, dim.withColumnRenamed("v", "facet")
+        ),
+        "multi_field": lambda: Q.search_multi_field(
+            spark, [(index_dir, 1.0), (index_dir, 2.0)], q
+        ),
+        "query_string": lambda: Q.search_query_string(spark, index_dir, q),
+        "boosting": lambda: Q.search_boosting(spark, index_dir, [(1, "zzqqxx", "di")]),
+    }
+    jobs, same = {}, {}
+    for name, call in calls.items():
+        got = []
+        jobs[name] = _jobs_of(
+            spark, f"empty-{name}",
+            lambda: got.extend((call(), call())) or got[0].collect(),
+        )
+        same[name] = got[0] is got[1]
+    assert jobs == {name: [] for name in calls}
+    assert same == {name: True for name in calls}
+
+
+def test_explain_local_path_runs_only_the_url_lookup(spark, index_dir):
+    """explain reads its winners' tf and doc length through search's cell
+    reader, on the driver like the search itself: a warm local-path call
+    runs one Spark job, the winners' url -> docID lookup."""
+    from pageindex_spark.plans.explain import explain_score
+
+    def call():
+        return explain_score(spark, index_dir, [(1, "ba di"), (2, "ce")]).collect()
+
+    assert call()
+    assert len(_jobs_of(spark, "explain", call)) == 1
+
+
 def test_filter_urls_plans_extracts_without_inference(spark, index_dir):
     """``filter_urls`` resolves its urls through the extracts read with a
     fixed schema: a local-path search with a url filter runs the url

@@ -268,17 +268,23 @@ def test_hits_multi_cell_identity(spark, r06_index):
     ``cell_parts=1`` (8 cells, so light-term runs straddle cells and a task
     reads the pieces of runs that belong to other tasks' cells) against
     ``cell_parts=8`` (one cell). Counting a straddling piece outside its
-    own cell would count its docs twice."""
+    own cell would count its docs twice. The scored surfaces ride the same
+    reader; dis_max and terms_set combine a doc's per-term subquery rows,
+    which all come from the doc's own cell."""
     from pyspark.sql import functions as F
 
     from pageindex_spark.driverq import NDCG_DISC6
     from pageindex_spark.plans import hits as H
+    from pageindex_spark.plans import query as Q
     from pageindex_spark.plans.query import get_searcher
     from pageindex_spark.sources.corpus import make_queries
 
     queries = make_queries()
     ext = spark.read.parquet(os.path.join(r06_index, "docs_extracted"))
     facets = ext.select("url", F.substring(F.md5("url"), 1, 1).alias("facet"))
+    ckeys = facets.withColumnRenamed("facet", "ckey")
+    factors = ext.select("url", (F.length("url") % 3 + 1).alias("factor"))
+    required = ext.select("url", (F.length("url") % 2 + 1).alias("required"))
     assert len(get_searcher(spark, r06_index, 1).cell_grid) == 8
     assert len(get_searcher(spark, r06_index, 8).cell_grid) == 1
 
@@ -291,6 +297,16 @@ def test_hits_multi_cell_identity(spark, r06_index):
             "rank_eval": H.rank_eval(
                 spark, r06_index, queries, NDCG_DISC6, k=10, **kw
             ),
+            "collapse": Q.search_collapse(spark, r06_index, queries, ckeys, **kw),
+            "function_score": Q.search_function_score(
+                spark, r06_index, queries, factors, **kw
+            ),
+            "dis_max": Q.search_dis_max(spark, r06_index, queries, **kw),
+            "boosting": Q.search_boosting(
+                spark, r06_index, [(q, t, "di") for q, t in queries], **kw
+            ),
+            "terms_set": Q.search_terms_set(spark, r06_index, queries, required, **kw),
+            "top_hits": H.top_hits(spark, r06_index, queries, facets, **kw),
         }
         return {name: sorted(tuple(r) for r in df.collect()) for name, df in out.items()}
 
